@@ -9,6 +9,7 @@ cluster deployment only overrides master/resources.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -18,18 +19,24 @@ def _default_shuffle_partitions() -> str:
     the same lenient env parsing as get_spark: a non-numeric
     SPARK_GRAFT_CPUS / SPARK_GRAFT_SHUFFLE_PARTITIONS must not crash at
     module import (ADVICE r12) — fall back to 32 like the master string
-    does."""
+    does. An unparseable SPARK_GRAFT_SHUFFLE_PARTITIONS warns, naming the
+    value and the default used instead."""
+    try:
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or 32)
+    except ValueError:
+        cpus = 32
+    default = str(max(8, cpus))
     override = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if override:
         try:
             return str(max(1, int(override)))
         except ValueError:
-            pass
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or 32)
-    except ValueError:
-        cpus = 32
-    return str(max(8, cpus))
+            warnings.warn(
+                f"ignoring SPARK_GRAFT_SHUFFLE_PARTITIONS={override!r}: "
+                f"not an integer; using the default of {default}",
+                stacklevel=2,
+            )
+    return default
 
 
 _DEFAULTS: dict[str, str] = {
@@ -62,10 +69,8 @@ _DEFAULTS: dict[str, str] = {
     # Shuffle: compress + spill settings appropriate for wide aggregations.
     # The session DEFAULT partition count tracks the configured core count
     # (r12: a literal "32" was silently core-count-tuned; the driver also
-    # benches at lower core counts). Data-scale-aware jobs override via
-    # tuning.configure_for_scale, which sizes partitions from input bytes
-    # — that, plus AQE coalescing, is the 100 TB answer; this default only
-    # governs small local/model-state shuffles.
+    # benches at lower core counts). AQE coalescing sizes the large
+    # shuffles; this default only governs small local/model-state ones.
     "spark.sql.shuffle.partitions": _default_shuffle_partitions(),
     "spark.shuffle.compress": "true",
     "spark.sql.autoBroadcastJoinThreshold": "33554432",  # 32 MiB: dims broadcast

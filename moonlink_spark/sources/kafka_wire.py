@@ -26,11 +26,10 @@ protocol layouts (kafka.apache.org/protocol):
   real client negotiates up via ApiVersions and these versions remain
   permanently supported);
 - batch compression: gzip (attributes codec 1, stdlib zlib with the
-  gzip wrapper), snappy (codec 2, the pure-Python xerial-framed
-  implementation in ``snappy_py``), lz4 (codec 3, the pure-Python
-  LZ4-frame implementation in ``lz4_py``) and zstd (codec 4, the
-  pure-Python RFC 8878 decoder + store-mode encoder in ``zstd_py``) —
-  every broker default works out of the box, on both encode and decode.
+  gzip wrapper), snappy (codec 2, xerial-framed raw blocks), lz4
+  (codec 3, LZ4 frames) and zstd (codec 4) — snappy, lz4 and zstd run
+  on the C codecs bundled with pyarrow, so every broker default works
+  out of the box, on both encode and decode.
 
 Architecture (the honest cluster shape): :class:`KafkaWireBroker` is a
 single-node broker whose topic-partition logs are the SAME
@@ -66,10 +65,9 @@ Implemented: TLS (implicit on the port, a real broker's
 clients verify against a pinned CA via ``tlsutil.client_context``).
 Not implemented (fail-loud or out of scope): transactions
 and idempotent producer ids (producerId is -1 throughout). All four
-real codecs ship built-in on both sides (zstd produce is a store-mode
-encoder; override via ``register_codec`` with a C binding for real
-ratios); an unknown codec id raises ``UnsupportedCodecError`` naming
-the codec and the producer-config workaround.
+Kafka codecs are built in on both sides; a codec id Kafka never
+assigned (5-7) raises ``UnsupportedCodecError`` naming the id and the
+producer-config workaround.
 """
 
 from __future__ import annotations
@@ -83,7 +81,10 @@ import sys
 import threading
 import time
 import uuid
+from functools import partial
 from typing import Any, Iterator
+
+import pyarrow as pa
 
 from moonlink_spark.sources.queue import _NULL_KEY, _frame, _parse_kv
 
@@ -298,22 +299,17 @@ def _read_bytes32(buf: bytes, pos: int) -> tuple[bytes | None, int]:
 
 
 class UnsupportedCodecError(ValueError):
-    """A RecordBatch uses a compression codec with no registered
-    implementation. The message names the codec and the workaround
-    (broker-side story: configure producers with
-    ``compression.type=gzip``/``snappy``/``lz4`` or ``none``, or plug
-    an implementation in via :func:`register_codec`)."""
+    """A RecordBatch names a compression codec id Kafka never assigned
+    (5-7 in the attributes' three codec bits). The message names the id
+    and the producer-config workaround."""
 
     def __init__(self, codec_id: int):
         name = CODEC_NAMES.get(codec_id, str(codec_id))
         super().__init__(
             f"unsupported compression codec {name!r} (id {codec_id}): "
-            f"built-in coverage is none/gzip/snappy/lz4/zstd on BOTH "
-            f"decode and produce (zstd produce is a store-mode RFC 8878 "
-            f"encoder); either configure the producer with a built-in "
-            f"compression.type, or call "
-            f"kafka_wire.register_codec({name!r}, compress, decompress) "
-            f"with an implementation (e.g. zstandard)"
+            f"Kafka defines only none/gzip/snappy/lz4/zstd (ids 0-4), "
+            f"all built in on decode and produce; configure the producer "
+            f"with one of them as its compression.type"
         )
         self.codec_id = codec_id
         self.codec_name = name
@@ -321,6 +317,12 @@ class UnsupportedCodecError(ValueError):
 
 CODEC_NAMES = {0: "none", 1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
 CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
+
+# hard ceiling on one records section's decompressed size (Kafka
+# RecordBatches are bounded by fetch.max.bytes anyway): a decompression
+# bomb from a network peer fails before the output is allocated
+MAX_DECOMPRESSED = 1 << 31
+_READ_CHUNK = 1 << 20
 
 
 def _gzip_compress(data: bytes) -> bytes:
@@ -333,72 +335,113 @@ def _gzip_compress(data: bytes) -> bytes:
 def _gzip_decompress(data: bytes) -> bytes:
     import zlib
 
-    return zlib.decompress(data, wbits=47)
+    try:
+        return zlib.decompress(data, wbits=47)
+    except zlib.error as e:
+        raise ValueError(f"corrupt gzip records section: {e}") from e
+
+
+def _arrow_compress(name: str, data: bytes) -> bytes:
+    return pa.Codec(name).compress(data, asbytes=True)
+
+
+def _frame_decompress(name: str, data: bytes) -> bytes:
+    """zstd or lz4 frames, decoded as a stream in bounded chunks: frames
+    without a content size still decode, concatenated and skippable
+    frames are the C decoder's job, and output past
+    ``MAX_DECOMPRESSED`` fails before it is read."""
+    parts: list[bytes] = []
+    total = 0
+    try:
+        stream = pa.CompressedInputStream(pa.BufferReader(data), name)
+        while True:
+            chunk = stream.read(min(_READ_CHUNK, MAX_DECOMPRESSED + 1 - total))
+            if not chunk:
+                return b"".join(parts)
+            total += len(chunk)
+            if total > MAX_DECOMPRESSED:
+                raise ValueError(
+                    f"{name} records section inflates past "
+                    f"{MAX_DECOMPRESSED} bytes"
+                )
+            parts.append(chunk)
+    except (OSError, pa.ArrowInvalid) as e:
+        raise ValueError(f"corrupt {name} records section: {e}") from e
+
+
+# snappy-java's xerial framing, which is what Kafka snappy payloads are:
+# magic, version and compat int32s, then int32-BE-length-prefixed raw
+# snappy blocks of at most 32 KiB uncompressed
+_XERIAL_MAGIC = b"\x82SNAPPY\x00"
+_XERIAL_HEADER = _XERIAL_MAGIC + struct.pack(">ii", 1, 1)
+_XERIAL_BLOCK = 32 * 1024
 
 
 def _snappy_compress(data: bytes) -> bytes:
-    from moonlink_spark.sources import snappy_py
+    codec = pa.Codec("snappy")
+    out = [_XERIAL_HEADER]
+    # an empty payload still gets one (empty) block
+    for i in range(0, max(len(data), 1), _XERIAL_BLOCK):
+        block = codec.compress(data[i : i + _XERIAL_BLOCK], asbytes=True)
+        out += (struct.pack(">I", len(block)), block)
+    return b"".join(out)
 
-    return snappy_py.compress(data)
+
+def _snappy_block(codec, block: bytes, budget: int) -> bytes:
+    # a raw snappy block opens with its decoded length as a uvarint
+    n = shift = p = 0
+    while True:
+        if p >= len(block) or shift > 28:
+            raise ValueError("corrupt snappy block: bad length preamble")
+        b = block[p]
+        p += 1
+        n |= (b & 0x7F) << shift
+        if b < 0x80:
+            break
+        shift += 7
+    if n > budget:
+        raise ValueError(
+            f"snappy records section inflates past {MAX_DECOMPRESSED} bytes"
+        )
+    return codec.decompress(block, n, asbytes=True)
 
 
 def _snappy_decompress(data: bytes) -> bytes:
-    from moonlink_spark.sources import snappy_py
-
-    return snappy_py.decompress(data)
-
-
-def _lz4_compress(data: bytes) -> bytes:
-    from moonlink_spark.sources import lz4_py
-
-    return lz4_py.compress(data)
-
-
-def _lz4_decompress(data: bytes) -> bytes:
-    from moonlink_spark.sources import lz4_py
-
-    return lz4_py.decompress(data)
-
-
-def _zstd_compress(data: bytes) -> bytes:
-    # store-mode RFC 8878 encoder (raw/RLE blocks + XXH64 checksum):
-    # spec-legal frames any broker/consumer decodes, so produce with
-    # codec 4 never silently downgrades. Ratio is ~1 — override via
-    # register_codec with a C binding when real compression matters.
-    from moonlink_spark.sources import zstd_py
-
-    return zstd_py.compress(data)
-
-
-def _zstd_decompress(data: bytes) -> bytes:
-    from moonlink_spark.sources import zstd_py
-
-    return zstd_py.decompress(data)
+    """A xerial block stream, or a bare raw-snappy payload (some
+    librdkafka configurations send those)."""
+    codec = pa.Codec("snappy")
+    try:
+        if not data.startswith(_XERIAL_MAGIC):
+            return _snappy_block(codec, data, MAX_DECOMPRESSED)
+        parts: list[bytes] = []
+        total = 0
+        p = len(_XERIAL_HEADER)
+        while p < len(data):
+            if p + 4 > len(data):
+                raise ValueError("corrupt xerial snappy: truncated length")
+            (blen,) = struct.unpack_from(">I", data, p)
+            p += 4
+            if p + blen > len(data):
+                raise ValueError("corrupt xerial snappy: truncated block")
+            out = _snappy_block(
+                codec, data[p : p + blen], MAX_DECOMPRESSED - total
+            )
+            total += len(out)
+            parts.append(out)
+            p += blen
+        return b"".join(parts)
+    except (OSError, pa.ArrowInvalid) as e:
+        raise ValueError(f"corrupt snappy records section: {e}") from e
 
 
-# codec id -> (compress, decompress); gzip (stdlib zlib), snappy (the
-# pure-Python xerial/raw implementation in snappy_py), lz4 (the
-# pure-Python frame implementation in lz4_py) and zstd (the pure-Python
-# RFC 8878 codec in zstd_py: full decoder + store-mode encoder) ship
-# built-in — brokers default to snappy/lz4/zstd, so fetch AND produce
-# of all four work out of the box
+# codec id -> (compress, decompress): gzip through stdlib zlib, the other
+# three through the C codecs bundled with pyarrow
 _CODECS: dict[int, tuple] = {
     1: (_gzip_compress, _gzip_decompress),
     2: (_snappy_compress, _snappy_decompress),
-    3: (_lz4_compress, _lz4_decompress),
-    4: (_zstd_compress, _zstd_decompress),
+    3: (partial(_arrow_compress, "lz4"), partial(_frame_decompress, "lz4")),
+    4: (partial(_arrow_compress, "zstd"), partial(_frame_decompress, "zstd")),
 }
-
-
-def register_codec(name_or_id, compress, decompress) -> None:
-    """Plug a compression codec into the RecordBatch coder, e.g.
-    ``register_codec("zstd", c.compress, d.decompress)`` with
-    zstandard (de)compressors, or override a built-in with a C
-    implementation for hot produce loops."""
-    cid = CODEC_IDS.get(name_or_id, name_or_id)
-    if not isinstance(cid, int) or not 1 <= cid <= 7:
-        raise ValueError(f"unknown codec {name_or_id!r}")
-    _CODECS[cid] = (compress, decompress)
 
 
 def _codec_or_raise(codec_id: int) -> tuple:
@@ -811,7 +854,10 @@ class _PartitionLog:
             if not self._index or off > self._index[-1][0]:
                 self._index.append((off, pos))
 
-    def _scan(self, from_offset: int):
+    def _scan(self, from_offset: int, hw: int):
+        # ``hw`` bounds the scan: ``append`` writes its frames before it
+        # publishes ``next_offset``, so frames at or past the caller's
+        # high-water mark may be on disk but are not committed yet
         if not os.path.exists(self.path):
             return
         # Snapshot the index once, lock-free readers never see a
@@ -831,6 +877,8 @@ class _PartitionLog:
                 if len(frame) < flen:
                     return  # torn tail
                 off, klen = struct.unpack_from(">QI", frame, 0)
+                if off >= hw:
+                    return
                 if last_indexed is None or off > last_indexed:
                     if off % self._INDEX_EVERY == 0:
                         self._record_index(off, pos)
@@ -851,9 +899,9 @@ class _PartitionLog:
             self.next_offset = base + len(records)
             return base
 
-    def read(self, from_offset: int, max_bytes: int) -> list:
+    def read(self, from_offset: int, max_bytes: int, hw: int) -> list:
         out, size = [], 0
-        for off, key, value in self._scan(from_offset):
+        for off, key, value in self._scan(from_offset, hw):
             out.append((off, key, value))
             size += (len(value) if value else 0) + (len(key) if key else 0) + 32
             if size >= max_bytes:
@@ -1204,7 +1252,7 @@ class KafkaWireBroker:
                 if fetch_off > hw:
                     parts.append((part, _ERR_OFFSET_OUT_OF_RANGE, hw, b""))
                     continue
-                msgs = log.read(fetch_off, pmax)
+                msgs = log.read(fetch_off, pmax, hw)
                 rset = b""
                 if msgs:
                     # broker offsets are contiguous; a single batch with

@@ -25,7 +25,7 @@ prefix directory scan they used originally.
 from __future__ import annotations
 
 import contextlib
-import json
+import fcntl
 import os
 import shutil
 import time
@@ -35,9 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 @contextlib.contextmanager
-def index_write_lock(
-    dest: str, timeout_s: float = 600.0, stale_s: float = 3600.0
-):
+def index_write_lock(dest: str, timeout_s: float = 600.0):
     """Single-writer mutual exclusion for one index directory.
 
     The CDC loop's incremental updates, the maintenance ticker's
@@ -45,64 +43,30 @@ def index_write_lock(
     write is a plain atomic replace (no compare-and-swap), so two
     concurrent writers could silently drop each other's just-published
     segments (the classic lost update). This lock serializes them on one
-    host via an O_EXCL lock file carrying (pid, timestamp); a lock older
-    than ``stale_s`` is presumed crashed and stolen. Cross-host
-    deployments need a store-level CAS instead (the object-store seam's
-    ``publish_exclusive``)."""
-    import uuid as _uuid
-
+    host with ``flock`` on a ``.write-lock`` file. Each acquisition opens
+    its own descriptor, so threads of one process exclude each other
+    too, and the kernel drops the lock when its holder dies: there is no
+    stale lock to detect or steal. The file is never unlinked (a waiter
+    could otherwise lock an orphaned inode while a newcomer locks a fresh
+    file). Cross-host deployments need a store-level CAS instead (the
+    object-store seam's ``publish_exclusive``)."""
     os.makedirs(dest, exist_ok=True)
-    path = os.path.join(dest, ".write-lock")
-    token = _uuid.uuid4().hex
-    deadline = time.monotonic() + timeout_s
-    while True:
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(
-                fd,
-                json.dumps(
-                    {"pid": os.getpid(), "ts": time.time(), "token": token}
-                ).encode(),
-            )
-            os.close(fd)
-            break
-        except FileExistsError:
-            try:
-                age = time.time() - os.path.getmtime(path)
-            except FileNotFoundError:
-                continue  # released between open and stat: retry now
-            if age > stale_s:
-                # presumed-dead holder: steal via RENAME, not unlink —
-                # rename is atomic and exactly ONE stealer succeeds; a
-                # plain unlink let two waiters both remove (the second
-                # removing the FIRST's fresh lock) and both acquire
-                # (review r10)
-                grave = f"{path}.stale-{_uuid.uuid4().hex}"
-                try:
-                    os.rename(path, grave)
-                except FileNotFoundError:
-                    continue  # someone else stole/released first
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(grave)
-                continue
-            if time.monotonic() > deadline:
-                raise TimeoutError(
-                    f"index write lock at {path} held too long"
-                ) from None
-            time.sleep(0.05)
+    fd = os.open(os.path.join(dest, ".write-lock"), os.O_CREAT | os.O_RDWR)
     try:
+        deadline = time.monotonic() + timeout_s
+        while True:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() > deadline:
+                    raise TimeoutError(
+                        f"index write lock in {dest} held too long"
+                    ) from None
+                time.sleep(0.05)
         yield
     finally:
-        # release only if WE still hold it: a holder whose lock was
-        # stolen must not remove the thief's fresh lock on exit
-        try:
-            with open(path) as fh:
-                owner = json.load(fh).get("token")
-        except (OSError, ValueError):
-            owner = None
-        if owner == token:
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(path)
+        os.close(fd)  # closing the descriptor releases the lock
 
 
 def maybe_write_lock(dest: str, already_locked: bool):

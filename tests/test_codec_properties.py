@@ -1,10 +1,17 @@
 """Property-based round-trips for the round-4 binary codecs: roaring64,
 Z85, deletion-vector blobs, bincode varints, Avro datums, and the
 scan-result wire blob. Hypothesis hammers the layouts the unit tests
-spot-check."""
+spot-check. The Kafka batch codecs (snappy, lz4, zstd) are checked as
+the wire contract: round trips, frames from foreign encoders, and a
+ValueError for every corrupt, truncated or oversized records section."""
 
+import shutil
+import struct
+import subprocess
 from decimal import Decimal
 
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -15,6 +22,7 @@ from moonlink_spark.rpc import (
     enc_varint,
     encode_request,
 )
+from moonlink_spark.sources import kafka_wire as kw
 from moonlink_spark.sources.avro_binary import decode_record, encode_datum
 from moonlink_spark.table.delta_export import _z85_decode, _z85_encode
 from moonlink_spark.table.puffin import (
@@ -130,107 +138,65 @@ def test_avro_datum_roundtrip_prop(row):
     assert back == row
 
 
-@settings(max_examples=300, deadline=None)
-@given(
-    st.one_of(
-        st.binary(max_size=5000),
-        # repetitive shapes exercise the copy-element paths hard
-        st.builds(
-            lambda unit, reps, tail: unit * reps + tail,
-            st.binary(min_size=1, max_size=20),
-            st.integers(min_value=0, max_value=2000),
-            st.binary(max_size=50),
-        ),
-    )
-)
-def test_snappy_roundtrip_prop(payload):
-    from moonlink_spark.sources.snappy_py import (
-        compress,
-        decompress,
-        raw_compress,
-        raw_decompress,
-    )
+def _codec(name):
+    """(compress, decompress) of a built-in Kafka batch codec."""
+    return kw._CODECS[kw.CODEC_IDS[name]]
 
-    assert raw_decompress(raw_compress(payload)) == payload
+
+_payloads = st.one_of(
+    st.binary(max_size=5000),
+    # repetitive shapes exercise the match/overlap paths hard
+    st.builds(
+        lambda unit, reps, tail: unit * reps + tail,
+        st.binary(min_size=1, max_size=20),
+        st.integers(min_value=0, max_value=2000),
+        st.binary(max_size=50),
+    ),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_payloads)
+def test_snappy_roundtrip_prop(payload):
+    compress, decompress = _codec("snappy")
     assert decompress(compress(payload)) == payload
+    # bare raw snappy (no xerial framing) decodes too
+    raw = pa.Codec("snappy").compress(payload, asbytes=True)
+    assert decompress(raw) == payload
 
 
 @settings(max_examples=120, deadline=None)
-@given(
-    st.one_of(
-        st.binary(max_size=5000),
-        # repetitive shapes exercise the match/overlap paths hard
-        st.builds(
-            lambda unit, reps, tail: unit * reps + tail,
-            st.binary(min_size=1, max_size=20),
-            st.integers(min_value=0, max_value=2000),
-            st.binary(max_size=50),
-        ),
-    )
-)
+@given(_payloads)
 def test_lz4_roundtrip_prop(payload):
-    from moonlink_spark.sources.lz4_py import (
-        block_compress,
-        block_decompress,
-        compress,
-        decompress,
-    )
-
-    out = bytearray()
-    block_decompress(block_compress(payload), out)
-    assert bytes(out) == payload
+    compress, decompress = _codec("lz4")
     assert decompress(compress(payload)) == payload
 
 
 @settings(max_examples=80, deadline=None)
 @given(
     st.one_of(
-        st.binary(max_size=5000),
-        # repetitive shapes exercise sequences/repeat-offsets hard
-        st.builds(
-            lambda unit, reps, tail: unit * reps + tail,
-            st.binary(min_size=1, max_size=20),
-            st.integers(min_value=0, max_value=2000),
-            st.binary(max_size=50),
-        ),
-        # low-entropy text: Huffman literals + FSE-compressed weights
+        _payloads,
         st.text(alphabet="abcdefgh \n", max_size=5000).map(str.encode),
     ),
     st.sampled_from([1, 3, 9, 19]),
 )
 def test_zstd_decode_matches_pyarrow_oracle(payload, level):
-    """The pure-Python RFC 8878 decoder must invert the bundled C
-    compressor at every level (raw/RLE/compressed blocks, single- and
-    four-stream Huffman, all sequence table modes)."""
-    import pyarrow as pa
-
-    from moonlink_spark.sources.zstd_py import decompress
-
+    """The streamed zstd decode inverts the C compressor at every
+    level."""
     comp = pa.Codec("zstd", compression_level=level).compress(
         payload, asbytes=True
     )
-    assert decompress(comp) == payload
+    assert _codec("zstd")[1](comp) == payload
 
 
 def test_zstd_multiframe_skippable_and_checksum():
-    import pyarrow as pa
-
-    import pytest
-
-    from moonlink_spark.sources.zstd_py import _xxh64, decompress
-
+    decompress = _codec("zstd")[1]
     c = pa.Codec("zstd")
     a = c.compress(b"first frame " * 50, asbytes=True)
     b = c.compress(b"second", asbytes=True)
     skip = (0x184D2A50).to_bytes(4, "little") + (7).to_bytes(4, "little") + b"padding"
     assert decompress(a + skip + b) == b"first frame " * 50 + b"second"
-    # hand-build a checksummed frame: set FHD bit 2, append xxh64 low32
-    raw = bytearray(a)
-    assert raw[4] & 0x04 == 0  # pyarrow emits no checksum by default
-    raw[4] |= 0x04
-    good = bytes(raw) + (
-        _xxh64(b"first frame " * 50) & 0xFFFFFFFF
-    ).to_bytes(4, "little")
+    good = _cli(["zstd", "-C"], b"first frame " * 50)
     assert decompress(good) == b"first frame " * 50
     bad = good[:-1] + bytes([good[-1] ^ 1])
     with pytest.raises(ValueError, match="checksum"):
@@ -240,14 +206,10 @@ def test_zstd_multiframe_skippable_and_checksum():
 @settings(max_examples=200, deadline=None)
 @given(st.binary(max_size=400), st.integers(min_value=0, max_value=3))
 def test_zstd_adversarial_bytes_never_hang_or_crash(junk, prefix_kind):
-    """Untrusted-bytes contract (same as the snappy/lz4 fuzz suites):
-    arbitrary garbage — bare, magic-prefixed, or a mutated valid frame —
-    either decodes or raises ZstdError; never an unbounded loop, never
-    MemoryError, never a non-ZstdError exception."""
-    import pyarrow as pa
-
-    from moonlink_spark.sources.zstd_py import ZstdError, decompress
-
+    """Untrusted-bytes contract: arbitrary garbage — bare,
+    magic-prefixed, or a mutated valid frame — either decodes or raises
+    ValueError; never an unbounded loop, never MemoryError, never
+    another exception."""
     if prefix_kind == 1:
         data = (0xFD2FB528).to_bytes(4, "little") + junk
     elif prefix_kind == 2:
@@ -262,41 +224,17 @@ def test_zstd_adversarial_bytes_never_hang_or_crash(junk, prefix_kind):
     else:
         data = junk
     try:
-        decompress(data)
-    except ZstdError:
+        _codec("zstd")[1](data)
+    except ValueError:
         pass
 
 
-def test_zstd_hostile_huffman_weights_bounded():
-    """Review r10: RFC 8878 caps Huffman code length at 11 bits; a
-    crafted weight table must raise ZstdError BEFORE sizing the prefix
-    table — not OverflowError/MemoryError from a 2^250-entry list."""
-    import pytest
-
-    from moonlink_spark.sources.zstd_py import ZstdError, _huf_build_table
-
-    with pytest.raises(ZstdError):
-        _huf_build_table([251])  # would size a 2^250 table
-    with pytest.raises(ZstdError):
-        _huf_build_table([35, 35])  # ~256 GB table
-    with pytest.raises(ZstdError):
-        _huf_build_table([12])  # one past the 11-bit limit
-    with pytest.raises(ZstdError):
-        _huf_build_table([1] * 256)  # more than 255 explicit weights
-    table, max_bits = _huf_build_table([11])  # at the limit: fine
-    assert max_bits == 11
-
-
 def test_zstd_cross_frame_match_rejected():
-    """Review r10: matches may not reach past the current frame's start
-    (frames are independent per RFC 8878). A corrupt second frame whose
-    sequence points back into frame 1's bytes must raise, not silently
-    decode garbage from the previous frame."""
-    import pyarrow as pa
-    import pytest
-
-    from moonlink_spark.sources.zstd_py import ZstdError, decompress
-
+    """Matches may not reach past the current frame's start (frames are
+    independent per RFC 8878). A corrupt second frame whose sequence
+    points back into frame 1's bytes must raise, not silently decode
+    garbage from the previous frame."""
+    decompress = _codec("zstd")[1]
     frame1 = pa.Codec("zstd").compress(b"0123456789", asbytes=True)
     # hand-built frame: raw literals "ab", one sequence via RLE tables
     # (LL code 0 -> ll=0, OF code 3 + 3 extra bits 0b100 -> offset 9,
@@ -312,25 +250,26 @@ def test_zstd_cross_frame_match_rejected():
         + bh.to_bytes(3, "little")
         + block
     )
-    with pytest.raises(ZstdError, match="window"):
+    with pytest.raises(ValueError, match="zstd"):
         decompress(frame2)  # standalone: offset beyond empty frame
-    with pytest.raises(ZstdError, match="window"):
+    with pytest.raises(ValueError, match="zstd"):
         decompress(frame1 + frame2)  # and cross-frame: still rejected
 
 
+def _cli(argv, data):
+    """``data`` through a codec CLI (skips the test when it is absent)."""
+    if shutil.which(argv[0]) is None:
+        pytest.skip(f"{argv[0]} CLI not on PATH")
+    return subprocess.run(
+        argv + ["-c"], input=data, capture_output=True, check=True
+    ).stdout
+
+
 def test_zstd_cli_oracle_with_checksums():
-    """Second oracle: the reference zstd CLI (when present) at several
-    levels WITH --content-size and checksums — pyarrow's codec emits
-    neither, so this leg covers the frame-content-size and XXH64 paths
-    against reference-encoder output."""
-    import shutil
-    import subprocess
-
-    from moonlink_spark.sources.zstd_py import decompress
-
-    cli = shutil.which("zstd")
-    if cli is None:
-        pytest.skip("zstd CLI not on PATH")
+    """The reference zstd CLI at several levels WITH --content-size and
+    checksums — pyarrow's codec emits neither, so this covers the
+    frame-content-size and XXH64 paths against reference output."""
+    decompress = _codec("zstd")[1]
     payloads = [
         b"",
         b"hello world " * 2000,
@@ -339,47 +278,26 @@ def test_zstd_cli_oracle_with_checksums():
     ]
     for lvl in (1, 3, 12, 19, 22):
         for data in payloads:
-            proc = subprocess.run(
-                [cli, "--ultra", f"-{lvl}", "-c", "--content-size", "-C"],
-                input=data, capture_output=True, check=True,
+            frame = _cli(
+                ["zstd", "--ultra", f"-{lvl}", "--content-size", "-C"], data
             )
-            assert decompress(proc.stdout) == data
-    # --no-check / long mode variants
-    proc = subprocess.run(
-        [cli, "-19", "-c", "--no-check"], input=payloads[1],
-        capture_output=True, check=True,
-    )
-    assert decompress(proc.stdout) == payloads[1]
+            assert decompress(frame) == data
+    frame = _cli(["zstd", "-19", "--no-check"], payloads[1])
+    assert decompress(frame) == payloads[1]
 
 
 def test_zstd_differential_fuzz_vs_cli():
-    """Differential fuzz: mutated real frames through BOTH decoders.
-    When both accept, outputs must be byte-identical; single-sided
-    rejects are fine (strictness may differ on corrupt input), but an
-    output DISAGREEMENT means one of them mis-decodes. A 5000-case
-    campaign at review time found zero crashes/mismatches/asymmetries;
-    this keeps a bounded seeded slice of it in CI."""
+    """Differential fuzz: mutated real frames through the batch codec
+    and the reference CLI. When both accept, outputs must be
+    byte-identical; the codec must reject with ValueError only."""
     import random
-    import shutil
-    import subprocess
 
-    import pyarrow as pa
-
-    from moonlink_spark.sources.zstd_py import ZstdError, decompress
-
-    cli = shutil.which("zstd")
-    if cli is None:
-        pytest.skip("zstd CLI not on PATH")
+    decompress = _codec("zstd")[1]
     rng = random.Random(1234)
     seeds = []
     for payload in [b"hello world " * 500, bytes(2000), b"abcabc" * 3000]:
         seeds.append(pa.Codec("zstd").compress(payload, asbytes=True))
-        seeds.append(
-            subprocess.run(
-                [cli, "-9", "-c", "--content-size", "-C"],
-                input=payload, capture_output=True, check=True,
-            ).stdout
-        )
+        seeds.append(_cli(["zstd", "-9", "--content-size", "-C"], payload))
     for i in range(300):
         base = bytearray(rng.choice(seeds))
         kind = rng.randrange(3)
@@ -393,76 +311,156 @@ def test_zstd_differential_fuzz_vs_cli():
             cut = rng.randrange(1, min(len(base), len(other)))
             base = base[:cut] + other[cut:]
         data = bytes(base)
-        p = subprocess.run([cli, "-d", "-c"], input=data, capture_output=True)
+        p = subprocess.run(
+            ["zstd", "-d", "-c"], input=data, capture_output=True
+        )
         ref = p.stdout if p.returncode == 0 else None
         try:
             mine = decompress(data)
-        except ZstdError:
+        except ValueError:
             mine = None
         if ref is not None and mine is not None:
             assert ref == mine, f"case {i}: decoders disagree on output"
 
 
 # --------------------------------------------------------------------------- #
-# store-mode ENCODER (round 11): produce-side zstd
+# produce-side zstd
 # --------------------------------------------------------------------------- #
 
 
 @given(payload=st.binary(max_size=400_000))
 @settings(max_examples=60, deadline=None)
 def test_zstd_encoder_roundtrips_own_decoder(payload):
-    from moonlink_spark.sources.zstd_py import compress, decompress
-
+    compress, decompress = _codec("zstd")
     assert decompress(compress(payload)) == payload
 
 
 def test_zstd_encoder_decodes_by_reference_cli_and_pyarrow():
-    """The store-mode encoder's frames must decode by EVERY zstd: the
-    reference CLI and pyarrow's bundled C zstd, across empty/runs/
-    incompressible/block-boundary shapes (raw + RLE block paths)."""
+    """Produce-side zstd frames decode by the reference CLI and by
+    pyarrow's exact-size API, across empty/runs/incompressible shapes
+    and zstd's 128 KiB block boundary."""
     import os
-    import shutil
-    import subprocess
-    import tempfile
 
-    import pyarrow as pa
-
-    from moonlink_spark.sources.zstd_py import _MAX_BLOCK, compress
-
+    block = 128 << 10
     payloads = [
         b"",
         b"a",
-        b"x" * 31,                      # below the RLE threshold: raw
-        b"x" * 32,                      # at the threshold: RLE
-        b"\x00" * (_MAX_BLOCK + 17),    # RLE run across the block cap
-        os.urandom(_MAX_BLOCK * 2 + 5), # raw blocks across the cap
+        b"x" * 32,
+        b"\x00" * (block + 17),
+        os.urandom(block * 2 + 5),
         b"head" + b"r" * 50_000 + b"tail" + os.urandom(1000),
-        b"ab" * 100_000,                # alternating: pure raw
+        b"ab" * 100_000,
     ]
-    cli = shutil.which("zstd")
+    compress = _codec("zstd")[0]
     for data in payloads:
         enc = compress(data)
         got = pa.Codec("zstd").decompress(enc, len(data)).to_pybytes()
         assert got == data
-        if cli is not None:
-            with tempfile.NamedTemporaryFile(suffix=".zst", delete=False) as fh:
-                fh.write(enc)
-                p = fh.name
-            try:
-                proc = subprocess.run(
-                    [cli, "-d", "-c", p], capture_output=True, check=True
-                )
-                assert proc.stdout == data
-            finally:
-                os.unlink(p)
+        if shutil.which("zstd") is not None:
+            assert _cli(["zstd", "-d"], enc) == data
 
 
 @given(payload=st.binary(max_size=100_000))
 @settings(max_examples=25, deadline=None)
 def test_zstd_encoder_pyarrow_decodes_property(payload):
-    import pyarrow as pa
-
-    from moonlink_spark.sources.zstd_py import compress
-
-    enc = compress(payload)
+    enc = _codec("zstd")[0](payload)
     assert pa.Codec("zstd").decompress(enc, len(payload)).to_pybytes() == payload
+
+
+# --------------------------------------------------------------------------- #
+# records sections from foreign encoders, through decode_record_batches
+# --------------------------------------------------------------------------- #
+
+_RECORDS = [(b"k%d" % i, b"value-%d " % i * 40) for i in range(200)]
+_SECTION = kw.encode_record_batch(0, _RECORDS)[61:]  # plain records
+_SKIP = struct.pack("<II", 0x184D2A5F, 5) + b"skip!"  # a skippable frame
+
+
+def _zstd(data):
+    return pa.Codec("zstd").compress(data, asbytes=True)
+
+
+def _lz4(data):
+    return pa.Codec("lz4").compress(data, asbytes=True)
+
+
+def _half(data):
+    return data[: len(data) // 2], data[len(data) // 2 :]
+
+
+def _batch(codec: str, blob: bytes) -> bytes:
+    """A RecordBatch of ``_RECORDS`` whose records section is ``blob``
+    as-is, under ``codec``'s attribute bits, with a valid CRC."""
+    tail = bytearray(kw.encode_record_batch(0, _RECORDS)[21:61]) + blob
+    struct.pack_into(">h", tail, 0, kw.CODEC_IDS[codec])
+    inner = struct.pack(">ibI", -1, 2, kw.crc32c(bytes(tail))) + tail
+    return struct.pack(">qi", 0, len(inner)) + inner
+
+
+def _corrupt(frame):
+    frame = bytearray(frame)
+    frame[4] |= 0x08  # a reserved frame-header bit
+    return bytes(frame)
+
+
+def _flip_last(frame):
+    return frame[:-1] + bytes([frame[-1] ^ 1])
+
+
+# case -> (codec, records-section maker, MAX_DECOMPRESSED override or
+# None, expected: "ok" or the ValueError match)
+_FRAME_CASES = {
+    "zstd-cli-content-size-checksum": (
+        "zstd",
+        lambda: _cli(["zstd", "-19", "--content-size", "-C"], _SECTION),
+        None, "ok",
+    ),
+    "lz4-cli-block-checksums": (
+        "lz4", lambda: _cli(["lz4", "-BX"], _SECTION), None, "ok",
+    ),
+    "zstd-concatenated": (
+        "zstd", lambda: b"".join(map(_zstd, _half(_SECTION))), None, "ok",
+    ),
+    "zstd-skippable": (
+        "zstd", lambda: _SKIP.join(map(_zstd, _half(_SECTION))), None, "ok",
+    ),
+    "lz4-concatenated-skippable": (
+        "lz4", lambda: _SKIP + b"".join(map(_lz4, _half(_SECTION))),
+        None, "ok",
+    ),
+    "zstd-corrupt": ("zstd", lambda: _corrupt(_zstd(_SECTION)), None, "zstd"),
+    "zstd-truncated": ("zstd", lambda: _zstd(_SECTION)[:-3], None, "zstd"),
+    "lz4-truncated": ("lz4", lambda: _lz4(_SECTION)[:-3], None, "lz4"),
+    "snappy-truncated": (
+        "snappy", lambda: _codec("snappy")[0](_SECTION)[:-3], None, "snappy",
+    ),
+    "zstd-bad-checksum": (
+        "zstd",
+        lambda: _flip_last(_cli(["zstd", "-C"], _SECTION)),
+        None, "(?i)checksum",
+    ),
+    "lz4-bad-checksum": (
+        "lz4",
+        lambda: _flip_last(_cli(["lz4"], _SECTION)),
+        None, "(?i)checksum",
+    ),
+    "zstd-bomb": ("zstd", lambda: _zstd(_SECTION), 1000, "inflates past"),
+    "lz4-bomb": ("lz4", lambda: _lz4(_SECTION), 1000, "inflates past"),
+    "snappy-bomb": (
+        "snappy", lambda: _codec("snappy")[0](_SECTION), 1000, "inflates past",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_FRAME_CASES))
+def test_foreign_records_section_decodes_or_fails_loud(case, monkeypatch):
+    codec, build, cap, expected = _FRAME_CASES[case]
+    batch = _batch(codec, build())
+    if cap is not None:
+        monkeypatch.setattr(kw, "MAX_DECOMPRESSED", cap)
+    if expected == "ok":
+        got = [(k, v) for _o, k, v in kw.decode_record_batches(batch)]
+        assert got == _RECORDS
+    else:
+        with pytest.raises(ValueError, match=expected):
+            list(kw.decode_record_batches(batch))

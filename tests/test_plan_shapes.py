@@ -220,37 +220,14 @@ def test_all_pairs_baseline_guarded(spark, monkeypatch):
         similarity.embedding_near_dup_pairs(spark, "/root/testdata/sf0.001")
 
 
-def test_scale_tuning_configs(spark):
-    """Shuffle partitioning scales with data, not session defaults; AQE +
-    skew-join stay on; configs apply cleanly to a live session."""
-    from moonlink_spark import tuning
+def test_unparseable_shuffle_partitions_warns(monkeypatch):
+    """A bad SPARK_GRAFT_SHUFFLE_PARTITIONS falls back to the core-count
+    default and says so, naming the value and the default used."""
+    from moonlink_spark.session import _default_shuffle_partitions
 
-    # ceil semantics + clamps
-    assert tuning.shuffle_partitions_for(0) == tuning.MIN_SHUFFLE_PARTITIONS
-    assert tuning.shuffle_partitions_for(10**9) == tuning.MIN_SHUFFLE_PARTITIONS
-    one_tb = 1 << 40
-    assert tuning.shuffle_partitions_for(one_tb) == -(-one_tb // tuning.SHUFFLE_TARGET_BYTES)
-    assert (
-        tuning.shuffle_partitions_for(100 * (1 << 40))
-        == tuning.MAX_SHUFFLE_PARTITIONS
-    )
-
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        cfgs = tuning.configure_for_scale(spark, one_tb)
-        assert spark.conf.get("spark.sql.shuffle.partitions") == cfgs[
-            "spark.sql.shuffle.partitions"
-        ]
-        assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
-        # the setting actually reaches plans: a fresh shuffle picks it up
-        n = (
-            spark.range(10_000)
-            .repartition(8)          # explicit: not governed by the conf
-            .selectExpr("id % 7 AS k", "id")
-            .groupBy("k").count()
-        )
-        assert n.count() == 7
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    assert tuning.dataset_bytes("/root/testdata/sf0.001") > 0
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "12")
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "lots")
+    with pytest.warns(UserWarning, match="'lots'.*default of 12"):
+        assert _default_shuffle_partitions() == "12"
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "5")
+    assert _default_shuffle_partitions() == "5"

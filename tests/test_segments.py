@@ -166,35 +166,28 @@ def test_concurrent_update_survives_compaction(spark, tmp_path):
     assert df.select("id").distinct().count() == 35
 
 
-def test_lock_steal_single_winner_and_owner_safe_release(tmp_path):
-    """Review r10: the stale-lock steal unlinked + re-created, letting
-    two waiters both acquire (the second unlink removed the first's
-    FRESH lock); and the finally-unlink removed whoever currently held
-    the lock. Steal is now an atomic rename (one winner) and release is
-    token-checked (a stolen holder exits without touching the thief's
-    lock)."""
-    import json
-    import os
+def test_write_lock_excludes_and_dies_with_its_holder(tmp_path):
+    """index_write_lock is an flock: concurrent holders never overlap,
+    and a holder killed mid-hold (no release code runs) frees the lock
+    at once, so there is no stale lock to steal."""
+    import signal
+    import subprocess
+    import sys
     import threading
     import time
+
+    import pytest
 
     from moonlink_spark.table.segments import index_write_lock
 
     dest = str(tmp_path / "ix")
-    os.makedirs(dest)
-    lock_path = os.path.join(dest, ".write-lock")
-    # a crashed holder's stale lock
-    with open(lock_path, "w") as fh:
-        json.dump({"pid": 0, "ts": 0, "token": "dead"}, fh)
-    os.utime(lock_path, (time.time() - 3600, time.time() - 3600))
-
     inside = []
     overlap = []
     barrier = threading.Barrier(4)
 
     def contend(i):
         barrier.wait()
-        with index_write_lock(dest, stale_s=1.0, timeout_s=30.0):
+        with index_write_lock(dest, timeout_s=30.0):
             inside.append(i)
             if len(inside) - len(overlap) > 1:
                 overlap.append(i)  # someone else is inside too
@@ -210,24 +203,33 @@ def test_lock_steal_single_winner_and_owner_safe_release(tmp_path):
     # no overlapping critical sections: each enter is matched by its own
     # exit before the next enter (overlap got exactly one entry per thread)
     assert len(overlap) == 4
-    assert not os.path.exists(lock_path)  # last holder released
 
-    # owner-safe release: a holder whose lock was stolen must not remove
-    # the thief's lock
-    with open(lock_path, "w") as fh:
-        json.dump({"pid": 0, "ts": 0, "token": "thief"}, fh)
-    from contextlib import ExitStack
-
-    # simulate: enter the lock ctx while a FOREIGN token occupies the file
-    # (as if our lock was stolen mid-hold) — exit must leave it intact
-    import moonlink_spark.table.segments as seg
-
-    ctx = seg.index_write_lock(dest, stale_s=9999, timeout_s=0.2)
+    # a child process takes the lock and is SIGKILLed while holding it
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import sys, time\n"
+            "from moonlink_spark.table.segments import index_write_lock\n"
+            "with index_write_lock(sys.argv[1]):\n"
+            "    print('locked', flush=True)\n"
+            "    time.sleep(600)\n",
+            dest,
+        ],
+        cwd=repo,
+        stdout=subprocess.PIPE,
+        text=True,
+    )
     try:
-        with ctx:
-            pass
-    except TimeoutError:
-        pass  # could not acquire (foreign fresh lock): expected
-    assert os.path.exists(lock_path)  # thief's lock untouched
-    with open(lock_path) as fh:
-        assert json.load(fh)["token"] == "thief"
+        assert child.stdout.readline().strip() == "locked"
+        with pytest.raises(TimeoutError):
+            with index_write_lock(dest, timeout_s=0.2):
+                pass
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait()
+        child.stdout.close()
+    with index_write_lock(dest, timeout_s=0):  # free at once
+        pass
+    assert os.path.exists(os.path.join(dest, ".write-lock"))
