@@ -841,7 +841,6 @@ class MoonlinkBackend:
         group: str | None = None,
         interval_s: float = 1.0,
         lsn_base: int = 1_000_000,
-        transform=None,
         sasl_plain: tuple[str, str] | None = None,
     ):
         """Own a Kafka feed for a table: a ticker drains the
@@ -867,9 +866,7 @@ class MoonlinkBackend:
             group=group or f"moonlink-{database}.{table}",
             sasl_plain=sasl_plain,
         )
-        ingestor = AvroQueueIngestor(
-            t, consumer, value_schema, lsn_base=lsn_base, transform=transform
-        )
+        ingestor = AvroQueueIngestor(t, consumer, value_schema, lsn_base=lsn_base)
 
         def tick():
             ingestor.drain_once()

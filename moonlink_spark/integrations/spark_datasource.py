@@ -929,8 +929,9 @@ class MoonlinkKafkaDataSource(DataSource):
     micro-batch covers every subscribed partition's new range);
     ``startingOffsets`` = ``earliest`` (default), ``latest``, or an
     integer offset applied to every partition; ``valueAvroSchema`` = an
-    Avro record schema JSON — when set, each message value is decoded
-    with the pure-Python codec and the schema's fields become top-level
+    Avro record schema JSON — when set, each offset range's values are
+    decoded by the schema-compiled columnar decoder
+    (sources/avro_arrow.py) and the schema's fields become top-level
     columns after (partition, offset, key); without it the raw Kafka
     shape (partition, offset, key binary, value binary) is returned and
     callers decode downstream (the from_avro pattern).
@@ -1007,20 +1008,14 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
     the cluster exactly like Spark's native Kafka source. Replays are
     deterministic because broker logs are append-only."""
 
-    def __init__(self, options: dict, schema=None):
+    def __init__(self, options: dict, schema):
         # Spark lowercases data-source option keys. Keep the dict: it
         # rides the serialized reader to executors (SASL creds etc.).
         self.options = dict(options)
-        # the resolved reader StructType: read() assembles ONE Arrow
-        # RecordBatch per offset range against it (pyspark>=4 Python
-        # data sources accept Iterator[pa.RecordBatch]) — rows skip
-        # per-tuple pickling entirely. arrowbatch=false falls back to
-        # the tuple path.
+        # the reader StructType (Spark always passes one): read() builds
+        # ONE Arrow RecordBatch per offset range against it, so rows
+        # skip per-tuple pickling
         self.spark_schema = schema
-        self.arrow_mode = (
-            str(options.get("arrowbatch", "true")).lower() != "false"
-            and schema is not None
-        )
         self.host = options["host"]
         self.port = int(options["port"])
         self.topic = options["topic"]
@@ -1054,28 +1049,6 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
                 else None
             ),
         )
-
-    def _rows(self, partition: int, msgs):
-        if self.avro_schema is None:
-            return [(partition, off, key, value) for off, key, value in msgs]
-        from moonlink_spark.sources.avro_binary import (
-            decode_record,
-            row_for_spark,
-        )
-
-        fields = [f["name"] for f in self.avro_schema["fields"]]
-        out = []
-        for off, key, value in msgs:
-            if value is None:
-                # tombstone: no Avro datum to decode — skip the record
-                # (same policy as AvroQueueIngestor.drain_once); the
-                # offset range still advances past it in the checkpoint
-                continue
-            rec = row_for_spark(
-                self.avro_schema, decode_record(self.avro_schema, value)
-            )
-            out.append((partition, off, key, *[rec[f] for f in fields]))
-        return out
 
     def _fetch_range(self, partition: int, lo: int, hi: int) -> list:
         """All messages of one partition with lo <= offset < hi."""
@@ -1126,46 +1099,35 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
             if end.get(str(p), 0) > start.get(str(p), 0)
         ]
 
-    def _arrow_batches(self, partition: int, msgs):
+    def read(self, partition: _KafkaRangePartition):
         """One pyarrow RecordBatch for the whole fetched range: Avro
         values decode through the schema-compiled columnar decoder
         (sources/avro_arrow.py) straight into Arrow arrays — no
         per-record dicts, no per-row pickling."""
         from moonlink_spark.sources.avro_arrow import (
             arrow_batch_for_spark,
-            columnar_decoder_cached,
+            decode_columns,
         )
 
-        if self.avro_schema is None:
-            named = {
-                "partition": (None, [partition] * len(msgs)),
-                "offset": (None, [m[0] for m in msgs]),
-                "key": (None, [m[1] for m in msgs]),
-                "value": (None, [m[2] for m in msgs]),
-            }
-            yield arrow_batch_for_spark(self.spark_schema, named)
-            return
-        live = [m for m in msgs if m[2] is not None]  # skip tombstones
-        names, decode_all = columnar_decoder_cached(self.avro_schema)
-        cols = decode_all([m[2] for m in live])
-        named = {
-            "partition": (None, [partition] * len(live)),
-            "offset": (None, [m[0] for m in live]),
-            "key": (None, [m[1] for m in live]),
-        }
-        for f, col in zip(self.avro_schema["fields"], cols):
-            named[f["name"]] = (f["type"], col)
-        yield arrow_batch_for_spark(self.spark_schema, named)
-
-    def read(self, partition: _KafkaRangePartition):
         # EXECUTOR-side: this task fetches its own offset range over its
         # own socket; the driver never touches message bytes
         msgs = self._fetch_range(
             partition.partition, partition.lo, partition.hi
         )
-        if self.arrow_mode:
-            return self._arrow_batches(partition.partition, msgs)
-        return iter(self._rows(partition.partition, msgs))
+        if self.avro_schema is not None:
+            # tombstone: no Avro datum to decode — skip the record (same
+            # policy as AvroQueueIngestor.drain_once); the offset range
+            # still advances past it in the checkpoint
+            msgs = [m for m in msgs if m[2] is not None]
+        named = {
+            "partition": (None, [partition.partition] * len(msgs)),
+            "offset": (None, [m[0] for m in msgs]),
+            "key": (None, [m[1] for m in msgs]),
+            "value": (None, [m[2] for m in msgs]),
+        }
+        if self.avro_schema is not None:
+            named.update(decode_columns(self.avro_schema, named["value"][1]))
+        return iter([arrow_batch_for_spark(self.spark_schema, named)])
 
     def commit(self, end: dict) -> None:
         pass  # Spark's checkpoint is the offset store; nothing broker-side

@@ -1,15 +1,13 @@
-"""Schema-compiled columnar Avro decode — the Arrow fast path.
+"""Schema-compiled columnar Avro decode — the one bulk Avro decode path.
 
 Parity/role: the reference's moonlink-kafka ingestion decodes Avro
 record-by-record inside a native runtime (``src/moonlink_connectors``,
-Rust avro crate); the Python stream source
-(``integrations/spark_datasource.py``) originally mirrored that shape
-with the interpretive :func:`~moonlink_spark.sources.avro_binary.
-decode_datum` per message — correct, but every record re-walks the
-schema dict and re-dispatches on type strings, and every row crosses
-into Spark through pickling.
-
-This module removes both costs for the hot path:
+Rust avro crate) into an Arrow mem-table. Both bulk consumers decode
+here: the queue ingestor (``sources/queue.py``) stages one Arrow table
+per drain, and the stream source (``integrations/spark_datasource.py``)
+hands Spark one Arrow batch per offset range. The interpretive
+:func:`~moonlink_spark.sources.avro_binary.decode_record` stays the
+single-datum path and the test oracle.
 
 - :func:`compile_columnar_decoder` SPECIALIZES the record schema into
   one generated Python function (built with ``compile()`` once per
@@ -17,12 +15,11 @@ This module removes both costs for the hot path:
   per-column Python lists — zigzag varints inlined, no per-field
   dispatch, no per-record dict. Temporal logicals decode to raw int64
   (µs / ms / days) instead of datetime objects, which is exactly what
-  Arrow wants.
-- :func:`arrow_batch_for_spark` assembles those columns into ONE
-  ``pyarrow.RecordBatch`` matching the Spark reader schema
-  (``pyspark.sql.pandas.types.to_arrow_schema``), so the Python data
-  source hands Spark an Arrow batch per offset range instead of
-  pickled tuples (pyspark>=4 DataSourceStreamReader Arrow support).
+  Arrow wants. Malformed wire bytes raise ``AvroSchemaError`` exactly
+  where ``decode_record`` does.
+- :func:`arrow_batch_for_spark` assembles those columns
+  (:func:`decode_columns`) into ONE ``pyarrow.RecordBatch`` matching a
+  Spark ``StructType`` (``pyspark.sql.pandas.types.to_arrow_schema``).
 
 Complex fields (array/map/nested record/enum/fixed/decimal/multi-branch
 unions) fall back to the interpretive decoder FOR THAT FIELD ONLY —
@@ -34,14 +31,16 @@ by tests against ``decode_record``).
 from __future__ import annotations
 
 import json
+import struct
 from typing import Any, Callable
 
-from moonlink_spark.sources.avro_binary import decode_datum
+from moonlink_spark.sources.avro_binary import decode_datum, fix_datum_for_spark
 from moonlink_spark.sources.converters import AvroSchemaError
 
 # body snippets keyed by resolved primitive; each appends one decoded
 # value to the column list `cN` and advances `pos`. Varints are inlined
-# (zigzag); temporal logicals stay integers (Arrow-ready).
+# (zigzag, capped like avro_binary._zigzag_decode); temporal logicals
+# stay integers (Arrow-ready).
 _VARINT = """
     sh = 0; r = 0
     while True:
@@ -50,7 +49,15 @@ _VARINT = """
         if byt < 0x80:
             break
         sh += 7
+        if sh > 70:
+            raise AvroSchemaError('varint too long')
     {out} = (r >> 1) ^ -(r & 1)
+"""
+
+# a negative length would rewind `pos`; a long one would read short
+_LENGTH = _VARINT.format(out="n") + """\
+    if n < 0 or pos + n > end:
+        raise AvroSchemaError(f'truncated {what}: need {{n}} bytes at {{pos}}')
 """
 
 
@@ -78,6 +85,8 @@ def _snippet(fs: Any, col: str) -> str | None:
     if bidx == {null_idx}:
         {col}.append(None)
     else:
+        if bidx != {1 - null_idx}:
+            raise AvroSchemaError(f'union branch {{bidx}} out of range')
 {_indent(inner, 4)}
 """
                 )
@@ -105,12 +114,12 @@ def _snippet(fs: Any, col: str) -> str | None:
         )
     if t == "string" and lt is None:
         return (
-            _VARINT.format(out="n")
+            _LENGTH.format(what="string")
             + f"    {col}.append(buf[pos:pos + n].decode('utf-8')); pos += n\n"
         )
     if t == "bytes" and lt is None:
         return (
-            _VARINT.format(out="n")
+            _LENGTH.format(what="bytes")
             + f"    {col}.append(bytes(buf[pos:pos + n])); pos += n\n"
         )
     return None  # complex / logical-decimal / enum / fixed: fallback
@@ -137,15 +146,19 @@ def compile_columnar_decoder(
     fields = node["fields"]
     names = [f["name"] for f in fields]
 
+    # the defaults bind the helpers as locals for the hot loop
     lines = [
-        "def _decode_all(values, field_schemas, decode_datum, unpack_f,"
-        " fix_datum):",
+        "def decode_all(values, field_schemas=field_schemas,"
+        " decode_datum=decode_datum, unpack_f=unpack_f, fix_datum=fix_datum):",
         "    cols = [[] for _ in field_schemas]",
     ]
     for i in range(len(fields)):
         lines.append(f"    c{i} = cols[{i}]")
-    lines.append("    for buf in values:")
-    lines.append("        pos = 0")
+    # reads past the end and bad UTF-8 raise AvroSchemaError, as in
+    # decode_record (the try costs nothing until something raises)
+    lines.append("    try:")
+    lines.append("      for buf in values:")
+    lines.append("        pos = 0; end = len(buf)")
     for i, f in enumerate(fields):
         body = _snippet(f["type"], f"c{i}")
         if body is None:
@@ -154,39 +167,32 @@ def compile_columnar_decoder(
                 f"field_schemas[{i}], buf, pos)"
             )
             # complex fallback values need the same Spark-shape fix as
-            # the row path (maps -> array<struct<key,value>>, nested
-            # record alignment) so both paths are value-identical
+            # row_for_spark (maps -> array<struct<key,value>>, nested
+            # record alignment) so both decoders are value-identical
             lines.append(
                 f"        c{i}.append(fix_datum(field_schemas[{i}], v))"
             )
         else:
             lines.append(_indent(body, 4).rstrip("\n"))
     lines.append(
-        "        if pos != len(buf):\n"
-        "            raise ValueError("
-        "f'trailing {len(buf) - pos} bytes after datum')"
+        "        if pos != end:\n"
+        "            raise AvroSchemaError("
+        "f'trailing {end - pos} bytes after datum (framing bug?)')\n"
+        "    except (IndexError, struct.error, UnicodeDecodeError) as e:\n"
+        "        raise AvroSchemaError(f'malformed datum: {e}') from e"
     )
     lines.append("    return cols")
     src = "\n".join(lines)
-    ns: dict[str, Any] = {}
+    ns: dict[str, Any] = {
+        "AvroSchemaError": AvroSchemaError,
+        "struct": struct,
+        "field_schemas": [f["type"] for f in fields],
+        "decode_datum": decode_datum,
+        "unpack_f": struct.unpack_from,
+        "fix_datum": fix_datum_for_spark,
+    }
     exec(compile(src, "<avro-columnar>", "exec"), ns)  # noqa: S102
-    import struct
-
-    from moonlink_spark.sources.avro_binary import fix_datum_for_spark
-
-    field_schemas = [f["type"] for f in fields]
-    fn = ns["_decode_all"]
-
-    def decode_all(values: list) -> list[list]:
-        return fn(
-            values,
-            field_schemas,
-            decode_datum,
-            struct.unpack_from,
-            fix_datum_for_spark,
-        )
-
-    return names, decode_all
+    return names, ns["decode_all"]
 
 
 _DECODER_MEMO: dict[str, tuple[list[str], Callable]] = {}
@@ -245,19 +251,30 @@ def _logical_of(fs: Any) -> str | None:
     return fs.get("logicalType")
 
 
+def decode_columns(schema: dict, values: list) -> dict[str, tuple[Any, list]]:
+    """Avro record payloads -> ``{field name: (field schema, column)}``,
+    the ``named_columns`` shape :func:`arrow_batch_for_spark` takes."""
+    names, decode_all = columnar_decoder_cached(schema)
+    types = [f["type"] for f in schema["fields"]]
+    return dict(zip(names, zip(types, decode_all(values))))
+
+
 def arrow_batch_for_spark(
     spark_struct,
     named_columns: dict[str, tuple[Any, list]],
+    num_rows: int = 0,
 ):
     """Assemble one ``pyarrow.RecordBatch`` matching ``spark_struct``
     (a ``StructType``). ``named_columns`` maps column name ->
-    (avro_field_schema_or_None, raw python list)."""
+    (avro_field_schema_or_None, raw python list); names the struct
+    lacks are dropped, struct columns it lacks are ``num_rows`` nulls."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     pa_schema = to_arrow_schema(spark_struct)
+    nulls = (None, [None] * num_rows)
     arrays = []
     for sf in spark_struct.fields:
-        fs, raw = named_columns[sf.name]
+        fs, raw = named_columns.get(sf.name, nulls)
         arrays.append(_arrow_value(fs, sf.dataType, raw))
     return pa.RecordBatch.from_arrays(arrays, schema=pa_schema)

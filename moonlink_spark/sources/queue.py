@@ -27,8 +27,10 @@ import json
 import os
 import struct
 import uuid
-from typing import Any, Callable, Iterator
+from typing import Any, Iterator
 
+from moonlink_spark.schema import field_schema_to_struct
+from moonlink_spark.sources.avro_arrow import arrow_batch_for_spark, decode_columns
 from moonlink_spark.table.table import MoonlinkTable
 
 _NULL_KEY = 0xFFFFFFFF  # null key, non-null value
@@ -541,11 +543,13 @@ class FileQueueConsumer:
 class AvroQueueIngestor:
     """Drain Avro datums from a queue into a MoonlinkTable.
 
-    Each drained batch becomes one table commit whose LSN is
-    ``lsn_base + last_offset + 1`` — monotone in the queue offset, so a
-    crash between commit and consumer-offset write replays the batch and
-    the table's LSN floor makes the replay a no-op (the same idempotence
-    contract as the REST journal, ingest/rest.py)."""
+    Each drain decodes through the schema-compiled columnar decoder
+    (``sources/avro_arrow.py``) into ONE Arrow table in the table's
+    schema, staged with ``append_arrow``, and becomes one commit whose
+    LSN is ``lsn_base + last_offset + 1`` — monotone in the queue
+    offset, so a crash between commit and consumer-offset write replays
+    the batch and the table's LSN floor makes the replay a no-op (the
+    same idempotence contract as the REST journal, ingest/rest.py)."""
 
     def __init__(
         self,
@@ -553,10 +557,7 @@ class AvroQueueIngestor:
         consumer: FileQueueConsumer,
         value_schema: dict | str,
         lsn_base: int = 1_000_000,
-        transform: Callable[[dict], dict] | None = None,
     ):
-        from moonlink_spark.sources.avro_binary import decode_record, row_for_spark
-
         self.table = table
         self.consumer = consumer
         self.schema = (
@@ -565,9 +566,6 @@ class AvroQueueIngestor:
             else value_schema
         )
         self.lsn_base = lsn_base
-        self.transform = transform
-        self._decode = decode_record
-        self._reshape = row_for_spark
 
     # manifest property carrying the last queue offset this ingestor
     # applied. The floor used to be DERIVED from last_lsn, which broke
@@ -577,6 +575,8 @@ class AvroQueueIngestor:
     APPLIED_OFFSET_PROP = "avro_queue.applied_offset"
 
     def drain_once(self, max_messages: int = 50_000) -> dict[str, Any]:
+        import pyarrow as pa
+
         batch = self.consumer.poll(max_messages)
         if not batch:
             return {"messages": 0, "version": self.table.manifest.version}
@@ -603,26 +603,26 @@ class AvroQueueIngestor:
             # (review r10). No property + foreign commit = nothing
             # recorded as applied.
             applied_floor = -1
-        rows = []
-        for off, _key, value in batch:
-            if off <= applied_floor:
-                continue
-            if value is None:
-                # tombstone policy: a null-value record carries no Avro
-                # datum to decode. Moonlink deletes are expressed through
-                # the CDC `op` field inside the datum (ingest/cdc.py), not
-                # through compacted-topic delete markers — skip, but still
-                # advance the offset floor past it.
-                continue
-            row = self._reshape(self.schema, self._decode(self.schema, value))
-            rows.append(self.transform(row) if self.transform else row)
+        # tombstone policy: a null-value record carries no Avro datum to
+        # decode. Moonlink deletes are expressed through the CDC `op`
+        # field inside the datum (ingest/cdc.py), not through
+        # compacted-topic delete markers — skip, but still advance the
+        # offset floor past it.
+        live = [
+            v for off, _k, v in batch if off > applied_floor and v is not None
+        ]
         last_offset = batch[-1][0]
         lsn = self.lsn_base + last_offset + 1
         version = self.table.manifest.version
-        if rows:
+        if live:
+            struct = field_schema_to_struct(m.schema_fields)
+            named = decode_columns(self.schema, live)
+            tbl = pa.Table.from_batches(
+                [arrow_batch_for_spark(struct, named, len(live))]
+            )
             mark = self.table.pending_mark()
             try:
-                self.table.append_rows(rows)
+                self.table.append_arrow(tbl)
                 version = self.table.commit(
                     # monotone even when foreign commits advanced the
                     # table past the offset-derived LSN — the applied
@@ -634,7 +634,7 @@ class AvroQueueIngestor:
                     },
                 )
             except BaseException:
-                # a failed commit restores the staged rows for the
+                # a failed commit restores the staged table for the
                 # non-queue retry pattern; OUR retry re-polls and
                 # re-appends, so the restored copy must go or the next
                 # successful commit applies the batch twice

@@ -476,6 +476,20 @@ class MoonlinkTable:
                     raise
                 self._pending.append(("append_files", files))
 
+    def append_arrow(self, tbl) -> None:
+        """Buffer one ``pyarrow.Table`` in the table's Arrow schema (a
+        queue drain decodes straight into one); commit writes it as its
+        own parquet file, after the rows buffered before it."""
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        want = to_arrow_schema(self.schema)
+        if not tbl.schema.equals(want):
+            raise TableConfigError(
+                f"append_arrow: schema {tbl.schema} is not the table's {want}"
+            )
+        with self._lock:
+            self._pending.append(("append_arrow", tbl))
+
     def append_df(self, df: DataFrame) -> None:
         """Buffer a DataFrame append (bulk path; preserves parallelism)."""
         with self._lock:
@@ -775,6 +789,9 @@ class MoonlinkTable:
             kind = op[0]
             if kind == "append_rows":
                 row_buf.extend(op[1])
+            elif kind == "append_arrow":
+                flush_rows()
+                new_files.extend(self._write_arrow_file(op[1]))
             elif kind == "append_df":
                 flush_rows()
                 new_files.extend(self._write_df_files(op[1]))
@@ -1189,10 +1206,8 @@ class MoonlinkTable:
         schema = self.schema
         try:
             import pyarrow as pa
-            import pyarrow.parquet as pq
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            arrow_schema = to_arrow_schema(schema)
             # columnar projection, not row dicts: from_pylist rebuilt a
             # dict per row (plus a fieldNames() call per row) before
             # pyarrow transposed it anyway — ~3x the CPU of handing each
@@ -1202,23 +1217,30 @@ class MoonlinkTable:
             names = schema.fieldNames()
             tbl = pa.Table.from_pydict(
                 {f: [r.get(f) for r in rows] for f in names},
-                schema=arrow_schema,
+                schema=to_arrow_schema(schema),
             )
-            rel = f"{DATA_DIR}/buf-{uuid.uuid4().hex}.parquet"
-            path = os.path.join(self.data_path, rel)
-            pq.write_table(tbl, path, compression="snappy")
-            return [
-                FileEntry(
-                    rel,
-                    tbl.num_rows,
-                    self.data_fs.getsize(path),
-                    collect_file_stats(path),
-                )
-            ]
+            return self._write_arrow_file(tbl)
         except Exception:
             # fall back to the Spark writer on any conversion edge case
             df = self.spark.createDataFrame(rows, schema)
             return self._write_df_files(df.coalesce(1))
+
+    def _write_arrow_file(self, tbl) -> list[FileEntry]:
+        """Write one Arrow table as ONE parquet data file on the driver:
+        the writer behind both the row buffer and ``append_arrow``."""
+        import pyarrow.parquet as pq
+
+        rel = f"{DATA_DIR}/buf-{uuid.uuid4().hex}.parquet"
+        path = os.path.join(self.data_path, rel)
+        pq.write_table(tbl, path, compression="snappy")
+        return [
+            FileEntry(
+                rel,
+                tbl.num_rows,
+                self.data_fs.getsize(path),
+                collect_file_stats(path),
+            )
+        ]
 
     def _write_df_files(
         self, df: DataFrame, cluster_files: int | None = None

@@ -30,7 +30,10 @@ from moonlink_spark.sources.avro_binary import (
     encode_datum,
     row_for_spark,
 )
-from moonlink_spark.sources.converters import avro_schema_to_struct
+from moonlink_spark.sources.converters import (
+    AvroSchemaError,
+    avro_schema_to_struct,
+)
 
 RICH_SCHEMA = {
     "type": "record",
@@ -154,7 +157,7 @@ def test_trailing_bytes_raise():
     }
     _, decode_all = compile_columnar_decoder(schema)
     good = encode_datum(schema, {"x": 7})
-    with pytest.raises(ValueError, match="trailing"):
+    with pytest.raises(AvroSchemaError, match="trailing"):
         decode_all([good + b"\x00"])
 
 

@@ -137,14 +137,21 @@ def test_zigzag_varint_roundtrip(n):
 
 def test_malformed_datums_fail_loud_as_schema_errors():
     """Wire bytes are untrusted (/kafka/{t}/ingest feeds raw HTTP bodies
-    here): every truncation and random corruption must surface as
-    AvroSchemaError (-> HTTP 400), never IndexError/UnicodeDecodeError
-    (-> 500) or a silently short value (review finding r9)."""
+    here, Kafka drains feed the columnar decoder): every truncation and
+    random corruption must surface as AvroSchemaError (-> HTTP 400),
+    never IndexError/UnicodeDecodeError (-> 500) or a silently short
+    value. The columnar decoder must fail on exactly the payloads
+    decode_record fails on, and decode the rest to the same values."""
     import random
 
     import pytest
 
-    from moonlink_spark.sources.avro_binary import decode_record, encode_datum
+    from moonlink_spark.sources.avro_arrow import columnar_decoder_cached
+    from moonlink_spark.sources.avro_binary import (
+        decode_record,
+        encode_datum,
+        row_for_spark,
+    )
     from moonlink_spark.sources.converters import AvroSchemaError
 
     schema = {
@@ -163,17 +170,47 @@ def test_malformed_datums_fail_loud_as_schema_errors():
         "a": "héllo", "b": 42, "c": [1, 2, 3], "d": {"k": "v"},
         "e": "Y", "f": True, "g": 1.5,
     })
-    for i in range(1, len(good)):
-        with pytest.raises(AvroSchemaError):
-            decode_record(schema, good[:i])
-    rng = random.Random(11)
-    for _ in range(2000):
-        b = bytearray(good)
-        for _ in range(rng.randint(1, 5)):
-            b[rng.randrange(len(b))] = rng.randrange(256)
-        if bytes(b) == good:
-            continue
+    # the compiled nullable-union and bytes snippets get their own corpus
+    unions = {
+        "type": "record", "name": "u", "fields": [
+            {"name": "h", "type": ["null", "bytes"]},
+            {"name": "i", "type": ["string", "null"]},
+            {"name": "j", "type": ["null", "float"]},
+        ],
+    }
+    unions_good = encode_datum(unions, {"h": b"\x00\xff", "i": "é", "j": 2.5})
+
+    def check(schema: dict, payload: bytes) -> None:
         try:
-            decode_record(schema, bytes(b))  # may still be a VALID datum
+            want = row_for_spark(schema, decode_record(schema, payload))
         except AvroSchemaError:
-            pass  # the only acceptable failure type
+            with pytest.raises(AvroSchemaError):
+                columnar_decoder_cached(schema)[1]([payload])
+            return
+        names, decode_all = columnar_decoder_cached(schema)
+        got = decode_all([payload])
+        assert {n: col[0] for n, col in zip(names, got)} == want
+
+    short = {"type": "record", "name": "s", "fields": [
+        {"name": "a", "type": "string"}, {"name": "b", "type": "long"}]}
+    for payload, match in (
+        (b"\x01", "truncated string"),  # string length -1 (zigzag 0x01)
+        (b"\x00" + b"\xff" * 11 + b"\x01", "varint too long"),  # 12 bytes
+    ):
+        with pytest.raises(AvroSchemaError, match=match):
+            decode_record(short, payload)
+        with pytest.raises(AvroSchemaError, match=match):
+            columnar_decoder_cached(short)[1]([payload])
+    for schema, good in ((schema, good), (unions, unions_good)):
+        for i in range(1, len(good)):
+            with pytest.raises(AvroSchemaError):
+                decode_record(schema, good[:i])
+            check(schema, good[:i])
+        rng = random.Random(11)
+        for _ in range(2000):
+            b = bytearray(good)
+            for _ in range(rng.randint(1, 5)):
+                b[rng.randrange(len(b))] = rng.randrange(256)
+            if bytes(b) == good:
+                continue
+            check(schema, bytes(b))  # may still be a VALID datum

@@ -641,3 +641,109 @@ def test_drain_onto_foreign_owned_table_applies_everything(spark, tmp_path):
     before = t.manifest.version
     ing.drain_once()
     assert t.manifest.version == before and t.scan().count() == 11
+
+
+def test_drain_matches_interpretive_append(spark, tmp_path):
+    """The columnar drain (compiled decoder -> one Arrow table ->
+    append_arrow) stages exactly what the interpretive decoder plus
+    append_rows would: every RICH_SCHEMA field kind (nullable unions,
+    timestamps, date, time, decimal, map, nested record, enum), a
+    tombstone, a replayed prefix below the applied floor, an Avro field
+    the table lacks and a table column the Avro schema lacks."""
+    from pyspark.sql import types as T
+
+    from tests.test_avro_arrow import RICH_SCHEMA, _rich_value
+
+    struct = avro_schema_to_struct(RICH_SCHEMA)
+    table_struct = T.StructType(
+        [f for f in struct.fields if f.name != "score"]  # Avro-only field
+        + [T.StructField("note", T.StringType())]  # table-only column
+    )
+    payloads = [encode_datum(RICH_SCHEMA, _rich_value(i)) for i in range(30)]
+    qdir = str(tmp_path / "q")
+    p = FileQueueProducer(qdir)
+    for v in payloads[:10]:
+        p.send(v)
+    p.send(None, key=b"gone")  # tombstone at offset 10
+    p.close()
+
+    t = MoonlinkTable.create(
+        spark, str(tmp_path / "t"), table_struct, IdentityProp.none()
+    )
+    ing = AvroQueueIngestor(t, FileQueueConsumer(qdir), RICH_SCHEMA)
+    assert ing.drain_once()["messages"] == 11
+    p = FileQueueProducer(qdir)
+    for v in payloads[10:]:
+        p.send(v)
+    p.close()
+    # replay offsets 5..10 (applied) merged with the 20 new messages
+    ing.consumer.commit(5)
+    assert ing.drain_once()["messages"] == 26
+
+    ref = MoonlinkTable.create(
+        spark, str(tmp_path / "ref"), table_struct, IdentityProp.none()
+    )
+    ref.append_rows(
+        row_for_spark(RICH_SCHEMA, decode_record(RICH_SCHEMA, v))
+        for v in payloads
+    )
+    ref.commit()
+
+    def rows(tbl):
+        got = [r.asDict(recursive=True) for r in tbl.scan().collect()]
+        return sorted(got, key=lambda r: r["id"])
+
+    got = rows(t)
+    assert [r["id"] for r in got] == list(range(30))
+    assert all(r["note"] is None and "score" not in r for r in got)
+    assert got == rows(ref)
+
+
+def test_append_arrow_rejects_foreign_schema(spark, tmp_path):
+    import pyarrow as pa
+
+    from moonlink_spark.errors import TableConfigError
+
+    t = MoonlinkTable.create(
+        spark, str(tmp_path / "t"), _E_FIELDS, IdentityProp.single("id")
+    )
+    for bad in (
+        pa.table({"id": pa.array([1], pa.int32()), "v": ["a"]}),  # type
+        pa.table({"id": pa.array([1], pa.int64())}),  # missing column
+    ):
+        with pytest.raises(TableConfigError, match="append_arrow"):
+            t.append_arrow(bad)
+    assert not t.has_pending()
+
+
+def test_failed_commit_after_append_arrow_discards_cleanly(
+    spark, tmp_path, monkeypatch
+):
+    """The queue drain's failure path: a commit that fails restores the
+    staged Arrow table, and discard_pending_since(mark) drops it again,
+    so the retried drain cannot apply the batch twice."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    t = MoonlinkTable.create(
+        spark, str(tmp_path / "t"), _E_FIELDS, IdentityProp.single("id")
+    )
+    tbl = pa.Table.from_pydict(
+        {"id": [1, 2], "v": ["a", "b"]}, schema=to_arrow_schema(t.schema)
+    )
+    mark = t.pending_mark()
+    t.append_arrow(tbl)
+
+    def outage(m, **kw):
+        raise OSError("injected store outage")
+
+    monkeypatch.setattr(t.store, "commit", outage)
+    with pytest.raises(OSError):
+        t.commit()
+    assert t.has_pending()  # the failed commit restored the op
+    assert t.discard_pending_since(mark) == 1
+    assert not t.has_pending()
+    monkeypatch.undo()
+    t.append_rows([{"id": 3, "v": "c"}])
+    t.commit()
+    assert sorted(r["id"] for r in t.scan().collect()) == [3]

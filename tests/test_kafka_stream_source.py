@@ -265,12 +265,15 @@ RICH_STREAM_SCHEMA = {
 }
 
 
-def test_arrow_and_tuple_paths_agree(spark, broker):
-    """The Arrow-batched decode (default) and the pickled-tuple fallback
-    (arrowbatch=false) must produce the SAME DataFrame — including a
-    tombstone (skipped by both) and a map field (columnar fallback +
-    row_for_spark shape)."""
+def test_stream_decode_matches_interpretive_rows(spark, broker):
+    """The stream reader's Arrow-batched columnar decode must produce
+    the rows the interpretive decoder gives — decode_record plus
+    row_for_spark, computed here as the reference — including a
+    tombstone (skipped) and a map field (columnar fallback +
+    array<struct<key,value>> shape)."""
     import datetime as dt
+
+    from moonlink_spark.sources.avro_binary import decode_record, row_for_spark
 
     register_moonlink_source(spark)
     prod = KafkaWireProducer(broker.host, broker.port)
@@ -290,30 +293,36 @@ def test_arrow_and_tuple_paths_agree(spark, broker):
         )
         for i in range(40)
     ]
-    msgs.append((b"dead", None))  # tombstone: both paths skip it
+    msgs.append((b"dead", None))  # tombstone: skipped
     prod.send("rich", msgs)
     prod.close()
 
-    def run(name, **opts):
-        q = (
-            _reader(spark, broker, topic="rich",
-                    valueAvroSchema=json.dumps(RICH_STREAM_SCHEMA), **opts)
-            .option("topic", "rich")
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        return sorted(
-            spark.sql(f"SELECT * FROM {name}").collect(),
-            key=lambda r: r["offset"],
-        )
-
-    fast = run("krich_arrow")
-    slow = run("krich_tuple", arrowbatch="false")
-    assert len(fast) == 40
-    assert [r.asDict(recursive=True) for r in fast] == [
-        r.asDict(recursive=True) for r in slow
+    q = (
+        _reader(spark, broker, topic="rich",
+                valueAvroSchema=json.dumps(RICH_STREAM_SCHEMA))
+        .load()
+        .writeStream.format("memory")
+        .queryName("krich")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    # timestamps compared as epoch micros: collect() renders them in
+    # the process time zone, decode_record as naive UTC
+    got = [
+        r.asDict(recursive=True)
+        for r in spark.sql(
+            "SELECT partition, offset, key, id, v, unix_micros(ts) AS ts,"
+            " props FROM krich ORDER BY offset"
+        ).collect()
     ]
+    epoch = dt.datetime(1970, 1, 1)
+    want = []
+    for off, (key, value) in enumerate(msgs[:-1]):
+        rec = row_for_spark(
+            RICH_STREAM_SCHEMA, decode_record(RICH_STREAM_SCHEMA, value)
+        )
+        rec["ts"] = (rec["ts"] - epoch) // dt.timedelta(microseconds=1)
+        want.append({"partition": 0, "offset": off, "key": key, **rec})
+    assert len(got) == 40
+    assert got == want
