@@ -10,8 +10,11 @@ from __future__ import annotations
 
 import os
 import warnings
+from collections.abc import Sequence
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _default_shuffle_partitions() -> str:
@@ -114,6 +117,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Sequence[Sequence[Any]],
+    schema: T.StructType | str,
+) -> DataFrame:
+    """A driver-bounded relation as a Spark ``LocalRelation``.
+
+    ``rows`` are tuples in ``schema`` field order (``schema`` may be a
+    DDL string). They go to ``createDataFrame`` as one Arrow table, so
+    evaluating the result launches no job; ``createDataFrame(list)``
+    builds a ``LogicalRDD`` instead, and every evaluation of that runs a
+    Python-worker job. Top-level values that need conversion (timestamps,
+    dates) pass through their field type's ``toInternal``, which reads a
+    naive datetime as process-local time exactly as the list path does."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    arrays = []
+    for col, f, af in zip(cols, schema.fields, arrow_schema):
+        if f.dataType.needConversion():
+            to_internal = f.dataType.toInternal
+            col = [None if v is None else to_internal(v) for v in col]
+        arrays.append(pa.array(col, type=af.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
+    )
 
 
 def stop_spark() -> None:

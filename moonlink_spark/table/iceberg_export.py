@@ -1336,7 +1336,7 @@ def iceberg_index_lookup(
     dest: str,
     key_hashes: list[int],
     spark: Any = None,
-    distributed_threshold: int = 512,
+    distributed_threshold: int = keyindex.DISTRIBUTED_THRESHOLD,
 ) -> dict[str, Any]:
     """Point-lookup FILE PRUNING on an exported Iceberg table: resolve
     which data files can contain rows whose xxhash64 key hash is in
@@ -1346,103 +1346,27 @@ def iceberg_index_lookup(
     storage/table/iceberg/index.rs:115+ / persisted_bucket_hash_map.rs
     ``search_values``).
 
-    Index blocks are hash-range partitioned at build time
-    (``keyindex.build_entries`` repartitionByRange on ``h``), so blocks
-    whose footer min/max excludes every probe hash are skipped from their
-    parquet STATS alone — the lookup cost is O(blocks touched), not
-    O(index rows), which is what keeps this viable when the index itself
-    is large.
-
-    Two execution paths behind the same contract:
-
-    - small probe sets (the point-lookup norm) read the touched blocks
-      driver-side via pyarrow — O(blocks touched) metadata work, no job;
-    - when ``spark`` is given and the probe set reaches
-      ``distributed_threshold``, the index blocks are scanned THROUGH
-      Spark instead (the same broadcast hash-join shape as the native
-      key index's delete targeting, ``table/keyindex.py``): probes
-      broadcast, blocks pruned by a pushed ``h BETWEEN min..max`` range
-      predicate against their parquet stats, and only the O(hits) result
-      returns to the driver — a large probe batch never serializes
-      through one process.
+    The blobs' index blocks are probed by the native key index's own
+    routine, :func:`keyindex.lookup_hashes`: on the driver it reads only
+    the row groups whose ``h`` min/max can hold a probe; when ``spark``
+    is given and the probe set reaches ``distributed_threshold``, the
+    blocks are joined against the broadcast probes through Spark.
 
     Returns ``{"files": [pruned data file paths],
     "positions": [(data_file, row_index), ...]}`` — positions are the
     exact index hits (callers must still mask deletion vectors and
     re-check key equality; hash hits can be a superset on collision)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    probes = sorted(set(int(h) for h in key_hashes))
-    entries = read_iceberg_key_index(dest)
-    if spark is not None and probes and len(probes) >= distributed_threshold:
-        return _index_lookup_spark(spark, entries, probes)
-    probe_arr = pa.array(probes, pa.int64())
-    files: set[str] = set()
-    positions: list[tuple[str, int]] = []
-    for e in entries:
-        src_to_data = dict(zip(e["source_paths"], e["data_files"]))
-        for block in e["index_block_files"]:
-            md = pq.read_metadata(block)
-            touch = False
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(0).statistics
-                if stats is None or not stats.has_min_max:
-                    touch = True
-                    break
-                if any(stats.min <= h <= stats.max for h in probes):
-                    touch = True
-                    break
-            if not touch:
-                continue
-            tbl = pq.read_table(block, columns=["h", "__fp", "__ri"])
-            mask = pc.is_in(tbl.column("h"), value_set=probe_arr)
-            hits = tbl.filter(mask)
-            for fp, ri in zip(
-                hits.column("__fp").to_pylist(), hits.column("__ri").to_pylist()
-            ):
-                data_file = src_to_data.get(fp)
-                if data_file is not None:
-                    files.add(data_file)
-                    positions.append((data_file, int(ri)))
-    return {"files": sorted(files), "positions": positions}
-
-
-def _index_lookup_spark(
-    spark: Any, entries: list[dict[str, Any]], probes: list[int]
-) -> dict[str, Any]:
-    """Distributed leg of :func:`iceberg_index_lookup`: scan the index
-    block parquet THROUGH Spark and broadcast-join the probe hashes —
-    the exported-blob twin of the native key index's delete-targeting
-    join (``table/keyindex.py``). The ``h BETWEEN`` range predicate is
-    pushed to the parquet scan so hash-range-partitioned blocks outside
-    the probe span are skipped from row-group stats; the driver only
-    ever holds the probe list and the O(hits) result."""
-    from pyspark.sql import functions as F
-
     src_to_data: dict[str, str] = {}
     blocks: list[str] = []
-    for e in entries:
+    for e in read_iceberg_key_index(dest):
         src_to_data.update(zip(e["source_paths"], e["data_files"]))
         blocks.extend(e["index_block_files"])
-    if not blocks:
-        return {"files": [], "positions": []}
-    probe_df = spark.createDataFrame([(h,) for h in probes], "h BIGINT")
-    if len(probes) <= 1_000_000:
-        probe_df = F.broadcast(probe_df)  # beyond ~1M hashes, let AQE pick
-    map_df = spark.createDataFrame(
-        list(src_to_data.items()), "__fp STRING, data_file STRING"
+    hits = keyindex.lookup_hashes(
+        blocks, key_hashes, spark=spark, distributed_threshold=distributed_threshold
     )
-    hits = (
-        spark.read.parquet(*blocks)
-        .where(F.col("h").between(probes[0], probes[-1]))
-        .join(probe_df, "h")
-        .join(F.broadcast(map_df), "__fp")
-        .select("data_file", "__ri")
-        .collect()
-    )
-    positions = [(r["data_file"], int(r["__ri"])) for r in hits]
+    positions = [
+        (src_to_data[fp], int(ri)) for fp, ri in hits if fp in src_to_data
+    ]
     return {"files": sorted({f for f, _ in positions}), "positions": positions}
 
 

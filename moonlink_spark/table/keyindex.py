@@ -14,24 +14,30 @@ Here the same roles map onto Spark-native machinery:
   whole-stage codegen; stable across sessions). Recorded in the manifest as
   ``algo`` so readers never mix hash functions.
 - **index block file** -> a parquet file of ``(h, __fp, __ri)`` sorted by
-  ``h``. Sorting makes parquet row-group min/max stats on ``h`` a bucket
-  directory: a lookup pushes ``h IN (...)`` / min-max predicates into the
-  scan and touches only matching row groups — the reference's
-  ``bucket_start_offset`` seek, for free.
+  ``h``, written in row groups of at most ``INDEX_ROW_GROUP_ROWS`` rows.
+  Sorting makes each row group's ``h`` min/max a bucket directory entry:
+  the reference's ``bucket_start_offset`` seek becomes "read only the row
+  groups whose range can hold a probe hash".
 - **index build** -> one distributed Spark job over exactly the newly
   flushed files (O(new data), never O(table)).
 - **index merge** -> ``optimize(mode="index")`` unions live index files,
   drops entries for compacted-away data files, rewrites one sorted file.
-- **lookup** -> hash the (small) key batch, broadcast it against the index
-  scan, return the exact set of data files (and positions) containing those
-  keys. Delete targeting then opens ONLY those files instead of relying on
-  min/max range overlap.
+- **lookup** -> :func:`lookup_hashes`, the one probe routine for both this
+  index and the blobs of an exported Iceberg table. The key batch is
+  collected once into a ``LocalRelation`` (:func:`local_keys`) and hashed
+  there (the optimizer folds the hash, so no job runs). Below
+  ``DISTRIBUTED_THRESHOLD`` distinct hashes, pyarrow on the driver reads
+  only the row groups whose ``h`` min/max can hold a probe and filters
+  them with ``is_in``; larger batches join the index through Spark. The
+  result is the exact set of data files (and positions) containing those
+  keys, so delete targeting and point reads open ONLY those files.
 
 Scale story (100 TB): the index is ~16 bytes/row of parquet — three orders
-of magnitude smaller than the data. A CDC delete batch of K keys costs one
-broadcast of K hashes + a stats-pruned scan of the index, then a scan of just
-the files that actually contain the keys. That is the same asymptotic shape
-as the reference's hash lookup, expressed as a Catalyst plan.
+of magnitude smaller than the data. A point lookup of K keys on the driver
+leg reads at most K row groups (K x ``INDEX_ROW_GROUP_ROWS`` index rows)
+plus the footers of the live index files, then scans just the files that
+actually contain the keys. That is the asymptotic shape of the reference's
+hash lookup; SCALE.md §17 has the bound.
 """
 
 from __future__ import annotations
@@ -42,7 +48,10 @@ from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from moonlink_spark.schema import field_schema_to_struct
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.manifest import FileEntry, Manifest
 
 if TYPE_CHECKING:  # pragma: no cover
@@ -55,6 +64,12 @@ XXHASH64_ALGO = "spark-xxhash64-seed42"
 # Rows per output index file (keeps one file per ~8M keys; parquet row
 # groups inside remain the bucket granularity).
 INDEX_FILE_ROWS = 8_000_000
+# Rows per index-file row group: the bucket size of the driver probe,
+# which reads every row group whose h min/max holds a probe hash.
+INDEX_ROW_GROUP_ROWS = 16_384
+# Probe batches with at least this many distinct hashes join the index
+# blocks through Spark instead of reading row groups on the driver.
+DISTRIBUTED_THRESHOLD = 512
 
 
 def enabled(m: Manifest) -> bool:
@@ -81,6 +96,52 @@ def _rel_fp(table: "MoonlinkTable"):
     return rel_fp_expr(table.data_path)
 
 
+def _index_rows(
+    table: "MoonlinkTable", files: list[FileEntry], key_cols: list[str]
+) -> DataFrame:
+    """``(h, __fp, __ri)`` for every row of the data ``files``."""
+    return (
+        table.spark.read.schema(table.schema)
+        .parquet(*[table._resolve(f.path) for f in files])
+        .select(
+            _key_hash(key_cols),
+            _rel_fp(table).alias("__fp"),
+            F.col("_metadata.row_index").alias("__ri"),
+        )
+    )
+
+
+def _write_index(
+    table: "MoonlinkTable", df: DataFrame, total_rows: int, covers: list[str]
+) -> list[dict[str, Any]]:
+    """Write ``df`` as hash-sorted index files (one per ``INDEX_FILE_ROWS``
+    rows, row groups of ``INDEX_ROW_GROUP_ROWS``) -> their entries."""
+    n_out = max(1, -(-total_rows // INDEX_FILE_ROWS))
+    if n_out == 1:
+        df = df.coalesce(1).sortWithinPartitions("h")
+    else:
+        # range partitioning on h => disjoint per-file hash ranges; file and
+        # row-group stats both prune at lookup time
+        df = df.repartitionByRange(n_out, "h").sortWithinPartitions("h")
+    rel_dir = f"{KEYINDEX_DIR}/ix-{uuid.uuid4().hex}"
+    out_dir = os.path.join(table.data_path, rel_dir)
+    df.write.mode("overwrite").option(
+        "parquet.block.row.count.limit", INDEX_ROW_GROUP_ROWS
+    ).parquet(out_dir)
+    return [
+        {
+            "path": f"{rel_dir}/{name}",
+            "covers": covers,
+            # per-FILE row count from its own footer: stamping the
+            # batch total on every entry inflated exported blob
+            # cardinality n_out-fold (review r10)
+            "rows": _entry_rows(table, f"{rel_dir}/{name}"),
+        }
+        for name in sorted(table.data_fs.listdir(out_dir))
+        if name.endswith(".parquet")
+    ]
+
+
 def build_entries(
     table: "MoonlinkTable",
     files: list[FileEntry],
@@ -91,44 +152,12 @@ def build_entries(
     new files, output sorted-by-hash parquet under ``keyindex/``."""
     if not files:
         return []
-    schema = table.schema
-    paths = [table._resolve(f.path) for f in files]
-    df = (
-        table.spark.read.schema(schema)
-        .parquet(*paths)
-        .select(
-            _key_hash(key_cols),
-            _rel_fp(table).alias("__fp"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
+    return _write_index(
+        table,
+        _index_rows(table, files, key_cols),
+        sum(f.rows for f in files),
+        [f.path for f in files],
     )
-    total_rows = sum(f.rows for f in files)
-    n_out = max(1, -(-total_rows // INDEX_FILE_ROWS))
-    if n_out == 1:
-        df = df.coalesce(1).sortWithinPartitions("h")
-    else:
-        # range partitioning on h => disjoint per-file hash ranges; file and
-        # row-group stats both prune at lookup time
-        df = df.repartitionByRange(n_out, "h").sortWithinPartitions("h")
-    rel_dir = f"{KEYINDEX_DIR}/ix-{uuid.uuid4().hex}"
-    out_dir = os.path.join(table.data_path, rel_dir)
-    df.write.mode("overwrite").parquet(out_dir)
-    covers = [f.path for f in files]
-    entries = []
-    for name in sorted(table.data_fs.listdir(out_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        entries.append(
-            {
-                "path": f"{rel_dir}/{name}",
-                "covers": covers,
-                # per-FILE row count from its own footer: stamping the
-                # batch total on every entry inflated exported blob
-                # cardinality n_out-fold (review r10)
-                "rows": _entry_rows(table, f"{rel_dir}/{name}"),
-            }
-        )
-    return entries
 
 
 def _entry_rows(table: "MoonlinkTable", rel: str) -> int:
@@ -154,6 +183,106 @@ def live_entries(m: Manifest) -> tuple[list[dict[str, Any]], set[str]]:
     return out, covered
 
 
+def key_schema(m: Manifest, key_cols: list[str]) -> T.StructType:
+    """The table's key columns and types, nullable (a probe key may be
+    null; it then matches nothing)."""
+    schema = field_schema_to_struct(m.schema_fields)
+    return T.StructType([T.StructField(c, schema[c].dataType) for c in key_cols])
+
+
+def local_keys(
+    spark: SparkSession, m: Manifest, keys_df: DataFrame, key_cols: list[str]
+) -> DataFrame:
+    """The caller's key batch as a ``LocalRelation``: collected ONCE, cast
+    to the table's key types and de-duplicated on the driver. Lookups
+    hash it and semi-join against it without re-running the caller's
+    plan (a list-built ``keys_df`` costs a Python-worker job each time
+    it is evaluated)."""
+    schema = key_schema(m, key_cols)
+    rows = keys_df.select(
+        *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+    ).collect()
+    return local_frame(spark, list(dict.fromkeys(map(tuple, rows))), schema)
+
+
+def lookup_hashes(
+    blocks: list[str],
+    hashes: list[int],
+    spark: SparkSession | None = None,
+    distributed_threshold: int = DISTRIBUTED_THRESHOLD,
+) -> list[tuple[str, int]]:
+    """The key-index probe (parity ``search_values``,
+    persisted_bucket_hash_map.rs:276-302): -> ``(__fp, __ri)`` of every
+    row of the index ``blocks`` whose ``h`` is one of ``hashes``.
+
+    Blocks are sorted by ``h``, so a row group whose footer min/max
+    excludes every probe holds none of them. On the driver leg pyarrow
+    reads only the row groups that can hold a probe and filters them
+    with ``is_in``: O(row groups touched), no Spark job. When ``spark``
+    is given and there are at least ``distributed_threshold`` distinct
+    hashes, the blocks are joined against the broadcast hashes through
+    Spark instead, so a large batch never reads through one process."""
+    import bisect
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    probes = sorted({int(h) for h in hashes})
+    if not blocks or not probes:
+        return []
+    if spark is not None and len(probes) >= distributed_threshold:
+        return _index_lookup_spark(spark, blocks, probes)
+
+    def may_hold(stats) -> bool:
+        if stats is None or not stats.has_min_max:
+            return True
+        i = bisect.bisect_left(probes, stats.min)
+        return i < len(probes) and probes[i] <= stats.max
+
+    value_set = pa.array(probes, pa.int64())
+    hits: list[tuple[str, int]] = []
+    for block in blocks:
+        # __fp stays dictionary-encoded: one path per data file, not per row
+        pf = pq.ParquetFile(block, read_dictionary=["__fp"])
+        md = pf.metadata
+        h_col = pf.schema_arrow.get_field_index("h")
+        groups = [
+            rg
+            for rg in range(md.num_row_groups)
+            if may_hold(md.row_group(rg).column(h_col).statistics)
+        ]
+        if not groups:
+            continue
+        tbl = pf.read_row_groups(groups, columns=["h", "__fp", "__ri"])
+        tbl = tbl.filter(pc.is_in(tbl.column("h"), value_set=value_set))
+        hits.extend(
+            zip(tbl.column("__fp").to_pylist(), tbl.column("__ri").to_pylist())
+        )
+    return hits
+
+
+def _index_lookup_spark(
+    spark: SparkSession, blocks: list[str], probes: list[int]
+) -> list[tuple[str, int]]:
+    """Distributed leg of :func:`lookup_hashes` over sorted distinct
+    ``probes``: the ``h BETWEEN`` range predicate is pushed to the parquet
+    scan so row groups outside the probe span are skipped from their
+    stats, the probe hashes are broadcast, and only the O(hits) result
+    returns to the driver."""
+    probe_df = local_frame(spark, [(h,) for h in probes], "h bigint")
+    if len(probes) <= 1_000_000:
+        probe_df = F.broadcast(probe_df)  # beyond ~1M hashes, let AQE pick
+    hits = (
+        spark.read.parquet(*blocks)
+        .where(F.col("h").between(probes[0], probes[-1]))
+        .join(probe_df, "h")
+        .select("__fp", "__ri")
+        .collect()
+    )
+    return [(r["__fp"], int(r["__ri"])) for r in hits]
+
+
 def candidate_files(
     table: "MoonlinkTable",
     m: Manifest,
@@ -167,7 +296,8 @@ def candidate_files(
     Returns ``(matching_covered_paths, uncovered_files)`` or ``None`` when
     the manifest has no index. ``uncovered_files`` (same-commit flushes and
     files whose index was invalidated by compaction) must still be scanned;
-    correctness never depends on coverage."""
+    correctness never depends on coverage. Pass ``keys_df`` through
+    :func:`local_keys` first: hashing a ``LocalRelation`` runs no job."""
     if not enabled(m):
         return None
     entries, covered = live_entries(m)
@@ -175,34 +305,21 @@ def candidate_files(
     uncovered = [f for f in all_files if f.path not in covered]
     if not entries:
         return [], uncovered
-    spark = table.spark
-    idx = spark.read.parquet(
-        *[table._resolve(e["path"]) for e in entries]
-    )
     # hash over the TABLE's key types: xxhash64 is width-sensitive, so an
     # int-typed lookup against a bigint key column would silently miss
     # without the cast (the verify join would coerce, but the candidate
     # set would already have dropped the file)
-    from moonlink_spark.schema import field_schema_to_struct
-
     schema = field_schema_to_struct(m.schema_fields)
-    hashed = (
-        keys_df.select(
-            *[F.col(c).cast(schema[c].dataType).alias(c) for c in key_cols]
-        )
-        .dropDuplicates()
-        .select(_key_hash(key_cols))
-    )
-    # broadcast the key-batch side: bounded by the micro-batch, never the
-    # table; h min/max + row-group stats prune the index scan
-    hits = (
-        idx.join(F.broadcast(hashed), "h", "left_semi")
-        .select("__fp")
-        .distinct()
-        .collect()
+    hashes = keys_df.select(
+        F.xxhash64(*[F.col(c).cast(schema[c].dataType) for c in key_cols])
+    ).collect()
+    hits = lookup_hashes(
+        [table._resolve(e["path"]) for e in entries],
+        [r[0] for r in hashes],
+        spark=table.spark,
     )
     live_paths = {f.path for f in all_files}
-    matching = sorted({r["__fp"] for r in hits} & live_paths)
+    matching = sorted({fp for fp, _ in hits} & live_paths)
     return matching, uncovered
 
 
@@ -221,7 +338,7 @@ def merge_index(table: "MoonlinkTable") -> bool:
         return False
     key_cols = list(ident.columns)
     entries, covered = live_entries(base)
-    live_paths = {f.path for f in base.data_files}
+    live_paths = sorted(f.path for f in base.data_files)
     uncovered = [f for f in base.data_files if f.path not in covered]
 
     parts: list[DataFrame] = []
@@ -232,8 +349,8 @@ def merge_index(table: "MoonlinkTable") -> bool:
         # semi-join against a BROADCAST path list: isin() with one
         # literal per live file blows the Catalyst expression tree up at
         # the file counts this module advertises (1e5-1e6 live files)
-        live_df = table.spark.createDataFrame(
-            [(p,) for p in sorted(live_paths)], "__fp string"
+        live_df = local_frame(
+            table.spark, [(p,) for p in live_paths], "__fp string"
         )
         parts.append(
             idx.join(F.broadcast(live_df), "__fp", "left_semi").select(
@@ -241,41 +358,15 @@ def merge_index(table: "MoonlinkTable") -> bool:
             )
         )
     if uncovered:
-        schema = table.schema
-        parts.append(
-            table.spark.read.schema(schema)
-            .parquet(*[table._resolve(f.path) for f in uncovered])
-            .select(
-                _key_hash(key_cols),
-                _rel_fp(table).alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            )
-        )
-    if not parts:
-        new_entries: list[dict[str, Any]] = []
-    else:
+        parts.append(_index_rows(table, uncovered, key_cols))
+    new_entries: list[dict[str, Any]] = []
+    if parts:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        total_rows = sum(f.rows for f in base.data_files)
-        n_out = max(1, -(-total_rows // INDEX_FILE_ROWS))
-        if n_out == 1:
-            df = df.coalesce(1).sortWithinPartitions("h")
-        else:
-            df = df.repartitionByRange(n_out, "h").sortWithinPartitions("h")
-        rel_dir = f"{KEYINDEX_DIR}/ix-{uuid.uuid4().hex}"
-        out_dir = os.path.join(table.data_path, rel_dir)
-        df.write.mode("overwrite").parquet(out_dir)
-        covers = sorted(live_paths)
-        new_entries = [
-            {
-                "path": f"{rel_dir}/{n}",
-                "covers": covers,
-                "rows": _entry_rows(table, f"{rel_dir}/{n}"),
-            }
-            for n in sorted(table.data_fs.listdir(out_dir))
-            if n.endswith(".parquet")
-        ]
+        new_entries = _write_index(
+            table, df, sum(f.rows for f in base.data_files), live_paths
+        )
     cfg = dict(base.properties.get(KEY_INDEX_PROP) or {})
     cfg["entries"] = new_entries
     m = Manifest(

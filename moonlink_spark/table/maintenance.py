@@ -89,7 +89,8 @@ def optimize(
     live_bytes = sum(f.bytes for f in base.data_files)
     n_out = max(1, round(live_bytes / cfg.target_file_bytes))
     if (
-        not base.delete_files
+        not force
+        and not base.delete_files
         and len(base.data_files) == n_out
         and not table.cluster_by
         and (
@@ -107,7 +108,8 @@ def optimize(
         # the explicit re-clustering pass): rewriting would read and
         # write every live byte to produce an equivalent layout. Skip —
         # at scale this is the difference between "nightly optimize
-        # re-churns the whole table" and a no-op commit cycle (r13)
+        # re-churns the whole table" and a no-op commit cycle (r13).
+        # force=True always rewrites.
         return base.version
 
     live = table._read_manifest(base, with_pos=False)

@@ -120,7 +120,17 @@ def live_segment_paths(dest: str, meta: dict, prefix: str) -> list[str]:
 def read_segments(
     spark: SparkSession, dest: str, meta: dict, prefix: str
 ) -> DataFrame:
-    return spark.read.parquet(*live_segment_paths(dest, meta, prefix))
+    """The live segments as one DataFrame. Their schema comes from the
+    first segment's footer, read on the driver: left to Spark, schema
+    inference reads that footer in a job on every read."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    paths = live_segment_paths(dest, meta, prefix)
+    reader = spark.read
+    if paths:
+        reader = reader.schema(from_arrow_schema(pq.read_schema(paths[0])))
+    return reader.parquet(*paths)
 
 
 def compact_segments(

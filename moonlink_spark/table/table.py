@@ -13,9 +13,12 @@ Spark-first re-expression of the reference's core table
   sync                    commit LSN gives exact read-at-LSN
                           ("read at X sees commits <= X",
                           mooncake_table.rs:440-444)
-- hash index           -> not needed: delete targeting is a broadcast
-                          semi-join against live rows; Parquet min/max stats +
-                          runtime bloom filters prune files (SURVEY.md §4)
+- hash index           -> optional persisted key index (keyindex.py),
+                          probed on the driver to pick the files a key batch
+                          touches; delete targeting is then a broadcast
+                          semi-join against live rows of those files.
+                          Without it, Parquet min/max stats + runtime bloom
+                          filters prune files (SURVEY.md §4)
 - streaming xact       -> ``TransactionStream`` staged ops, commit/abort
                           (parity transaction_stream.rs)
 
@@ -50,6 +53,7 @@ from moonlink_spark.errors import (
     TransactionError,
 )
 from moonlink_spark.schema import field_schema_to_struct, struct_to_field_schema
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.identity import IdentityProp
 from moonlink_spark.table.stats import (
     PrunePredicate,
@@ -69,6 +73,8 @@ DELETE_DIR = "deletes"
 DEFAULT_MEM_SLICE_ROWS = 32 * 4096
 # Broadcast the DV side of the scan anti-join below this many deleted rows.
 DV_BROADCAST_MAX_ROWS = 4_000_000
+# Columns of a deletion-vector parquet file (see ``_write_dv``).
+DV_SCHEMA = "file_path string, row_index long"
 
 
 def _parquet_num_rows(path: str) -> int:
@@ -853,10 +859,13 @@ class MoonlinkTable:
         live = self._live_view(base, new_files, new_dvs, prune=prune)
 
         if ident.mode in ("single", "keys"):
+            from moonlink_spark.table import keyindex
+
             key_cols = list(ident.columns)
-            key_schema = T.StructType([schema[c] for c in key_cols])
-            keys = [{c: r.get(c) for c in key_cols} for r in rows]
-            keys_df = self.spark.createDataFrame(keys, key_schema).dropDuplicates()
+            keys = dict.fromkeys(tuple(r.get(c) for c in key_cols) for r in rows)
+            keys_df = local_frame(
+                self.spark, list(keys), keyindex.key_schema(base, key_cols)
+            )
             subset = self._index_file_subset(base, new_files, keys_df, key_cols)
             if subset is not None:
                 live = self._live_view(
@@ -958,13 +967,19 @@ class MoonlinkTable:
         new_dvs: list[FileEntry],
         keys_df: DataFrame,
     ) -> list[FileEntry]:
+        from moonlink_spark.table import keyindex
+
         ident = IdentityProp.from_json(base.identity)
         key_cols = list(ident.columns)
+        if keyindex.enabled(base):
+            # the index probe collects the key batch anyway: collect it
+            # ONCE and semi-join the local copy too
+            keys_df = keyindex.local_keys(self.spark, base, keys_df, key_cols)
+        else:
+            keys_df = keys_df.dropDuplicates()
         subset = self._index_file_subset(base, new_files, keys_df, key_cols)
         live = self._live_view(base, new_files, new_dvs, files_subset=subset)
-        matched = live.join(
-            keys_df.dropDuplicates(), key_cols, "left_semi"
-        ).select("__fp", "__ri")
+        matched = live.join(keys_df, key_cols, "left_semi").select("__fp", "__ri")
         return self._write_dv(matched)
 
     # ------------------------------------------------------------------ #
@@ -990,10 +1005,10 @@ class MoonlinkTable:
         lookup, GlobalIndex::search_values persisted_bucket_hash_map.rs:
         276-302 feeding the DataFusion point scan).
 
-        With a persisted key index the scan opens ONLY the files containing
-        the requested keys; without one it falls back to a semi-join over
-        the live view (Catalyst's runtime bloom filter still prunes). The
-        keys side is broadcast — bounded by the request, never the table."""
+        The key batch is collected once into a local relation (bounded by
+        the request, never the table). With a persisted key index the scan
+        opens ONLY the files containing the requested keys; without one it
+        falls back to a semi-join over the live view."""
         m = self._resolve_manifest(lsn)
         ident = IdentityProp.from_json(m.identity)
         if ident.mode not in ("single", "keys"):
@@ -1003,6 +1018,7 @@ class MoonlinkTable:
         key_cols = list(ident.columns)
         from moonlink_spark.table import keyindex
 
+        keys_df = keyindex.local_keys(self.spark, m, keys_df, key_cols)
         data_files = m.data_files
         if keyindex.enabled(m):
             cand = keyindex.candidate_files(self, m, keys_df, key_cols)
@@ -1019,9 +1035,7 @@ class MoonlinkTable:
             delete_files=m.delete_files,
         )
         df = self._read_manifest(m2, with_pos=False)
-        return df.join(
-            F.broadcast(keys_df.dropDuplicates()), key_cols, "left_semi"
-        )
+        return df.join(F.broadcast(keys_df), key_cols, "left_semi")
 
     def scan_blocking(self, lsn: int, timeout_s: float = 30.0) -> DataFrame:
         """Block until a commit with lsn >= requested exists, then read at
@@ -1102,17 +1116,15 @@ class MoonlinkTable:
             by_col[col] = vals
         if set(by_col) != set(key_cols):
             return None
-        combos: list[dict[str, Any]] = [{}]
+        combos: list[tuple] = [()]
         for c in key_cols:
-            combos = [
-                {**row, c: v} for row in combos for v in by_col[c]
-            ]
+            combos = [(*row, v) for row in combos for v in by_col[c]]
             if len(combos) > 1024:
                 return None  # too wide for a point lookup; stats-prune
-        schema = field_schema_to_struct(m.schema_fields)
-        key_schema = T.StructType([schema[c] for c in key_cols])
         try:
-            return self.spark.createDataFrame(combos, key_schema)
+            return local_frame(
+                self.spark, combos, keyindex.key_schema(m, key_cols)
+            )
         except Exception:
             return None  # literal/column type mismatch: fall back
 
@@ -1142,7 +1154,7 @@ class MoonlinkTable:
                 delete_files=m.delete_files,
             )
         if not m.data_files:
-            df = self.spark.createDataFrame([], schema)
+            df = local_frame(self.spark, [], schema)
             if with_pos:
                 df = df.withColumn("__fp", F.lit(None).cast("string")).withColumn(
                     "__ri", F.lit(None).cast("long")
@@ -1164,7 +1176,8 @@ class MoonlinkTable:
             )
         if m.delete_files:
             dv_paths = [self._resolve(f.path) for f in m.delete_files]
-            dv = self.spark.read.parquet(*dv_paths).select(
+            # explicit schema: inferring it reads a DV footer in a job
+            dv = self.spark.read.schema(DV_SCHEMA).parquet(*dv_paths).select(
                 F.col("file_path").alias("__fp"), F.col("row_index").alias("__ri")
             )
             if m.deleted_rows <= DV_BROADCAST_MAX_ROWS:

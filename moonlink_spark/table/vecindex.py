@@ -41,6 +41,7 @@ from moonlink_spark.operators.similarity import (
     quantize_embeddings_1e6,
     train_ivf_centroids,
 )
+from moonlink_spark.session import local_frame
 from moonlink_spark.table import segments as segstore
 
 META_FILE = "vecindex.json"
@@ -464,8 +465,8 @@ def query_topk(
         )
         order = np.lexsort((np.arange(len(C)), d2))[: min(nprobe, len(C))]
         probe_pairs.extend((qid, int(cid)) for cid in order)
-    probe_df = spark.createDataFrame(
-        probe_pairs, "query_id bigint, probe_cluster bigint"
+    probe_df = local_frame(
+        spark, probe_pairs, "query_id bigint, probe_cluster bigint"
     )
     inv = read_assignments(spark, dest)
     cand = inv.join(
@@ -501,8 +502,8 @@ def query_topk(
             )
             for qid, v in qv
         ]
-        tables = spark.createDataFrame(
-            table_rows, "query_id bigint, t array<array<bigint>>"
+        tables = local_frame(
+            spark, table_rows, "query_id bigint, t array<array<bigint>>"
         )
         adc = pq_adc_scores(cand.select("query_id", "vec_id", "codes"), tables)
         ws = Window.partitionBy("query_id").orderBy(
@@ -530,7 +531,8 @@ def query_topk(
     # array<float> truncated float64 query vectors before the cosine
     # (ADVICE r12)
     emb_type = emb.schema["embedding"].dataType.simpleString()
-    qe = spark.createDataFrame(
+    qe = local_frame(
+        spark,
         [(qid, list(r.embedding)) for (qid, _), r in zip(qv, qrows)],
         f"query_id bigint, qe {emb_type}",
     )

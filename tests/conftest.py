@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -20,6 +22,25 @@ def spark():
         extra["spark.driver.memory"] = mem
     s = get_spark("moonlink-tests", extra_conf=extra)
     yield s
+
+
+@pytest.fixture
+def job_counter(spark):
+    """-> ``counting()``: a context manager yielding a callable that
+    returns how many Spark jobs the ``with`` block has launched so far
+    (the block runs under its own job group)."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def counting():
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return counting
 
 
 @pytest.fixture(scope="session")

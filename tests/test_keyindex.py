@@ -9,6 +9,7 @@ mooncake-hash-index-v1 Puffin blobs (storage/table/iceberg/index.rs:20-22).
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -313,12 +314,14 @@ def test_narrow_typed_keys_df_still_hits_index(spark, tmp_path):
     assert t.scan().count() == 49
 
 
-def test_candidate_files_match_bruteforce_random(spark, tmp_path):
-    """Property: for random key sets (negatives, unicode strings), the
-    candidate file set equals the true containing-file set exactly."""
-    import random
+def _random_indexed_table(spark, tmp_path, monkeypatch, rng):
+    """A composite-key indexed table whose index files have many small row
+    groups and two entries: one over one file, one over two files of the
+    same commit. -> (table, key pool, {key: set(data path)})."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    rng = random.Random(1234)
+    monkeypatch.setattr(keyindex, "INDEX_ROW_GROUP_ROWS", 8)
     fields = [
         {"name": "k", "data_type": "int64", "nullable": False},
         {"name": "s", "data_type": "string", "nullable": False},
@@ -335,25 +338,140 @@ def test_candidate_files_match_bruteforce_random(spark, tmp_path):
         (rng.randrange(-(10**12), 10**12), rng.choice(["α", "b", "日本", ""]))
         for _ in range(300)
     ]
-    files_of: dict[tuple, set[int]] = {}
-    for c in range(3):
-        chunk = pool[100 * c:100 * (c + 1)]
-        t.append_rows([{"k": k, "s": s, "v": i} for i, (k, s) in enumerate(chunk)])
-        t.commit(lsn=c + 1)
-        for key in chunk:
-            files_of.setdefault(key, set()).add(c)
+    chunks = [pool[100 * c:100 * (c + 1)] for c in range(3)]
+    t.append_rows([{"k": k, "s": s, "v": i} for i, (k, s) in enumerate(chunks[0])])
+    t.commit(lsn=1)
+    schema = to_arrow_schema(t.schema)
+    for chunk in chunks[1:]:  # two files, one commit, one index entry
+        t.append_arrow(
+            pa.Table.from_pylist(
+                [{"k": k, "s": s, "v": i} for i, (k, s) in enumerate(chunk)],
+                schema=schema,
+            )
+        )
+    t.commit(lsn=2)
     m = t.manifest
-    paths = [f.path for f in m.data_files]
-    probe = rng.sample(pool, 20) + [(99, "missing")]
+    assert len(m.data_files) == 3 and len(keyindex.index_entries(m)) == 2
+    files_of: dict[tuple, set[str]] = {}
+    for f, chunk in zip(m.data_files, chunks):
+        for key in chunk:
+            files_of.setdefault(key, set()).add(f.path)
+    for e in keyindex.index_entries(m):
+        assert pq.ParquetFile(t._resolve(e["path"])).metadata.num_row_groups > 5
+    return t, pool, files_of
+
+
+def test_candidate_files_match_bruteforce_random(spark, tmp_path, monkeypatch):
+    """Property: for random key sets (negatives, unicode strings, a null
+    key), the candidate file set equals the true containing-file set
+    exactly — also when an index entry covers a file that was compacted
+    away (its rows must never surface)."""
+    import dataclasses
+    import random
+
+    rng = random.Random(1234)
+    t, pool, files_of = _random_indexed_table(spark, tmp_path, monkeypatch, rng)
+    m = t.manifest
+    # the two-file entry now covers one compacted-away file
+    dead = m.data_files[1].path
+    m_live = dataclasses.replace(
+        m, data_files=[f for f in m.data_files if f.path != dead]
+    )
+    probe = rng.sample(pool, 40) + [(99, "missing"), (None, "α")]
     keys_df = spark.createDataFrame(
         [{"k": k, "s": s} for k, s in probe], "k: long, s: string"
     )
-    matching, uncovered = keyindex.candidate_files(t, m, keys_df, ["k", "s"])
-    assert uncovered == []
-    expected = set()
-    for key in probe:
-        expected.update(paths[c] for c in files_of.get(key, ()))
-    assert set(matching) == expected
+    for manifest, gone in ((m, set()), (m_live, {dead})):
+        matching, uncovered = keyindex.candidate_files(
+            t, manifest, keys_df, ["k", "s"]
+        )
+        assert uncovered == []
+        expected = set().union(*(files_of.get(key, set()) for key in probe))
+        assert set(matching) == expected - gone
+        assert matching == sorted(matching)
+    assert dead in set().union(*(files_of[k] for k in probe[:40]))
+
+
+def test_large_key_batch_takes_the_spark_leg(spark, tmp_path, monkeypatch):
+    """At least DISTRIBUTED_THRESHOLD distinct probes join the index
+    through Spark; the files and positions equal the driver leg's."""
+    import random
+
+    rng = random.Random(99)
+    t, pool, files_of = _random_indexed_table(spark, tmp_path, monkeypatch, rng)
+    m = t.manifest
+    extra = [(k, "zz") for k in range(keyindex.DISTRIBUTED_THRESHOLD)]  # misses
+    probe = pool[::2] + extra
+    keys_df = spark.createDataFrame(probe, "k long, s string")
+    calls = []
+    real = keyindex._index_lookup_spark
+
+    def spy(spark_, blocks, probes):
+        calls.append(len(probes))
+        return real(spark_, blocks, probes)
+
+    monkeypatch.setattr(keyindex, "_index_lookup_spark", spy)
+    matching, _ = keyindex.candidate_files(t, m, keys_df, ["k", "s"])
+    assert calls and calls[0] >= keyindex.DISTRIBUTED_THRESHOLD
+    assert set(matching) == set().union(*(files_of[k] for k in pool[::2]))
+
+    blocks = [t._resolve(e["path"]) for e in keyindex.index_entries(m)]
+    hashes = [r[0] for r in keys_df.select(F.xxhash64("k", "s")).collect()]
+    dist = keyindex.lookup_hashes(blocks, hashes, spark=spark)
+    drv = keyindex.lookup_hashes(blocks, hashes)  # no spark handle
+    assert len(calls) == 2
+    assert sorted(dist) == sorted(drv) and len(drv) == len(pool[::2])
+
+
+def test_driver_leg_reads_only_touched_row_groups(spark, tmp_path, monkeypatch):
+    """The driver probe reads exactly the row groups whose h min/max can
+    hold a probe hash — never a whole index file because one of its row
+    groups matched."""
+    import random
+
+    rng = random.Random(7)
+    t, pool, files_of = _random_indexed_table(spark, tmp_path, monkeypatch, rng)
+    m = t.manifest
+    probe = rng.sample(pool, 3)
+    keys_df = keyindex.local_keys(
+        spark, m, spark.createDataFrame(probe, "k long, s string"), ["k", "s"]
+    )
+    hashes = sorted(r[0] for r in keys_df.select(F.xxhash64("k", "s")).collect())
+    expect: dict[str, list[int]] = {}
+    total_groups = 0
+    for e in keyindex.index_entries(m):
+        path = t._resolve(e["path"])
+        md = pq.ParquetFile(path).metadata
+        total_groups += md.num_row_groups
+        hit = [
+            rg
+            for rg in range(md.num_row_groups)
+            if any(
+                md.row_group(rg).column(0).statistics.min
+                <= h
+                <= md.row_group(rg).column(0).statistics.max
+                for h in hashes
+            )
+        ]
+        if hit:
+            expect[path] = hit
+    reads: dict[str, list[int]] = {}
+
+    class Recording(pq.ParquetFile):
+        def __init__(self, source, *a, **kw):
+            super().__init__(source, *a, **kw)
+            self.source = source
+
+        def read_row_groups(self, row_groups, *a, **kw):
+            reads.setdefault(self.source, []).extend(row_groups)
+            return super().read_row_groups(row_groups, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", Recording)
+    matching, _ = keyindex.candidate_files(t, m, keys_df, ["k", "s"])
+    assert set(matching) == set().union(*(files_of[k] for k in probe))
+    assert reads == expect
+    touched = sum(map(len, reads.values()))
+    assert touched <= len(probe) * len(expect) < total_groups
 
 
 def test_exported_blob_lookup_distributed_path_matches_driver(
@@ -364,7 +482,6 @@ def test_exported_blob_lookup_distributed_path_matches_driver(
     positions, and the threshold picks the leg — below it (or with no
     spark handle) the driver path runs, at/above it the block scan goes
     through Spark."""
-    from moonlink_spark.table import iceberg_export
     from moonlink_spark.table.iceberg_export import (
         export_iceberg,
         iceberg_index_lookup,
@@ -387,13 +504,13 @@ def test_exported_blob_lookup_distributed_path_matches_driver(
     ]
 
     calls = {"n": 0}
-    real = iceberg_export._index_lookup_spark
+    real = keyindex._index_lookup_spark
 
     def counting(*a, **kw):
         calls["n"] += 1
         return real(*a, **kw)
 
-    monkeypatch.setattr(iceberg_export, "_index_lookup_spark", counting)
+    monkeypatch.setattr(keyindex, "_index_lookup_spark", counting)
 
     drv = iceberg_index_lookup(dest, hashes)  # no spark handle: driver leg
     assert calls["n"] == 0

@@ -231,3 +231,65 @@ def test_unparseable_shuffle_partitions_warns(monkeypatch):
         assert _default_shuffle_partitions() == "12"
     monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "5")
     assert _default_shuffle_partitions() == "5"
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_point_lookup_and_ann_plans_build_no_rdd_relations(
+    spark, sf_dir, tmp_path, job_counter
+):
+    """Driver-bounded relations are Arrow-built LocalRelations: a point
+    lookup with a list-built key batch and a PQ top-k query analyze to
+    plans without a LogicalRDD, and the lookup on a key-indexed table with
+    one DV runs at most 5 jobs — a return to the Spark-join index probe,
+    to re-running the caller's key plan, or to list-built relations
+    pushes it over. A plain scan of that table runs at most 2 (DV
+    broadcast and data scan), and the top-k query at most 7 (no
+    segment-schema inference job)."""
+    from moonlink_spark.operators import load
+    from moonlink_spark.table import vecindex
+    from moonlink_spark.table.identity import IdentityProp
+    from moonlink_spark.table.table import MoonlinkTable
+
+    t = MoonlinkTable.create(
+        spark,
+        str(tmp_path / "t"),
+        [
+            {"name": "id", "data_type": "int64", "nullable": False},
+            {"name": "v", "data_type": "string"},
+        ],
+        IdentityProp.single("id"),
+        key_index=True,
+    )
+    for c in range(3):
+        t.append_rows([{"id": i, "v": f"v{i}"} for i in range(c * 100, c * 100 + 100)])
+        t.commit(lsn=c + 1)
+    t.delete_rows([{"id": 7}])
+    t.commit(lsn=4)
+    assert len(t.manifest.delete_files) == 1
+
+    rdd_keys = spark.createDataFrame([(5,), (7,), (150,), (999,)], "id long")
+    assert "LogicalRDD" in _analyzed(rdd_keys)
+    with job_counter() as jobs:
+        got = t.scan_keys(rdd_keys)
+        assert "LogicalRDD" not in _analyzed(got)
+        assert sorted(r.id for r in got.collect()) == [5, 150]
+        assert jobs() <= 5
+    # the DV side is read with its known schema: no footer-inference job
+    with job_counter() as jobs:
+        assert len(t.scan().collect()) == 299
+        assert jobs() <= 2
+
+    corpus = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    dest = str(tmp_path / "vec")
+    vecindex.build_index(
+        spark, corpus, dest, k=4, iters=1, pq={"m": 4, "ksub": 16, "iters": 1}
+    )
+    with job_counter() as jobs:
+        top = vecindex.query_topk(spark, corpus, dest, [0, 1], topk=2, nprobe=2)
+        assert "LogicalRDD" not in _analyzed(top)
+        assert {r.query_id for r in top.collect()} == {0, 1}
+        n_jobs = jobs()
+    assert n_jobs <= 7, n_jobs

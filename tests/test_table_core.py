@@ -9,7 +9,12 @@ import pytest
 
 from moonlink_spark.errors import IdentityError, LsnError, TableConfigError
 from moonlink_spark.table.identity import IdentityProp
-from moonlink_spark.table.maintenance import optimize, should_compact, vacuum
+from moonlink_spark.table.maintenance import (
+    CompactionConfig,
+    optimize,
+    should_compact,
+    vacuum,
+)
 from moonlink_spark.table.table import MoonlinkTable
 
 USERS_SCHEMA = [
@@ -220,10 +225,11 @@ def test_optimize_and_vacuum(spark, tmp_path):
 
 
 def test_optimize_skips_already_optimal(spark, tmp_path):
-    """r13: optimize() on a table already in its post-state (file count
-    at the byte-derived target, no DVs) must be a NO-OP — no rewrite job,
-    no new manifest version — while a subsequent mutation makes the next
-    optimize rewrite again."""
+    """r13: optimize(force=False) on a table already in its post-state
+    (file count at the byte-derived target, no DVs) must be a NO-OP — no
+    rewrite job, no new manifest version — while a subsequent mutation
+    makes the next optimize rewrite again. The config makes should_compact
+    always fire, so the post-state check is what decides."""
     t = make_users(spark, tmp_path)
     t.append_rows(
         [{"id": i, "name": "n", "email": None, "age": i % 90} for i in range(100)]
@@ -231,20 +237,42 @@ def test_optimize_skips_already_optimal(spark, tmp_path):
     t.commit(lsn=1)
     t.delete_rows([{"id": i} for i in range(0, 10)])
     t.commit(lsn=2)
-    v = optimize(t)  # real rewrite: folds the DV into one file
+    cfg = CompactionConfig(max_deletion_ratio=0.0)
+    v = optimize(t, cfg=cfg, force=False)  # real rewrite: folds the DV
     m = t.manifest
     assert m.version == v and not m.delete_files and len(m.data_files) == 1
     expect = rows_set(t.scan())
     # already optimal: same version back, manifest untouched
-    assert optimize(t) == v
+    assert optimize(t, cfg=cfg, force=False) == v
     assert t.manifest.version == v
     assert rows_set(t.scan()) == expect
     # a new DV re-arms the rewrite
     t.delete_rows([{"id": 42}])
     t.commit(lsn=3)
-    v2 = optimize(t)
+    v2 = optimize(t, cfg=cfg, force=False)
     assert v2 > v and not t.manifest.delete_files
     assert rows_set(t.scan()) == expect - {(42, "n", None, 42)}
+
+
+def test_optimize_force_always_rewrites(spark, tmp_path):
+    """force=True is the explicit rewrite: an already-compacted table gets
+    a new version (and new files) under force=True, and keeps its version
+    under force=False."""
+    t = make_users(spark, tmp_path)
+    t.append_rows(
+        [{"id": i, "name": "n", "email": None, "age": i % 90} for i in range(50)]
+    )
+    t.commit(lsn=1)
+    v = optimize(t)
+    m = t.manifest
+    assert m.version == v and len(m.data_files) == 1 and not m.delete_files
+    expect = rows_set(t.scan())
+    assert optimize(t, force=False) == v
+    assert t.manifest.version == v
+    v2 = optimize(t, force=True)
+    assert v2 == v + 1 == t.manifest.version
+    assert t.manifest.data_files[0].path != m.data_files[0].path
+    assert rows_set(t.scan()) == expect
 
 
 def test_alter_add_drop_columns(spark, tmp_path):
