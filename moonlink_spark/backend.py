@@ -885,11 +885,12 @@ class MoonlinkBackend:
         nprobe: int = 1,
         rerank: int | None = None,
     ) -> DataFrame:
-        """ANN top-k over the table's persisted index: probes resolve on
-        the meta's centroid matrix (driver math), candidates come from the
-        inverted-list segments, embeddings re-attach from the table scan.
-        On a PQ index ``rerank`` sizes the ADC shortlist (default
-        4*topk); flat indexes ignore it."""
+        """ANN top-k over the table's persisted index, served on the
+        driver (``vecindex.query_topk``): probes resolve on the meta's
+        centroid matrix, candidates come from the inverted-list segments,
+        and the query and shortlisted embeddings are fetched from the
+        table scan. On a PQ index ``rerank`` sizes the ADC shortlist
+        (default 4*topk); flat indexes ignore it."""
         from moonlink_spark.table import vecindex
 
         t = self.get_table(database, table)

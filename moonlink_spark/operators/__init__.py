@@ -235,6 +235,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # r9 verdict-named streaming/recall entries (streaming_tumbling_agg_e2e,
 # streaming_dedup_e2e, lsh_jaccard_recall_eval). Keepers unchanged: the
 # 7-query ingest lifecycle + the flagship.
+# DRIVER-SIDE ANN ROTATION: vecindex.query_topk now scores ADC and the
+# cosine rerank on the driver, so the two queries that run it end to
+# end, ann_index_pq_topk and ann_index_lifecycle_topk, rotate IN (every
+# rewritten query enters the gate). Rotating OUT: hierarchical_time_rollup
+# and stratified_sample_per_group, two r9-cohort slots whose code this
+# change does not touch. Keepers unchanged.
 PRIORITY_50 = [
     # ingest / table engine keepers (7) + flagship (1)
     "ingest_scan_at_lsn",
@@ -247,6 +253,10 @@ PRIORITY_50 = [
     "q1_pricing_summary",
     # never driver-gated (1): the round-12 pure-ADC serving mode
     "ann_index_pq_adc_topk",
+    # served on the driver from the inverted lists since the driver-side
+    # ANN rewrite (2)
+    "ann_index_pq_topk",
+    "ann_index_lifecycle_topk",
     # last driver-green r8 — the entire staleness-floor cohort (21)
     "date_arithmetic",
     "embedding_vector_stats",
@@ -276,7 +286,7 @@ PRIORITY_50 = [
     "q19_discounted_revenue",
     "ann_recall_at_k",
     "dedup_ngram_jaccard",
-    # last driver-green r9, preferring no standing bench evidence (14)
+    # last driver-green r9, preferring no standing bench evidence (12)
     "pivot_event_type_values",
     "union_all_with_dup_counts",
     "window_topk_parts_per_brand",
@@ -286,8 +296,6 @@ PRIORITY_50 = [
     "lang_id_heuristic",
     "pii_pattern_scan",
     "token_counts",
-    "hierarchical_time_rollup",
-    "stratified_sample_per_group",
     "multimodal_feature_extract",
     "ingest_fullrow_delete_one",
     "ingest_pg_metadata_recovery_scan",

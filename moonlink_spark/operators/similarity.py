@@ -690,14 +690,6 @@ def _pq_update_kernel(books_np):
     return fold
 
 
-def _pq_books_df(spark, codebooks):
-    """One-row broadcast DataFrame carrying the m x ksub x dsub codebook
-    tensor (the same Janino-cache-friendly ride-along shape as
-    _centroid_candidate_structs)."""
-    cbs = [[[int(x) for x in cent] for _, cent in cb] for cb in codebooks]
-    return spark.createDataFrame([(cbs,)], "cbs: array<array<array<bigint>>>")
-
-
 def _pq_codes_udf(codebooks):
     """Arrow-batched nearest-code kernel over ALL m subspaces: v (full
     dim, int64) -> m codes. PQ candidate counts (ksub up to 256) make
@@ -739,18 +731,6 @@ def _pq_codes_udf(codebooks):
     # and pyspark's hint inference cannot resolve locals
     codes_of.__annotations__ = {"v": pd.Series, "return": pd.Series}
     return pandas_udf(codes_of, "array<bigint>")
-
-
-def assign_pq_codes(spark, emb_q: DataFrame, codebooks) -> DataFrame:
-    """(vec_id, v) -> (vec_id, codes): nearest sub-centroid per subspace,
-    all m subspaces in ONE zero-Exchange Arrow-batched map (see
-    _pq_codes_udf — integer-exact, tie-break identical to the oracles'
-    ORDER BY d2, code). codes is array<smallint>, m entries per
-    vector."""
-    codes_of = _pq_codes_udf(codebooks)
-    return emb_q.select(
-        "vec_id", codes_of(F.col("v")).cast("array<smallint>").alias("codes")
-    )
 
 
 def _assign_codes_kernel(cents_np, books_np):
@@ -816,8 +796,8 @@ def assign_ivf_with_codes(
     Arrow kernel with the model in the task closure (no broadcast
     exchange, no interpreted lambdas); huge-k models fall back to the
     broadcast-expression + pandas_udf composition. Arithmetic is
-    byte-identical to ``assign_ivf_clusters`` + ``assign_pq_codes``
-    either way."""
+    byte-identical to ``assign_ivf_clusters`` + ``_pq_codes_udf`` either
+    way."""
     k = len(cents_list)
     dim = len(cents_list[0][1]) if cents_list else DIM
     model_cells = k * dim + sum(
@@ -854,37 +834,6 @@ def assign_ivf_with_codes(
             codes_of(F.col("v")).cast("array<smallint>").alias("codes")
         )
     return emb_q.join(F.broadcast(cdf)).select(*cols)
-
-
-def pq_distance_tables(spark, query_q: DataFrame, codebooks) -> DataFrame:
-    """Per-query ADC tables: (query_id, t) where t[s][j] is the integer
-    d2 between the query's subspace-s sub-vector and codebook entry j.
-    One broadcast map over the (small) query set; tables stay as a
-    nested array so candidate scoring is a pure expression lookup."""
-    dsub = len(codebooks[0][0][1])
-    cdf = _pq_books_df(spark, codebooks)
-    expr = (
-        f"transform(cbs, (cb, s) -> transform(cb, cent -> "
-        f"aggregate(zip_with(slice(v, s * {dsub} + 1, {dsub}), cent, "
-        f"(x, y) -> (x - y) * (x - y)), 0L, (acc, w) -> acc + w)))"
-    )
-    return query_q.join(F.broadcast(cdf)).select(
-        F.col("vec_id").alias("query_id"), F.expr(expr).alias("t")
-    )
-
-
-def pq_adc_scores(cand: DataFrame, tables: DataFrame) -> DataFrame:
-    """Asymmetric distance computation: attach each query's broadcast
-    table and fold the candidate's m codes through it — zero shuffle,
-    no explode, whole-stage codegen. cand needs (query_id, vec_id,
-    codes); returns + adc (BIGINT sum of per-subspace d2)."""
-    return cand.join(F.broadcast(tables), "query_id").withColumn(
-        "adc",
-        F.expr(
-            "aggregate(transform(codes, (c, s) -> t[s][CAST(c AS INT)]), "
-            "0L, (acc, w) -> acc + w)"
-        ),
-    )
 
 
 # Up to this many input centroids the super-quantizer trains as exact
@@ -2552,22 +2501,14 @@ def ann_index_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, emb.filter(F.col("vec_id") % 2 == 1), dest
         )
         vecindex.compact_index(spark, dest)
-        # driver-side sort of the bounded (10 x top-3) result: a
-        # DataFrame orderBy on 30 rows costs a range-partitioning
-        # exchange plus its sampling job per run (r13); the Python sort
-        # on the same unique key is byte-identical
-        rows = sorted(
-            vecindex.query_topk(
-                spark, emb, dest, query_ids=list(range(10)),
-                topk=3, nprobe=2, rerank=12,
-            ).collect(),
-            key=lambda r: (r.query_id, r.rn),
+        # a local relation, ordered by (query_id, rn): it reads no
+        # index file once returned, so the directory can go
+        return vecindex.query_topk(
+            spark, emb, dest, query_ids=list(range(10)),
+            topk=3, nprobe=2, rerank=12,
         )
     finally:
         shutil.rmtree(dest, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "query_id bigint, neighbor_id bigint, cosine double, rn bigint"
-    )
 
 
 @register(
@@ -2610,22 +2551,14 @@ def ann_index_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, emb.filter(F.col("vec_id") % 2 == 1), dest
         )
         vecindex.compact_index(spark, dest)
-        # driver-side sort of the bounded (10 x top-3) result: a
-        # DataFrame orderBy on 30 rows costs a range-partitioning
-        # exchange plus its sampling job per run (r13); the Python sort
-        # on the same unique key is byte-identical
-        rows = sorted(
-            vecindex.query_topk(
-                spark, emb, dest, query_ids=list(range(10)),
-                topk=3, nprobe=2, rerank=0,
-            ).collect(),
-            key=lambda r: (r.query_id, r.rn),
+        # a local relation, ordered by (query_id, rn): it reads no
+        # index file once returned, so the directory can go
+        return vecindex.query_topk(
+            spark, emb, dest, query_ids=list(range(10)),
+            topk=3, nprobe=2, rerank=0,
         )
     finally:
         shutil.rmtree(dest, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "query_id bigint, neighbor_id bigint, adc bigint, rn bigint"
-    )
 
 
 @register(
@@ -2658,21 +2591,13 @@ def ann_index_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, emb.filter(F.col("vec_id") % 2 == 1), dest
         )
         vecindex.compact_index(spark, dest)
-        # materialize the (bounded: 10 queries x top-3) result so the
-        # index directory can be deleted — repeated gate/bench/parity
-        # runs must not accumulate tmp indexes
-        # driver-side sort of the bounded result (see ann_index_pq_topk)
-        rows = sorted(
-            vecindex.query_topk(
-                spark, emb, dest, query_ids=list(range(10)), topk=3, nprobe=2
-            ).collect(),
-            key=lambda r: (r.query_id, r.rn),
+        # a local relation (see ann_index_pq_topk): repeated gate/bench/
+        # parity runs must not accumulate tmp indexes
+        return vecindex.query_topk(
+            spark, emb, dest, query_ids=list(range(10)), topk=3, nprobe=2
         )
     finally:
         shutil.rmtree(dest, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "query_id bigint, neighbor_id bigint, cosine double, rn bigint"
-    )
 
 
 @register(
@@ -2732,7 +2657,10 @@ def ingest_export_vecindex_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (guide §2.6) so each chain's jobs back-fill the other's per-job
         # scheduling floors and stage tails; the export below consumes
         # both finished artifacts, byte-identical to the sequential order
-        # (r13).
+        # (r13). That holds only for runs that complete. If the process
+        # crashes mid-way, the index meta may already claim as_of_lsn 1
+        # or 2 before that table commit is durable, an interleaving the
+        # sequential order could not leave behind.
         from concurrent.futures import ThreadPoolExecutor
 
         def _table_chain() -> None:

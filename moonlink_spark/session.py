@@ -127,17 +127,24 @@ def local_frame(
     """A driver-bounded relation as a Spark ``LocalRelation``.
 
     ``rows`` are tuples in ``schema`` field order (``schema`` may be a
-    DDL string). They go to ``createDataFrame`` as one Arrow table, so
-    evaluating the result launches no job; ``createDataFrame(list)``
-    builds a ``LogicalRDD`` instead, and every evaluation of that runs a
-    Python-worker job. Top-level values that need conversion (timestamps,
-    dates) pass through their field type's ``toInternal``, which reads a
-    naive datetime as process-local time exactly as the list path does."""
+    DDL string). They go to ``createDataFrame`` as one Arrow table
+    (:func:`arrow_rows`), so evaluating the result launches no job;
+    ``createDataFrame(list)`` builds a ``LogicalRDD`` instead, and every
+    evaluation of that runs a Python-worker job."""
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    return spark.createDataFrame(arrow_rows(rows, schema), schema)
+
+
+def arrow_rows(rows: Sequence[Sequence[Any]], schema: T.StructType):
+    """``rows`` (tuples in ``schema`` field order, as ``collect`` returns
+    them) as an Arrow table of ``to_arrow_schema(schema)``. Top-level
+    values that need conversion (timestamps, dates) pass through their
+    field type's ``toInternal``, which reads a naive datetime as
+    process-local time exactly as ``createDataFrame(list)`` does."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    if isinstance(schema, str):
-        schema = T.DataType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
     cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
     arrays = []
@@ -146,9 +153,7 @@ def local_frame(
             to_internal = f.dataType.toInternal
             col = [None if v is None else to_internal(v) for v in col]
         arrays.append(pa.array(col, type=af.type))
-    return spark.createDataFrame(
-        pa.Table.from_arrays(arrays, schema=arrow_schema), schema
-    )
+    return pa.Table.from_arrays(arrays, schema=arrow_schema)
 
 
 def stop_spark() -> None:

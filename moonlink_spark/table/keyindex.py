@@ -29,15 +29,18 @@ Here the same roles map onto Spark-native machinery:
   ``DISTRIBUTED_THRESHOLD`` distinct hashes, pyarrow on the driver reads
   only the row groups whose ``h`` min/max can hold a probe and filters
   them with ``is_in``; larger batches join the index through Spark. The
-  result is the exact set of data files (and positions) containing those
-  keys, so delete targeting and point reads open ONLY those files.
+  result is the exact set of positions ``(__fp, __ri)`` of those keys.
+- **point read** -> :func:`resolve_positions` reads those positions on
+  the driver below the same threshold; delete targeting and larger
+  batches scan ONLY the files holding one (:func:`candidate_files`).
 
 Scale story (100 TB): the index is ~16 bytes/row of parquet — three orders
 of magnitude smaller than the data. A point lookup of K keys on the driver
 leg reads at most K row groups (K x ``INDEX_ROW_GROUP_ROWS`` index rows)
-plus the footers of the live index files, then scans just the files that
-actually contain the keys. That is the asymptotic shape of the reference's
-hash lookup; SCALE.md §17 has the bound.
+plus the footers of the live index files, then at most one data row
+group per matching row and the DV rows of the files it touches. That is
+the asymptotic shape of the reference's hash lookup; SCALE.md §17 and §18
+have the bounds.
 """
 
 from __future__ import annotations
@@ -222,11 +225,11 @@ def lookup_hashes(
     is given and there are at least ``distributed_threshold`` distinct
     hashes, the blocks are joined against the broadcast hashes through
     Spark instead, so a large batch never reads through one process."""
-    import bisect
-
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
+
+    from moonlink_spark.table.segments import row_groups_holding
 
     probes = sorted({int(h) for h in hashes})
     if not blocks or not probes:
@@ -234,24 +237,12 @@ def lookup_hashes(
     if spark is not None and len(probes) >= distributed_threshold:
         return _index_lookup_spark(spark, blocks, probes)
 
-    def may_hold(stats) -> bool:
-        if stats is None or not stats.has_min_max:
-            return True
-        i = bisect.bisect_left(probes, stats.min)
-        return i < len(probes) and probes[i] <= stats.max
-
     value_set = pa.array(probes, pa.int64())
     hits: list[tuple[str, int]] = []
     for block in blocks:
         # __fp stays dictionary-encoded: one path per data file, not per row
         pf = pq.ParquetFile(block, read_dictionary=["__fp"])
-        md = pf.metadata
-        h_col = pf.schema_arrow.get_field_index("h")
-        groups = [
-            rg
-            for rg in range(md.num_row_groups)
-            if may_hold(md.row_group(rg).column(h_col).statistics)
-        ]
+        groups = row_groups_holding(pf, "h", probes)
         if not groups:
             continue
         tbl = pf.read_row_groups(groups, columns=["h", "__fp", "__ri"])
@@ -321,6 +312,112 @@ def candidate_files(
     live_paths = {f.path for f in all_files}
     matching = sorted({fp for fp, _ in hits} & live_paths)
     return matching, uncovered
+
+
+def resolve_positions(
+    table: "MoonlinkTable", m: Manifest, keys_df: DataFrame, key_cols: list[str]
+):
+    """Point resolution on the driver (parity ``search_values`` ->
+    ``(seg_idx, row_idx)``, persisted_bucket_hash_map.rs:276-302) for a
+    :func:`local_keys` relation -> ``(rows, uncovered)``: the live rows
+    of ``m`` holding a key (Arrow: the table's schema plus ``__fp`` and
+    ``__ri``) and the data files the index does not cover, which the
+    caller must scan. ``None`` without an index or at
+    ``DISTRIBUTED_THRESHOLD`` distinct hashes or more: the caller then
+    takes the Spark semi-join.
+
+    Positions outside live covered files or in a live DV of ``m`` (so
+    ``lsn=`` reads stay exact) are dropped, only the row groups holding
+    the rest are read, and a row is kept only if its key equals a probe
+    key, which rejects hash collisions. Null probe keys match nothing."""
+    if not enabled(m):
+        return None
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from moonlink_spark.session import arrow_rows
+
+    probes = [
+        r
+        for r in keys_df.select(_key_hash(key_cols), *key_cols).collect()
+        if None not in r[1:]
+    ]
+    if len({r[0] for r in probes}) >= DISTRIBUTED_THRESHOLD:
+        return None
+    entries, covered = live_entries(m)
+    positions: dict[str, set[int]] = {}
+    for fp, ri in lookup_hashes(
+        [table._resolve(e["path"]) for e in entries], [r[0] for r in probes]
+    ):
+        if fp in covered:
+            positions.setdefault(fp, set()).add(int(ri))
+    if positions and m.delete_files:
+        dvs = pq.read_table(
+            [table._resolve(f.path) for f in m.delete_files],
+            schema=pa.schema(
+                [("file_path", pa.string()), ("row_index", pa.int64())]
+            ),
+            filters=pc.field("file_path").isin(list(positions)),
+        )
+        for fp, ri in zip(*(c.to_pylist() for c in dvs.columns)):
+            positions[fp].discard(ri)
+    probe_keys = arrow_rows([r[1:] for r in probes], key_schema(m, key_cols))
+    wanted = set(zip(*(c.to_pylist() for c in probe_keys.columns)))
+    schema = to_arrow_schema(field_schema_to_struct(m.schema_fields))
+    parts = [
+        schema.append(pa.field("__fp", pa.string()))
+        .append(pa.field("__ri", pa.int64()))
+        .empty_table()
+    ]
+    for fp, pos in sorted(positions.items()):
+        if not pos:
+            continue
+        pos = sorted(pos)
+        tbl = _take_rows(table._resolve(fp), pos, schema)
+        keys = zip(*(tbl.column(c).to_pylist() for c in key_cols))
+        keep = pa.array([k in wanted for k in keys], pa.bool_())
+        tbl = tbl.append_column("__fp", pa.array([fp] * len(pos), pa.string()))
+        tbl = tbl.append_column("__ri", pa.array(pos, pa.int64()))
+        parts.append(tbl.filter(keep))
+    uncovered = [f for f in m.data_files if f.path not in covered]
+    return pa.concat_tables(parts), uncovered
+
+
+def _take_rows(path: str, pos: list[int], schema):
+    """Rows at the sorted file positions ``pos`` (``_metadata.row_index``)
+    of one data file, in the Arrow ``schema``. Only the row groups that
+    hold them are read, one at a time. Columns the file lacks come back
+    null; the others are cast (pyarrow reads Spark's timestamps
+    UTC-zoned, or as INT96 nanoseconds)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+    starts = np.cumsum([0] + sizes)
+    pos = np.asarray(pos, np.int64)
+    group = np.searchsorted(starts, pos, side="right") - 1
+    names = set(pf.schema_arrow.names)
+    columns = [n for n in schema.names if n in names]
+    tbl = pa.concat_tables(
+        [
+            pf.read_row_group(g, columns=columns).take(pos[group == g] - starts[g])
+            for g in np.unique(group).tolist()
+        ]
+    )
+    return pa.Table.from_arrays(
+        [
+            tbl[f.name].cast(f.type)
+            if f.name in names
+            else pa.nulls(len(pos), f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
 
 
 def merge_index(table: "MoonlinkTable") -> bool:

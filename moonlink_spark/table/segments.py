@@ -17,9 +17,6 @@ commits and the reference's index-segment lifecycle,
   readers simply never see — never duplicate rows
   (the flaw in the pre-r4s4 replace-then-unlink order, where a crash
   mid-unlink left merged + originals simultaneously visible).
-
-Indexes written before the meta carried ``segments`` fall back to the
-prefix directory scan they used originally.
 """
 
 from __future__ import annotations
@@ -32,6 +29,10 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Rows per row group of a sorted segment: the unit a driver-side reader
+# reads at a time.
+SEGMENT_ROW_GROUP_ROWS = 32_768
 
 
 @contextlib.contextmanager
@@ -79,10 +80,15 @@ def maybe_write_lock(dest: str, already_locked: bool):
     )
 
 
-def write_single_parquet(df: DataFrame, dest: str, prefix: str) -> str:
+def write_single_parquet(
+    df: DataFrame, dest: str, prefix: str, sort_by: tuple[str, ...] = ()
+) -> str:
     """Persist ``df`` as one parquet segment file; returns the file NAME
     (not path). The file is invisible to meta-resolved readers until the
-    caller publishes a meta that lists it."""
+    caller publishes a meta that lists it. With ``sort_by`` the rows are
+    sorted by those columns in row groups of at most
+    ``SEGMENT_ROW_GROUP_ROWS``, so footer min/max of the first column
+    bound a reader's row groups (:func:`row_groups_holding`)."""
     tmp = os.path.join(dest, f"_tmp-{uuid.uuid4().hex}")
     # repartition(1), NOT coalesce(1): coalesce propagates the 1-partition
     # constraint UP through every narrow op, so the whole upstream compute
@@ -90,7 +96,13 @@ def write_single_parquet(df: DataFrame, dest: str, prefix: str) -> str:
     # repartition shuffle barrier keeps the compute at full parallelism
     # and only the final write of the (small) index rows is single-task
     # (r12; sigindex build at sf0.1 measured 4.3s -> ~1.4s)
-    df.repartition(1).write.mode("overwrite").parquet(tmp)
+    df = df.repartition(1)
+    writer = df.write
+    if sort_by:
+        writer = df.sortWithinPartitions(*sort_by).write.option(
+            "parquet.block.row.count.limit", SEGMENT_ROW_GROUP_ROWS
+        )
+    writer.mode("overwrite").parquet(tmp)
     part = [n for n in os.listdir(tmp) if n.endswith(".parquet")]
     assert len(part) == 1
     name = f"{prefix}-{uuid.uuid4().hex}.parquet"
@@ -99,22 +111,29 @@ def write_single_parquet(df: DataFrame, dest: str, prefix: str) -> str:
     return name
 
 
-def scan_segment_names(dest: str, prefix: str) -> list[str]:
-    """Prefix directory scan — the pre-``segments``-meta fallback."""
-    return sorted(
-        n
-        for n in os.listdir(dest)
-        if n.startswith(f"{prefix}-") and n.endswith(".parquet")
-    )
-
-
 def live_segment_paths(dest: str, meta: dict, prefix: str) -> list[str]:
     """Paths of the segments a reader may see: the meta's ``segments``
-    list when present (crash-consistent), else the directory scan."""
-    names = meta.get("segments")
-    if names is None:
-        names = scan_segment_names(dest, prefix)
-    return [os.path.join(dest, n) for n in names]
+    list (crash-consistent; none without a meta)."""
+    return [os.path.join(dest, n) for n in meta.get("segments") or []]
+
+
+def row_groups_holding(pf, column: str, values: list[int]) -> list[int]:
+    """The row groups of the ``pq.ParquetFile`` ``pf`` whose footer
+    min/max of the int64 ``column`` can hold one of the sorted
+    ``values`` (every row group without statistics)."""
+    import bisect
+
+    md = pf.metadata
+    leaf = [md.schema.column(i).path for i in range(md.num_columns)].index(column)
+    groups = []
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(leaf).statistics
+        if st is not None and st.has_min_max:
+            i = bisect.bisect_left(values, st.min)
+            if i == len(values) or values[i] > st.max:
+                continue
+        groups.append(g)
+    return groups
 
 
 def read_segments(
@@ -140,6 +159,7 @@ def compact_segments(
     prefix: str,
     publish_meta,
     read_meta=None,
+    sort_by: tuple[str, ...] = (),
 ) -> int:
     """Merge all live segments into one. ``publish_meta(meta)`` must
     atomically persist the given meta dict; it is called AFTER the merged
@@ -151,30 +171,19 @@ def compact_segments(
     could race a concurrent updater's just-written, not-yet-published
     segment.
 
-    Legacy indexes (meta without ``segments``) are MIGRATED first: a meta
-    listing the directory-scanned names is published before the merged
-    segment is written, so directory-scan fallback readers can never see
-    merged + originals simultaneously (permanent duplicates on a crash
-    between merge-write and publish — the pre-r5 hole).
-
     ``read_meta()`` (no-arg callable returning the current on-disk meta)
     re-reads at the commit point so segments a concurrent ``update_index``
     published between our read and our publish survive in the final list
     instead of being silently dropped. Without it the caller accepts a
-    single-writer requirement on the index directory."""
-    live = meta.get("segments")
-    if live is None:
-        # Migrate to meta-resolved reads BEFORE any new file lands in the
-        # live directory: from here on, readers ignore unlisted files.
-        live = scan_segment_names(dest, prefix)
-        meta["segments"] = list(live)
-        publish_meta(meta)
+    single-writer requirement on the index directory. The merged segment
+    is written with ``sort_by`` (see :func:`write_single_parquet`)."""
+    live = meta["segments"]
     if len(live) <= 1:
         return 0
     merged_df = spark.read.parquet(
         *[os.path.join(dest, n) for n in live]
     )
-    merged = write_single_parquet(merged_df, dest, prefix)
+    merged = write_single_parquet(merged_df, dest, prefix, sort_by)
     old = list(live)
     final = meta
     concurrent: list[str] = []

@@ -52,8 +52,8 @@ SEG_PREFIX = "sig"
 
 
 def _sig_files(dest: str) -> list[str]:
-    """Paths of the LIVE signature segments (meta-resolved; directory
-    scan for pre-``segments``-meta indexes)."""
+    """Paths of the LIVE signature segments (meta-resolved; none before
+    the first build)."""
     from moonlink_spark.table import segments as segstore
 
     try:
@@ -155,9 +155,6 @@ def update_index(
         meta = read_meta(dest)
         name = _write_signatures(new_docs.select("doc_id", "text"), dest)
         meta["generation"] += 1
-        meta.setdefault(
-            "segments", segstore.scan_segment_names(dest, SEG_PREFIX)
-        )
         if name not in meta["segments"]:
             meta["segments"].append(name)
         meta.update(meta_update or {})

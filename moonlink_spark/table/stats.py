@@ -60,7 +60,12 @@ def stats_from_metadata(md, max_columns: int = 32) -> dict[str, list]:
                 bad.add(name)
                 out.pop(name, None)
                 continue
-            mn, mx = _json_safe(st.min, lo=True), _json_safe(st.max, lo=False)
+            try:
+                mn, mx = _json_safe(st.min, lo=True), _json_safe(st.max, lo=False)
+            except NotImplementedError:
+                # pyarrow cannot decode some statistics, e.g. the INT64
+                # decimals Spark writes for precision <= 18
+                mn = mx = None
             if mn is None or mx is None:
                 bad.add(name)
                 out.pop(name, None)

@@ -36,6 +36,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 import threading
@@ -1003,12 +1004,15 @@ class MoonlinkTable:
     def scan_keys(self, keys_df: DataFrame, lsn: int | None = None) -> DataFrame:
         """Batch point lookup by identity key (parity: read-path index
         lookup, GlobalIndex::search_values persisted_bucket_hash_map.rs:
-        276-302 feeding the DataFusion point scan).
+        276-302 returning row positions).
 
-        The key batch is collected once into a local relation (bounded by
-        the request, never the table). With a persisted key index the scan
-        opens ONLY the files containing the requested keys; without one it
-        falls back to a semi-join over the live view."""
+        The key batch is collected once into a local relation. With a key
+        index and fewer than ``keyindex.DISTRIBUTED_THRESHOLD`` distinct
+        keys, the rows are read by position on the driver
+        (``keyindex.resolve_positions``) into a local relation, so the
+        key-batch collect is the only Spark job; files the index does
+        not cover are added by the Spark semi-join. Otherwise the whole
+        lookup is that semi-join (:meth:`_scan_keys_spark`)."""
         m = self._resolve_manifest(lsn)
         ident = IdentityProp.from_json(m.identity)
         if ident.mode not in ("single", "keys"):
@@ -1019,22 +1023,35 @@ class MoonlinkTable:
         from moonlink_spark.table import keyindex
 
         keys_df = keyindex.local_keys(self.spark, m, keys_df, key_cols)
+        resolved = keyindex.resolve_positions(self, m, keys_df, key_cols)
+        if resolved is None:
+            return self._scan_keys_spark(m, keys_df, key_cols)
+        rows, uncovered = resolved
+        df = self.spark.createDataFrame(
+            rows.drop_columns(["__fp", "__ri"]),
+            field_schema_to_struct(m.schema_fields),
+        )
+        if uncovered:
+            m = dataclasses.replace(m, data_files=uncovered)
+            df = df.unionByName(self._scan_keys_spark(m, keys_df, key_cols))
+        return df
+
+    def _scan_keys_spark(
+        self, m: Manifest, keys_df: DataFrame, key_cols: list[str]
+    ) -> DataFrame:
+        """Spark leg of :meth:`scan_keys`: semi-join the live view of
+        ``m`` (only the index's candidate files, with an index) against
+        the local key relation."""
+        from moonlink_spark.table import keyindex
+
         data_files = m.data_files
         if keyindex.enabled(m):
-            cand = keyindex.candidate_files(self, m, keys_df, key_cols)
-            if cand is not None:
-                matching, uncovered = cand
-                keep = set(matching) | {f.path for f in uncovered}
-                data_files = [f for f in data_files if f.path in keep]
-        m2 = Manifest(
-            version=m.version,
-            lsn=m.lsn,
-            schema_fields=m.schema_fields,
-            identity=m.identity,
-            data_files=data_files,
-            delete_files=m.delete_files,
+            matching, uncovered = keyindex.candidate_files(self, m, keys_df, key_cols)
+            keep = set(matching) | {f.path for f in uncovered}
+            data_files = [f for f in data_files if f.path in keep]
+        df = self._read_manifest(
+            dataclasses.replace(m, data_files=data_files), with_pos=False
         )
-        df = self._read_manifest(m2, with_pos=False)
         return df.join(F.broadcast(keys_df), key_cols, "left_semi")
 
     def scan_blocking(self, lsn: int, timeout_s: float = 30.0) -> DataFrame:

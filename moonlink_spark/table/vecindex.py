@@ -19,9 +19,11 @@ the bucket structure is the IVF inverted list:
   warrants a retrain (``retrain_recommended``);
 - **compact**: merge many small assign segments into one
   (``build_from_merge`` parity);
-- **query**: top-k probes join the persisted inverted lists against the
-  corpus — zero assignment recompute at query time; candidates are
-  cluster-bounded exactly like the ``ann_ivf_topk`` operator.
+- **query**: served on the driver from the probed clusters' rows of
+  the persisted inverted lists (zero assignment recompute); only the
+  query vectors and the shortlist are fetched from the corpus.
+  Candidates are cluster-bounded exactly like the ``ann_ivf_topk``
+  operator.
 
 Assignment arithmetic is EXACTLY the oracle-checked integer family
 (quantize at 1e6, integer d2, argmin tie-broken on cluster_id), so
@@ -31,6 +33,7 @@ index-served results match the from-scratch computation bit for bit.
 from __future__ import annotations
 
 import json
+import math
 import os
 from typing import Any
 
@@ -46,6 +49,12 @@ from moonlink_spark.table import segments as segstore
 
 META_FILE = "vecindex.json"
 SEG_PREFIX = "assign"
+# Segment rows are sorted by these columns (footer min/max of cluster_id
+# then bound the row groups a probe reads).
+SEG_SORT = ("cluster_id", "vec_id")
+# Most query ids one query_topk call serves: the per-query ADC tables and
+# running shortlists live on the driver.
+MAX_QUERY_BATCH = 1024
 
 
 def _write_meta(dest: str, meta: dict[str, Any]) -> None:
@@ -88,7 +97,9 @@ def _write_assignments(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("d2").cast("decimal(38,0)")).alias("sd2"),
     )
-    name = segstore.write_single_parquet(assigned, dest, SEG_PREFIX)
+    name = segstore.write_single_parquet(
+        assigned, dest, SEG_PREFIX, sort_by=SEG_SORT
+    )
     stats = obs.get
     n, sd2 = int(stats["n"] or 0), int(stats["sd2"] or 0)
     # observe() metrics have accumulator semantics: on a real cluster,
@@ -284,9 +295,6 @@ def update_index(
             _pq_books(meta),
         )
         meta["generation"] += 1
-        meta.setdefault(
-            "segments", segstore.scan_segment_names(dest, SEG_PREFIX)
-        )
         if name not in meta["segments"]:
             meta["segments"].append(name)
         meta["appended_rows"] += n
@@ -372,7 +380,7 @@ def compact_index(spark: SparkSession, dest: str) -> int:
 
         return segstore.compact_segments(
             spark, dest, meta, SEG_PREFIX, publish,
-            read_meta=lambda: read_meta(dest),
+            read_meta=lambda: read_meta(dest), sort_by=SEG_SORT,
         )
 
 
@@ -392,165 +400,171 @@ def query_topk(
     nprobe: int = 1,
     rerank: int | None = None,
 ) -> DataFrame:
-    """ANN top-k for ``query_ids`` served FROM the index: queries probe
-    their ``nprobe`` nearest centroids (driver math on the meta's matrix —
-    no corpus scan), candidates come from the persisted inverted lists,
-    and only candidates are cosine-scored. Returns
-    (query_id, neighbor_id, cosine, rn).
+    """ANN top-k for ``query_ids`` served FROM the index, on the driver.
+    Returns a local relation (query_id, neighbor_id, cosine, rn),
+    ordered by (query_id, rn).
 
-    Scale shape: ``query_ids`` is a BOUNDED explicit request (the probe
-    API's contract), so probe selection and the per-query ADC tables run
-    as exact driver arithmetic over one collected scan of the query rows
-    — O(|query_ids| * k * dim) driver work (r12; a massive query batch
-    should instead be chunked by the caller or routed through the
-    distributed ``probe_ivf_clusters`` map). The assignments join is an
-    equi-join on cluster_id; the probe set is broadcast; the corpus is
-    scanned once to re-attach embeddings for the candidate clusters
-    only.
+    Each query probes its ``nprobe`` nearest centroids (exact int64).
+    pyarrow reads the probed clusters' rows of the live segments one row
+    group at a time (footer min/max of the sorted ``cluster_id`` skip
+    the rest). A PQ index scores them by ADC in numpy int64 and keeps a
+    running top-``rerank`` (default 4*topk) per query by
+    ``(adc, vec_id)``: driver memory is O(row group + queries x rerank).
+    A flat index keeps every candidate. The shortlist is fetched in one
+    collect filtered by ``In(vec_id, shortlist)``, scored with the
+    ``_dot``/``_norm`` cosine over a local relation (no job; the doubles
+    of a distributed scan), ranked ``(cos desc, vec_id)`` and rounded
+    to 6 places: two Spark jobs with the query-vector collect.
 
-    PQ indexes add an ADC SHORTLIST stage before the exact-cosine
-    rerank: candidates are scored from their persisted m codes against
-    the query's broadcast distance tables (zero shuffle, no embedding
-    fetch), only the top ``rerank`` (default 4*topk) per query touch
-    the corpus for exact cosine — at 100 TB the corpus join shrinks
-    from cluster-sized to rerank-sized.
+    ``rerank=0`` on a PQ index selects PURE-ADC serving: the rank is the
+    integer ADC distance, the corpus is read only for the query vectors,
+    and the schema is (query_id, neighbor_id, adc, rn); SCALE.md §16 has
+    its recall.
 
-    ``rerank=0`` on a PQ index selects PURE-ADC serving: results rank
-    on the integer ADC distance alone and the full-precision corpus is
-    never touched after probe selection — the query reads ONLY index
-    bytes (m smallints/vector). The schema changes to
-    (query_id, neighbor_id, adc, rn) because no cosine exists on this
-    path. At 100 TB this removes the one remaining per-query fetch of
-    the full-precision vectors (the rerank join), trading recall
-    (measured in SCALE.md §16) for a purely index-resident probe; flat
-    (non-PQ) indexes have no codes, so ``rerank`` keeps being ignored
-    there."""
-    import math
-
+    ``query_ids`` is a bounded request: more than ``MAX_QUERY_BATCH`` ids
+    raise ``ValueError``; such batches belong to the distributed
+    ``operators.similarity.probe_ivf_clusters``. A segment unlinked by a
+    concurrent compaction or rebuild re-resolves the meta once (the
+    re-resolve contract of :func:`build_index`)."""
     import numpy as np
-    from pyspark.sql import Window
 
-    from moonlink_spark.operators.similarity import _dot, _norm, pq_adc_scores
+    from moonlink_spark.operators.similarity import _dot, _norm
 
-    meta = read_meta(dest)
-    cents = _centroids(meta)
-    pq_books = _pq_books(meta)
-    # ``query_ids`` is a bounded explicit request (the probe API's
-    # contract), so the query-side model math — probe selection and the
-    # per-query ADC tables — runs as exact driver arithmetic over ONE
-    # collected scan of the query rows instead of three separate
-    # scan + one-row-broadcast expression chains (r12; each broadcast
-    # materialization costs a fixed sub-job). The integers are the same:
-    # quantize = floor(double(x) * 1e6), probe order = (d2, cluster_id)
-    # ascending, table cell = integer subspace d2 — all replayed by the
-    # DuckDB oracles bit for bit. The CORPUS side (inverted lists, ADC
-    # scoring, rerank) stays fully distributed.
-    qrows = (
-        emb.filter(F.col("vec_id").isin([int(i) for i in query_ids]))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    qv = [
-        (int(r.vec_id), [int(math.floor(float(x) * 1000000.0)) for x in r.embedding])
-        for r in qrows
-    ]
-    C = np.asarray([c for _, c in cents], dtype=np.int64)
-    probe_pairs = []
-    # empty centroid matrix (degenerate empty-corpus build): no probes —
-    # the plan degrades to an empty result exactly like the pre-r12
-    # probe_ivf_clusters path did, instead of a numpy broadcast error
-    for qid, v in qv if len(cents) else []:
-        d2 = np.einsum(
-            "kd->k", (C - np.asarray(v, dtype=np.int64)[None, :]) ** 2
+    ids = sorted({int(i) for i in query_ids})
+    if len(ids) > MAX_QUERY_BATCH:
+        raise ValueError(
+            f"query_topk serves at most {MAX_QUERY_BATCH} query ids, got "
+            f"{len(ids)}: split the batch or use the distributed "
+            "operators.similarity.probe_ivf_clusters"
         )
-        order = np.lexsort((np.arange(len(C)), d2))[: min(nprobe, len(C))]
-        probe_pairs.extend((qid, int(cid)) for cid in order)
-    probe_df = local_frame(
-        spark, probe_pairs, "query_id bigint, probe_cluster bigint"
-    )
-    inv = read_assignments(spark, dest)
-    cand = inv.join(
-        F.broadcast(probe_df),
-        inv.cluster_id == F.col("probe_cluster"),
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    if pq_books is not None:
-        # ADC shortlist: deterministic (adc, vec_id) ordering so the
-        # DuckDB oracle replays the shortlist bit for bit
-        r = int(rerank) if rerank is not None else max(4 * topk, topk + 1)
-        dsub = len(pq_books[0][0][1])
-        table_rows = [
-            (
-                qid,
-                [
-                    [
-                        int(
-                            np.sum(
-                                (
-                                    np.asarray(
-                                        v[s * dsub : (s + 1) * dsub],
-                                        dtype=np.int64,
-                                    )
-                                    - np.asarray(cent, dtype=np.int64)
-                                )
-                                ** 2
-                            )
-                        )
-                        for _, cent in cb
-                    ]
-                    for s, cb in enumerate(pq_books)
-                ],
-            )
-            for qid, v in qv
-        ]
-        tables = local_frame(
-            spark, table_rows, "query_id bigint, t array<array<bigint>>"
+    qvec = _fetch(emb, ids)
+    qint = {
+        q: np.floor(np.asarray(v, np.float64) * 1000000.0).astype(np.int64)
+        for q, v in qvec.items()
+    }
+    for attempt in (0, 1):
+        meta = read_meta(dest)
+        try:
+            lists = _shortlists(meta, dest, qint, topk, nprobe, rerank)
+            break
+        except FileNotFoundError:
+            if attempt:
+                raise
+    if "pq" in meta and rerank == 0:
+        return local_frame(
+            spark,
+            [
+                (q, v, adc, rn)
+                for q, (adcs, vids) in sorted(lists.items())
+                for rn, (adc, v) in enumerate(zip(adcs, vids), 1)
+            ],
+            "query_id bigint, neighbor_id bigint, adc bigint, rn bigint",
         )
-        adc = pq_adc_scores(cand.select("query_id", "vec_id", "codes"), tables)
-        ws = Window.partitionBy("query_id").orderBy(
-            F.asc("adc"), F.asc("vec_id")
-        )
-        if r == 0:
-            # pure-ADC: rank on the code distance, never fetch the
-            # corpus — the only data read after probing is index bytes
-            return (
-                adc.withColumn("rn", F.row_number().over(ws).cast("bigint"))
-                .filter(F.col("rn") <= topk)
-                .select(
-                    "query_id",
-                    F.col("vec_id").alias("neighbor_id"),
-                    F.col("adc").cast("bigint").alias("adc"),
-                    "rn",
-                )
-            )
-        cand = (
-            adc.withColumn("srn", F.row_number().over(ws))
-            .filter(F.col("srn") <= r)
-        )
-    # query vectors keep the CORPUS embedding element type (float32 in
-    # the standard schema, float64 supported by schema.py): hard-coding
-    # array<float> truncated float64 query vectors before the cosine
-    # (ADVICE r12)
+    cvec = _fetch(emb, sorted({v for _, vids in lists.values() for v in vids}))
+    # vectors keep the CORPUS element type: array<float> would truncate
+    # float64 vectors before the cosine
     emb_type = emb.schema["embedding"].dataType.simpleString()
-    qe = local_frame(
-        spark,
-        [(qid, list(r.embedding)) for (qid, _), r in zip(qv, qrows)],
-        f"query_id bigint, qe {emb_type}",
-    )
-    ce = emb.select("vec_id", F.col("embedding").alias("ce"))
     scored = (
-        cand.select("query_id", "vec_id")
-        .join(ce, "vec_id")
-        .join(F.broadcast(qe), "query_id")
-        .withColumn("cos", _dot("qe", "ce") / (_norm("qe") * _norm("ce")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rn") <= topk)
+        local_frame(
+            spark,
+            [
+                (q, v, qvec[q], cvec[v])
+                for q, (_, vids) in lists.items()
+                for v in vids
+                if v in cvec
+            ],
+            f"query_id bigint, vec_id bigint, qe {emb_type}, ce {emb_type}",
+        )
         .select(
             "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos", 6).alias("cosine"),
-            "rn",
+            "vec_id",
+            (_dot("qe", "ce") / (_norm("qe") * _norm("ce"))).alias("cos"),
         )
+        .collect()
     )
+    out: list[tuple] = []
+    for r in sorted(scored, key=lambda r: (r.query_id, *_desc(r.cos), r.vec_id)):
+        rn = out[-1][3] + 1 if out and out[-1][0] == r.query_id else 1
+        if rn <= topk:
+            out.append((r.query_id, r.vec_id, r.cos, rn))
+    return local_frame(
+        spark, out, "query_id bigint, neighbor_id bigint, cos double, rn bigint"
+    ).select("query_id", "neighbor_id", F.round("cos", 6).alias("cosine"), "rn")
+
+
+def _fetch(emb: DataFrame, ids: list[int]) -> dict[int, Any]:
+    """{vec_id: embedding} for ``ids``: one collect filtered by
+    ``In(vec_id, ids)``."""
+    rows = (
+        emb.filter(F.col("vec_id").isin(ids)).select("vec_id", "embedding").collect()
+        if ids
+        else []
+    )
+    return {int(r.vec_id): r.embedding for r in rows}
+
+
+def _desc(cos: float | None) -> tuple[int, float]:
+    """Sort key of ``cos DESC``: Spark ranks NaN above every number and
+    puts nulls last."""
+    if cos is None:
+        return (2, 0.0)
+    return (0, 0.0) if math.isnan(cos) else (1, -cos)
+
+
+def _shortlists(meta, dest, qint, topk, nprobe, rerank):
+    """-> {query_id: (adcs, vec_ids)}: candidates from each query's
+    probed clusters, the query itself excluded. A PQ index keeps the
+    best ``rerank`` (``topk`` when ``rerank=0``) by ``(adc, vec_id)``; a
+    flat index keeps all of them, with no adcs."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    C = np.asarray(meta["centroids"], dtype=np.int64)
+    # an empty centroid matrix (degenerate empty-corpus build) probes
+    # nothing: the result is empty
+    probes = {
+        q: np.lexsort((np.arange(len(C)), ((C - v) ** 2).sum(axis=1)))[:nprobe]
+        for q, v in (qint.items() if len(C) else ())
+    }
+    # (m, ksub, dsub) codebooks -> per query an (m, ksub) table of
+    # integer subspace d2
+    books = np.asarray(meta.get("pq", {}).get("codebooks", []), dtype=np.int64)
+    if len(books):
+        r = int(rerank) if rerank is not None else max(4 * topk, topk + 1)
+        keep = r or topk
+        m, _, dsub = books.shape
+        tables = {
+            q: ((books - v[: m * dsub].reshape(m, 1, dsub)) ** 2).sum(axis=2)
+            for q, v in qint.items()
+        }
+    empty = np.empty(0, np.int64)
+    lists = {q: (empty, empty) for q in probes}
+    wanted = sorted({int(c) for p in probes.values() for c in p})
+    columns = ["vec_id", "cluster_id"] + (["codes"] if len(books) else [])
+    for path in segstore.live_segment_paths(dest, meta, SEG_PREFIX) if wanted else []:
+        pf = pq.ParquetFile(path)
+        for g in segstore.row_groups_holding(pf, "cluster_id", wanted):
+            tbl = pf.read_row_group(g, columns=columns)
+            vid = tbl.column("vec_id").to_numpy()
+            cid = tbl.column("cluster_id").to_numpy()
+            if len(books):
+                codes = pc.list_flatten(tbl.column("codes")).to_numpy()
+                codes = codes.astype(np.int64).reshape(-1, m)
+            rows_of = {c: np.flatnonzero(cid == c) for c in np.unique(cid)}
+            for q, p in probes.items():
+                hit = [rows_of[c] for c in p if c in rows_of]
+                if not hit:
+                    continue
+                hit = np.concatenate(hit)
+                hit = hit[vid[hit] != q]
+                adcs, vids = lists[q]
+                vids = np.concatenate([vids, vid[hit]])
+                if len(books):
+                    T = tables[q]
+                    adc = T[np.arange(len(T)), codes[hit]].sum(axis=1)
+                    adcs = np.concatenate([adcs, adc])
+                    best = np.lexsort((vids, adcs))[:keep]
+                    adcs, vids = adcs[best], vids[best]
+                lists[q] = (adcs, vids)
+    return {q: (a.tolist(), v.tolist()) for q, (a, v) in lists.items()}

@@ -43,6 +43,38 @@ def job_counter(spark):
     return counting
 
 
+@pytest.fixture()
+def job_plans(spark):
+    """-> ``recording()``: a context manager yielding a callable that
+    returns ``(jobs, plans)`` for the ``with`` block so far: the ids of
+    the Spark jobs it launched, and the physical plan of each SQL
+    execution that launched one of them."""
+    sc = spark.sparkContext
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+
+    def plans_of(group):
+        jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        store = spark._jsparkSession.sharedState().statusStore()
+        plans = [
+            e.physicalPlanDescription()
+            for e in conv.asJava(store.executionsList())
+            if jobs & {int(j) for j in conv.asJava(e.jobs()).keySet()}
+        ]
+        return jobs, plans
+
+    @contextlib.contextmanager
+    def recording():
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            yield lambda: plans_of(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return recording
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

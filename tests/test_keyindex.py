@@ -559,3 +559,223 @@ def test_index_entry_rows_are_per_file(spark, tmp_path):
             assert e["rows"] < 2000  # no entry claims the batch total
     finally:
         ki.INDEX_FILE_ROWS = orig
+
+
+# --------------------------------------------------------------------- #
+# driver point reads (resolve_positions) against the Spark semi-join leg
+# --------------------------------------------------------------------- #
+
+TYPED = [
+    {"name": "id", "data_type": "int64", "nullable": False},
+    {"name": "ts", "data_type": "timestamp", "nullable": False},
+    {"name": "d", "data_type": "date", "nullable": False},
+    {"name": "dec", "data_type": "decimal(12,2)", "nullable": False},
+    {"name": "v_ts", "data_type": "timestamp"},
+    {"name": "v_d", "data_type": "date"},
+    {"name": "v_dec", "data_type": "decimal(10,3)"},
+    {"name": "s", "data_type": "string"},
+]
+TYPED_KEYS = ["id", "ts", "d", "dec"]
+TYPED_DDL = (
+    "id long, ts timestamp, d date, dec decimal(12,2), v_ts timestamp, "
+    "v_d date, v_dec decimal(10,3), s string"
+)
+
+
+def _typed_row(i, tag="a"):
+    import datetime as dt
+    from decimal import Decimal
+
+    return {
+        "id": i,
+        "ts": dt.datetime(2024, 3, 10, 1, 30) + dt.timedelta(minutes=37 * i),
+        "d": dt.date(2020, 2, 28) + dt.timedelta(days=i % 400),
+        "dec": Decimal(i * 7) / 4,
+        "v_ts": None if i % 5 == 0 else dt.datetime(1999, 12, 31, 23, 59, 59, i),
+        "v_d": dt.date(1970, 1, 1) + dt.timedelta(days=i),
+        "v_dec": Decimal(f"{i}.{i % 1000:03d}"),
+        "s": f"{tag}{i}",
+    }
+
+
+def _key_of(row):
+    return tuple(row[c] for c in TYPED_KEYS)
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _legs(t, keys_df, lsn=None, driver=True):
+    """-> (scan_keys rows, Spark semi-join leg rows) for one key batch;
+    ``driver`` asserts which leg scan_keys takes."""
+    m = t._resolve_manifest(lsn)
+    key_cols = list(IdentityProp.from_json(m.identity).columns)
+    local = keyindex.local_keys(t.spark, m, keys_df, key_cols)
+    took_driver = keyindex.resolve_positions(t, m, local, key_cols) is not None
+    assert took_driver == driver
+    return (
+        _sorted_rows(t.scan_keys(keys_df, lsn=lsn)),
+        _sorted_rows(t._scan_keys_spark(m, local, key_cols)),
+    )
+
+
+def _typed_table(spark, tmp_path):
+    """A typed composite-key indexed table over four commits: a
+    Spark-written file of many row groups (lsn 1), a driver-written file
+    (lsn 2), a delete (lsn 3) and an update (lsn 4)."""
+    t = MoonlinkTable.create(
+        spark,
+        str(tmp_path / "typed"),
+        TYPED,
+        IdentityProp.keys(TYPED_KEYS),
+        key_index=True,
+    )
+    spark.conf.set("parquet.block.row.count.limit", "16")
+    try:
+        t.append_df(
+            spark.createDataFrame(
+                [tuple(_typed_row(i).values()) for i in range(200)], TYPED_DDL
+            ).coalesce(1)
+        )
+        t.commit(lsn=1)
+    finally:
+        spark.conf.unset("parquet.block.row.count.limit")
+    spark_file = t._resolve(t.manifest.data_files[0].path)
+    assert pq.ParquetFile(spark_file).metadata.num_row_groups > 5
+    t.append_rows([_typed_row(i) for i in range(200, 300)])
+    t.commit(lsn=2)
+    t.delete_rows([{c: _typed_row(i)[c] for c in TYPED_KEYS} for i in (3, 40, 250)])
+    t.commit(lsn=3)
+    t.upsert_rows([_typed_row(i, "new") for i in (17, 150, 260)])
+    t.commit(lsn=4)
+    return t
+
+
+def test_driver_point_reads_match_spark_leg(spark, tmp_path):
+    """Differential: scan_keys' driver path returns exactly the Spark
+    semi-join leg's rows, on timestamp/date/decimal keys and values,
+    across the row groups of a Spark-written file (pyarrow positions
+    must equal ``_metadata.row_index``), with duplicate probes, a key
+    deleted earlier (DV'd), updated keys (old row DV'd, new row in a
+    newer file), a null key and ``lsn=`` reads before and after the
+    delete — and scan_keys runs one job (the key-batch collect)."""
+    t = _typed_table(spark, tmp_path)
+    ids = [0, 3, 15, 16, 17, 33, 40, 150, 199, 200, 250, 260, 299, 1234]
+    probe = [_key_of(_typed_row(i)) for i in ids]
+    probe += probe[:4]  # duplicates
+    probe += [(None,) + probe[5][1:]]  # a null key matches nothing
+    keys_df = spark.createDataFrame(
+        probe, "id long, ts timestamp, d date, dec decimal(12,2)"
+    )
+    expect = {
+        1: {i for i in ids if i < 200},
+        2: {i for i in ids if i < 300},
+        3: {i for i in ids if i < 300} - {3, 40, 250},
+        4: {i for i in ids if i < 300} - {3, 40, 250},
+    }
+    for lsn in (1, 2, 3, 4):
+        driver, spark_leg = _legs(t, keys_df, lsn=lsn)
+        assert driver == spark_leg
+        assert sorted(r[0] for r in driver) == sorted(expect[lsn])
+        tags = {r[0]: r[-1] for r in driver}
+        for i in (17, 150, 260):
+            if i in tags:
+                assert tags[i] == (f"new{i}" if lsn == 4 else f"a{i}")
+    brute = _sorted_rows(t.scan().join(keys_df.dropna(), TYPED_KEYS, "left_semi"))
+    assert _legs(t, keys_df)[0] == brute
+
+
+def test_driver_point_reads_cast_int_probes(spark, tmp_path):
+    """Int probes against a bigint key are cast to the key type before
+    hashing and before the key-equality check."""
+    t = _mk(spark, tmp_path, "intprobe")
+    t.append_rows([{"id": i, "v": f"a{i}"} for i in range(100)])
+    t.commit(lsn=1)
+    keys = spark.createDataFrame([(7,), (99,), (100,), (None,)], "id int")
+    driver, spark_leg = _legs(t, keys)
+    assert driver == spark_leg == [(7, "a7"), (99, "a99")]
+
+
+def test_driver_point_reads_union_uncovered_files(spark, tmp_path, monkeypatch):
+    """Files an optimize left without index entries are read by the Spark
+    semi-join and unioned with the driver rows of the covered files."""
+    t = _mk(spark, tmp_path, "uncov")
+    for c in range(3):
+        t.append_rows([{"id": 100 * c + i, "v": f"a{i}"} for i in range(100)])
+        t.commit(lsn=c + 1)
+    t.delete_rows([{"id": 42}])
+    t.commit(lsn=4)
+    # an optimize that drops the index entries without rebuilding them
+    monkeypatch.setattr(
+        MoonlinkTable, "_index_new_files", lambda self, base, props, files: props
+    )
+    optimize(t, mode="full")
+    monkeypatch.undo()
+    t.append_rows([{"id": i, "v": f"b{i}"} for i in range(300, 400)])
+    t.commit(lsn=5)
+    m = t.manifest
+    entries, covered = keyindex.live_entries(m)
+    assert len(entries) == 1 and len(covered) == 1 < len(m.data_files)
+    keys = spark.createDataFrame([(k,) for k in (1, 42, 250, 301, 399, 500)], "id long")
+    driver, spark_leg = _legs(t, keys)
+    assert driver == spark_leg
+    assert sorted(r[0] for r in driver) == [1, 250, 301, 399]
+
+
+def test_forged_colliding_index_row_is_rejected(spark, tmp_path):
+    """A hash collision (an index row whose hash is a probe's but whose
+    position holds a different key) is dropped by the key-equality
+    check: scan_keys returns only rows whose key was asked for."""
+    import dataclasses
+
+    import pyarrow as pa
+
+    t = _mk(spark, tmp_path, "forged")
+    t.append_rows([{"id": i, "v": f"a{i}"} for i in range(50)])
+    t.commit(lsn=1)
+    m = t.manifest
+    h = spark.createDataFrame([(1000,)], "id long").select(F.xxhash64("id")).first()[0]
+    forged = str(tmp_path / "forged" / "keyindex" / "forged.parquet")
+    os.makedirs(os.path.dirname(forged), exist_ok=True)
+    fp = m.data_files[0].path
+    pq.write_table(
+        pa.table(
+            {"h": pa.array([h], pa.int64()), "__fp": [fp], "__ri": pa.array([5], pa.int64())}
+        ),
+        forged,
+    )
+    cfg = dict(m.properties[keyindex.KEY_INDEX_PROP])
+    cfg["entries"] = cfg["entries"] + [
+        {"path": os.path.relpath(forged, t.data_path), "covers": [fp], "rows": 1}
+    ]
+    m2 = dataclasses.replace(
+        m, properties={**m.properties, keyindex.KEY_INDEX_PROP: cfg}
+    )
+    keys = keyindex.local_keys(
+        spark, m2, spark.createDataFrame([(1000,), (7,)], "id long"), ["id"]
+    )
+    rows, uncovered = keyindex.resolve_positions(t, m2, keys, ["id"])
+    assert uncovered == []
+    assert rows.column("id").to_pylist() == [7]
+    assert rows.column("__ri").to_pylist() == [7]
+    # the forged hit was read (and rejected), not missed by the probe
+    hits = keyindex.lookup_hashes([t._resolve(e["path"]) for e in cfg["entries"]], [h])
+    assert hits == [(fp, 5)]
+
+
+def test_large_key_batch_reads_through_the_spark_leg(spark, tmp_path):
+    """At DISTRIBUTED_THRESHOLD distinct keys the read takes the Spark
+    semi-join (the one threshold of probe and read) with the same rows."""
+    t = _mk(spark, tmp_path, "big")
+    t.append_rows([{"id": i, "v": f"a{i}"} for i in range(600)])
+    t.commit(lsn=1)
+    t.delete_rows([{"id": 10}])
+    t.commit(lsn=2)
+    n = keyindex.DISTRIBUTED_THRESHOLD
+    keys = spark.createDataFrame([(k,) for k in range(n)], "id long")
+    driver, spark_leg = _legs(t, keys, driver=False)
+    assert driver == spark_leg
+    assert sorted(r[0] for r in driver) == [k for k in range(n) if k != 10]
+    small = spark.createDataFrame([(k,) for k in range(n - 1)], "id long")
+    assert len(_legs(t, small)[0]) == n - 2

@@ -240,14 +240,16 @@ def _analyzed(df) -> str:
 def test_point_lookup_and_ann_plans_build_no_rdd_relations(
     spark, sf_dir, tmp_path, job_counter
 ):
-    """Driver-bounded relations are Arrow-built LocalRelations: a point
-    lookup with a list-built key batch and a PQ top-k query analyze to
-    plans without a LogicalRDD, and the lookup on a key-indexed table with
-    one DV runs at most 5 jobs — a return to the Spark-join index probe,
-    to re-running the caller's key plan, or to list-built relations
-    pushes it over. A plain scan of that table runs at most 2 (DV
-    broadcast and data scan), and the top-k query at most 7 (no
-    segment-schema inference job)."""
+    """Driver-bounded reads are answered on the driver and returned as
+    Arrow-built LocalRelations: a point lookup with a list-built key
+    batch and a PQ top-k query analyze to plans without a LogicalRDD.
+    The lookup on a fully index-covered table with one DV runs at most
+    1 job, the collect of the caller's key batch: rows are read by
+    position, so any Spark probe, file scan or DV join pushes it over.
+    A plain scan of that table runs at most 2 (DV broadcast and data
+    scan). The top-k query runs at most 2 (the query-vector and
+    shortlist fetches), and at most 1 with rerank=0: any Spark ADC or
+    rerank stage pushes it over."""
     from moonlink_spark.operators import load
     from moonlink_spark.table import vecindex
     from moonlink_spark.table.identity import IdentityProp
@@ -276,7 +278,7 @@ def test_point_lookup_and_ann_plans_build_no_rdd_relations(
         got = t.scan_keys(rdd_keys)
         assert "LogicalRDD" not in _analyzed(got)
         assert sorted(r.id for r in got.collect()) == [5, 150]
-        assert jobs() <= 5
+        assert jobs() <= 1
     # the DV side is read with its known schema: no footer-inference job
     with job_counter() as jobs:
         assert len(t.scan().collect()) == 299
@@ -292,4 +294,11 @@ def test_point_lookup_and_ann_plans_build_no_rdd_relations(
         assert "LogicalRDD" not in _analyzed(top)
         assert {r.query_id for r in top.collect()} == {0, 1}
         n_jobs = jobs()
-    assert n_jobs <= 7, n_jobs
+    assert n_jobs <= 2, n_jobs
+    with job_counter() as jobs:
+        top = vecindex.query_topk(
+            spark, corpus, dest, [0, 1], topk=2, nprobe=2, rerank=0
+        )
+        assert {r.query_id for r in top.collect()} == {0, 1}
+        n_jobs = jobs()
+    assert n_jobs <= 1, n_jobs

@@ -4,6 +4,7 @@ the from-scratch computation."""
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +14,7 @@ from moonlink_spark.operators.similarity import (
     quantize_embeddings_1e6,
     train_ivf_centroids,
 )
+from moonlink_spark.table import segments as segstore
 from moonlink_spark.table import vecindex
 
 
@@ -837,16 +839,16 @@ def test_pq_crash_between_segment_persist_and_meta_publish(
     assert served == 6  # ...and serving works off the live set only
 
 
-def test_pure_adc_plan_never_scans_the_corpus(spark, corpus, index_dir):
-    """Plan lock for the rerank=0 claim: after probe selection, pure-ADC
-    serving reads ONLY index bytes. Since r12 the query-side vector
-    fetch is a bounded driver collect BEFORE planning (query_ids is an
-    explicit request), so the rerank=0 physical plan contains NO
-    embeddings scan at all — only index-segment scans. The reranked
-    plan, by contrast, must contain at least one corpus scan WITHOUT an
-    In(vec_id, [queries]) pushed filter (the shortlist's embedding
-    fetch), proving the parser distinguishes the two shapes rather than
-    vacuously passing."""
+def test_pure_adc_plan_never_scans_the_corpus(
+    spark, corpus, index_dir, job_plans
+):
+    """Job-level lock for the rerank=0 claim: the index segments are read
+    on the driver, so the only Spark jobs are corpus fetches, each
+    pushing an In(vec_id, ...) filter. Pure-ADC serving runs ONE job,
+    the query-vector fetch In(vec_id, [queries]). The reranked query
+    runs one more, whose corpus scan pushes In(vec_id, shortlist): at
+    most queries x rerank ids, none a query id, holding every returned
+    neighbour."""
     import re
 
     vecindex.build_index(
@@ -854,33 +856,220 @@ def test_pure_adc_plan_never_scans_the_corpus(spark, corpus, index_dir):
         pq={"m": 4, "ksub": 16, "iters": 1},
     )
 
-    def scan_blocks(rerank):
-        df = vecindex.query_topk(
-            spark, corpus, index_dir, query_ids=[0, 1], topk=3, nprobe=2,
-            rerank=rerank,
-        )
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        # each "Scan parquet" node block (up to the blank line), split by
-        # source: the index's assign-*.parquet segments vs the corpus
-        emb, seg = [], []
-        for block in re.split(r"\n\n", plan):
-            if "Scan parquet" not in block:
-                continue
-            if "embeddings" in block:
-                m = re.search(r"PushedFilters: \[([^\]]*)\]", block)
-                emb.append(m.group(1) if m else "")
-            elif "assign-" in block or index_dir in block:
-                seg.append(block)
-        return emb, seg
+    def corpus_reads(rerank):
+        with job_plans() as plans:
+            rows = vecindex.query_topk(
+                spark, corpus, index_dir, query_ids=[0, 1], topk=3,
+                nprobe=2, rerank=rerank,
+            ).collect()
+            jobs, execs = plans()
+        assert len(execs) == len(jobs), (jobs, execs)  # one job each
+        reads = []
+        for plan in execs:
+            scans = re.findall(r"\(\d+\) Scan parquet.*?\n\n", plan, re.S)
+            assert len(scans) == 1 and "embeddings" in scans[0], plan
+            assert "assign-" not in plan and index_dir not in plan
+            pushed = re.search(r"PushedFilters: \[In\(vec_id, \[([^\]]*)\]\)", plan)
+            assert pushed, plan
+            reads.append({int(x) for x in pushed.group(1).split(",")})
+        return rows, reads
 
-    adc_emb, adc_seg = scan_blocks(0)
-    assert adc_seg, "parser found no index-segment scans — format rotted"
-    assert not adc_emb, adc_emb  # zero corpus scans in the pure-ADC plan
-    rer_emb, rer_seg = scan_blocks(12)
-    assert rer_seg, "parser found no index-segment scans — format rotted"
-    # the rerank path's shortlist fetch scans the corpus unbounded
-    assert any("In(vec_id" not in f for f in rer_emb), rer_emb
+    rows, reads = corpus_reads(0)
+    assert {r.query_id for r in rows} == {0, 1}
+    assert reads == [{0, 1}]
+    rows, reads = corpus_reads(12)
+    assert len(reads) == 2 and reads[0] == {0, 1}
+    shortlist = reads[1]
+    assert 3 <= len(shortlist) <= 2 * 12 and not shortlist & {0, 1}
+    assert {r.neighbor_id for r in rows} <= shortlist
+
+
+# --------------------------------------------------------------------- #
+# driver-served query_topk against the DuckDB oracles and brute force
+# --------------------------------------------------------------------- #
+
+PQ8 = {"m": 8, "ksub": 256, "iters": 2}
+
+
+def _lifecycle(spark, corpus, dest, pq=None):
+    """The oracles' lifecycle: build on the even half, update with the
+    odd half (two live segments)."""
+    vecindex.build_index(
+        spark, corpus.filter(F.col("vec_id") % 2 == 0), dest, k=8, iters=2, pq=pq
+    )
+    vecindex.update_index(spark, corpus.filter(F.col("vec_id") % 2 == 1), dest)
+    assert len(vecindex.read_meta(dest)["segments"]) == 2
+
+
+def test_driver_topk_matches_duckdb_oracles(spark, corpus, sf_dir, tmp_path):
+    """Differential: flat and PQ indexes, rerank 12 / default / 0 / more
+    than the candidate count, nprobe 2 and nprobe > k, on two live
+    segments and again after compaction, equal the DuckDB replays of
+    the whole lifecycle; float64 embeddings give the same rows."""
+    from moonlink_spark.operators.similarity import (
+        _ann_index_oracle,
+        _ann_index_pq_oracle,
+    )
+    from moonlink_spark.testing import compare, duckdb_conn
+
+    con = duckdb_conn(sf_dir)
+    flat, pq_dir = str(tmp_path / "flat"), str(tmp_path / "pq")
+    _lifecycle(spark, corpus, flat)
+    _lifecycle(spark, corpus, pq_dir, pq=PQ8)
+    f64 = corpus.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    cases = [
+        (flat, {"nprobe": 2}, _ann_index_oracle(nprobe=2)),
+        (flat, {"nprobe": 9}, _ann_index_oracle(nprobe=9)),
+        (pq_dir, {"nprobe": 2, "rerank": 12}, _ann_index_pq_oracle(rerank=12)),
+        (pq_dir, {"nprobe": 2}, _ann_index_pq_oracle(rerank=12)),  # default
+        (pq_dir, {"nprobe": 2, "rerank": 1000}, _ann_index_pq_oracle(rerank=1000)),
+        (pq_dir, {"nprobe": 9, "rerank": 12}, _ann_index_pq_oracle(nprobe=9)),
+        (pq_dir, {"nprobe": 2, "rerank": 0}, _ann_index_pq_oracle(pure_adc=True)),
+    ]
+    oracles = {sql: con.execute(sql).fetchall() for _, _, sql in cases}
+    try:
+        for compacted in (False, True):
+            if compacted:
+                assert vecindex.compact_index(spark, flat) == 2
+                assert vecindex.compact_index(spark, pq_dir) == 2
+            for dest in (flat, pq_dir):  # segments are sorted by cluster
+                for path in segstore.live_segment_paths(
+                    dest, vecindex.read_meta(dest), "assign"
+                ):
+                    cid = pq.read_table(path, columns=["cluster_id"])["cluster_id"]
+                    assert cid.to_pylist() == sorted(cid.to_pylist())
+            for dest, kw, sql in cases:
+                got = vecindex.query_topk(
+                    spark, corpus, dest, list(range(10)), topk=3, **kw
+                )
+                res = compare(got, con, sql)
+                assert res["value_match"], (dest, kw, compacted, res)
+                assert len(oracles[sql]) == 30
+                if "rerank" in kw and kw["rerank"] == 0:
+                    continue
+                wide = vecindex.query_topk(
+                    spark, f64, dest, list(range(10)), topk=3, **kw
+                ).collect()
+                assert sorted(map(tuple, wide)) == sorted(map(tuple, got.collect()))
+    finally:
+        con.close()
+
+
+def test_driver_topk_equals_brute_force_cosine(spark, corpus, tmp_path):
+    """A flat index probed on every cluster returns the exact cosine
+    top-k over the whole corpus (numpy brute force, query excluded)."""
+    import numpy as np
+
+    dest = str(tmp_path / "flat")
+    vecindex.build_index(spark, corpus, dest, k=4, iters=1)
+    rows = corpus.collect()
+    ids = np.asarray([r.vec_id for r in rows])
+    X = np.asarray([r.embedding for r in rows], dtype=np.float64)
+    unit = X / np.linalg.norm(X, axis=1, keepdims=True)
+    queries = [int(i) for i in ids[:6]]
+    got = vecindex.query_topk(
+        spark, corpus, dest, queries, topk=4, nprobe=4
+    ).collect()
+    for q in queries:
+        cos = unit @ unit[list(ids).index(q)]
+        cos[ids == q] = -np.inf
+        best = ids[np.argsort(-cos, kind="stable")[:4]]
+        mine = sorted((r for r in got if r.query_id == q), key=lambda r: r.rn)
+        assert [r.neighbor_id for r in mine] == list(best)
+        assert np.allclose(
+            [r.cosine for r in mine], cos[np.isin(ids, best)][np.argsort(-cos[np.isin(ids, best)])], atol=1e-6
+        )
+
+
+def test_pure_adc_ties_break_on_vec_id(spark, tmp_path):
+    """Identical vectors have identical codes, so their ADC distances tie:
+    rerank=0 ranks them by vec_id, exactly as a numpy ADC brute force
+    over the persisted codes and codebooks does."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    base = rng.normal(size=(12, 8))
+    rows = [(i, [float(x) for x in base[i // 4]]) for i in range(48)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    dest = str(tmp_path / "ties")
+    meta = vecindex.build_index(
+        spark, emb, dest, k=3, iters=1, pq={"m": 2, "ksub": 8, "iters": 1}
+    )
+    books = [np.asarray(cb, dtype=np.int64) for cb in meta["pq"]["codebooks"]]
+    codes = {
+        r.vec_id: list(r.codes)
+        for r in vecindex.read_assignments(spark, dest).collect()
+    }
+    qv = {
+        r.vec_id: np.floor(np.asarray(r.embedding, dtype=np.float64) * 1e6).astype(np.int64)
+        for r in emb.collect()
+    }
+    queries = [0, 5, 13, 47]
+    got = vecindex.query_topk(
+        spark, emb, dest, queries, topk=6, nprobe=3, rerank=0
+    ).collect()
+    for q in queries:
+        T = [((B - qv[q][s * 4:(s + 1) * 4]) ** 2).sum(axis=1) for s, B in enumerate(books)]
+        adc = {v: int(sum(T[s][c] for s, c in enumerate(cs))) for v, cs in codes.items() if v != q}
+        want = sorted(adc, key=lambda v: (adc[v], v))[:6]
+        mine = sorted((r for r in got if r.query_id == q), key=lambda r: r.rn)
+        assert [(r.neighbor_id, r.adc) for r in mine] == [(v, adc[v]) for v in want]
+        # at least the query's 3 copies tie, so the order is the tie-break
+        assert mine[0].adc == mine[2].adc
+        assert {v for v in range(q // 4 * 4, q // 4 * 4 + 4) if v != q} <= {
+            v for v in adc if adc[v] == mine[0].adc
+        }
+
+
+def test_empty_index_and_batch_cap(spark, corpus, tmp_path):
+    """An index whose centroid matrix is empty (the meta a degenerate
+    empty-corpus build leaves) probes nothing: queries return no rows,
+    with the usual schemas. A batch over MAX_QUERY_BATCH ids raises
+    before any Spark work and names the distributed operator."""
+    dest = str(tmp_path / "empty")
+    meta = vecindex.build_index(
+        spark, corpus, dest, k=4, iters=1, pq={"m": 4, "ksub": 16, "iters": 1}
+    )
+    vecindex._write_meta(dest, {**meta, "centroids": []})
+    out = vecindex.query_topk(spark, corpus, dest, [0, 1], topk=3, nprobe=2)
+    assert out.columns == ["query_id", "neighbor_id", "cosine", "rn"]
+    assert out.collect() == []
+    adc = vecindex.query_topk(spark, corpus, dest, [0, 1], nprobe=2, rerank=0)
+    assert adc.columns == ["query_id", "neighbor_id", "adc", "rn"]
+    assert adc.collect() == []
+    with pytest.raises(ValueError, match="probe_ivf_clusters"):
+        vecindex.query_topk(
+            spark, corpus, dest, list(range(vecindex.MAX_QUERY_BATCH + 1))
+        )
+
+
+def test_bounded_sorted_segments_and_meta_reresolve(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """Segments are written in row groups of at most
+    SEGMENT_ROW_GROUP_ROWS, sorted by cluster_id, so each row group
+    spans a narrow cluster range. A query that resolved a meta whose
+    segments a compaction then unlinked re-reads the meta once and
+    returns what a fresh query returns."""
+    monkeypatch.setattr(segstore, "SEGMENT_ROW_GROUP_ROWS", 64)
+    dest = str(tmp_path / "pq")
+    _lifecycle(spark, corpus, dest, pq={"m": 4, "ksub": 16, "iters": 1})
+    stale = vecindex.read_meta(dest)
+    for path in segstore.live_segment_paths(dest, stale, "assign"):
+        md = pq.ParquetFile(path).metadata
+        assert md.num_row_groups > 1
+        assert all(md.row_group(g).num_rows <= 64 for g in range(md.num_row_groups))
+    assert vecindex.compact_index(spark, dest) == 2  # unlinks stale's segments
+    want = vecindex.query_topk(spark, corpus, dest, list(range(6)), nprobe=2)
+    real, reads = vecindex.read_meta, []
+
+    def first_stale(d):
+        reads.append(d)
+        return stale if len(reads) == 1 else real(d)
+
+    monkeypatch.setattr(vecindex, "read_meta", first_stale)
+    got = vecindex.query_topk(spark, corpus, dest, list(range(6)), nprobe=2)
+    assert len(reads) == 2
+    assert got.collect() == want.collect()
