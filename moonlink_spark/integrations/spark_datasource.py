@@ -45,11 +45,8 @@ from pyspark.sql.datasource import (
 def _resolve_rel(rel: str, data_path: str) -> str:
     """Manifest/DV path -> readable absolute path. THE one resolution used
     by the batch plan and the CDC stream (a fix applied to one used to
-    leave the other inconsistent); scheme stripping matches
-    table.strip_file_scheme's two-variant handling."""
-    from moonlink_spark.table.table import strip_file_scheme
-
-    rel = strip_file_scheme(rel)
+    leave the other inconsistent). DV files store manifest paths, so DV
+    and data paths resolve alike."""
     return rel if os.path.isabs(rel) else os.path.join(data_path, rel)
 
 

@@ -241,6 +241,11 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # rewritten query enters the gate). Rotating OUT: hierarchical_time_rollup
 # and stratified_sample_per_group, two r9-cohort slots whose code this
 # change does not touch. Keepers unchanged.
+# DV-URI ROTATION: reads now anti-join DVs on Spark's raw
+# _metadata.file_path and the cached plane joins DVs on manifest paths,
+# so ingest_cached_data_scan and ingest_bulk_load_scan rotate IN;
+# doc_fingerprints and lang_id_heuristic, r9-cohort text operators that
+# run no DV code, rotate OUT. Keepers unchanged.
 PRIORITY_50 = [
     # ingest / table engine keepers (7) + flagship (1)
     "ingest_scan_at_lsn",
@@ -286,14 +291,15 @@ PRIORITY_50 = [
     "q19_discounted_revenue",
     "ann_recall_at_k",
     "dedup_ngram_jaccard",
-    # last driver-green r9, preferring no standing bench evidence (12)
+    # DV-URI anti-join rewrite (2)
+    "ingest_cached_data_scan",
+    "ingest_bulk_load_scan",
+    # last driver-green r9, preferring no standing bench evidence (10)
     "pivot_event_type_values",
     "union_all_with_dup_counts",
     "window_topk_parts_per_brand",
     "point_lookup_order",
     "q21_multi_line_order_suppliers",
-    "doc_fingerprints",
-    "lang_id_heuristic",
     "pii_pattern_scan",
     "token_counts",
     "multimodal_feature_extract",

@@ -86,36 +86,25 @@ def _cdc_events(
 
 
 def _mask_dv_rows(
-    df: DataFrame,
-    dvs: dict[str, list[int]],
-    files: set[str] | None = None,
+    df: DataFrame, files: list[str], dvs: dict[str, list[int]]
 ) -> DataFrame:
-    """Drop the rows an exported snapshot's deletion vectors flag: tag
-    each row with its normalized file path + row index from
-    ``_metadata``, broadcast the (file, position) pairs, left-anti join
-    (the engine's own DV application shape). ``files`` bounds the pairs
-    to a pruned file set. _metadata.file_path URIs vary ("file:/x" vs
-    "file:///x"), so the scheme is stripped to the plain absolute path
-    the DV metadata keys."""
-    pairs = [
-        (f, int(p))
-        for f, ps in dvs.items()
-        if files is None or f in files
-        for p in ps
-    ]
-    if not pairs:
-        return df
-    tagged = df.select(
-        "*",
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^file:(//)?", ""
-        ).alias("__fp"),
-        F.col("_metadata.row_index").alias("__ri"),
+    """Drop the rows an exported snapshot's deletion vectors flag: ``df``
+    reads ``files`` and ``dvs`` maps a file path to its deleted row
+    positions. The positions are keyed to Spark's file URIs by
+    ``table.file_uris`` and anti-joined as an Arrow-built broadcast
+    relation, the engine's own DV application; positions of files ``df``
+    does not read are dropped."""
+    import pyarrow as pa
+
+    from moonlink_spark.table.table import drop_positions, file_uris
+
+    dead = pa.table(
+        {
+            "file_path": pa.array([f for f in dvs for _ in dvs[f]], pa.string()),
+            "row_index": pa.array([p for ps in dvs.values() for p in ps], pa.int64()),
+        }
     )
-    dv_df = df.sparkSession.createDataFrame(pairs, "__fp STRING, __ri BIGINT")
-    return tagged.join(
-        F.broadcast(dv_df), ["__fp", "__ri"], "left_anti"
-    ).drop("__fp", "__ri")
+    return drop_positions(df, file_uris(df, {f: f for f in files}), dead)
 
 
 def _wire_producer_fn(host: str, port: int, schema: dict, partitioner=None):
@@ -831,7 +820,7 @@ def ingest_export_iceberg_dv_scan(spark: SparkSession, sf_dir: str) -> DataFrame
 
     files = read_iceberg_live_files(dest)
     dvs = read_iceberg_deletion_vectors(dest)
-    df = _mask_dv_rows(spark.read.parquet(*files), dvs)
+    df = _mask_dv_rows(spark.read.parquet(*files), files, dvs)
     return df.withColumn(
         "o_totalprice", F.col("o_totalprice").cast("double")
     )
@@ -923,7 +912,7 @@ def ingest_export_keyindex_lookup(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("o_orderkey").isin(keys)
     )
     dvs = read_iceberg_deletion_vectors(dest)
-    df = _mask_dv_rows(df, dvs, files=set(lookup["files"]))
+    df = _mask_dv_rows(df, lookup["files"], dvs)
     return df.withColumn(
         "o_totalprice", F.col("o_totalprice").cast("double")
     )

@@ -463,8 +463,6 @@ class MoonlinkRpcServer:
         pin and must eventually release it via unpin_version."""
         import pyarrow.parquet as pq
 
-        from moonlink_spark.table.table import strip_file_scheme
-
         t = self.backend.get_table(db, table)
         # resolve+pin must be atomic vs vacuum: vacuum reads
         # pinned_versions() under t._lock, so an unlocked gap between
@@ -476,8 +474,7 @@ class MoonlinkRpcServer:
             )
             t.pin_version(m.version)
         data_files = [t._resolve(f.path) for f in m.data_files]
-        index = {t._resolve(f.path): i for i, f in enumerate(m.data_files)}
-        rel_index = {f.path: i for i, f in enumerate(m.data_files)}
+        index = {f.path: i for i, f in enumerate(m.data_files)}
         pds: list[tuple[int, int]] = []
         for dv in m.delete_files:
             tab = pq.read_table(
@@ -487,8 +484,7 @@ class MoonlinkRpcServer:
                 tab.column("file_path").to_pylist(),
                 tab.column("row_index").to_pylist(),
             ):
-                rel = strip_file_scheme(fp)
-                i = rel_index.get(rel, index.get(rel))
+                i = index.get(fp)
                 if i is not None:
                     pds.append((i, ri))
         pds.sort()

@@ -265,32 +265,22 @@ class CachedDataPlane:
             attach_pos=need_pos,
         )
         if m.delete_files:
-            dv_schema = T.StructType(
-                [
-                    T.StructField("file_path", T.StringType()),
-                    T.StructField("row_index", T.LongType()),
-                ]
-            )
+            from moonlink_spark.table.table import DV_BROADCAST_MAX_ROWS, DV_SCHEMA
+
             dv = self._read_files(
                 spark,
                 [
                     (f"{self.store_root}/{f.path}", f.path)
                     for f in m.delete_files
                 ],
-                dv_schema,
+                T.StructType.fromDDL(DV_SCHEMA),
                 attach_pos=False,
             ).select(
-                # DVs store file_path in the table's normalized form,
-                # which keeps a "file:" scheme residue when Spark reported
-                # the single-slash URI variant; our __fp is the bare
-                # relative path, so strip the scheme before joining
-                F.regexp_replace(
-                    F.col("file_path"), "^file:(//)?", ""
-                ).alias("__fp"),
+                # DVs store manifest paths, the same ``rel`` each data
+                # file's rows carry as __fp
+                F.col("file_path").alias("__fp"),
                 F.col("row_index").alias("__ri"),
             )
-            from moonlink_spark.table.table import DV_BROADCAST_MAX_ROWS
-
             if m.deleted_rows <= DV_BROADCAST_MAX_ROWS:
                 dv = F.broadcast(dv)
             df = df.join(dv, ["__fp", "__ri"], "left_anti").drop(

@@ -49,7 +49,7 @@ import pyarrow.parquet as pq
 from moonlink_spark.schema import field_schema_to_struct
 from moonlink_spark.table.manifest import FileEntry, Manifest
 from moonlink_spark.table.stats import _json_safe
-from moonlink_spark.table.table import MoonlinkTable, strip_file_scheme
+from moonlink_spark.table.table import MoonlinkTable
 
 LOG_DIR = "_delta_log"
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -506,7 +506,7 @@ def _export_delta_version(
                 t_dv.column("file_path").to_pylist(),
                 t_dv.column("row_index").to_pylist(),
             ):
-                name = rel_to_name.get(strip_file_scheme(fp))
+                name = rel_to_name.get(fp)
                 if name is not None:
                     dv_positions.setdefault(name, []).append(ri)
 

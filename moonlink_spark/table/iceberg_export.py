@@ -60,7 +60,7 @@ from moonlink_spark.table.puffin import (
 )
 from moonlink_spark.table.manifest import FileEntry, Manifest
 from moonlink_spark.observability import METRICS
-from moonlink_spark.table.table import MoonlinkTable, strip_file_scheme
+from moonlink_spark.table.table import MoonlinkTable
 
 # --------------------------------------------------------------------------- #
 # Avro binary encoding (writer subset: the types manifest schemas use)
@@ -691,8 +691,7 @@ def _export_iceberg_impl(
                 t_dv.column("file_path").to_pylist(),
                 t_dv.column("row_index").to_pylist(),
             ):
-                rel = strip_file_scheme(fp)
-                name = rel_to_name.get(rel)
+                name = rel_to_name.get(fp)
                 if name is None:
                     continue  # DV for a file compacted out of the live set
                 dv_positions.setdefault(

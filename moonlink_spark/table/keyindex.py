@@ -88,29 +88,27 @@ def _key_hash(key_cols: list[str]):
     return F.xxhash64(*[F.col(c) for c in key_cols]).alias("h")
 
 
-def _rel_fp(table: "MoonlinkTable"):
-    """Normalize ``_metadata.file_path`` to a table-root-relative path that
-    string-equals ``FileEntry.path`` in the manifest — the table's shared
-    anchored normalization (table.rel_fp_expr), so index entries for
-    external bulk-loaded files whose absolute path merely CONTAINS the
-    data root stay intact."""
-    from moonlink_spark.table.table import rel_fp_expr
-
-    return rel_fp_expr(table.data_path)
-
-
 def _index_rows(
     table: "MoonlinkTable", files: list[FileEntry], key_cols: list[str]
 ) -> DataFrame:
-    """``(h, __fp, __ri)`` for every row of the data ``files``."""
+    """``(h, __fp, __ri)`` for every row of the data ``files``: ``__fp``
+    is the manifest path, labelled from the read's URI relation
+    (``table.file_uris``) on ``_metadata.file_path``."""
+    from moonlink_spark.table.table import file_uris
+
+    paths = {table._resolve(f.path): f.path for f in files}
+    df = table.spark.read.schema(table.schema).parquet(*paths)
+    fps = local_frame(
+        table.spark, file_uris(df, paths), "__uri string, __fp string"
+    )
     return (
-        table.spark.read.schema(table.schema)
-        .parquet(*[table._resolve(f.path) for f in files])
-        .select(
+        df.select(
             _key_hash(key_cols),
-            _rel_fp(table).alias("__fp"),
+            F.col("_metadata.file_path").alias("__uri"),
             F.col("_metadata.row_index").alias("__ri"),
         )
+        .join(F.broadcast(fps), "__uri")
+        .select("h", "__fp", "__ri")
     )
 
 
@@ -333,8 +331,6 @@ def resolve_positions(
     if not enabled(m):
         return None
     import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from moonlink_spark.session import arrow_rows
@@ -354,13 +350,7 @@ def resolve_positions(
         if fp in covered:
             positions.setdefault(fp, set()).add(int(ri))
     if positions and m.delete_files:
-        dvs = pq.read_table(
-            [table._resolve(f.path) for f in m.delete_files],
-            schema=pa.schema(
-                [("file_path", pa.string()), ("row_index", pa.int64())]
-            ),
-            filters=pc.field("file_path").isin(list(positions)),
-        )
+        dvs = table._dv_positions(m, positions)
         for fp, ri in zip(*(c.to_pylist() for c in dvs.columns)):
             positions[fp].discard(ri)
     probe_keys = arrow_rows([r[1:] for r in probes], key_schema(m, key_cols))

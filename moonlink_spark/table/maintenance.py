@@ -112,7 +112,7 @@ def optimize(
         # force=True always rewrites.
         return base.version
 
-    live = table._read_manifest(base, with_pos=False)
+    live, _ = table._read_manifest(base)
     with _maintenance_write(table):
         if table.cluster_by:
             # clustered tables re-sort into n_out range files (compaction

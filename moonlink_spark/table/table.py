@@ -24,9 +24,14 @@ Spark-first re-expression of the reference's core table
 
 Scale notes (100 TB / 1000 executors):
 - Scans are plain parquet DataFrames: Catalyst pushes projection + predicates
-  into the scan; the DV anti-join broadcasts the (small) delete set and never
-  shuffles the fact side. Heavily-deleted tables should run ``optimize()``,
-  after which scans have no anti-join at all.
+  into the scan. The DV anti-join keys on the raw file URI Spark reports
+  (``_metadata.file_path``) and ``_metadata.row_index``. The DV side maps
+  each manifest path to its URIs once per file (:func:`file_uris`), so no
+  data row carries a path expression; it is broadcast (up to
+  ``DV_BROADCAST_MAX_ROWS``) and never shuffles the fact side. Small DV
+  sets are read on the driver, larger ones by Spark. Heavily-deleted
+  tables should run ``optimize()``, after which scans have no anti-join
+  at all.
 - Delete targeting broadcasts the delete-key set (bounded by the micro-batch
   size, i.e. small) against the live view — a map-side semi-join, no shuffle
   of the table.
@@ -74,6 +79,10 @@ DELETE_DIR = "deletes"
 DEFAULT_MEM_SLICE_ROWS = 32 * 4096
 # Broadcast the DV side of the scan anti-join below this many deleted rows.
 DV_BROADCAST_MAX_ROWS = 4_000_000
+# Up to this many deleted rows the driver reads the DV positions (one job
+# fewer than Spark reading them); past ~10k rows Spark's read is faster
+# (100k of 2M rows deleted: 1.6-2.1 s against 2.9-3.0 s per scan).
+DV_DRIVER_MAX_ROWS = 10_000
 # Columns of a deletion-vector parquet file (see ``_write_dv``).
 DV_SCHEMA = "file_path string, row_index long"
 
@@ -84,68 +93,62 @@ def _parquet_num_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def strip_file_scheme(fp: str) -> str:
-    """Python-side twin of rel_fp_expr's scheme normalization: Spark
-    reports local URIs as ``file:/x`` OR ``file:///x`` depending on
-    path/Hadoop version; both collapse to the plain absolute path. Every
-    DV reader (iceberg/delta export, RPC scan, cached plane) must strip
-    the SAME two variants, or a ``file://``-prefixed path misses its
-    rel-path lookup and the deleted rows silently resurrect."""
-    if fp.startswith("file://"):
-        return fp[7:]
-    if fp.startswith("file:"):
-        return fp[5:]
-    return fp
+def file_uris(df: DataFrame, paths: dict[str, str]) -> list[tuple[str, str]]:
+    """The one owner of data-file path spelling: ``(uri, manifest path)``
+    for each file ``df`` reads, ``paths`` mapping the plain path handed to
+    the reader to the manifest path. The URIs are Spark's own
+    (``inputFiles()``, percent-encoded like ``_metadata.file_path``), a
+    ``file`` URI in both authority forms: ``inputFiles()`` says
+    ``file:///x`` where ``_metadata.file_path`` says ``file:/x``. A URI
+    that does not decode to a key of ``paths`` raises ``KeyError``."""
+    from urllib.parse import unquote, urlsplit
+
+    out = []
+    for uri in df.inputFiles():
+        u = urlsplit(uri)
+        if u.scheme == "file":
+            fp = paths[unquote(u.path)]
+            out += [("file:" + u.path, fp), ("file://" + u.path, fp)]
+        else:
+            out.append((uri, paths[unquote(uri)]))
+    return out
 
 
-def rel_fp_expr(data_path: str):
-    """Normalize ``_metadata.file_path`` to a data-root-relative path that
-    string-equals ``FileEntry.path`` in the manifest (external bulk-loaded
-    paths outside the root stay absolute — they never move with the
-    table). Spark reports local URIs as ``file:/x`` OR ``file:///x``
-    depending on path/Hadoop version; both collapse to the plain absolute
-    path. ANCHORED prefix strips, not substring replace: an external file
-    whose path merely CONTAINS the data root as an interior substring must
-    stay intact, or two distinct files could normalize to the same ``__fp``
-    and one's DV would kill the other's rows. startswith + substr stay
-    literal (no regexp) — this runs per row on every positioned scan.
-
-    The COMMON case (an internally written file under the data root) is
-    matched with one fused scheme+root prefix per URI variant — one
-    startswith probe and one substr allocation per row instead of the
-    two-stage scheme-strip + root-strip chain, which measured ~1.1us/row
-    (0.75s of a 660k-row single-task DV scan, r13). The two-stage chain
-    remains as the ``otherwise`` arm, so external/absolute paths and any
-    unexpected URI shape normalize exactly as before."""
-    raw_fp = F.col("_metadata.file_path")
-    root = data_path + "/"
-    # 2147483647 = unbounded substr tail (Spark clamps to string length):
-    # skipping the F.length() call saves one pass per row
-    big = F.lit(2147483647)
-    no_scheme = (
-        F.when(
-            raw_fp.startswith("file://"),
-            raw_fp.substr(F.lit(8), F.length(raw_fp)),
-        )
-        .when(
-            raw_fp.startswith("file:"),
-            raw_fp.substr(F.lit(6), F.length(raw_fp)),
-        )
-        .otherwise(raw_fp)
+def drop_positions(
+    df: DataFrame,
+    uris: list[tuple[str, str]],
+    dead=None,
+    broadcast: bool = True,
+    keep_pos: bool = False,
+) -> DataFrame:
+    """``df``, a parquet read spelled by ``uris`` (:func:`file_uris`),
+    without the rows at the ``dead`` positions: ``(file_path, row_index)``
+    keyed by manifest path, an Arrow table read on the driver or a Spark
+    DataFrame. The positions are mapped to Spark's URIs (an Arrow-built
+    local relation, or a join with a broadcast ``(__uri, __fp)`` one) and
+    anti-joined on ``(_metadata.file_path, _metadata.row_index)``, which
+    ``keep_pos`` keeps as ``__uri`` and ``__ri``."""
+    df = df.select(
+        "*",
+        F.col("_metadata.file_path").alias("__uri"),
+        F.col("_metadata.row_index").alias("__ri"),
     )
-    slow = F.when(
-        no_scheme.startswith(root),
-        no_scheme.substr(F.lit(len(root) + 1), F.length(no_scheme)),
-    ).otherwise(no_scheme)
-    expr = slow
-    # most-likely variant last so it becomes the FIRST when-branch probed
-    for scheme in ("", "file://", "file:"):
-        prefix = scheme + root
-        expr = F.when(
-            raw_fp.startswith(prefix),
-            raw_fp.substr(F.lit(len(prefix) + 1), big),
-        ).otherwise(expr)
-    return expr
+    if isinstance(dead, DataFrame):
+        spell = local_frame(df.sparkSession, uris, "__uri string, __fp string")
+        dv = dead.join(F.broadcast(spell), dead["file_path"] == spell["__fp"])
+        dv = dv.select("__uri", F.col("row_index").alias("__ri"))
+    elif dead is not None:
+        import pyarrow as pa
+
+        spell = pa.table(
+            {"file_path": [fp for _, fp in uris], "__uri": [u for u, _ in uris]}
+        )
+        pos = dead.join(spell, "file_path").select(["__uri", "row_index"])
+        dv = df.sparkSession.createDataFrame(pos.rename_columns(["__uri", "__ri"]))
+    if dead is not None:
+        dv = F.broadcast(dv) if broadcast else dv
+        df = df.join(dv, ["__uri", "__ri"], "left_anti")
+    return df if keep_pos else df.drop("__uri", "__ri")
 
 
 class MoonlinkTable:
@@ -826,13 +829,12 @@ class MoonlinkTable:
                     .groupBy(*data_cols)
                     .agg(F.count(F.lit(1)).alias("__n"))
                 )
-                live = self._live_view(base, new_files, new_dvs)
-                new_dvs.extend(self._match_fullrow_dv(live, data_cols, del_df))
+                live, fps = self._live_view(base, new_files, new_dvs)
+                new_dvs.extend(self._match_fullrow_dv(live, fps, data_cols, del_df))
             elif kind == "delete_where":
                 flush_rows()
-                live = self._live_view(base, new_files, new_dvs)
-                matched = live.filter(op[1]).select("__fp", "__ri")
-                new_dvs.extend(self._write_dv(matched))
+                live, fps = self._live_view(base, new_files, new_dvs)
+                new_dvs.extend(self._write_dv(live.filter(op[1]).join(fps, "__uri")))
             else:  # pragma: no cover
                 raise TableConfigError(f"unknown pending op {kind}")
         flush_rows()
@@ -852,12 +854,6 @@ class MoonlinkTable:
     ) -> list[FileEntry]:
         ident = IdentityProp.from_json(base.identity)
         schema = field_schema_to_struct(base.schema_fields)
-        prune = (
-            key_batch_predicate(list(ident.columns), rows)
-            if ident.mode in ("single", "keys")
-            else None
-        )
-        live = self._live_view(base, new_files, new_dvs, prune=prune)
 
         if ident.mode in ("single", "keys"):
             from moonlink_spark.table import keyindex
@@ -867,11 +863,10 @@ class MoonlinkTable:
             keys_df = local_frame(
                 self.spark, list(keys), keyindex.key_schema(base, key_cols)
             )
+            # one live view: the index's file subset, else a stats prune
             subset = self._index_file_subset(base, new_files, keys_df, key_cols)
-            if subset is not None:
-                live = self._live_view(
-                    base, new_files, new_dvs, files_subset=subset
-                )
+            prune = key_batch_predicate(key_cols, rows) if subset is None else None
+            live, fps = self._live_view(base, new_files, new_dvs, prune, subset)
             if not if_exists:
                 # strict delete must match every key (reference errors on
                 # missing rows for non-if-exists deletes)
@@ -880,14 +875,13 @@ class MoonlinkTable:
                 ).count()
                 if missing:
                     raise IdentityError(f"{missing} delete keys matched no row")
-            matched = live.join(F.broadcast(keys_df), key_cols, "left_semi").select(
-                "__fp", "__ri"
-            )
-            return self._write_dv(matched)
+            matched = live.join(F.broadcast(keys_df), key_cols, "left_semi")
+            return self._write_dv(matched.join(fps, "__uri"))
 
         # full_row: each delete occurrence kills exactly ONE matching live
         # row, first by (file, position) — parity mem_index.rs FullRow
         # multimap find_record semantics.
+        live, fps = self._live_view(base, new_files, new_dvs)
         data_cols = schema.fieldNames()
         del_df = (
             self.spark.createDataFrame(
@@ -898,6 +892,7 @@ class MoonlinkTable:
         )
         return self._match_fullrow_dv(
             live,
+            fps,
             data_cols,
             del_df,
             require_all=0 if if_exists else len(rows),
@@ -906,13 +901,15 @@ class MoonlinkTable:
     def _match_fullrow_dv(
         self,
         live: DataFrame,
+        fps: DataFrame,
         data_cols: list[str],
         del_df: DataFrame,
         require_all: int = 0,
     ) -> list[FileEntry]:
-        """Positional DV for full_row deletes: ``del_df`` carries the data
-        columns plus ``__n`` (occurrences to kill per distinct row); a
-        window by (file, position) picks the first __n matches.
+        """Positional DV for full_row deletes over a :meth:`_live_view`
+        ``(live, fps)``: ``del_df`` carries the data columns plus ``__n``
+        (occurrences to kill per distinct row); a window by (manifest
+        path, position) picks the first __n matches.
         ``require_all`` > 0 enforces the strict-delete contract: fewer
         matches than requested occurrences raises IdentityError (the
         reference errors on missing rows for non-if-exists deletes), same
@@ -921,10 +918,11 @@ class MoonlinkTable:
         for c in data_cols:
             e = live[c].eqNullSafe(del_df[c])
             cond = e if cond is None else (cond & e)
-        w = Window.partitionBy(*[live[c] for c in data_cols]).orderBy("__fp", "__ri")
+        w = Window.partitionBy(*data_cols).orderBy("__fp", "__ri")
         matched = (
             live.join(F.broadcast(del_df), cond, "inner")
-            .select(*[live[c] for c in data_cols], "__fp", "__ri", "__n")
+            .select(*[live[c] for c in data_cols], "__uri", "__ri", "__n")
+            .join(fps, "__uri")
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= F.col("__n"))
             .select("__fp", "__ri")
@@ -979,9 +977,9 @@ class MoonlinkTable:
         else:
             keys_df = keys_df.dropDuplicates()
         subset = self._index_file_subset(base, new_files, keys_df, key_cols)
-        live = self._live_view(base, new_files, new_dvs, files_subset=subset)
-        matched = live.join(keys_df, key_cols, "left_semi").select("__fp", "__ri")
-        return self._write_dv(matched)
+        live, fps = self._live_view(base, new_files, new_dvs, files_subset=subset)
+        matched = live.join(keys_df, key_cols, "left_semi")
+        return self._write_dv(matched.join(fps, "__uri"))
 
     # ------------------------------------------------------------------ #
     # scan
@@ -999,7 +997,7 @@ class MoonlinkTable:
         files whose footer min/max cannot match (stats.py) — the point-lookup
         fast path replacing the reference's hash index."""
         m = self._resolve_manifest(lsn, version)
-        return self._read_manifest(m, with_pos=False, prune=prune)
+        return self._read_manifest(m, prune)[0]
 
     def scan_keys(self, keys_df: DataFrame, lsn: int | None = None) -> DataFrame:
         """Batch point lookup by identity key (parity: read-path index
@@ -1049,9 +1047,7 @@ class MoonlinkTable:
             matching, uncovered = keyindex.candidate_files(self, m, keys_df, key_cols)
             keep = set(matching) | {f.path for f in uncovered}
             data_files = [f for f in data_files if f.path in keep]
-        df = self._read_manifest(
-            dataclasses.replace(m, data_files=data_files), with_pos=False
-        )
+        df, _ = self._read_manifest(dataclasses.replace(m, data_files=data_files))
         return df.join(F.broadcast(keys_df), key_cols, "left_semi")
 
     def scan_blocking(self, lsn: int, timeout_s: float = 30.0) -> DataFrame:
@@ -1146,63 +1142,56 @@ class MoonlinkTable:
             return None  # literal/column type mismatch: fall back
 
     def _read_manifest(
-        self, m: Manifest, with_pos: bool, prune: PrunePredicate | None = None
-    ) -> DataFrame:
+        self,
+        m: Manifest,
+        prune: PrunePredicate | None = None,
+        keep_pos: bool = False,
+    ) -> tuple[DataFrame, list[tuple[str, str]]]:
+        """-> (the live rows of the files of ``m`` that ``prune`` cannot
+        rule out, the read's :func:`file_uris`). The DVs of ``m`` are
+        anti-joined on Spark's ``(_metadata.file_path, row_index)``, kept
+        as ``__uri``/``__ri`` with ``keep_pos``: read on the driver up to
+        ``DV_DRIVER_MAX_ROWS`` deleted rows, by Spark past it."""
         schema = field_schema_to_struct(m.schema_fields)
-        data_files = m.data_files
+        files = m.data_files
         if prune is not None:
-            data_files = [f for f in data_files if prune.file_may_match(f.stats)]
-        if not data_files:
-            m = Manifest(
-                version=m.version,
-                lsn=m.lsn,
-                schema_fields=m.schema_fields,
-                identity=m.identity,
-                data_files=[],
-                delete_files=[],
-            )
-        elif data_files is not m.data_files:
-            m = Manifest(
-                version=m.version,
-                lsn=m.lsn,
-                schema_fields=m.schema_fields,
-                identity=m.identity,
-                data_files=data_files,
-                delete_files=m.delete_files,
-            )
-        if not m.data_files:
+            files = [f for f in files if prune.file_may_match(f.stats)]
+        if not files:
             df = local_frame(self.spark, [], schema)
-            if with_pos:
-                df = df.withColumn("__fp", F.lit(None).cast("string")).withColumn(
+            if keep_pos:
+                df = df.withColumn("__uri", F.lit(None).cast("string")).withColumn(
                     "__ri", F.lit(None).cast("long")
                 )
-            return df
-        paths = [self._resolve(f.path) for f in m.data_files]
+            return df, []
+        paths = {self._resolve(f.path): f.path for f in files}
         df = self.spark.read.schema(schema).parquet(*paths)
-        need_pos = with_pos or bool(m.delete_files)
-        if need_pos:
-            # __fp is stored in DV files: normalize the absolute
-            # ``_metadata.file_path`` URI to a table-root-relative path so
-            # a relocated table directory still anti-joins its old DVs
-            # (see rel_fp_expr for the anchoring rules)
-            rel_fp = rel_fp_expr(self.data_path)
-            df = df.select(
-                "*",
-                rel_fp.alias("__fp"),
-                F.col("_metadata.row_index").alias("__ri"),
-            )
-        if m.delete_files:
-            dv_paths = [self._resolve(f.path) for f in m.delete_files]
+        dead = None
+        if m.delete_files and m.deleted_rows <= DV_DRIVER_MAX_ROWS:
+            dead = self._dv_positions(m, paths.values())
+            dead = dead if dead.num_rows else None
+        elif m.delete_files:
             # explicit schema: inferring it reads a DV footer in a job
-            dv = self.spark.read.schema(DV_SCHEMA).parquet(*dv_paths).select(
-                F.col("file_path").alias("__fp"), F.col("row_index").alias("__ri")
+            dead = self.spark.read.schema(DV_SCHEMA).parquet(
+                *[self._resolve(f.path) for f in m.delete_files]
             )
-            if m.deleted_rows <= DV_BROADCAST_MAX_ROWS:
-                dv = F.broadcast(dv)
-            df = df.join(dv, ["__fp", "__ri"], "left_anti")
-        if not with_pos and need_pos:
-            df = df.drop("__fp", "__ri")
-        return df
+        if dead is None and not keep_pos:
+            return df, []
+        uris = file_uris(df, paths)
+        broadcast = m.deleted_rows <= DV_BROADCAST_MAX_ROWS
+        return drop_positions(df, uris, dead, broadcast, keep_pos), uris
+
+    def _dv_positions(self, m: Manifest, fps):
+        """The ``(file_path, row_index)`` rows of ``m``'s DVs for the
+        manifest paths ``fps``, read with pyarrow on the driver."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        return pq.read_table(
+            [self._resolve(f.path) for f in m.delete_files],
+            schema=pa.schema([("file_path", pa.string()), ("row_index", pa.int64())]),
+            filters=pc.field("file_path").isin(list(fps)),
+        )
 
     def _live_view(
         self,
@@ -1211,7 +1200,11 @@ class MoonlinkTable:
         new_dvs: list[FileEntry],
         prune: PrunePredicate | None = None,
         files_subset: set[str] | None = None,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, DataFrame]:
+        """Delete targeting's read of ``base`` plus this commit's files
+        and DVs -> ``(live, fps)``: the live rows with ``__uri``/``__ri``
+        and a broadcast ``(__uri, __fp)`` relation, which labels matched
+        rows with their manifest path for :meth:`_write_dv`."""
         data_files = base.data_files + new_files
         if files_subset is not None:
             data_files = [f for f in data_files if f.path in files_subset]
@@ -1223,7 +1216,9 @@ class MoonlinkTable:
             data_files=data_files,
             delete_files=base.delete_files + new_dvs,
         )
-        return self._read_manifest(m, with_pos=True, prune=prune)
+        live, uris = self._read_manifest(m, prune, keep_pos=True)
+        fps = local_frame(self.spark, uris, "__uri string, __fp string")
+        return live, F.broadcast(fps)
 
     # ------------------------------------------------------------------ #
     # file writers

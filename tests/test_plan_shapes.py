@@ -302,3 +302,53 @@ def test_point_lookup_and_ann_plans_build_no_rdd_relations(
         assert {r.query_id for r in top.collect()} == {0, 1}
         n_jobs = jobs()
     assert n_jobs <= 1, n_jobs
+
+
+@pytest.mark.parametrize("dv_read", ["driver", "spark"])
+def test_dv_anti_join_keys_on_spark_file_uri(spark, tmp_path, monkeypatch, dv_read):
+    """Deletion vectors are applied on Spark's own coordinates: the
+    anti-join of a scan with one DV, of a time-travel read and of a
+    delete-targeting live view keys on ``_metadata.file_path`` and
+    ``_metadata.row_index``, and no per-row path rewrite (``StartsWith``
+    or ``Substring`` over the path) is left in the optimized plan. The
+    URI spellings come from a local relation: the DV positions
+    themselves when read on the driver, the ``(__uri, __fp)`` mapping
+    of the DV files Spark reads otherwise."""
+    import re
+
+    from moonlink_spark.table import table as table_mod
+    from moonlink_spark.table.identity import IdentityProp
+    from moonlink_spark.table.table import MoonlinkTable
+
+    if dv_read == "spark":
+        monkeypatch.setattr(table_mod, "DV_DRIVER_MAX_ROWS", 0)
+
+    t = MoonlinkTable.create(
+        spark,
+        str(tmp_path / "t"),
+        [
+            {"name": "id", "data_type": "int64", "nullable": False},
+            {"name": "v", "data_type": "string"},
+        ],
+        IdentityProp.single("id"),
+    )
+    for c in range(2):
+        t.append_rows([{"id": i, "v": f"v{i}"} for i in range(c * 50, c * 50 + 50)])
+        t.commit(lsn=c + 1)
+    t.delete_rows([{"id": 7}])
+    t.commit(lsn=3)
+    live, _ = t._live_view(t.manifest, [], [])
+    for df in (t.scan(), t.scan(lsn=3), live):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "startswith" not in plan.lower(), plan
+        assert "substr" not in plan.lower(), plan
+        join = re.search(
+            r"Join LeftAnti, \(\((__uri#\d+) = __uri#\d+\) AND "
+            r"\((__ri#\d+L?) = __ri#\d+L?\)\)",
+            plan,
+        )
+        assert join, plan
+        uri, ri = join.groups()
+        assert re.search(rf"_metadata#\d+\.file_path AS {uri}\b", plan), plan
+        assert re.search(rf"_metadata#\d+\.row_index AS {ri}\b", plan), plan
+        assert "LocalRelation [__uri" in plan, plan
