@@ -24,8 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from moonlink_spark.operators import load, register
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.identity import IdentityProp
-from moonlink_spark.table.table import MoonlinkTable
+from moonlink_spark.table.table import MoonlinkTable, drop_positions, file_uris
 
 ORDERS_FIELDS = [
     {"name": "o_orderkey", "data_type": "int64", "nullable": False},
@@ -90,21 +91,15 @@ def _mask_dv_rows(
 ) -> DataFrame:
     """Drop the rows an exported snapshot's deletion vectors flag: ``df``
     reads ``files`` and ``dvs`` maps a file path to its deleted row
-    positions. The positions are keyed to Spark's file URIs by
-    ``table.file_uris`` and anti-joined as an Arrow-built broadcast
-    relation, the engine's own DV application; positions of files ``df``
-    does not read are dropped."""
-    import pyarrow as pa
-
-    from moonlink_spark.table.table import drop_positions, file_uris
-
-    dead = pa.table(
-        {
-            "file_path": pa.array([f for f in dvs for _ in dvs[f]], pa.string()),
-            "row_index": pa.array([p for ps in dvs.values() for p in ps], pa.int64()),
-        }
-    )
-    return drop_positions(df, file_uris(df, {f: f for f in files}), dead)
+    positions. The positions of the files ``df`` reads are keyed to
+    Spark's file URIs by ``table.file_uris`` and anti-joined as a
+    broadcast local relation, the engine's own DV application."""
+    to_uri = {fp: uri for uri, fp in file_uris(df, {f: f for f in files}).items()}
+    dead = [(to_uri[f], p) for f, ps in dvs.items() if f in to_uri for p in ps]
+    if not dead:
+        return df
+    dv = local_frame(df.sparkSession, dead, "__uri string, __ri long")
+    return drop_positions(df, dv)
 
 
 def _wire_producer_fn(host: str, port: int, schema: dict, partitioner=None):

@@ -92,23 +92,16 @@ def _index_rows(
     table: "MoonlinkTable", files: list[FileEntry], key_cols: list[str]
 ) -> DataFrame:
     """``(h, __fp, __ri)`` for every row of the data ``files``: ``__fp``
-    is the manifest path, labelled from the read's URI relation
-    (``table.file_uris``) on ``_metadata.file_path``."""
-    from moonlink_spark.table.table import file_uris
+    is the manifest path, looked up from ``_metadata.file_path`` in the
+    read's :func:`~moonlink_spark.table.table.file_uris`."""
+    from moonlink_spark.table.table import file_uris, path_lookup
 
     paths = {table._resolve(f.path): f.path for f in files}
     df = table.spark.read.schema(table.schema).parquet(*paths)
-    fps = local_frame(
-        table.spark, file_uris(df, paths), "__uri string, __fp string"
-    )
-    return (
-        df.select(
-            _key_hash(key_cols),
-            F.col("_metadata.file_path").alias("__uri"),
-            F.col("_metadata.row_index").alias("__ri"),
-        )
-        .join(F.broadcast(fps), "__uri")
-        .select("h", "__fp", "__ri")
+    return df.select(
+        _key_hash(key_cols),
+        path_lookup(file_uris(df, paths), F.col("_metadata.file_path")).alias("__fp"),
+        F.col("_metadata.row_index").alias("__ri"),
     )
 
 

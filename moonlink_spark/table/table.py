@@ -26,12 +26,11 @@ Scale notes (100 TB / 1000 executors):
 - Scans are plain parquet DataFrames: Catalyst pushes projection + predicates
   into the scan. The DV anti-join keys on the raw file URI Spark reports
   (``_metadata.file_path``) and ``_metadata.row_index``. The DV side maps
-  each manifest path to its URIs once per file (:func:`file_uris`), so no
-  data row carries a path expression; it is broadcast (up to
-  ``DV_BROADCAST_MAX_ROWS``) and never shuffles the fact side. Small DV
-  sets are read on the driver, larger ones by Spark. Heavily-deleted
-  tables should run ``optimize()``, after which scans have no anti-join
-  at all.
+  each manifest path to its URI (:func:`file_uris`, computed per file)
+  through a literal map, so no data row carries a path expression; it is
+  broadcast (up to ``DV_BROADCAST_MAX_ROWS``) and never shuffles the fact
+  side. Heavily-deleted tables should run ``optimize()``, after which
+  scans have no anti-join at all.
 - Delete targeting broadcasts the delete-key set (bounded by the micro-batch
   size, i.e. small) against the live view — a map-side semi-join, no shuffle
   of the table.
@@ -42,13 +41,16 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import dataclasses
+import json
+import math
 import os
 import shutil
 import threading
 import uuid
+import zlib
 from typing import Any, Iterable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -79,10 +81,6 @@ DELETE_DIR = "deletes"
 DEFAULT_MEM_SLICE_ROWS = 32 * 4096
 # Broadcast the DV side of the scan anti-join below this many deleted rows.
 DV_BROADCAST_MAX_ROWS = 4_000_000
-# Up to this many deleted rows the driver reads the DV positions (one job
-# fewer than Spark reading them); past ~10k rows Spark's read is faster
-# (100k of 2M rows deleted: 1.6-2.1 s against 2.9-3.0 s per scan).
-DV_DRIVER_MAX_ROWS = 10_000
 # Columns of a deletion-vector parquet file (see ``_write_dv``).
 DV_SCHEMA = "file_path string, row_index long"
 
@@ -93,59 +91,58 @@ def _parquet_num_rows(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def file_uris(df: DataFrame, paths: dict[str, str]) -> list[tuple[str, str]]:
-    """The one owner of data-file path spelling: ``(uri, manifest path)``
+def file_uris(df: DataFrame, paths: dict[str, str]) -> dict[str, str]:
+    """The one owner of data-file path spelling: ``{uri: manifest path}``
     for each file ``df`` reads, ``paths`` mapping the plain path handed to
-    the reader to the manifest path. The URIs are Spark's own
-    (``inputFiles()``, percent-encoded like ``_metadata.file_path``), a
-    ``file`` URI in both authority forms: ``inputFiles()`` says
-    ``file:///x`` where ``_metadata.file_path`` says ``file:/x``. A URI
-    that does not decode to a key of ``paths`` raises ``KeyError``."""
+    the reader to the manifest path. The URIs are Spark's own, from
+    ``inputFiles()`` (percent-encoded like ``_metadata.file_path``), with
+    a ``file`` URI spelled as ``_metadata.file_path`` spells it
+    (``file:/x``, where ``inputFiles()`` says ``file:///x``). A URI that
+    does not decode to a key of ``paths`` raises ``KeyError``."""
     from urllib.parse import unquote, urlsplit
 
-    out = []
+    out = {}
     for uri in df.inputFiles():
         u = urlsplit(uri)
         if u.scheme == "file":
-            fp = paths[unquote(u.path)]
-            out += [("file:" + u.path, fp), ("file://" + u.path, fp)]
+            out["file:" + u.path] = paths[unquote(u.path)]
         else:
-            out.append((uri, paths[unquote(uri)]))
+            out[uri] = paths[unquote(uri)]
     return out
+
+
+def path_lookup(mapping: dict[str, str], col: Column) -> Column:
+    """``col`` looked up in ``mapping`` (NULL when absent) as a literal
+    map: unlike a join with a local relation it launches no job. Spark
+    finds a map key by comparing it with each key in turn, so the entries
+    are split over ~sqrt(n) maps by the CRC-32 of the key, and a lookup
+    compares ~2*sqrt(n) keys. The maps are one JSON literal that the
+    optimizer folds."""
+    n = max(1, math.isqrt(len(mapping)))
+    buckets: dict[str, dict[str, str]] = {}
+    for k, v in mapping.items():
+        buckets.setdefault(str(zlib.crc32(k.encode()) % n), {})[k] = v
+    maps = F.from_json(F.lit(json.dumps(buckets)), "map<string,map<string,string>>")
+    bucket = (F.crc32(col) % n).cast("string")
+    return F.element_at(F.element_at(maps, bucket), col)
 
 
 def drop_positions(
     df: DataFrame,
-    uris: list[tuple[str, str]],
-    dead=None,
+    dv: DataFrame | None,
     broadcast: bool = True,
     keep_pos: bool = False,
 ) -> DataFrame:
-    """``df``, a parquet read spelled by ``uris`` (:func:`file_uris`),
-    without the rows at the ``dead`` positions: ``(file_path, row_index)``
-    keyed by manifest path, an Arrow table read on the driver or a Spark
-    DataFrame. The positions are mapped to Spark's URIs (an Arrow-built
-    local relation, or a join with a broadcast ``(__uri, __fp)`` one) and
-    anti-joined on ``(_metadata.file_path, _metadata.row_index)``, which
-    ``keep_pos`` keeps as ``__uri`` and ``__ri``."""
+    """``df``, a parquet read, without the rows at the ``dv`` positions
+    (``__uri``, ``__ri``): anti-joined on ``(_metadata.file_path,
+    _metadata.row_index)``, which ``keep_pos`` keeps as ``__uri`` and
+    ``__ri``."""
     df = df.select(
         "*",
         F.col("_metadata.file_path").alias("__uri"),
         F.col("_metadata.row_index").alias("__ri"),
     )
-    if isinstance(dead, DataFrame):
-        spell = local_frame(df.sparkSession, uris, "__uri string, __fp string")
-        dv = dead.join(F.broadcast(spell), dead["file_path"] == spell["__fp"])
-        dv = dv.select("__uri", F.col("row_index").alias("__ri"))
-    elif dead is not None:
-        import pyarrow as pa
-
-        spell = pa.table(
-            {"file_path": [fp for _, fp in uris], "__uri": [u for u, _ in uris]}
-        )
-        pos = dead.join(spell, "file_path").select(["__uri", "row_index"])
-        dv = df.sparkSession.createDataFrame(pos.rename_columns(["__uri", "__ri"]))
-    if dead is not None:
+    if dv is not None:
         dv = F.broadcast(dv) if broadcast else dv
         df = df.join(dv, ["__uri", "__ri"], "left_anti")
     return df if keep_pos else df.drop("__uri", "__ri")
@@ -829,12 +826,13 @@ class MoonlinkTable:
                     .groupBy(*data_cols)
                     .agg(F.count(F.lit(1)).alias("__n"))
                 )
-                live, fps = self._live_view(base, new_files, new_dvs)
-                new_dvs.extend(self._match_fullrow_dv(live, fps, data_cols, del_df))
+                live, fp = self._live_view(base, new_files, new_dvs)
+                new_dvs.extend(self._match_fullrow_dv(live, fp, data_cols, del_df))
             elif kind == "delete_where":
                 flush_rows()
-                live, fps = self._live_view(base, new_files, new_dvs)
-                new_dvs.extend(self._write_dv(live.filter(op[1]).join(fps, "__uri")))
+                live, fp = self._live_view(base, new_files, new_dvs)
+                matched = live.filter(op[1])
+                new_dvs.extend(self._write_dv(matched.withColumn("__fp", fp)))
             else:  # pragma: no cover
                 raise TableConfigError(f"unknown pending op {kind}")
         flush_rows()
@@ -866,7 +864,7 @@ class MoonlinkTable:
             # one live view: the index's file subset, else a stats prune
             subset = self._index_file_subset(base, new_files, keys_df, key_cols)
             prune = key_batch_predicate(key_cols, rows) if subset is None else None
-            live, fps = self._live_view(base, new_files, new_dvs, prune, subset)
+            live, fp = self._live_view(base, new_files, new_dvs, prune, subset)
             if not if_exists:
                 # strict delete must match every key (reference errors on
                 # missing rows for non-if-exists deletes)
@@ -876,12 +874,12 @@ class MoonlinkTable:
                 if missing:
                     raise IdentityError(f"{missing} delete keys matched no row")
             matched = live.join(F.broadcast(keys_df), key_cols, "left_semi")
-            return self._write_dv(matched.join(fps, "__uri"))
+            return self._write_dv(matched.withColumn("__fp", fp))
 
         # full_row: each delete occurrence kills exactly ONE matching live
         # row, first by (file, position) — parity mem_index.rs FullRow
         # multimap find_record semantics.
-        live, fps = self._live_view(base, new_files, new_dvs)
+        live, fp = self._live_view(base, new_files, new_dvs)
         data_cols = schema.fieldNames()
         del_df = (
             self.spark.createDataFrame(
@@ -892,7 +890,7 @@ class MoonlinkTable:
         )
         return self._match_fullrow_dv(
             live,
-            fps,
+            fp,
             data_cols,
             del_df,
             require_all=0 if if_exists else len(rows),
@@ -901,13 +899,13 @@ class MoonlinkTable:
     def _match_fullrow_dv(
         self,
         live: DataFrame,
-        fps: DataFrame,
+        fp: Column,
         data_cols: list[str],
         del_df: DataFrame,
         require_all: int = 0,
     ) -> list[FileEntry]:
         """Positional DV for full_row deletes over a :meth:`_live_view`
-        ``(live, fps)``: ``del_df`` carries the data columns plus ``__n``
+        ``(live, fp)``: ``del_df`` carries the data columns plus ``__n``
         (occurrences to kill per distinct row); a window by (manifest
         path, position) picks the first __n matches.
         ``require_all`` > 0 enforces the strict-delete contract: fewer
@@ -922,7 +920,7 @@ class MoonlinkTable:
         matched = (
             live.join(F.broadcast(del_df), cond, "inner")
             .select(*[live[c] for c in data_cols], "__uri", "__ri", "__n")
-            .join(fps, "__uri")
+            .withColumn("__fp", fp)
             .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= F.col("__n"))
             .select("__fp", "__ri")
@@ -977,9 +975,9 @@ class MoonlinkTable:
         else:
             keys_df = keys_df.dropDuplicates()
         subset = self._index_file_subset(base, new_files, keys_df, key_cols)
-        live, fps = self._live_view(base, new_files, new_dvs, files_subset=subset)
+        live, fp = self._live_view(base, new_files, new_dvs, files_subset=subset)
         matched = live.join(keys_df, key_cols, "left_semi")
-        return self._write_dv(matched.join(fps, "__uri"))
+        return self._write_dv(matched.withColumn("__fp", fp))
 
     # ------------------------------------------------------------------ #
     # scan
@@ -1146,12 +1144,12 @@ class MoonlinkTable:
         m: Manifest,
         prune: PrunePredicate | None = None,
         keep_pos: bool = False,
-    ) -> tuple[DataFrame, list[tuple[str, str]]]:
+    ) -> tuple[DataFrame, dict[str, str]]:
         """-> (the live rows of the files of ``m`` that ``prune`` cannot
-        rule out, the read's :func:`file_uris`). The DVs of ``m`` are
-        anti-joined on Spark's ``(_metadata.file_path, row_index)``, kept
-        as ``__uri``/``__ri`` with ``keep_pos``: read on the driver up to
-        ``DV_DRIVER_MAX_ROWS`` deleted rows, by Spark past it."""
+        rule out, the read's :func:`file_uris`). Spark reads the DVs of
+        ``m``, maps their manifest paths to the read's URIs and
+        anti-joins them on ``(_metadata.file_path, row_index)``, kept as
+        ``__uri``/``__ri`` with ``keep_pos``."""
         schema = field_schema_to_struct(m.schema_fields)
         files = m.data_files
         if prune is not None:
@@ -1162,23 +1160,27 @@ class MoonlinkTable:
                 df = df.withColumn("__uri", F.lit(None).cast("string")).withColumn(
                     "__ri", F.lit(None).cast("long")
                 )
-            return df, []
+            return df, {}
         paths = {self._resolve(f.path): f.path for f in files}
         df = self.spark.read.schema(schema).parquet(*paths)
-        dead = None
-        if m.delete_files and m.deleted_rows <= DV_DRIVER_MAX_ROWS:
-            dead = self._dv_positions(m, paths.values())
-            dead = dead if dead.num_rows else None
-        elif m.delete_files:
-            # explicit schema: inferring it reads a DV footer in a job
-            dead = self.spark.read.schema(DV_SCHEMA).parquet(
-                *[self._resolve(f.path) for f in m.delete_files]
-            )
-        if dead is None and not keep_pos:
-            return df, []
+        if not (m.delete_files or keep_pos):
+            return df, {}
         uris = file_uris(df, paths)
+        dv = None
+        if m.delete_files:
+            to_uri = {fp: uri for uri, fp in uris.items()}
+            # non-null (no data row has the URI ""): a nullable key makes
+            # the optimizer add an isnotnull filter that runs the lookup a
+            # second time per DV row
+            uri = F.coalesce(path_lookup(to_uri, F.col("file_path")), F.lit(""))
+            # explicit schema: inferring it reads a DV footer in a job
+            dv = (
+                self.spark.read.schema(DV_SCHEMA)
+                .parquet(*[self._resolve(f.path) for f in m.delete_files])
+                .select(uri.alias("__uri"), F.col("row_index").alias("__ri"))
+            )
         broadcast = m.deleted_rows <= DV_BROADCAST_MAX_ROWS
-        return drop_positions(df, uris, dead, broadcast, keep_pos), uris
+        return drop_positions(df, dv, broadcast, keep_pos), uris
 
     def _dv_positions(self, m: Manifest, fps):
         """The ``(file_path, row_index)`` rows of ``m``'s DVs for the
@@ -1200,11 +1202,11 @@ class MoonlinkTable:
         new_dvs: list[FileEntry],
         prune: PrunePredicate | None = None,
         files_subset: set[str] | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, Column]:
         """Delete targeting's read of ``base`` plus this commit's files
-        and DVs -> ``(live, fps)``: the live rows with ``__uri``/``__ri``
-        and a broadcast ``(__uri, __fp)`` relation, which labels matched
-        rows with their manifest path for :meth:`_write_dv`."""
+        and DVs -> ``(live, fp)``: the live rows with ``__uri``/``__ri``,
+        and the manifest path of a row as a column, to label the matched
+        rows with before :meth:`_write_dv`."""
         data_files = base.data_files + new_files
         if files_subset is not None:
             data_files = [f for f in data_files if f.path in files_subset]
@@ -1217,8 +1219,7 @@ class MoonlinkTable:
             delete_files=base.delete_files + new_dvs,
         )
         live, uris = self._read_manifest(m, prune, keep_pos=True)
-        fps = local_frame(self.spark, uris, "__uri string, __fp string")
-        return live, F.broadcast(fps)
+        return live, path_lookup(uris, F.col("__uri"))
 
     # ------------------------------------------------------------------ #
     # file writers

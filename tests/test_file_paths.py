@@ -57,13 +57,9 @@ def build_table(spark, root, key_index):
     return t
 
 
-@pytest.mark.parametrize("dv_read", ["driver", "spark"])
 @pytest.mark.parametrize("key_index", [True, False], ids=["indexed", "plain"])
-def test_deletes_lookups_and_exports_under_encoded_paths(
-    spark, tmp_path, monkeypatch, key_index, dv_read
-):
+def test_deletes_lookups_and_exports_under_encoded_paths(spark, tmp_path, key_index):
     from moonlink_spark.rpc import MoonlinkRpcServer, TableMetadataBlob
-    from moonlink_spark.table import table as table_mod
     from moonlink_spark.table.delta_export import (
         export_delta,
         read_delta_deletion_vectors,
@@ -75,8 +71,6 @@ def test_deletes_lookups_and_exports_under_encoded_paths(
         read_iceberg_live_files,
     )
 
-    if dv_read == "spark":
-        monkeypatch.setattr(table_mod, "DV_DRIVER_MAX_ROWS", 0)
     t = build_table(spark, tmp_path, key_index)
     want = set(range(300))
 
@@ -208,19 +202,33 @@ def test_full_row_deletes_under_encoded_paths(spark, tmp_path):
         t.commit(lsn=5)
 
 
-def test_every_spark_uri_is_a_key_of_the_path_frame(spark, tmp_path):
-    """The spelling contract: each distinct ``_metadata.file_path`` of a
-    read is one of the URIs the path helper maps to a manifest path. A
-    Spark version that spells paths differently fails here instead of
-    bringing deleted rows back."""
+def test_every_spark_file_path_is_a_key_of_file_uris(spark, tmp_path):
+    """The spelling contract: the distinct ``_metadata.file_path`` values
+    of a read are exactly the URIs the path helper maps to manifest
+    paths. A Spark version that spells paths differently fails here
+    instead of bringing deleted rows back."""
     from moonlink_spark.table.table import file_uris
 
     t = build_table(spark, tmp_path, key_index=False)
     paths = {t._resolve(f.path): f.path for f in t.manifest.data_files}
     df = spark.read.schema(t.schema).parquet(*paths)
-    pairs = file_uris(df, paths)
+    uris = file_uris(df, paths)
     seen = {r[0] for r in df.select("_metadata.file_path").distinct().collect()}
-    assert len(seen) == len(paths)
-    assert seen <= {u for u, _ in pairs}
-    assert {fp for _, fp in pairs} == set(paths.values())
-    assert all(not os.path.isabs(fp) for _, fp in pairs)
+    assert seen == set(uris)
+    assert sorted(uris.values()) == sorted(paths.values())
+    assert all(not os.path.isabs(fp) for fp in uris.values())
+
+
+@pytest.mark.parametrize("n", [0, 1, 5, 300])
+def test_path_lookup_matches_the_mapping(spark, n):
+    """``path_lookup`` returns each key's value and NULL for a key it
+    does not hold, at every map size."""
+    from pyspark.sql import functions as F
+
+    from moonlink_spark.table.table import path_lookup
+
+    mapping = {f"file:/{ODD}/{i} %25.parquet": f"data/{i}.parquet" for i in range(n)}
+    keys = [*mapping, "file:/absent.parquet"]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = dict(df.select("k", path_lookup(mapping, F.col("k"))).collect())
+    assert got == {k: mapping.get(k) for k in keys}

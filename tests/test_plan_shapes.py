@@ -304,24 +304,50 @@ def test_point_lookup_and_ann_plans_build_no_rdd_relations(
     assert n_jobs <= 1, n_jobs
 
 
-@pytest.mark.parametrize("dv_read", ["driver", "spark"])
-def test_dv_anti_join_keys_on_spark_file_uri(spark, tmp_path, monkeypatch, dv_read):
+def test_keyed_commit_jobs(spark, tmp_path, job_counter):
+    """A keyed upsert commit on a key-indexed table runs at most 3 Spark
+    jobs, and at most 4 once the table has a DV (its broadcast): delete
+    targeting and the key-index build label rows with their manifest
+    path through a literal map, so no broadcast of a local path relation
+    adds a job."""
+    from moonlink_spark.table.identity import IdentityProp
+    from moonlink_spark.table.table import MoonlinkTable
+
+    t = MoonlinkTable.create(
+        spark,
+        str(tmp_path / "t"),
+        [
+            {"name": "id", "data_type": "int64", "nullable": False},
+            {"name": "v", "data_type": "string"},
+        ],
+        IdentityProp.single("id"),
+        key_index=True,
+    )
+    for c in range(3):
+        t.append_rows([{"id": i, "v": f"v{i}"} for i in range(c * 100, c * 100 + 100)])
+        t.commit(lsn=c + 1)
+    for lsn, bound in ((4, 3), (5, 4)):
+        with job_counter() as jobs:
+            t.upsert_rows([{"id": i + lsn, "v": "new"} for i in (0, 150, 250)])
+            t.commit(lsn=lsn)
+            n_jobs = jobs()
+        assert n_jobs <= bound, (lsn, n_jobs)
+    assert t.scan().filter("v = 'new'").count() == 6
+    assert t.scan().count() == 300
+
+
+def test_dv_anti_join_keys_on_spark_file_uri(spark, tmp_path):
     """Deletion vectors are applied on Spark's own coordinates: the
     anti-join of a scan with one DV, of a time-travel read and of a
     delete-targeting live view keys on ``_metadata.file_path`` and
     ``_metadata.row_index``, and no per-row path rewrite (``StartsWith``
     or ``Substring`` over the path) is left in the optimized plan. The
-    URI spellings come from a local relation: the DV positions
-    themselves when read on the driver, the ``(__uri, __fp)`` mapping
-    of the DV files Spark reads otherwise."""
+    DV side is the DV files Spark reads, their manifest paths mapped to
+    URIs by literal maps (``table.path_lookup``)."""
     import re
 
-    from moonlink_spark.table import table as table_mod
     from moonlink_spark.table.identity import IdentityProp
     from moonlink_spark.table.table import MoonlinkTable
-
-    if dv_read == "spark":
-        monkeypatch.setattr(table_mod, "DV_DRIVER_MAX_ROWS", 0)
 
     t = MoonlinkTable.create(
         spark,
@@ -343,12 +369,17 @@ def test_dv_anti_join_keys_on_spark_file_uri(spark, tmp_path, monkeypatch, dv_re
         assert "startswith" not in plan.lower(), plan
         assert "substr" not in plan.lower(), plan
         join = re.search(
-            r"Join LeftAnti, \(\((__uri#\d+) = __uri#\d+\) AND "
+            r"Join LeftAnti, \(\((__uri#\d+) = (__uri#\d+)\) AND "
             r"\((__ri#\d+L?) = __ri#\d+L?\)\)",
             plan,
         )
         assert join, plan
-        uri, ri = join.groups()
+        uri, dv_uri, ri = join.groups()
         assert re.search(rf"_metadata#\d+\.file_path AS {uri}\b", plan), plan
         assert re.search(rf"_metadata#\d+\.row_index AS {ri}\b", plan), plan
-        assert "LocalRelation [__uri" in plan, plan
+        assert re.search(
+            rf"coalesce\(element_at\(element_at\(map\(.*\), "
+            rf"file_path#\d+[^)]*\), \) AS {dv_uri}",
+            plan,
+        ), plan
+        assert "LocalRelation" not in plan, plan
