@@ -62,12 +62,6 @@ from moonlink_spark.table.table import MoonlinkTable
 
 _EPOCH_2000 = 946_684_800  # PG timestamps are micros since 2000-01-01
 
-# Measurement hook (scripts/ab_measure.py 'frame_flush' arm): restore the
-# pre-r12 per-WAL-frame spool flush so the per-ack flush can be A/B'd in
-# one interleaved window. Production stays per-ack: the exactly-once
-# contract needs bytes durable only ahead of the ack that covers them.
-FLUSH_PER_FRAME = False
-
 
 def _pg_ts() -> int:
     return int((time.time() - _EPOCH_2000) * 1_000_000)
@@ -413,8 +407,6 @@ class ReplicationWireClient:
                 if kind == b"w":
                     payload = body[25:]  # after 'w' + 3x u64
                     spool_fh.write(struct.pack(">I", len(payload)) + payload)
-                    if FLUSH_PER_FRAME:  # A/B hook; production default off
-                        spool_fh.flush()
                     written += 4 + len(payload)
                     stats["frames"] += 1
                     idle = 0

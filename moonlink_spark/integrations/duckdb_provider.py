@@ -11,10 +11,12 @@ This module does the same with DuckDB as the engine:
 
 - the scan-result wire blob (``rpc.TableMetadataBlob``) lists data files and
   file-ordered ``(file_number, row_number)`` position deletes;
-- the live-row relation is ``read_parquet([...], filename=true,
-  file_row_number=true)`` anti-joined against the delete positions — DV
-  application expressed in the engine's own algebra rather than a row-run
-  decoder (``table_provider.rs:106-167``'s RowSelection);
+- :func:`live_rows_relation` is the one DV relation, for the RPC blob and
+  for exported Iceberg tables alike: ``read_parquet([...], filename=true,
+  file_row_number=true)`` anti-joined against ``{file: deleted
+  positions}`` — DV application expressed in the engine's own algebra
+  rather than a row-run decoder (``table_provider.rs:106-167``'s
+  RowSelection);
 - an empty table registers an empty Arrow relation built from the wire
   schema, so the view is always well-typed.
 
@@ -40,34 +42,36 @@ def _quote_path(p: str) -> str:
 
 
 def live_rows_relation(
-    con: Any, blob: TableMetadataBlob, tag: str
+    con: Any, files: list[str], dead: dict[str, list[int]], tag: str
 ) -> str:
-    """Return a DuckDB SQL relation string producing the live rows of a
-    scan-result blob. Position deletes are registered as an Arrow table
-    ``__mls_dv_{tag}`` on the connection (empty-delete scans skip the
-    anti-join entirely, keeping the plan a plain parquet scan)."""
+    """A DuckDB SQL relation producing the live rows of the parquet
+    ``files``: ``dead`` maps a file to its deleted row positions
+    (entries for other files are ignored). The positions of ``files``
+    are registered as an Arrow table ``__mls_dv_{tag}`` on the
+    connection; with none, the relation is a plain parquet scan."""
+    from moonlink_spark.table.table import DV_ARROW_SCHEMA
+
     # union_by_name: schema evolution writes files with differing columns;
     # added columns must surface as NULL for pre-alter files (matching the
     # Spark scan), not silently vanish behind the first file's schema
-    files = ", ".join(_quote_path(p) for p in blob.data_files)
-    if not blob.position_deletes:
-        return f"SELECT * FROM read_parquet([{files}], union_by_name=true)"
+    paths = ", ".join(_quote_path(p) for p in files)
+    dead = {f: dead[f] for f in files if dead.get(f)}
+    if not dead:
+        return f"SELECT * FROM read_parquet([{paths}], union_by_name=true)"
     import pyarrow as pa
 
     dv = pa.table(
         {
-            "file_path": [blob.data_files[i] for i, _ in blob.position_deletes],
-            "row_index": [r for _, r in blob.position_deletes],
+            "file_path": [f for f, pos in dead.items() for _ in pos],
+            "row_index": [p for pos in dead.values() for p in pos],
         },
-        schema=pa.schema(
-            [("file_path", pa.string()), ("row_index", pa.int64())]
-        ),
+        schema=DV_ARROW_SCHEMA,
     )
     dv_name = f"__mls_dv_{tag}"
     con.register(dv_name, dv)
     return (
         "SELECT * EXCLUDE (filename, file_row_number) "
-        f"FROM read_parquet([{files}], filename=true, file_row_number=true, "
+        f"FROM read_parquet([{paths}], filename=true, file_row_number=true, "
         "union_by_name=true) t "
         f"WHERE NOT EXISTS (SELECT 1 FROM {dv_name} d "
         "WHERE d.file_path = t.filename "
@@ -112,7 +116,10 @@ def attach_moonlink_table(
     try:
         blob = client.scan_table_begin(database, table, lsn)
         if blob.data_files:
-            rel = live_rows_relation(con, blob, view)
+            dead: dict[str, list[int]] = {}
+            for i, row in blob.position_deletes:
+                dead.setdefault(blob.data_files[i], []).append(row)
+            rel = live_rows_relation(con, blob.data_files, dead, view)
         else:
             # empty snapshot: a typed empty relation from the wire schema
             schema = client.get_table_schema(database, table)
@@ -215,38 +222,12 @@ def attach_iceberg_point_lookup(
             rel = f"SELECT {cols} WHERE 1=0"
         con.execute(f"CREATE OR REPLACE VIEW {view_name} AS {rel}")
         return {"view": view_name, "pruned_files": 0, "total_files": len(all_files)}
-    dvs = read_iceberg_deletion_vectors(dest)
-    dead = {
-        (f, p)
-        for f, ps in dvs.items()
-        if f in set(lookup["files"])
-        for p in ps
-    }
-    files = ", ".join(_quote_path(p) for p in lookup["files"])
-    if dead:
-        import pyarrow as pa
-
-        dv = pa.table(
-            {
-                "file_path": [f for f, _ in dead],
-                "row_index": [p for _, p in dead],
-            },
-            schema=pa.schema(
-                [("file_path", pa.string()), ("row_index", pa.int64())]
-            ),
-        )
-        dv_name = f"__mls_ixdv_{view_name}"
-        con.register(dv_name, dv)
-        rel = (
-            "SELECT * EXCLUDE (filename, file_row_number) "
-            f"FROM read_parquet([{files}], filename=true, "
-            "file_row_number=true, union_by_name=true) t "
-            f"WHERE NOT EXISTS (SELECT 1 FROM {dv_name} d "
-            "WHERE d.file_path = t.filename "
-            "AND d.row_index = t.file_row_number)"
-        )
-    else:
-        rel = f"SELECT * FROM read_parquet([{files}], union_by_name=true)"
+    rel = live_rows_relation(
+        con,
+        lookup["files"],
+        read_iceberg_deletion_vectors(dest),
+        f"ix_{view_name}",
+    )
     con.execute(f"CREATE OR REPLACE VIEW {view_name} AS {rel}")
     return {
         "view": view_name,
@@ -301,32 +282,9 @@ def attach_iceberg_ann_topk(
     )
     blocks = ", ".join(_quote_path(p) for p in blob["index_block_files"])
     all_files = read_iceberg_live_files(dest)
-    files = ", ".join(_quote_path(p) for p in all_files)
-    dvs = read_iceberg_deletion_vectors(dest)
-    dead = {(f, p) for f, ps in dvs.items() for p in ps}
-    if dead:
-        import pyarrow as pa
-
-        dv = pa.table(
-            {
-                "file_path": [f for f, _ in dead],
-                "row_index": [p for _, p in dead],
-            },
-            schema=pa.schema(
-                [("file_path", pa.string()), ("row_index", pa.int64())]
-            ),
-        )
-        con.register(f"__mls_anndv_{view_name}", dv)
-        live = (
-            "SELECT * EXCLUDE (filename, file_row_number) "
-            f"FROM read_parquet([{files}], filename=true, "
-            "file_row_number=true, union_by_name=true) t "
-            f"WHERE NOT EXISTS (SELECT 1 FROM __mls_anndv_{view_name} d "
-            "WHERE d.file_path = t.filename "
-            "AND d.row_index = t.file_row_number)"
-        )
-    else:
-        live = f"SELECT * FROM read_parquet([{files}], union_by_name=true)"
+    live = live_rows_relation(
+        con, all_files, read_iceberg_deletion_vectors(dest), f"ann_{view_name}"
+    )
     ids = ", ".join(str(int(i)) for i in query_ids)
     sql = f"""
 CREATE OR REPLACE VIEW {view_name} AS
@@ -412,34 +370,9 @@ def attach_iceberg_lsh_pairs(
     n_bands = int(blob["n_bands"])
     blocks = ", ".join(_quote_path(p) for p in blob["index_block_files"])
     all_files = read_iceberg_live_files(dest)
-    files = ", ".join(_quote_path(p) for p in all_files)
-    dvs = read_iceberg_deletion_vectors(dest)
-    dead = {(f, p) for f, ps in dvs.items() for p in ps}
-    if dead:
-        import pyarrow as pa
-
-        dv = pa.table(
-            {
-                "file_path": [f for f, _ in dead],
-                "row_index": [p for _, p in dead],
-            },
-            schema=pa.schema(
-                [("file_path", pa.string()), ("row_index", pa.int64())]
-            ),
-        )
-        con.register(f"__mls_lshdv_{view_name}", dv)
-        live_ids = (
-            f"SELECT {key_col} FROM read_parquet([{files}], filename=true, "
-            "file_row_number=true, union_by_name=true) t "
-            f"WHERE NOT EXISTS (SELECT 1 FROM __mls_lshdv_{view_name} d "
-            "WHERE d.file_path = t.filename "
-            "AND d.row_index = t.file_row_number)"
-        )
-    else:
-        live_ids = (
-            f"SELECT {key_col} "
-            f"FROM read_parquet([{files}], union_by_name=true)"
-        )
+    live = live_rows_relation(
+        con, all_files, read_iceberg_deletion_vectors(dest), f"lsh_{view_name}"
+    )
     bands_union = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_idx, "
         f"h{2 * b} * {_MINHASH_P} + h{2 * b + 1} AS band_val FROM sigs"
@@ -447,10 +380,10 @@ def attach_iceberg_lsh_pairs(
     )
     sql = f"""
 CREATE OR REPLACE VIEW {view_name} AS
-WITH live_ids AS ({live_ids}),
+WITH live AS ({live}),
 sigs AS (
   SELECT * FROM read_parquet([{blocks}])
-  WHERE doc_id IN (SELECT {key_col} FROM live_ids)
+  WHERE doc_id IN (SELECT {key_col} FROM live)
 ),
 bands AS ({bands_union})
 SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b

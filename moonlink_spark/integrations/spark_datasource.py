@@ -42,14 +42,6 @@ from pyspark.sql.datasource import (
 )
 
 
-def _resolve_rel(rel: str, data_path: str) -> str:
-    """Manifest/DV path -> readable absolute path. THE one resolution used
-    by the batch plan and the CDC stream (a fix applied to one used to
-    leave the other inconsistent). DV files store manifest paths, so DV
-    and data paths resolve alike."""
-    return rel if os.path.isabs(rel) else os.path.join(data_path, rel)
-
-
 def _release_scan_pin(client, db: str, table: str) -> None:
     """Close the pin's OWN connection WITHOUT scan_table_end: in Spark's
     data-source worker model the planning process (and this finalizer)
@@ -148,11 +140,11 @@ def _plan_local(options: dict) -> tuple[bytes, list[tuple[str, tuple[int, ...]]]
     partition per data file — the exact plan the RPC path serves, without
     a running service."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from moonlink_spark.schema import field_schema_to_struct
     from moonlink_spark.table.manifest import ManifestStore
+    from moonlink_spark.table.table import dv_positions, resolve
 
     table_dir = options["path"]
     data_path = options.get("datapath", table_dir)
@@ -168,25 +160,11 @@ def _plan_local(options: dict) -> tuple[bytes, list[tuple[str, tuple[int, ...]]]
         if m is None:
             raise ValueError(f"no moonlink table at {table_dir}")
 
-    def resolve(rel: str) -> str:
-        return _resolve_rel(rel, data_path)
-
-    per_file: dict[str, list[int]] = {}
-    for dv in m.delete_files:
-        dv_t = pq.read_table(resolve(dv.path), columns=["file_path", "row_index"])
-        for fp, ri in zip(
-            dv_t.column("file_path").to_pylist(),
-            dv_t.column("row_index").to_pylist(),
-        ):
-            per_file.setdefault(resolve(fp), []).append(ri)
+    dead = dv_positions(data_path, m.delete_files)
     # carry each file's manifest min/max stats so pushFilters can prune
     # whole partitions (the persisted-stats fast path, table/stats.py)
     parts = [
-        (
-            resolve(f.path),
-            tuple(sorted(per_file.get(resolve(f.path), ()))),
-            f.stats,
-        )
+        (resolve(data_path, f.path), tuple(dead.get(f.path, ())), f.stats)
         for f in m.data_files
     ]
     schema = to_arrow_schema(field_schema_to_struct(m.schema_fields))
@@ -315,6 +293,8 @@ class MoonlinkDataSourceReader(DataSourceReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        from moonlink_spark.table.table import conform
+
         if partition is None:
             # pyspark substitutes [None] when partitions() returns an
             # empty list (empty table, or every file pruned): zero rows
@@ -349,16 +329,7 @@ class MoonlinkDataSourceReader(DataSourceReader):
                 mask = [offset + i not in deleted for i in range(n)]
                 batch = batch.filter(pa.array(mask, type=pa.bool_()))
             offset += n
-            cols = []
-            for f in target:
-                if f.name in batch.schema.names:
-                    col = batch.column(batch.schema.names.index(f.name))
-                    if col.type != f.type:
-                        col = col.cast(f.type)
-                else:
-                    col = pa.nulls(batch.num_rows, type=f.type)
-                cols.append(col)
-            yield pa.RecordBatch.from_arrays(cols, schema=target)
+            yield conform(batch, target)
 
 
 def register_moonlink_source(spark) -> None:
@@ -502,21 +473,12 @@ def _table_arrow_schema(table_dir: str):
 
 
 def _aligned_pylist(pa_table, target_schema) -> list[tuple]:
-    """Rows of ``pa_table`` as tuples in ``target_schema`` field order,
-    missing columns (pre-alter files) as None, types cast."""
-    import pyarrow as pa
+    """Rows of ``pa_table`` as tuples in ``target_schema`` field order
+    (:func:`~moonlink_spark.table.table.conform`)."""
+    from moonlink_spark.table.table import conform
 
-    cols = []
-    n = pa_table.num_rows
-    for f in target_schema:
-        if f.name in pa_table.schema.names:
-            col = pa_table.column(f.name)
-            if col.type != f.type:
-                col = col.cast(f.type)
-            cols.append(col.to_pylist())
-        else:
-            cols.append([None] * n)
-    return list(zip(*cols)) if cols else [()] * n
+    cols = [c.to_pylist() for c in conform(pa_table, target_schema).columns]
+    return list(zip(*cols)) if cols else [()] * pa_table.num_rows
 
 
 def _cdc_events(
@@ -532,6 +494,7 @@ def _cdc_events(
     import pyarrow.parquet as pq
 
     from moonlink_spark.table.manifest import ManifestStore
+    from moonlink_spark.table.table import dv_positions, read_positions, resolve
 
     store = ManifestStore(table_dir)
     vs = store.versions()
@@ -542,9 +505,6 @@ def _cdc_events(
             "(vacuumed past the stream's checkpoint); restart the stream "
             "from a fresh checkpoint"
         )
-
-    def resolve(rel: str) -> str:
-        return _resolve_rel(rel, data_path)
 
     # read only the baseline manifest (binary-searched) and the delta
     # after it: reading EVERY retained version per micro-batch was
@@ -576,53 +536,26 @@ def _cdc_events(
         # files — a sequential keyed applier reproduces the table state
         # for both shapes (review r10: inserts-first replayed an upsert
         # as insert-then-delete, leaving the key absent downstream).
-        added_paths = {resolve(e.path) for e in added}
-        by_file: dict[str, list[int]] = {}
-        for dv in added_dvs:
-            dv_t = pq.read_table(resolve(dv.path))
-            for fp, ri in zip(
-                dv_t.column("file_path").to_pylist(),
-                dv_t.column("row_index").to_pylist(),
-            ):
-                by_file.setdefault(fp, []).append(ri)
-        pre_files = sorted(
-            fp for fp in by_file if resolve(fp) not in added_paths
-        )
-        own_files = sorted(
-            fp for fp in by_file if resolve(fp) in added_paths
-        )
+        added_paths = {e.path for e in added}
+        by_file = dv_positions(data_path, added_dvs)
 
-        def _delete_rows(fp: str):
+        def _delete_rows(files):
             # before-images: read ONLY the row groups containing the
             # deleted positions — a point delete in a large file costs
             # one row group, not the file
-            pf = pq.ParquetFile(resolve(fp))
-            wanted = sorted(by_file[fp])
-            group_rows, offsets = [], []
-            offset = 0
-            for g in range(pf.metadata.num_row_groups):
-                offsets.append(offset)
-                group_rows.append(pf.metadata.row_group(g).num_rows)
-                offset += group_rows[-1]
-            by_group: dict[int, list[int]] = {}
-            gi = 0
-            for ri in wanted:
-                while gi + 1 < len(offsets) and offsets[gi + 1] <= ri:
-                    gi += 1
-                by_group.setdefault(gi, []).append(ri - offsets[gi])
-            for g in sorted(by_group):
-                rows = _aligned_pylist(pf.read_row_group(g), target_schema)
-                for local_ri in by_group[g]:
-                    yield ("delete", m.lsn) + rows[local_ri]
+            for fp in files:
+                rows = read_positions(
+                    resolve(data_path, fp), by_file[fp], target_schema
+                )
+                for row in _aligned_pylist(rows, target_schema):
+                    yield ("delete", m.lsn) + row
 
-        for fp in pre_files:
-            yield from _delete_rows(fp)
+        yield from _delete_rows(sorted(set(by_file) - added_paths))
         for entry in added:
-            t = pq.read_table(resolve(entry.path))
+            t = pq.read_table(resolve(data_path, entry.path))
             for row in _aligned_pylist(t, target_schema):
                 yield ("insert", m.lsn) + row
-        for fp in own_files:
-            yield from _delete_rows(fp)
+        yield from _delete_rows(sorted(set(by_file) & added_paths))
 
 
 class MoonlinkStreamReader(SimpleDataSourceStreamReader):

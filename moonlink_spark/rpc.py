@@ -461,7 +461,7 @@ class MoonlinkRpcServer:
     def _scan_blob(self, db: str, table: str, lsn: int) -> tuple[bytes, int]:
         """-> (encoded blob, pinned manifest version). The caller owns the
         pin and must eventually release it via unpin_version."""
-        import pyarrow.parquet as pq
+        from moonlink_spark.table.table import dv_positions
 
         t = self.backend.get_table(db, table)
         # resolve+pin must be atomic vs vacuum: vacuum reads
@@ -475,19 +475,8 @@ class MoonlinkRpcServer:
             t.pin_version(m.version)
         data_files = [t._resolve(f.path) for f in m.data_files]
         index = {f.path: i for i, f in enumerate(m.data_files)}
-        pds: list[tuple[int, int]] = []
-        for dv in m.delete_files:
-            tab = pq.read_table(
-                t._resolve(dv.path), columns=["file_path", "row_index"]
-            )
-            for fp, ri in zip(
-                tab.column("file_path").to_pylist(),
-                tab.column("row_index").to_pylist(),
-            ):
-                i = index.get(fp)
-                if i is not None:
-                    pds.append((i, ri))
-        pds.sort()
+        dead = dv_positions(t.data_path, m.delete_files, only=index)
+        pds = sorted((index[fp], ri) for fp, pos in dead.items() for ri in pos)
         return (
             TableMetadataBlob(
                 data_files=data_files, position_deletes=pds

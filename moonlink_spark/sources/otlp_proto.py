@@ -21,28 +21,21 @@ import base64
 import struct
 from typing import Any
 
+from moonlink_spark.sources.converters import (
+    ProtoDecodeError,
+    _enc_uvarint,
+    _uvarint,
+)
+
 # --------------------------------------------------------------------------- #
 # wire primitives
 # --------------------------------------------------------------------------- #
 
 
-def _uvarint(buf: bytes, i: int) -> tuple[int, int]:
-    v = 0
-    shift = 0
-    while True:
-        b = buf[i]
-        i += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, i
-        shift += 7
-        if shift > 70:
-            raise ValueError("varint too long")
-
-
 def _fields(buf: bytes):
     """Yield (field_number, wire_type, raw) over a message body. raw is an
-    int for wt 0 and bytes for wt 1/2/5."""
+    int for wt 0 and bytes for wt 1/2/5. A length or fixed-width field
+    that runs past the end of ``buf`` is a truncated body."""
     i = 0
     n = len(buf)
     while i < n:
@@ -51,18 +44,21 @@ def _fields(buf: bytes):
         if wt == 0:
             v, i = _uvarint(buf, i)
             yield fnum, wt, v
-        elif wt == 1:
-            yield fnum, wt, buf[i:i + 8]
-            i += 8
+            continue
+        if wt == 1:
+            ln = 8
         elif wt == 5:
-            yield fnum, wt, buf[i:i + 4]
-            i += 4
+            ln = 4
         elif wt == 2:
             ln, i = _uvarint(buf, i)
-            yield fnum, wt, buf[i:i + ln]
-            i += ln
         else:
             raise ValueError(f"unsupported wire type {wt}")
+        if i + ln > n:
+            raise ProtoDecodeError(
+                f"truncated field {fnum}: need {ln} bytes at {i}, have {n - i}"
+            )
+        yield fnum, wt, buf[i:i + ln]
+        i += ln
 
 
 def _signed64(u: int) -> int:
@@ -280,8 +276,6 @@ def otlp_proto_to_json(signal: str, data: bytes) -> dict[str, Any]:
     The body is an untrusted HTTP payload: any parse failure surfaces
     as ProtoDecodeError (a MoonlinkError, -> HTTP 400), never a raw
     ValueError/IndexError the service would answer 500 for."""
-    from moonlink_spark.sources.converters import ProtoDecodeError
-
     desc = _REQUESTS.get(signal)
     if desc is None:
         raise ProtoDecodeError(f"unknown otlp signal {signal!r}")
@@ -296,18 +290,6 @@ def otlp_proto_to_json(signal: str, data: bytes) -> dict[str, Any]:
 # --------------------------------------------------------------------------- #
 # encoder (tests + clients): OTLP/JSON dict -> protobuf bytes
 # --------------------------------------------------------------------------- #
-
-
-def _enc_uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
 
 
 def _tag(fnum: int, wt: int) -> bytes:

@@ -49,7 +49,7 @@ import pyarrow.parquet as pq
 from moonlink_spark.schema import field_schema_to_struct
 from moonlink_spark.table.manifest import FileEntry, Manifest
 from moonlink_spark.table.stats import _json_safe
-from moonlink_spark.table.table import MoonlinkTable
+from moonlink_spark.table.table import MoonlinkTable, dv_positions
 
 LOG_DIR = "_delta_log"
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -495,26 +495,18 @@ def _export_delta_version(
     for entry in m.data_files:
         desired[_export_name(entry, "clean")] = entry
 
-    dv_positions: dict[str, list[int]] = {}
-    if m.delete_files:
-        rel_to_name = {e.path: n for n, e in desired.items()}
-        for dvf in m.delete_files:
-            t_dv = pq.read_table(
-                table._resolve(dvf.path), columns=["file_path", "row_index"]
-            )
-            for fp, ri in zip(
-                t_dv.column("file_path").to_pylist(),
-                t_dv.column("row_index").to_pylist(),
-            ):
-                name = rel_to_name.get(fp)
-                if name is not None:
-                    dv_positions.setdefault(name, []).append(ri)
+    rel_to_name = {e.path: n for n, e in desired.items()}
+    deleted = {
+        rel_to_name[fp]: pos
+        for fp, pos in dv_positions(
+            table.data_path, m.delete_files, only=rel_to_name
+        ).items()
+    }
 
     def _dv_action(name: str) -> dict | None:
-        positions = dv_positions.get(name)
+        positions = deleted.get(name)
         if not positions:
             return None
-        positions = sorted(set(positions))
         raw = _delta_dv_bytes(positions)
         return {
             "storageType": "i",  # inline: DV bytes live in the log action
@@ -584,7 +576,7 @@ def _export_delta_version(
     prev_has_dv = bool(
         prev_protocol and "deletionVectors" in prev_protocol.get("readerFeatures", [])
     )
-    needed = DV_PROTOCOL if (dv_positions or prev_has_dv) else PROTOCOL
+    needed = DV_PROTOCOL if (deleted or prev_has_dv) else PROTOCOL
     if version == 0 or (prev_protocol or PROTOCOL) != needed:
         actions.append({"protocol": dict(needed)})
     if version == 0 or schema_string != prev_schema:
@@ -627,10 +619,8 @@ def _export_delta_version(
         "adds": len(adds),
         "removes": len(removes),
         "live_files": len(desired),
-        "deletion_vectors": sum(1 for n in desired if dv_positions.get(n)),
-        "deleted_positions": sum(
-            len(set(v)) for n, v in dv_positions.items() if n in desired
-        ),
+        "deletion_vectors": len(deleted),
+        "deleted_positions": sum(map(len, deleted.values())),
     }
 
 

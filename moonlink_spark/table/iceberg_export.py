@@ -8,10 +8,12 @@ Iceberg manifests are Avro object-container files, which normally implies a
 writer library; none ships in this environment, but the Avro binary
 encoding (zigzag varints + length-prefixed bytes, public Avro 1.x spec) and
 the Iceberg table spec (iceberg.apache.org/spec) are both simple enough to
-emit directly. This module hand-encodes the two Avro files a v2 snapshot
-needs (manifest, manifest list) plus ``vN.metadata.json`` and
-``version-hint.text``, so an Iceberg-capable engine (Spark+iceberg-runtime,
-Trino, pyiceberg, DuckDB iceberg extension) can read the exported table.
+emit directly. This module writes the two Avro container files a v2
+snapshot needs (manifest, manifest list; their datums are coded by the
+engine's one Avro codec, ``sources/avro_binary``) plus
+``vN.metadata.json`` and ``version-hint.text``, so an Iceberg-capable
+engine (Spark+iceberg-runtime, Trino, pyiceberg, DuckDB iceberg
+extension) can read the exported table.
 
 Mapping moonlink commits -> Iceberg snapshots:
 
@@ -48,6 +50,12 @@ from typing import Any
 
 import pyarrow.parquet as pq
 
+from moonlink_spark.sources.avro_binary import (
+    _zigzag_decode,
+    _zigzag_encode,
+    decode_datum,
+    encode_datum,
+)
 from moonlink_spark.table import keyindex
 from moonlink_spark.table.delta_export import _export_name, clone_file
 from moonlink_spark.table.puffin import (
@@ -60,73 +68,14 @@ from moonlink_spark.table.puffin import (
 )
 from moonlink_spark.table.manifest import FileEntry, Manifest
 from moonlink_spark.observability import METRICS
-from moonlink_spark.table.table import MoonlinkTable
+from moonlink_spark.table.table import MoonlinkTable, dv_positions
 
 # --------------------------------------------------------------------------- #
-# Avro binary encoding (writer subset: the types manifest schemas use)
+# Avro object containers (datums coded by sources/avro_binary)
 # --------------------------------------------------------------------------- #
 
-
-def _zigzag(n: int) -> bytes:
-    """Avro long/int: zigzag then base-128 varint, little-endian groups."""
-    u = (n << 1) ^ (n >> 63)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _avro_bytes(b: bytes) -> bytes:
-    return _zigzag(len(b)) + b
-
-
-def _avro_str(s: str) -> bytes:
-    return _avro_bytes(s.encode("utf-8"))
-
-
-def _encode(schema: Any, value: Any) -> bytes:
-    """Encode ``value`` per (parsed-JSON) Avro ``schema``. Supports null,
-    boolean, int, long, string, bytes, record, union, array, map — the
-    closed subset Iceberg manifest schemas are built from."""
-    if isinstance(schema, list):  # union: [null, X] style
-        if value is None:
-            idx = schema.index("null")
-            return _zigzag(idx)
-        idx = next(i for i, s in enumerate(schema) if s != "null")
-        return _zigzag(idx) + _encode(schema[idx], value)
-    t = schema["type"] if isinstance(schema, dict) else schema
-    if t == "null":
-        return b""
-    if t == "boolean":
-        return b"\x01" if value else b"\x00"
-    if t in ("int", "long"):
-        return _zigzag(int(value))
-    if t == "string":
-        return _avro_str(value)
-    if t == "bytes":
-        return _avro_bytes(value)
-    if t == "record":
-        return b"".join(
-            _encode(f["type"], value.get(f["name"])) for f in schema["fields"]
-        )
-    if t == "array":
-        if not value:
-            return _zigzag(0)
-        body = b"".join(_encode(schema["items"], v) for v in value)
-        return _zigzag(len(value)) + body + _zigzag(0)
-    if t == "map":  # avro maps: string keys
-        if not value:
-            return _zigzag(0)
-        body = b"".join(
-            _avro_str(k) + _encode(schema["values"], v) for k, v in value.items()
-        )
-        return _zigzag(len(value)) + body + _zigzag(0)
-    raise ValueError(f"unsupported avro type: {t!r}")
+# An Avro container's file metadata: a map of string -> bytes.
+_AVRO_META = {"type": "map", "values": "bytes"}
 
 
 def write_avro_container(
@@ -141,16 +90,13 @@ def write_avro_container(
     meta = {"avro.schema": schema_json, "avro.codec": "null"}
     meta.update(metadata or {})
     sync = hashlib.md5(path.encode() + schema_json.encode()).digest()
-    body = b"".join(_encode(schema, r) for r in records)
+    body = b"".join(encode_datum(schema, r) for r in records)
     buf = bytearray()
     buf += b"Obj\x01"
-    buf += _zigzag(len(meta))
-    for k, v in meta.items():
-        buf += _avro_str(k) + _avro_bytes(v.encode("utf-8"))
-    buf += _zigzag(0)
+    buf += encode_datum(_AVRO_META, {k: v.encode("utf-8") for k, v in meta.items()})
     buf += sync
     if records:
-        buf += _zigzag(len(records)) + _zigzag(len(body)) + body + sync
+        buf += _zigzag_encode(len(records)) + _zigzag_encode(len(body)) + body + sync
     tmp = path + ".tmp"
     with open(tmp, "wb") as fh:
         fh.write(bytes(buf))
@@ -678,25 +624,15 @@ def _export_iceberg_impl(
             if not os.path.exists(dest_path):
                 clone_file(table._resolve(entry.path), dest_path)
 
-    # per-data-file deleted row positions, driver-side (DV parquets are
-    # small key files; same footprint as _dv_files_touched's footer read)
-    dv_positions: dict[str, list[int]] = {}
-    if m.delete_files:
-        rel_to_name = {e.path: n for n, e in desired.items()}
-        for dvf in m.delete_files:
-            t_dv = pq.read_table(
-                table._resolve(dvf.path), columns=["file_path", "row_index"]
-            )
-            for fp, ri in zip(
-                t_dv.column("file_path").to_pylist(),
-                t_dv.column("row_index").to_pylist(),
-            ):
-                name = rel_to_name.get(fp)
-                if name is None:
-                    continue  # DV for a file compacted out of the live set
-                dv_positions.setdefault(
-                    os.path.abspath(os.path.join(data_dir, name)), []
-                ).append(ri)
+    # per-data-file deleted row positions of the live files, keyed by
+    # the exported copy's path
+    rel_to_name = {e.path: n for n, e in desired.items()}
+    deleted = {
+        os.path.abspath(os.path.join(data_dir, rel_to_name[fp])): pos
+        for fp, pos in dv_positions(
+            table.data_path, m.delete_files, only=rel_to_name
+        ).items()
+    }
 
     seq = (prev_meta.get("last-sequence-number", 0) + 1) if prev_meta else 1
     snapshot_id = seq  # deterministic: snapshot N of this export lineage
@@ -749,7 +685,7 @@ def _export_iceberg_impl(
     # declare the same version the table metadata does — spec-strict
     # readers validate consistency.
     format_version = 3 if (
-        dv_positions or (prev_meta or {}).get("format-version", 2) >= 3
+        deleted or (prev_meta or {}).get("format-version", 2) >= 3
     ) else 2
 
     # ---- manifest (full live set, status=ADDED under an overwrite) ----
@@ -828,11 +764,11 @@ def _export_iceberg_impl(
     total_deleted = 0
     puffin_path = None
     _t_dv = time.monotonic()
-    if dv_positions:
+    if deleted:
         puffin_path = os.path.join(meta_dir, f"dv-snap-{snapshot_id}-{attempt}.puffin")
         blob_inputs = []
-        for data_path in sorted(dv_positions):
-            positions = sorted(set(dv_positions[data_path]))
+        for data_path in sorted(deleted):
+            positions = deleted[data_path]
             blob_inputs.append(
                 (
                     dv_blob_bytes(positions),
@@ -1369,103 +1305,29 @@ def iceberg_index_lookup(
     return {"files": sorted({f for f, _ in positions}), "positions": positions}
 
 
-# --------------------------------------------------------------------------- #
-# Avro reading (decoder for the writer's subset; used by read-back +
-# independent of the JVM cross-check in tests)
-# --------------------------------------------------------------------------- #
-
-
-class _Cursor:
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-
-    def read(self, n: int) -> bytes:
-        b = self.data[self.pos : self.pos + n]
-        self.pos += n
-        return b
-
-    def zigzag(self) -> int:
-        shift = u = 0
-        while True:
-            b = self.data[self.pos]
-            self.pos += 1
-            u |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-        return (u >> 1) ^ -(u & 1)
-
-
-def _decode(schema: Any, cur: _Cursor) -> Any:
-    if isinstance(schema, list):
-        idx = cur.zigzag()
-        return None if schema[idx] == "null" else _decode(schema[idx], cur)
-    t = schema["type"] if isinstance(schema, dict) else schema
-    if t == "null":
-        return None
-    if t == "boolean":
-        return cur.read(1) == b"\x01"
-    if t in ("int", "long"):
-        return cur.zigzag()
-    if t in ("string", "bytes"):
-        b = cur.read(cur.zigzag())
-        return b.decode("utf-8") if t == "string" else b
-    if t == "record":
-        return {f["name"]: _decode(f["type"], cur) for f in schema["fields"]}
-    if t == "array":
-        out = []
-        while True:
-            n = cur.zigzag()
-            if n == 0:
-                return out
-            if n < 0:  # block with byte size
-                cur.zigzag()
-                n = -n
-            out.extend(_decode(schema["items"], cur) for _ in range(n))
-    if t == "map":
-        out = {}
-        while True:
-            n = cur.zigzag()
-            if n == 0:
-                return out
-            if n < 0:
-                cur.zigzag()
-                n = -n
-            for _ in range(n):
-                k = cur.read(cur.zigzag()).decode("utf-8")
-                out[k] = _decode(schema["values"], cur)
-    raise ValueError(f"unsupported avro type: {t!r}")
-
-
 def read_avro_container(path: str) -> list[dict[str, Any]]:
+    """The records of an Avro object-container file with the null codec
+    (the files :func:`write_avro_container` writes)."""
     with open(path, "rb") as fh:
-        cur = _Cursor(fh.read())
-    if cur.read(4) != b"Obj\x01":
+        data = fh.read()
+    if data[:4] != b"Obj\x01":
         raise ValueError("not an avro container")
-    meta: dict[str, bytes] = {}
-    while True:
-        n = cur.zigzag()
-        if n == 0:
-            break
-        if n < 0:
-            cur.zigzag()
-            n = -n
-        for _ in range(n):
-            k = cur.read(cur.zigzag()).decode("utf-8")
-            meta[k] = cur.read(cur.zigzag())
+    meta, pos = decode_datum(_AVRO_META, data, 4)
     schema = json.loads(meta["avro.schema"])
     if meta.get("avro.codec", b"null") != b"null":
         raise ValueError(f"unsupported avro codec {meta.get('avro.codec')!r}")
-    sync = cur.read(16)
+    sync = data[pos:pos + 16]
+    pos += 16
     records: list[dict[str, Any]] = []
-    while cur.pos < len(cur.data):
-        count = cur.zigzag()
-        cur.zigzag()  # block byte length
+    while pos < len(data):
+        count, pos = _zigzag_decode(data, pos)
+        _, pos = _zigzag_decode(data, pos)  # block byte length
         for _ in range(count):
-            records.append(_decode(schema, cur))
-        if cur.read(16) != sync:
+            record, pos = decode_datum(schema, data, pos)
+            records.append(record)
+        if data[pos:pos + 16] != sync:
             raise ValueError("avro sync marker mismatch (corrupt manifest)")
+        pos += 16
     return records
 
 

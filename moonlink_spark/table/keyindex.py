@@ -327,6 +327,7 @@ def resolve_positions(
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from moonlink_spark.session import arrow_rows
+    from moonlink_spark.table.table import dv_positions, read_positions
 
     probes = [
         r
@@ -342,10 +343,9 @@ def resolve_positions(
     ):
         if fp in covered:
             positions.setdefault(fp, set()).add(int(ri))
-    if positions and m.delete_files:
-        dvs = table._dv_positions(m, positions)
-        for fp, ri in zip(*(c.to_pylist() for c in dvs.columns)):
-            positions[fp].discard(ri)
+    dead = dv_positions(table.data_path, m.delete_files, only=positions)
+    for fp, pos in dead.items():
+        positions[fp].difference_update(pos)
     probe_keys = arrow_rows([r[1:] for r in probes], key_schema(m, key_cols))
     wanted = set(zip(*(c.to_pylist() for c in probe_keys.columns)))
     schema = to_arrow_schema(field_schema_to_struct(m.schema_fields))
@@ -358,7 +358,7 @@ def resolve_positions(
         if not pos:
             continue
         pos = sorted(pos)
-        tbl = _take_rows(table._resolve(fp), pos, schema)
+        tbl = read_positions(table._resolve(fp), pos, schema)
         keys = zip(*(tbl.column(c).to_pylist() for c in key_cols))
         keep = pa.array([k in wanted for k in keys], pa.bool_())
         tbl = tbl.append_column("__fp", pa.array([fp] * len(pos), pa.string()))
@@ -366,41 +366,6 @@ def resolve_positions(
         parts.append(tbl.filter(keep))
     uncovered = [f for f in m.data_files if f.path not in covered]
     return pa.concat_tables(parts), uncovered
-
-
-def _take_rows(path: str, pos: list[int], schema):
-    """Rows at the sorted file positions ``pos`` (``_metadata.row_index``)
-    of one data file, in the Arrow ``schema``. Only the row groups that
-    hold them are read, one at a time. Columns the file lacks come back
-    null; the others are cast (pyarrow reads Spark's timestamps
-    UTC-zoned, or as INT96 nanoseconds)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pf = pq.ParquetFile(path)
-    md = pf.metadata
-    sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
-    starts = np.cumsum([0] + sizes)
-    pos = np.asarray(pos, np.int64)
-    group = np.searchsorted(starts, pos, side="right") - 1
-    names = set(pf.schema_arrow.names)
-    columns = [n for n in schema.names if n in names]
-    tbl = pa.concat_tables(
-        [
-            pf.read_row_group(g, columns=columns).take(pos[group == g] - starts[g])
-            for g in np.unique(group).tolist()
-        ]
-    )
-    return pa.Table.from_arrays(
-        [
-            tbl[f.name].cast(f.type)
-            if f.name in names
-            else pa.nulls(len(pos), f.type)
-            for f in schema
-        ],
-        schema=schema,
-    )
 
 
 def merge_index(table: "MoonlinkTable") -> bool:

@@ -8,7 +8,12 @@ Spark-first re-expression of the reference's core table
                           parity mooncake_table_config.rs:152-166)
 - deletion vectors     -> position-delete Parquet files (file_path, row_index)
                           anti-joined at scan time; compaction folds them in
-                          (parity BatchDeletionVector + Puffin blobs)
+                          (parity BatchDeletionVector + Puffin blobs). This
+                          module is the one reader of the format: Spark
+                          scans read DVs in ``_read_manifest``; driver-side
+                          consumers (exports, the RPC blob, the data
+                          sources, point reads) take :func:`dv_positions`
+                          and read rows back with :func:`read_positions`
 - snapshot + Iceberg   -> one JSON manifest per commit (manifest.py); the
   sync                    commit LSN gives exact read-at-LSN
                           ("read at X sees commits <= X",
@@ -50,6 +55,7 @@ import uuid
 import zlib
 from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -81,14 +87,93 @@ DELETE_DIR = "deletes"
 DEFAULT_MEM_SLICE_ROWS = 32 * 4096
 # Broadcast the DV side of the scan anti-join below this many deleted rows.
 DV_BROADCAST_MAX_ROWS = 4_000_000
-# Columns of a deletion-vector parquet file (see ``_write_dv``).
+# Columns of a deletion-vector parquet file (see ``_write_dv``), as a
+# Spark DDL string and as an Arrow schema.
 DV_SCHEMA = "file_path string, row_index long"
+DV_ARROW_SCHEMA = pa.schema([("file_path", pa.string()), ("row_index", pa.int64())])
 
 
 def _parquet_num_rows(path: str) -> int:
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(path).metadata.num_rows
+
+
+def resolve(data_path: str, rel: str) -> str:
+    """Manifest path -> readable path. Files the table wrote (data, DVs,
+    index blocks) are stored relative to ``data_path``; files loaded in
+    place keep their absolute path. DV rows store manifest paths, so
+    they resolve alike."""
+    return rel if os.path.isabs(rel) else os.path.join(data_path, rel)
+
+
+def dv_positions(
+    data_path: str, dv_files: list[FileEntry], only=None
+) -> dict[str, list[int]]:
+    """The deleted positions the DV files ``dv_files`` record:
+    ``{manifest path: sorted row indexes, each once}``, read with one
+    pyarrow read on the driver. ``only`` (manifest paths) is pushed
+    down as a ``file_path`` filter."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if not dv_files or (only is not None and not only):
+        return {}
+    tbl = pq.read_table(
+        [resolve(data_path, f.path) for f in dv_files],
+        schema=DV_ARROW_SCHEMA,
+        filters=None if only is None else pc.field("file_path").isin(list(only)),
+    )
+    tbl = tbl.group_by("file_path").aggregate([("row_index", "distinct")])
+    return {
+        fp: sorted(pos)
+        for fp, pos in zip(
+            tbl.column("file_path").to_pylist(),
+            tbl.column("row_index_distinct").to_pylist(),
+        )
+    }
+
+
+def conform(tbl, schema):
+    """``tbl`` (an Arrow table or record batch) in the Arrow ``schema``:
+    columns it lacks (files written before an ``alter``) come back null,
+    the others are cast (pyarrow reads Spark's timestamps UTC-zoned, or
+    as INT96 nanoseconds)."""
+    names = set(tbl.schema.names)
+    return type(tbl).from_arrays(
+        [
+            tbl.column(f.name).cast(f.type)
+            if f.name in names
+            else pa.nulls(tbl.num_rows, f.type)
+            for f in schema
+        ],
+        schema=schema,
+    )
+
+
+def read_positions(path: str, positions: list[int], schema):
+    """The rows at the sorted positions ``positions``
+    (``_metadata.row_index``) of the data file at ``path``, in the Arrow
+    ``schema`` (:func:`conform`). Only the row groups that hold them are
+    read."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
+    sizes = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+    starts = np.cumsum([0] + sizes)
+    pos = np.asarray(positions, np.int64)
+    group = np.searchsorted(starts, pos, side="right") - 1
+    names = set(pf.schema_arrow.names)
+    columns = [n for n in schema.names if n in names]
+    tbl = pa.concat_tables(
+        [
+            pf.read_row_group(g, columns=columns).take(pos[group == g] - starts[g])
+            for g in np.unique(group).tolist()
+        ]
+    )
+    return conform(tbl, schema)
 
 
 def file_uris(df: DataFrame, paths: dict[str, str]) -> dict[str, str]:
@@ -1068,7 +1153,7 @@ class MoonlinkTable:
         return self.manifest
 
     def _resolve(self, rel: str) -> str:
-        return rel if os.path.isabs(rel) else os.path.join(self.data_path, rel)
+        return resolve(self.data_path, rel)
 
     def changes(self, from_lsn: int, to_lsn: int | None = None) -> DataFrame:
         """Change data feed: row-level insert/update/delete between two LSN
@@ -1181,19 +1266,6 @@ class MoonlinkTable:
             )
         broadcast = m.deleted_rows <= DV_BROADCAST_MAX_ROWS
         return drop_positions(df, dv, broadcast, keep_pos), uris
-
-    def _dv_positions(self, m: Manifest, fps):
-        """The ``(file_path, row_index)`` rows of ``m``'s DVs for the
-        manifest paths ``fps``, read with pyarrow on the driver."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        return pq.read_table(
-            [self._resolve(f.path) for f in m.delete_files],
-            schema=pa.schema([("file_path", pa.string()), ("row_index", pa.int64())]),
-            filters=pc.field("file_path").isin(list(fps)),
-        )
 
     def _live_view(
         self,

@@ -60,14 +60,6 @@ def _patch_no_floor():
     return lambda: setattr(textstats, "ensure_parallelism", orig)
 
 
-def _patch_frame_flush():
-    """Restore the pre-r12 per-WAL-frame spool flush (pgwire A/B)."""
-    from moonlink_spark.ingest import pgwire
-
-    pgwire.FLUSH_PER_FRAME = True
-    return lambda: setattr(pgwire, "FLUSH_PER_FRAME", False)
-
-
 def _patch_serial_pool():
     """Serialize every ThreadPoolExecutor (chain-overlap A/B: arm B runs
     the overlapped driver chains sequentially, like the pre-r13 code)."""
@@ -99,7 +91,6 @@ def _patch_serial_pool():
 
 PATCHES = {
     "no_floor": _patch_no_floor,
-    "frame_flush": _patch_frame_flush,
     "serial_pool": _patch_serial_pool,
 }
 

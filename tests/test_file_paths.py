@@ -164,6 +164,37 @@ def test_deletes_lookups_and_exports_under_encoded_paths(spark, tmp_path, key_in
     assert len(blob.position_deletes) == t.manifest.deleted_rows
     assert live_ids(blob.data_files, dead) == sorted(want)
 
+    # DuckDB's DV relation over the RPC blob
+    import duckdb
+
+    from moonlink_spark.integrations.duckdb_provider import live_rows_relation
+
+    con = duckdb.connect()
+    rel = live_rows_relation(con, blob.data_files, dead, "t")
+    rows = con.execute(f"SELECT id FROM ({rel}) ORDER BY id").fetchall()
+    assert [r[0] for r in rows] == sorted(want)
+
+    # the server-less data source applies the same DVs
+    from moonlink_spark.integrations.spark_datasource import register_moonlink_source
+
+    register_moonlink_source(spark)
+    df = spark.read.format("moonlink").option("path", t.path).load()
+    assert ids(df) == sorted(want)
+
+    # the change feed's before-images are the deleted rows, in order
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from moonlink_spark.integrations.spark_datasource import _cdc_events
+
+    events = list(_cdc_events(t.path, t.data_path, 3, 9, to_arrow_schema(t.schema)))
+    deleted = [(lsn, i, v) for kind, lsn, i, v in events if kind == "delete"]
+    assert sorted(deleted) == sorted(
+        [(4, 5, "v5"), (4, 250, "v250"), (5, 7, "v7"), (5, 8, "v8")]
+        + [(6, i, f"v{i}") for i in range(290, 300)]
+        + [(7, 9, "v9"), (9, 1003, "e3")]
+    )
+    assert [i for kind, _, i, _ in events if kind == "insert"] == list(range(1000, 1010))
+
     # a copy of the table directory keeps applying its old DVs
     moved = tmp_path / "moved é%25"
     shutil.copytree(t.path, str(moved))

@@ -257,3 +257,52 @@ def test_malformed_protobuf_fails_as_proto_decode_error():
                 otlp_proto_to_json(sig, data)  # garbage CAN parse as empty
             except ProtoDecodeError:
                 pass  # the only acceptable failure type
+
+
+TRUNCATED_JSON = {
+    "resourceLogs": [
+        {
+            "scopeLogs": [
+                {"logRecords": [{"body": {"stringValue": "hello world payload"}}]}
+            ]
+        }
+    ]
+}
+
+
+def test_truncated_protobuf_body_is_rejected(spark, tmp_path):
+    """A body cut short is malformed, not a shorter message: every
+    non-empty strict prefix of a one-``resourceLogs`` body raises
+    ProtoDecodeError (the empty body is a valid empty request), and the
+    service answers it with HTTP 400 and ingests nothing."""
+    import urllib.error
+
+    from moonlink_spark.sources.converters import ProtoDecodeError
+
+    pb = otlp_json_to_proto("logs", TRUNCATED_JSON)
+    assert otlp_proto_to_json("logs", pb) == TRUNCATED_JSON
+    for n in range(1, len(pb)):
+        with pytest.raises(ProtoDecodeError):
+            otlp_proto_to_json("logs", pb[:n])
+
+    be = MoonlinkBackend(spark, str(tmp_path / "wh"))
+    svc = MoonlinkService(be).start()
+
+    def post(body):
+        req = urllib.request.Request(
+            f"http://127.0.0.1:{svc.port}/otel/v1/logs", data=body, method="POST"
+        )
+        req.add_header("Content-Type", "application/x-protobuf")
+        return urllib.request.urlopen(req)
+
+    try:
+        for cut in (1, 3, 5):
+            with pytest.raises(urllib.error.HTTPError) as err:
+                post(pb[:-cut])
+            assert err.value.code == 400
+        # only the whole body lands a row
+        with post(pb) as resp:
+            assert json.loads(resp.read())["ingested"] == 1
+        assert be.get_table("otel", "logs").scan().count() == 1
+    finally:
+        svc.stop()

@@ -761,3 +761,44 @@ def test_renew_leases_scoped_to_file(spark, tmp_path):
     assert t._version_leases[v1] < now + 10  # orphan NOT extended
     # unscoped renewal (admin) extends everything still active
     assert t.renew_leases(60.0) == 2
+
+
+def test_dv_positions_groups_filters_and_dedups(tmp_path):
+    """``dv_positions`` reads every DV file at once: positions are grouped
+    by manifest path, sorted, each once (a row deleted by two DVs),
+    ``only`` keeps just the named files, and no DV files read nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from moonlink_spark.table.manifest import FileEntry
+    from moonlink_spark.table.table import DV_ARROW_SCHEMA, dv_positions
+
+    ext = str(tmp_path / "ext.parquet")
+    dvs = {
+        "deletes/a.parquet": [
+            ("data/1.parquet", 7),
+            ("data/2.parquet", 3),
+            ("data/1.parquet", 2),
+        ],
+        "deletes/b.parquet": [("data/1.parquet", 7), (ext, 0)],
+    }
+    (tmp_path / "deletes").mkdir()
+    for rel, rows in dvs.items():
+        fps, ris = zip(*rows)
+        tbl = pa.table({"file_path": fps, "row_index": ris}, schema=DV_ARROW_SCHEMA)
+        pq.write_table(tbl, str(tmp_path / rel))
+    files = [FileEntry(path=rel, rows=len(rows)) for rel, rows in dvs.items()]
+    root = str(tmp_path)
+
+    assert dv_positions(root, files) == {
+        "data/1.parquet": [2, 7],
+        "data/2.parquet": [3],
+        ext: [0],
+    }
+    assert dv_positions(root, files, only={"data/1.parquet", ext}) == {
+        "data/1.parquet": [2, 7],
+        ext: [0],
+    }
+    assert dv_positions(root, files, only=["data/9.parquet"]) == {}
+    assert dv_positions(root, files, only=[]) == {}
+    assert dv_positions(root, []) == {}
