@@ -290,6 +290,7 @@ class MoonlinkDataSourceReader(DataSourceReader):
         """Executor-side: stream the file's record batches, mask DV rows,
         align to the table schema (schema evolution: missing columns are
         NULL, matching the native scan). Only pyarrow is required here."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -320,14 +321,16 @@ class MoonlinkDataSourceReader(DataSourceReader):
                 pass
         with pa.ipc.open_stream(partition.schema_ipc) as r:
             target = r.schema
-        deleted = set(partition.deleted)
+        deleted = np.asarray(partition.deleted, dtype=np.int64)  # sorted
         pf = pq.ParquetFile(partition.path)
         offset = 0
         for batch in pf.iter_batches():
             n = batch.num_rows
-            if deleted:
-                mask = [offset + i not in deleted for i in range(n)]
-                batch = batch.filter(pa.array(mask, type=pa.bool_()))
+            lo, hi = np.searchsorted(deleted, [offset, offset + n])
+            if hi > lo:
+                mask = np.ones(n, dtype=bool)
+                mask[deleted[lo:hi] - offset] = False
+                batch = batch.filter(pa.array(mask))
             offset += n
             yield conform(batch, target)
 

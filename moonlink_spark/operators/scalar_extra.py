@@ -47,13 +47,27 @@ def percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-partition value->count buffer build ran on one core; the
     conditional floor spreads the partial phase (1.603 -> 1.389 s
     interleaved, r13; no-op at real split counts) and percentile buffer
-    merges are exact and order-independent."""
+    merges are exact and order-independent.
+
+    One ``percentile`` per column: each call builds its own value->count
+    map, so both price percentiles come from one call with an array of
+    percentages. Same rows; on the 60k-row lineitem of perfbench's
+    ``snapshot_reads`` the shuffle halves and the query runs in about
+    half the time (1062 -> 575 ms, one traced run)."""
     li = ensure_parallelism(load(spark, sf_dir, "lineitem"))
+    price = F.col("price_pct")
     return li.groupBy("l_returnflag").agg(
-        F.percentile("l_extendedprice", F.lit(0.5)).alias("median_price"),
-        F.percentile("l_extendedprice", F.lit(0.95)).alias("p95_price"),
+        F.percentile(
+            "l_extendedprice", F.array(F.lit(0.5), F.lit(0.95))
+        ).alias("price_pct"),
         F.percentile("l_quantity", F.lit(0.5)).alias("median_qty"),
         F.count(F.lit(1)).alias("n"),
+    ).select(
+        "l_returnflag",
+        price[0].alias("median_price"),
+        price[1].alias("p95_price"),
+        "median_qty",
+        "n",
     )
 
 
@@ -82,11 +96,14 @@ def approx_percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.5% relative error of the exact one (accuracy=10000 bounds rank
     error at 1/10000, far tighter than 0.5% in value space on this
     distribution), and the oracle pins it to TRUE — a hash-exact check
-    that the approx path actually lands within its declared tolerance."""
+    that the approx path actually lands within its declared tolerance.
+    Both exact percentiles come from one ``percentile`` call with an
+    array of percentages: one value->count map, not two."""
     li = load(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag").agg(
-        F.percentile("l_extendedprice", F.lit(0.5)).alias("m_exact"),
-        F.percentile("l_extendedprice", F.lit(0.95)).alias("p_exact"),
+        F.percentile(
+            "l_extendedprice", F.array(F.lit(0.5), F.lit(0.95))
+        ).alias("exact"),
         F.percentile_approx(
             "l_extendedprice", F.lit(0.5), F.lit(10000)
         ).alias("m_approx"),
@@ -95,10 +112,11 @@ def approx_percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("p_approx"),
         F.count(F.lit(1)).alias("n"),
     )
+    m_exact, p_exact = F.col("exact")[0], F.col("exact")[1]
     tol = 0.005
     within = (
-        (F.abs(F.col("m_approx") - F.col("m_exact")) / F.col("m_exact") < tol)
-        & (F.abs(F.col("p_approx") - F.col("p_exact")) / F.col("p_exact") < tol)
+        (F.abs(F.col("m_approx") - m_exact) / m_exact < tol)
+        & (F.abs(F.col("p_approx") - p_exact) / p_exact < tol)
     )
     # RAW doubles, no round: Spark `percentile` equals DuckDB
     # quantile_cont bit-for-bit (the exact twin's verified contract), but
@@ -109,8 +127,8 @@ def approx_percentiles_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides changed together, oracle stays hash-exact)
     return agg.select(
         "l_returnflag",
-        F.col("m_exact").cast("double").alias("median_exact"),
-        F.col("p_exact").cast("double").alias("p95_exact"),
+        m_exact.cast("double").alias("median_exact"),
+        p_exact.cast("double").alias("p95_exact"),
         within.alias("approx_within_tol"),
         "n",
     )
@@ -450,8 +468,9 @@ def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     booleans asserting each sketch landed inside its published error bound
     (HLL rsd=0.01 -> 5-sigma band; percentile_approx accuracy=10000 ->
     rank error 1e-4, checked against the exact p40/p60 and p98/max
-    brackets). The oracle pins the booleans TRUE: a broken sketch flips
-    the flag and fails the gate."""
+    brackets, all three from one exact ``percentile`` call). The oracle
+    pins the booleans TRUE: a broken sketch flips the flag and fails the
+    gate."""
     ev = load(spark, sf_dir, "events")
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -459,11 +478,10 @@ def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.approx_count_distinct("user_id", rsd=0.01).alias("hll_users"),
         F.percentile_approx("value", F.lit(0.5), F.lit(10000)).alias("kll_median"),
         F.percentile_approx("value", F.lit(0.99), F.lit(10000)).alias("kll_p99"),
-        F.expr("percentile(value, 0.40D)").alias("p40"),
-        F.expr("percentile(value, 0.60D)").alias("p60"),
-        F.expr("percentile(value, 0.98D)").alias("p98"),
+        F.expr("percentile(value, array(0.40D, 0.60D, 0.98D))").alias("pct"),
         F.max("value").alias("vmax"),
     )
+    p40, p60, p98 = (F.col("pct")[i] for i in range(3))
     return (
         agg.select(
             "event_type",
@@ -473,12 +491,8 @@ def approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.abs(F.col("hll_users") - F.col("exact_users"))
                 <= F.col("exact_users") * F.lit(0.05) + F.lit(1)
             ).alias("hll_ok"),
-            F.col("kll_median").between(F.col("p40"), F.col("p60")).alias(
-                "kll_median_ok"
-            ),
-            F.col("kll_p99").between(F.col("p98"), F.col("vmax")).alias(
-                "kll_p99_ok"
-            ),
+            F.col("kll_median").between(p40, p60).alias("kll_median_ok"),
+            F.col("kll_p99").between(p98, F.col("vmax")).alias("kll_p99_ok"),
         )
         .orderBy("event_type")
     )

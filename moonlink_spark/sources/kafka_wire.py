@@ -32,12 +32,13 @@ protocol layouts (kafka.apache.org/protocol):
   out of the box, on both encode and decode.
 
 Architecture (the honest cluster shape): :class:`KafkaWireBroker` is a
-single-node broker whose topic-partition logs are the SAME
-length-prefixed segment files the file queue uses (``queue.py``
-frames), so everything downstream — ``iter_queue``, ``AvroQueueIngestor``,
-the service's REST ingest — reads broker-written logs unchanged.
-:class:`KafkaWireProducer` / :class:`KafkaWireConsumer` speak the
-protocol from the client side; the consumer exposes the exact
+single-node broker whose topic-partition logs hold the producers'
+RecordBatches verbatim, as a Kafka log segment does: Produce validates
+each batch by a full decode and rewrites only its base offset, and
+Fetch returns the stored batches with no decode, re-encode or CRC on
+the broker — a zstd batch travels to the consumer as the producer
+compressed it. :class:`KafkaWireProducer` / :class:`KafkaWireConsumer`
+speak the protocol from the client side; the consumer exposes the exact
 ``poll()/commit()/committed`` surface of ``FileQueueConsumer``, so the
 ingestion path (``AvroQueueIngestor``) runs over a live socket with no
 changes — swap the consumer, keep the idempotent LSN-floor contract.
@@ -72,12 +73,12 @@ producer-config workaround.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import socket
 import socketserver
 import struct
-import sys
 import threading
 import time
 import uuid
@@ -85,8 +86,6 @@ from functools import partial
 from typing import Any, Iterator
 
 import pyarrow as pa
-
-from moonlink_spark.sources.queue import _NULL_KEY, _frame, _parse_kv
 
 # ---------------------------------------------------------------------------
 # CRC-32C (Castagnoli) — RecordBatch v2 checksums use this, NOT zlib's CRC-32
@@ -121,93 +120,58 @@ def _crc32c_scalar(data: bytes, reg: int = 0xFFFFFFFF) -> int:
     return reg
 
 
-_CRC_BLOCK = 128  # numpy block width; tuned on this host (see SCALE.md)
-_CRC_NP: list | None = None  # [byte_table(np), S0, S1, S2, S3] lazily built
+_CRC_B = 256  # bytes per block of the gather kernel
+_CRC_CHUNK = 256  # blocks per gather: ~1 MB of temporaries at most
+_CRC_GATHER: list | None = None  # [flat T, row offsets, T[0..3] as lists]
 
 
-def _crc_np_tables():
-    """numpy byte table + the shift-by-_CRC_BLOCK operator as 4 tables
-    (CRC is GF(2)-linear: advancing the register across B zero bytes is
-    a linear map; its action is precomputed on the 32 basis bits and
-    expanded to per-byte lookup tables)."""
-    global _CRC_NP
-    if _CRC_NP is None:
+def _crc_gather_tables():
+    """``T[j][b]``: the register after one ``_CRC_B``-byte block, started
+    at 0, whose only non-zero byte is ``b`` at position ``j``. CRC is
+    GF(2)-linear, so a block's register is the XOR of ``T[j][block[j]]``
+    over ``j``. Starting a block at register ``r`` is the same as
+    XOR-ing ``r``'s four little-endian bytes into its first four bytes,
+    so ``T[0..3]`` is also the shift-by-block operator of the fold."""
+    global _CRC_GATHER
+    if _CRC_GATHER is None:
         import numpy as np
 
-        tbl = _crc32c_table()
-        basis = []
-        for bit in range(32):
-            c = 1 << bit
-            for _ in range(_CRC_BLOCK):
-                c = tbl[c & 0xFF] ^ (c >> 8)
-            basis.append(c)
-        S = np.zeros((4, 256), dtype=np.uint32)
-        for k in range(4):
-            for b in range(256):
-                acc = 0
-                for j in range(8):
-                    if b & (1 << j):
-                        acc ^= basis[8 * k + j]
-                S[k][b] = acc
-        _CRC_NP = [np.array(tbl, dtype=np.uint32), S[0], S[1], S[2], S[3]]
-    return _CRC_NP
+        tbl = np.array(_crc32c_table(), dtype=np.uint32)
+        t = np.empty((_CRC_B, 256), dtype=np.uint32)
+        t[-1] = tbl
+        for j in range(_CRC_B - 2, -1, -1):  # one zero byte further
+            t[j] = tbl[t[j + 1] & 0xFF] ^ (t[j + 1] >> 8)
+        offs = np.arange(_CRC_B, dtype=np.uint32) * 256
+        _CRC_GATHER = [t.ravel(), offs] + [t[k].tolist() for k in range(4)]
+    return _CRC_GATHER
 
 
 def crc32c(data: bytes) -> int:
     """CRC-32C (Castagnoli, reflected — the RecordBatch checksum).
 
-    Fast path: CRC is linear over GF(2), so the blocks' registers are
-    computed in PARALLEL with numpy (each block starting from register
-    0), then folded left-to-right through the precomputed
-    shift-by-block operator. ~6x the scalar loop on this host; the
-    scalar loop remains the small-input and no-numpy path, and both
-    agree bit-for-bit (RFC 3720 vectors in tests)."""
-    n = len(data)
-    nb = n // _CRC_BLOCK
+    Each block's register (started at 0) is one numpy gather from
+    ``T`` plus an XOR-reduce; the block registers then fold left to
+    right through the shift-by-block operator. Bit-for-bit equal to the
+    scalar loop, which remains the path for inputs under four blocks."""
+    nb = len(data) // _CRC_B
     if nb < 4:
         return _crc32c_scalar(data) ^ 0xFFFFFFFF
-    try:
-        import numpy as np
-    except ImportError:  # pragma: no cover - numpy ships in this env
-        return _crc32c_scalar(data) ^ 0xFFFFFFFF
-    bt, s0, s1, s2, s3 = _crc_np_tables()
-    c = np.zeros(nb, np.uint32)
-    if sys.byteorder == "little":
-        # transpose in 8-byte units: moving u64s is ~6x faster than the
-        # byte-wise strided transpose on this host (0.11 s vs 0.70 s at
-        # 8 MiB — the copy dominated the whole CRC); byte j of a block
-        # is then (u64[j//8] >> 8*(j%8)) & 0xFF, a vectorized extract
-        ut = np.ascontiguousarray(
-            np.frombuffer(data, np.uint64, count=nb * (_CRC_BLOCK // 8))
-            .reshape(nb, _CRC_BLOCK // 8)
-            .T
-        )
-        for j in range(_CRC_BLOCK):
-            col = (
-                (ut[j >> 3] >> np.uint64(8 * (j & 7))) & np.uint64(0xFF)
-            ).astype(np.uint32)
-            c = bt[(c ^ col) & 0xFF] ^ (c >> 8)
-    else:  # pragma: no cover - big-endian host
-        cols = np.ascontiguousarray(
-            np.frombuffer(data, np.uint8, count=nb * _CRC_BLOCK)
-            .reshape(nb, _CRC_BLOCK)
-            .T
-        )
-        for j in range(_CRC_BLOCK):
-            c = bt[(c ^ cols[j]) & 0xFF] ^ (c >> 8)
+    import numpy as np
+
+    flat, offs, s0, s1, s2, s3 = _crc_gather_tables()
     r = 0xFFFFFFFF
-    for bc in c.tolist():
-        r = (
-            int(
-                s0[r & 0xFF]
-                ^ s1[(r >> 8) & 0xFF]
-                ^ s2[(r >> 16) & 0xFF]
-                ^ s3[r >> 24]
+    for first in range(0, nb, _CRC_CHUNK):
+        m = min(_CRC_CHUNK, nb - first)
+        blocks = np.frombuffer(
+            data, np.uint8, count=m * _CRC_B, offset=first * _CRC_B
+        ).reshape(m, _CRC_B)
+        regs = np.bitwise_xor.reduce(flat.take(blocks + offs), axis=1)
+        for c in regs.tolist():
+            r = (
+                s0[r & 0xFF] ^ s1[(r >> 8) & 0xFF]
+                ^ s2[(r >> 16) & 0xFF] ^ s3[r >> 24] ^ c
             )
-            ^ bc
-        )
-    r = _crc32c_scalar(data[nb * _CRC_BLOCK :], r)
-    return r ^ 0xFFFFFFFF
+    return _crc32c_scalar(data[nb * _CRC_B :], r) ^ 0xFFFFFFFF
 
 
 # ---------------------------------------------------------------------------
@@ -250,18 +214,6 @@ def _varint_cache() -> list[bytes]:
         if not _VARINT_CACHE:
             _VARINT_CACHE.extend(local)
     return _VARINT_CACHE
-
-
-def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    v = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return _unzigzag(v), pos
-        shift += 7
 
 
 def _string(s: str) -> bytes:
@@ -467,8 +419,8 @@ def encode_record_batch(
         if first_timestamp_ms is None
         else first_timestamp_ms
     )
-    # hot loop (also the broker's per-fetch re-encode): varints come
-    # from a small-value cache and records are assembled with one join
+    # hot loop (every produce): varints come from a small-value cache
+    # and records are assembled with one join
     vc = _varint_cache()
     vlast = len(vc) - 1
     null_len = b"\x01"  # varint(-1) zigzagged
@@ -645,6 +597,11 @@ _ERR_UNKNOWN_MEMBER = 25
 _ERR_REBALANCE_IN_PROGRESS = 27
 _ERR_UNSUPPORTED_SASL_MECHANISM = 33
 _ERR_SASL_AUTH_FAILED = 58
+_ERR_INVALID_RECORD = 87
+# baseOffset(8) batchLength(4) partitionLeaderEpoch(4) magic(1) crc(4)
+# attributes(2) lastOffsetDelta(4) firstTimestamp(8) maxTimestamp(8)
+# producerId(8) producerEpoch(2) baseSequence(4) recordCount(4)
+_BATCH_HEADER = 61
 
 
 class SaslAuthError(Exception):
@@ -792,13 +749,15 @@ class _GroupCoordinator:
 
 
 class _PartitionLog:
-    """One topic-partition over the file-queue segment format: frames of
-    ``u32 len | u64 offset | u32 keylen | key | value`` appended to
-    ``segment-broker.log`` — byte-compatible with ``queue.iter_queue``,
-    so non-wire consumers (the ingestor, tests) read broker logs as a
-    plain queue directory."""
+    """One topic-partition: the producers' RecordBatch v2 batches stored
+    verbatim in ``segment-broker.log``, as a Kafka log segment holds
+    them. Produce rewrites only each batch's ``baseOffset`` (bytes 0-7,
+    outside the CRC); fetch serves the stored bytes unchanged.
 
-    _INDEX_EVERY = 1024  # sparse offset->file-position index stride
+    ``_index`` has one ``(base offset, end offset, file position,
+    length)`` entry per batch in offset order. Appends extend it after
+    their fsync, together with ``next_offset``, so a fetch never sees an
+    unpublished batch. A restart rebuilds it from the batch headers."""
 
     def __init__(self, log_dir: str):
         self.dir = log_dir
@@ -806,107 +765,121 @@ class _PartitionLog:
         self.path = os.path.join(log_dir, "segment-broker.log")
         self.lock = threading.Lock()
         self.next_offset = 0
-        # sparse in-memory (offset, file_pos) index so a fetch seeks
-        # near its start offset instead of rescanning the whole file —
-        # a draining consumer is otherwise O(log^2) (a real broker has
-        # the same structure: the .index file beside each segment)
-        self._index: list[tuple[int, int]] = []
-        self._init_scan()
+        self._index: list[tuple[int, int, int, int]] = []
+        self._size = 0  # bytes of whole batches in the file
+        if os.path.exists(self.path):
+            self._recover()
 
-    def _init_scan(self) -> None:
-        # restart scan: recover next_offset AND seed the sparse index by
-        # reading frame HEADERS only — payloads are seeked over, so a
-        # broker restart on a deep log never parses old record bytes
-        if not os.path.exists(self.path):
-            return
+    def _recover(self) -> None:
         size = os.path.getsize(self.path)
+        pos = 0
         with open(self.path, "rb") as fh:
-            pos = 0
-            while pos + 4 <= size:
-                head = fh.read(4)
-                if len(head) < 4:
-                    return
-                (flen,) = struct.unpack(">I", head)
-                if flen < 12 or pos + 4 + flen > size:
-                    return  # torn tail
-                (off,) = struct.unpack(">Q", fh.read(8))
-                if off % self._INDEX_EVERY == 0 and (
-                    not self._index or off > self._index[-1][0]
-                ):
-                    self._index.append((off, pos))
-                if off >= self.next_offset:
-                    self.next_offset = off + 1
-                pos += 4 + flen
+            while pos < size:
                 fh.seek(pos)
+                head = fh.read(_BATCH_HEADER)
+                if len(head) < _BATCH_HEADER:
+                    break  # torn tail
+                base, blen, _epoch, magic, crc = struct.unpack_from(
+                    ">qiibI", head
+                )
+                if magic != 2 or blen < _BATCH_HEADER - 12:
+                    raise ValueError(
+                        f"{self.path}: not a RecordBatch v2 log (magic "
+                        f"{magic}, length {blen} at byte {pos})"
+                    )
+                if pos + 12 + blen > size:
+                    break  # torn tail
+                if pos == 0:  # later batches: headers only
+                    rest = fh.read(12 + blen - _BATCH_HEADER)
+                    if crc32c(head[21:] + rest) != crc:
+                        raise ValueError(
+                            f"{self.path}: not a RecordBatch v2 log (bad "
+                            f"CRC-32C on the first batch)"
+                        )
+                (last,) = struct.unpack_from(">i", head, 23)
+                self._index.append((base, base + last + 1, pos, 12 + blen))
+                pos += 12 + blen
+        if pos == 0 and size:
+            raise ValueError(
+                f"{self.path}: not a RecordBatch v2 log ({size} bytes, "
+                f"no whole batch)"
+            )
+        if pos < size:  # a crash cut the last append short
+            os.truncate(self.path, pos)
+        self._size = pos
+        if self._index:
+            self.next_offset = self._index[-1][1]
 
-    def _seek_pos(self, index_snapshot: list[tuple[int, int]], from_offset: int) -> int:
-        import bisect
-
-        i = bisect.bisect_right(index_snapshot, (from_offset, 1 << 62)) - 1
-        return index_snapshot[i][1] if i >= 0 else 0
-
-    def _record_index(self, off: int, pos: int) -> None:
-        # The broker serves each connection on its own thread, so two
-        # concurrent fetches can race here: append only under the lock,
-        # and only if it keeps the index strictly sorted (a concurrent
-        # scan may have indexed this offset already).
+    def append(self, batches: list[bytes]) -> int:
+        """Store validated batches under one fsync; -> the first one's
+        base offset."""
         with self.lock:
-            if not self._index or off > self._index[-1][0]:
-                self._index.append((off, pos))
-
-    def _scan(self, from_offset: int, hw: int):
-        # ``hw`` bounds the scan: ``append`` writes its frames before it
-        # publishes ``next_offset``, so frames at or past the caller's
-        # high-water mark may be on disk but are not committed yet
-        if not os.path.exists(self.path):
-            return
-        # Snapshot the index once, lock-free readers never see a
-        # mid-mutation list (list reference swap is atomic in CPython,
-        # and _record_index only ever appends in sorted order).
-        snapshot = self._index[:]
-        with open(self.path, "rb") as fh:
-            pos = self._seek_pos(snapshot, from_offset)
-            fh.seek(pos)
-            last_indexed = snapshot[-1][0] if snapshot else None
-            while True:
-                head = fh.read(4)
-                if len(head) < 4:
-                    return
-                (flen,) = struct.unpack(">I", head)
-                frame = fh.read(flen)
-                if len(frame) < flen:
-                    return  # torn tail
-                off, klen = struct.unpack_from(">QI", frame, 0)
-                if off >= hw:
-                    return
-                if last_indexed is None or off > last_indexed:
-                    if off % self._INDEX_EVERY == 0:
-                        self._record_index(off, pos)
-                        last_indexed = off
-                pos += 4 + flen
-                key, value = _parse_kv(klen, frame[12:])
-                if off >= from_offset:
-                    yield off, key, value
-
-    def append(self, records: list[tuple[bytes | None, bytes]]) -> int:
-        with self.lock:
-            base = self.next_offset
+            base = off = self.next_offset
+            pos = self._size
+            out, entries = [], []
+            for b in batches:
+                (last,) = struct.unpack_from(">i", b, 23)
+                out.append(struct.pack(">q", off) + b[8:])
+                entries.append((off, off + last + 1, pos, len(b)))
+                off += last + 1
+                pos += len(b)
             with open(self.path, "ab") as fh:
-                for i, (key, value) in enumerate(records):
-                    fh.write(_frame(base + i, key, value))
+                fh.truncate(self._size)  # bytes a failed append left
+                fh.write(b"".join(out))
                 fh.flush()
                 os.fsync(fh.fileno())
-            self.next_offset = base + len(records)
+            self._index.extend(entries)
+            self._size = pos
+            self.next_offset = off
             return base
 
-    def read(self, from_offset: int, max_bytes: int, hw: int) -> list:
-        out, size = [], 0
-        for off, key, value in self._scan(from_offset, hw):
-            out.append((off, key, value))
-            size += (len(value) if value else 0) + (len(key) if key else 0) + 32
-            if size >= max_bytes:
-                break
-        return out
+    def read(self, from_offset: int, max_bytes: int, hw: int) -> bytes:
+        """The stored batches from the one holding ``from_offset`` on,
+        each ending at or below ``hw``, within ``max_bytes`` — but at
+        least one batch, however large (KIP-74)."""
+        idx = self._index
+        n = len(idx)  # entries a concurrent append adds are not read
+        i = max(0, bisect.bisect_right(idx, (from_offset, 1 << 63), 0, n) - 1)
+        if i < n and idx[i][1] <= from_offset:
+            i += 1
+        j, total = i, 0
+        while j < n and idx[j][1] <= hw and (
+            j == i or total + idx[j][3] <= max_bytes
+        ):
+            total += idx[j][3]
+            j += 1
+        if j == i:
+            return b""
+        with open(self.path, "rb") as fh:
+            fh.seek(idx[i][2])
+            return fh.read(total)
+
+
+def _split_batches(rset: bytes) -> list[bytes] | None:
+    """A produced record set as its batches, each validated by a full
+    decode (magic, CRC-32C, record framing, codec: ValueError). None when
+    the set is not whole batches or a batch's offset deltas are not
+    ``0..n-1`` with ``lastOffsetDelta == n-1``: stored as-is, such a
+    batch would serve offsets the log never assigned."""
+    out = []
+    pos = 0
+    while pos < len(rset):
+        if pos + _BATCH_HEADER > len(rset):
+            return None
+        (blen,) = struct.unpack_from(">i", rset, pos + 8)
+        end = pos + 12 + blen
+        if blen < _BATCH_HEADER - 12 or end > len(rset):
+            return None
+        batch = rset[pos:end]
+        (base,) = struct.unpack_from(">q", batch, 0)
+        (last,) = struct.unpack_from(">i", batch, 23)
+        (count,) = struct.unpack_from(">i", batch, 57)
+        deltas = [o - base for o, _k, _v in decode_record_batches(batch)]
+        if count < 1 or last != count - 1 or deltas != list(range(count)):
+            return None
+        out.append(batch)
+        pos = end
+    return out
 
 
 class KafkaWireBroker:
@@ -979,7 +952,8 @@ class KafkaWireBroker:
             return self._logs[key]
 
     def topic_dir(self, topic: str, partition: int = 0) -> str:
-        """The partition's queue directory (for non-wire readers)."""
+        """The partition's log directory: ``segment-broker.log`` there
+        holds its stored RecordBatches (see :class:`_PartitionLog`)."""
         return os.path.join(self.log_dir, f"{topic}-{partition}")
 
     def _topics(self) -> dict[str, list[int]]:
@@ -1208,12 +1182,13 @@ class KafkaWireBroker:
                 (part,) = struct.unpack_from(">i", req, pos)
                 pos += 4
                 rset, pos = _read_bytes32(req, pos)
-                records = [
-                    (k, v) for _off, k, v in decode_record_batches(rset or b"")
-                ]
                 log = self.log(topic, part, create=True)
-                base = log.append(records) if records else log.next_offset
-                results.append((topic, part, _ERR_NONE, base))
+                batches = _split_batches(rset or b"")
+                if batches is None:
+                    results.append((topic, part, _ERR_INVALID_RECORD, -1))
+                else:
+                    base = log.append(batches) if batches else log.next_offset
+                    results.append((topic, part, _ERR_NONE, base))
         by_topic: dict[str, list] = {}
         for t, p, e, b in results:
             by_topic.setdefault(t, []).append((p, e, b))
@@ -1252,15 +1227,9 @@ class KafkaWireBroker:
                 if fetch_off > hw:
                     parts.append((part, _ERR_OFFSET_OUT_OF_RANGE, hw, b""))
                     continue
-                msgs = log.read(fetch_off, pmax, hw)
-                rset = b""
-                if msgs:
-                    # broker offsets are contiguous; a single batch with
-                    # per-record offset deltas reproduces them exactly
-                    rset = encode_record_batch(
-                        msgs[0][0], [(k, v) for _o, k, v in msgs]
-                    )
-                parts.append((part, _ERR_NONE, hw, rset))
+                parts.append(
+                    (part, _ERR_NONE, hw, log.read(fetch_off, pmax, hw))
+                )
             out_topics.append((topic, parts))
         out = struct.pack(">i", 0)  # throttle_time_ms
         out += struct.pack(">i", len(out_topics))
@@ -1670,12 +1639,12 @@ class KafkaWireConsumer:
         self.topic = topic
         self.partition = partition
         self.group = group
-        # adaptive per-message byte estimate (real clients size their
-        # fetch via max.partition.fetch.bytes the same way): the wire
-        # request asks for ~max_messages worth of bytes, not the 8 MiB
-        # cap — otherwise every poll on a deep log makes the broker
-        # read+encode ~5x the records the client will keep (measured
-        # 23k -> 99k msg/s on a 200k-message drain, SCALE.md §9)
+        # adaptive wire-bytes-per-record estimate (real clients size
+        # their fetch via max.partition.fetch.bytes the same way): the
+        # request asks for ~max_messages worth of stored batch bytes, not
+        # the 8 MiB cap — otherwise every poll on a deep log makes the
+        # broker read and send ~5x the records the client will keep
+        # (measured 23k -> 99k msg/s on a 200k-message drain, SCALE.md §9)
         self._avg_msg_bytes = 128
 
     @property
@@ -1711,7 +1680,7 @@ class KafkaWireConsumer:
         # right-size the request: ask for ~max_messages worth of bytes
         # (adaptive estimate, x1.25 headroom), bounded by the caller's cap —
         # never the cap itself, which on a deep log makes the broker
-        # read + encode records this call will discard
+        # read and send records this call will discard
         want = min(
             max_bytes,
             max(64 << 10, max_messages * self._avg_msg_bytes * 5 // 4),
@@ -1743,18 +1712,19 @@ class KafkaWireConsumer:
                 out.append((off, key, value))
                 if len(out) >= max_messages:
                     break  # stop decoding what we will not keep
-        if out:
-            # update the sizing estimate from the records themselves
-            # (~24 B varint/framing overhead per record on the wire)
-            sample = out[:256]
-            self._avg_msg_bytes = max(
-                32,
-                sum(
-                    (len(k) if k else 0) + (len(v) if v else 0) + 24
-                    for _o, k, v in sample
-                )
-                // len(sample),
-            )
+        # update the sizing estimate from the whole batches received:
+        # their bytes on the wire (compressed, if the producer compressed)
+        # over the records they hold, read from the batch headers
+        data = rset or b""
+        end = nrec = 0
+        while end + _BATCH_HEADER <= len(data):
+            (blen,) = struct.unpack_from(">i", data, end + 8)
+            if end + 12 + blen > len(data):
+                break
+            nrec += struct.unpack_from(">i", data, end + 57)[0]
+            end += 12 + blen
+        if nrec > 0:
+            self._avg_msg_bytes = max(1, end // nrec)
         return out
 
     def commit(self, next_offset: int) -> None:

@@ -585,24 +585,13 @@ class AvroQueueIngestor:
         # that merges the already-applied batch WITH newly produced
         # messages must drop the applied prefix — a batch-level check
         # alone would re-append it (duplicates). The floor is the
-        # manifest-recorded applied offset (falls back to the legacy
-        # LSN derivation for tables last written by older code).
+        # manifest-recorded applied offset, never one derived from the
+        # LSN: a FOREIGN writer's commit (streaming batch, REST) has an
+        # LSN that is not offset-derived, and deriving a floor from it
+        # skipped every queued message. No property means nothing is
+        # recorded as applied.
         m = self.table.manifest
-        if self.APPLIED_OFFSET_PROP in m.properties:
-            applied_floor = int(m.properties[self.APPLIED_OFFSET_PROP])
-        elif m.operation == "avro-queue":
-            # legacy pre-property table whose LAST commit came from this
-            # queue path: its LSN is offset-derived, so the derivation
-            # inverts cleanly
-            applied_floor = self.table.last_lsn - self.lsn_base - 1
-        else:
-            # a FOREIGN writer owns the last commit (streaming batch,
-            # REST): its LSN is not offset-derived — deriving a floor
-            # from it skipped every queued message and then committed
-            # the group offset past them: silent permanent loss
-            # (review r10). No property + foreign commit = nothing
-            # recorded as applied.
-            applied_floor = -1
+        applied_floor = int(m.properties.get(self.APPLIED_OFFSET_PROP, -1))
         # tombstone policy: a null-value record carries no Avro datum to
         # decode. Moonlink deletes are expressed through the CDC `op`
         # field inside the datum (ingest/cdc.py), not through

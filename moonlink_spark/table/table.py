@@ -1298,30 +1298,23 @@ class MoonlinkTable:
     # ------------------------------------------------------------------ #
 
     def _write_rows_file(self, rows: list[dict[str, Any]]) -> list[FileEntry]:
-        """Fast path: flush the row buffer to ONE parquet file via pyarrow
-        on the driver — no Spark job for small REST/CDC batches (parity
+        """Flush the row buffer to ONE parquet file via pyarrow on the
+        driver — no Spark job for small REST/CDC batches (parity
         DiskSliceWriter flushing the mem-slice)."""
-        schema = self.schema
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-            # columnar projection, not row dicts: from_pylist rebuilt a
-            # dict per row (plus a fieldNames() call per row) before
-            # pyarrow transposed it anyway — ~3x the CPU of handing each
-            # column as one list to the C conversion path. Same values,
-            # same schema coercion, same None handling (r13; this is the
-            # per-commit floor of the row-buffer fast path)
-            names = schema.fieldNames()
-            tbl = pa.Table.from_pydict(
-                {f: [r.get(f) for r in rows] for f in names},
-                schema=to_arrow_schema(schema),
-            )
-            return self._write_arrow_file(tbl)
-        except Exception:
-            # fall back to the Spark writer on any conversion edge case
-            df = self.spark.createDataFrame(rows, schema)
-            return self._write_df_files(df.coalesce(1))
+        # columnar projection, not row dicts: from_pylist rebuilt a dict
+        # per row (plus a fieldNames() call per row) before pyarrow
+        # transposed it anyway — ~3x the CPU of handing each column as
+        # one list to the C conversion path. A row pyarrow cannot convert
+        # raises here; there is no second, Spark-side writer.
+        schema = self.schema
+        tbl = pa.Table.from_pydict(
+            {f: [r.get(f) for r in rows] for f in schema.fieldNames()},
+            schema=to_arrow_schema(schema),
+        )
+        return self._write_arrow_file(tbl)
 
     def _write_arrow_file(self, tbl) -> list[FileEntry]:
         """Write one Arrow table as ONE parquet data file on the driver:

@@ -19,7 +19,7 @@ from moonlink_spark.sources.kafka_wire import (
     decode_record_batches,
     encode_record_batch,
 )
-from moonlink_spark.sources.queue import AvroQueueIngestor, iter_queue
+from moonlink_spark.sources.queue import AvroQueueIngestor
 from moonlink_spark.table.identity import IdentityProp
 from moonlink_spark.table.table import MoonlinkTable
 
@@ -43,52 +43,97 @@ def broker(tmp_path, request, monkeypatch, wire_tls):
 # -- partition log -------------------------------------------------------
 
 
-def test_partition_log_concurrent_scans_no_skip(tmp_path):
-    """ADVICE r7: _scan used to append to the shared sparse offset index
-    lock-free; two concurrent fetches could interleave appends, leave it
-    unsorted, and a later bisect seek past its start offset silently
-    skipped records. The index now builds under the lock from a
-    snapshot; hammer one partition with concurrent full-range reads and
-    assert every offset is always served."""
-    import threading
+def _stored_batches(n_batches: int, first: int = 0) -> list[bytes]:
+    # batches of 1..n_batches records, values tagged with their offset
+    out, off = [], first
+    for size in range(1, n_batches + 1):
+        out.append(
+            encode_record_batch(
+                0, [(None, b"v%d" % (off + i)) for i in range(size)]
+            )
+        )
+        off += size
+    return out
 
+
+def _drain_log(log, start: int, hw: int) -> list[int]:
+    """Offsets a consumer keeps reading ``log`` from ``start`` to ``hw``
+    with small fetches (records below the fetch offset are dropped)."""
+    got, floor = [], start
+    while floor < hw:
+        data = log.read(floor, 64, hw)
+        assert data, f"no batch served at {floor} < hw {hw}"
+        offs = [o for o, _k, _v in decode_record_batches(data) if o >= floor]
+        got += offs
+        floor = offs[-1] + 1
+    assert log.read(floor, 64, hw) == b""
+    return got
+
+
+def test_partition_log_concurrent_fetches_no_skip(tmp_path):
+    """The per-batch index under concurrent fetches and appends: readers
+    starting on a batch boundary, inside a batch and past the last batch
+    are served every offset once, never a batch ending past their
+    high-water mark; a restart rebuilds ``next_offset`` and the index
+    from the batch headers alone."""
     from moonlink_spark.sources.kafka_wire import _PartitionLog
 
     log = _PartitionLog(str(tmp_path / "t-0"))
-    n = 5000  # > _INDEX_EVERY stride several times over
-    log.append([(None, f"v{i}".encode()) for i in range(n)])
-
+    log.append(_stored_batches(60))
+    n = log.next_offset
+    assert n == 60 * 61 // 2
+    boundaries = [base for base, _end, _pos, _len in log._index]
     errors: list[str] = []
 
     def _reader(start: int) -> None:
         for _ in range(3):
-            got = [off for off, _k, _v in log._scan(start, n)]
-            want = list(range(start, n))
-            if got != want:
-                errors.append(
-                    f"scan from {start}: {len(got)} rows, "
-                    f"first={got[:3]}, expected {len(want)}"
-                )
+            got = _drain_log(log, start, n)
+            if got != list(range(start, n)):
+                errors.append(f"from {start}: {len(got)} offsets, {got[:3]}")
+            hw = log.next_offset  # a moving mark: whole batches below it
+            data = log.read(0, 1 << 30, hw)
+            offs = [o for o, _k, _v in decode_record_batches(data)]
+            if offs != list(range(hw)):
+                errors.append(f"hw {hw}: served {len(offs)} offsets")
 
-    threads = [
-        threading.Thread(target=_reader, args=(s,))
-        for s in (0, 1, 1023, 1024, 2500, 4999) * 4
-    ]
+    def _appender() -> None:
+        for _ in range(20):
+            log.append(_stored_batches(3, log.next_offset))
+
+    starts = (0, 1, boundaries[10], boundaries[10] + 3, boundaries[-1], n)
+    threads = [threading.Thread(target=_reader, args=(s,)) for s in starts * 3]
+    threads.append(threading.Thread(target=_appender))
     for t in threads:
         t.start()
     for t in threads:
         t.join()
     assert not errors, errors[:5]
-    # the index stayed sorted (bisect's precondition)
-    assert log._index == sorted(log._index)
+    assert log.read(log.next_offset, 1 << 20, log.next_offset) == b""
 
-    # restart (header-only scan): offset recovered, index seeded, and a
-    # seeking read lands exactly on its start offset
+    # restart: the index and next_offset come back from the headers,
+    # and a fetch from inside a batch returns the same stored bytes
     log2 = _PartitionLog(str(tmp_path / "t-0"))
-    assert log2.next_offset == n
-    assert log2._index == sorted(log2._index) and log2._index
-    tail = log2.read(n - 100, 8 << 20, n)
-    assert [o for o, _k, _v in tail] == list(range(n - 100, n))
+    assert log2.next_offset == log.next_offset == n + 20 * 6
+    assert log2._index == log._index
+    mid = boundaries[30] + 2
+    assert log2.read(mid, 4096, log2.next_offset) == log.read(
+        mid, 4096, log.next_offset
+    )
+    assert _drain_log(log2, mid, log2.next_offset) == list(
+        range(mid, log2.next_offset)
+    )
+
+    # a crash mid-append leaves a torn batch: recovery cuts it off and
+    # the next append lands where it started
+    size = os.path.getsize(log2.path)
+    with open(log2.path, "ab") as fh:
+        fh.write(_stored_batches(4)[-1][:30])
+    log3 = _PartitionLog(str(tmp_path / "t-0"))
+    assert os.path.getsize(log3.path) == size
+    assert log3.append(_stored_batches(2)) == log2.next_offset
+    assert _drain_log(log3, 0, log3.next_offset) == list(
+        range(log3.next_offset)
+    )
 
 
 def test_fetch_request_is_right_sized_on_deep_logs(tmp_path):
@@ -138,8 +183,6 @@ def test_fetch_never_serves_past_high_water_mark(tmp_path, monkeypatch):
     cons = KafkaWireConsumer(b.host, b.port, "t")
     try:
         prod.send("t", [(None, b"v0")])
-        # warm-up: indexing offset 0 takes the log lock, which the
-        # blocked append below holds
         assert [o for o, _k, _v in cons.fetch(0)] == [0]
 
         in_fsync, release = threading.Event(), threading.Event()
@@ -178,6 +221,20 @@ def test_crc32c_known_vectors():
     assert crc32c(b"") == 0
     assert crc32c(b"\x00" * 32) == 0x8A9136AA
     assert crc32c(b"\xff" * 32) == 0x62A8AB43
+
+
+def test_crc32c_gather_kernel_matches_scalar():
+    """The block-gather kernel equals the bytewise loop at every length
+    around the block edges and at batch-sized and large inputs."""
+    import random
+
+    from moonlink_spark.sources.kafka_wire import _CRC_B, _crc32c_scalar
+
+    rng = random.Random(7)
+    sizes = list(range(3 * _CRC_B + 2)) + [27 * 1024, 300_000, 8 << 20]
+    for n in sizes:
+        data = rng.randbytes(n)
+        assert crc32c(data) == _crc32c_scalar(data) ^ 0xFFFFFFFF, n
 
 
 def test_record_batch_roundtrip():
@@ -298,14 +355,281 @@ def test_offsets_survive_broker_restart(tmp_path):
         b2.stop()
 
 
-def test_broker_log_is_a_plain_queue_dir(broker):
-    """Wire-produced logs read back through queue.iter_queue unchanged —
-    the broker is a socket front-end over the same segment format."""
-    prod = KafkaWireProducer(broker.host, broker.port)
-    prod.send("interop", [(b"a", b"1"), (None, b"2")])
+def _raw_fetch(broker, topic: str, offset: int, max_bytes: int) -> bytes:
+    """The broker's Fetch v4 response body for one partition."""
+    from moonlink_spark.sources.kafka_wire import _string
+
+    body = (
+        struct.pack(">iiii", -1, 0, 0, max_bytes)
+        + b"\x00"
+        + struct.pack(">i", 1)
+        + _string(topic)
+        + struct.pack(">i", 1)
+        + struct.pack(">iqi", 0, offset, max_bytes)
+    )
+    return broker._fetch(body, 0)
+
+
+def _served(resp: bytes) -> bytes:
+    """The record set of a one-partition Fetch v4 response."""
+    from moonlink_spark.sources.kafka_wire import _read_bytes32, _read_string
+
+    _t, pos = _read_string(resp, 8)
+    pos += 4 + 22  # partition count; partition, error, hw, lso
+    (naborted,) = struct.unpack_from(">i", resp, pos)
+    rset, _ = _read_bytes32(resp, pos + 4 + max(0, naborted) * 16)
+    return rset or b""
+
+
+def test_broker_stores_produced_batches_verbatim(broker, monkeypatch):
+    """The segment file holds the producer's zstd batches byte for byte,
+    with only the base offset rewritten, and a fetch returns exactly
+    those bytes."""
+    from moonlink_spark.sources import kafka_wire as kw
+
+    sent: list[bytes] = []
+    real_encode = kw.encode_record_batch
+
+    def capture(*a, **k):
+        sent.append(real_encode(*a, **k))
+        return sent[-1]
+
+    monkeypatch.setattr(kw, "encode_record_batch", capture)
+    prod = KafkaWireProducer(broker.host, broker.port, compression="zstd")
+    prod.send("vb", [(b"a", b"1" * 200), (None, b"2" * 200)])
+    assert prod.send("vb", [(b"c", b"3" * 200)]) == 2
     prod.close()
-    msgs = list(iter_queue(broker.topic_dir("interop")))
-    assert [(o, k, v) for o, k, v in msgs] == [(0, b"a", b"1"), (1, None, b"2")]
+    assert all(struct.unpack_from(">h", b, 21)[0] & 0x07 == 4 for b in sent)
+    stored = sent[0] + struct.pack(">q", 2) + sent[1][8:]
+    with open(os.path.join(broker.topic_dir("vb"), "segment-broker.log"), "rb") as fh:
+        assert fh.read() == stored
+    assert _served(_raw_fetch(broker, "vb", 0, 1 << 20)) == stored
+    # from inside the first batch: the whole stored batch, as stored
+    assert _served(_raw_fetch(broker, "vb", 1, 1 << 20)) == stored
+    assert _served(_raw_fetch(broker, "vb", 2, 1 << 20)) == stored[len(sent[0]) :]
+    cons = KafkaWireConsumer(broker.host, broker.port, "vb")
+    assert [(o, k, v[:1]) for o, k, v in cons.fetch(1)] == [
+        (1, None, b"2"),
+        (2, b"c", b"3"),
+    ]
+    cons.close()
+
+
+def test_fetch_starting_inside_a_batch(tmp_path):
+    b = KafkaWireBroker(str(tmp_path / "logs")).start()
+    try:
+        prod = KafkaWireProducer(b.host, b.port)
+        for i in range(0, 15, 5):
+            prod.send("in", [(None, b"v%d" % j) for j in range(i, i + 5)])
+        prod.close()
+        cons = KafkaWireConsumer(b.host, b.port, "in")
+        assert [(o, v) for o, _k, v in cons.fetch(7)] == [
+            (j, b"v%d" % j) for j in range(7, 15)
+        ]
+        assert [o for o, _k, _v in cons.fetch(14)] == [14]
+        assert cons.fetch(15) == []
+        cons.close()
+        # the broker serves the batch holding offset 7 from its start
+        data = _served(_raw_fetch(b, "in", 7, 1 << 20))
+        assert [o for o, _k, _v in decode_record_batches(data)] == list(
+            range(5, 15)
+        )
+    finally:
+        b.stop()
+
+
+def test_first_batch_larger_than_max_bytes(tmp_path):
+    """KIP-74: a fetch returns at least one whole batch even when it is
+    larger than max_bytes, and stops before the next batch that would
+    overrun it."""
+    b = KafkaWireBroker(str(tmp_path / "logs")).start()
+    try:
+        prod = KafkaWireProducer(b.host, b.port)
+        prod.send("big", [(None, b"x" * 50_000), (None, b"y" * 50_000)])
+        prod.send("big", [(None, b"z" * 10)])
+        prod.close()
+        data = _served(_raw_fetch(b, "big", 0, 1000))
+        assert len(data) > 100_000
+        assert [o for o, _k, _v in decode_record_batches(data)] == [0, 1]
+        both = _served(_raw_fetch(b, "big", 0, len(data) + 200))
+        assert [o for o, _k, _v in decode_record_batches(both)] == [0, 1, 2]
+        cons = KafkaWireConsumer(b.host, b.port, "big")
+        assert [o for o, _k, _v in cons.fetch(1, max_bytes=10)] == [1]
+        cons.close()
+    finally:
+        b.stop()
+
+
+def _produce_raw(broker, topic: str, rset: bytes) -> tuple[int, int]:
+    """One Produce v3 request carrying ``rset`` -> (error, base offset)."""
+    from moonlink_spark.sources.kafka_wire import (
+        _bytes32,
+        _nullable_string,
+        _read_string,
+        _string,
+    )
+
+    body = (
+        _nullable_string(None)
+        + struct.pack(">hi", -1, 10_000)
+        + struct.pack(">i", 1)
+        + _string(topic)
+        + struct.pack(">ii", 1, 0)
+        + _bytes32(rset)
+    )
+    prod = KafkaWireProducer(broker.host, broker.port)
+    try:
+        resp = prod._conn.call(0, 3, body, retriable=False)
+    finally:
+        prod.close()
+    _t, pos = _read_string(resp, 4)
+    _part, err, base, _lat = struct.unpack_from(">ihqq", resp, pos + 4)
+    return err, base
+
+
+def test_produce_request_with_several_batches(tmp_path):
+    b = KafkaWireBroker(str(tmp_path / "logs")).start()
+    try:
+        rset = (
+            encode_record_batch(0, [(None, b"a"), (b"k", b"b"), (None, b"c")])
+            + encode_record_batch(0, [(None, b"d"), (None, b"e")], compression="gzip")
+            + encode_record_batch(0, [(None, b"f")], compression="zstd")
+        )
+        assert _produce_raw(b, "multi", rset) == (0, 0)
+        assert _produce_raw(b, "multi", rset) == (0, 6)
+        log = b.log("multi", 0)
+        assert [(s, e) for s, e, _p, _n in log._index] == [
+            (0, 3), (3, 5), (5, 6), (6, 9), (9, 11), (11, 12),
+        ]
+        cons = KafkaWireConsumer(b.host, b.port, "multi")
+        got = cons.fetch(0)
+        assert [(o, v) for o, _k, v in got] == [
+            (i, bytes([c])) for i, c in enumerate(b"abcdefabcdef")
+        ]
+        cons.close()
+    finally:
+        b.stop()
+
+
+def _batch_with_deltas(deltas: list[int], last: int | None = None) -> bytes:
+    """An uncompressed batch whose records carry ``deltas`` as their
+    offset deltas (encode_record_batch always writes 0..n-1)."""
+    from moonlink_spark.sources.kafka_wire import _varint
+
+    recs = b""
+    for d in deltas:
+        body = b"\x00\x00" + _varint(d) + _varint(-1) + _varint(1) + b"x\x00"
+        recs += _varint(len(body)) + body
+    n = len(deltas)
+    tail = struct.pack(
+        ">hiqqqhii", 0, n - 1 if last is None else last, 0, 0, -1, -1, -1, n
+    ) + recs
+    inner = struct.pack(">ibI", -1, 2, crc32c(tail)) + tail
+    return struct.pack(">qi", 0, len(inner)) + inner
+
+
+def test_non_contiguous_deltas_rejected_with_nothing_appended(
+    tmp_path, monkeypatch
+):
+    """A batch is stored as produced, so its offset deltas must be
+    0..n-1 and lastOffsetDelta n-1; anything else gets INVALID_RECORD
+    (87) and no batch of the request is appended."""
+    from moonlink_spark.sources import kafka_wire as kw
+
+    b = KafkaWireBroker(str(tmp_path / "logs")).start()
+    try:
+        good = encode_record_batch(0, [(None, b"ok")])
+        assert _produce_raw(b, "nc", good) == (0, 0)
+        assert list(decode_record_batches(_batch_with_deltas([0, 1])))
+        assert _produce_raw(b, "nc", _batch_with_deltas([0, 1])) == (0, 1)
+        log = b.log("nc", 0)
+        size = os.path.getsize(log.path)
+        for bad in (
+            _batch_with_deltas([0, 2]),
+            _batch_with_deltas([1, 2]),
+            _batch_with_deltas([1, 0]),
+            _batch_with_deltas([0, 1], last=5),
+            good + _batch_with_deltas([0, 0]),  # one bad batch of two
+            good[:-3],  # not whole batches
+        ):
+            assert _produce_raw(b, "nc", bad) == (87, -1)
+        assert os.path.getsize(log.path) == size
+        assert log.next_offset == 3 and len(log._index) == 2
+        # the producer surfaces the error code
+        monkeypatch.setattr(
+            kw, "encode_record_batch", lambda *a, **k: _batch_with_deltas([0, 3])
+        )
+        prod = KafkaWireProducer(b.host, b.port)
+        with pytest.raises(OSError, match="error=87"):
+            prod.send("nc", [(None, b"x")])
+        prod.close()
+        cons = KafkaWireConsumer(b.host, b.port, "nc")
+        assert [o for o, _k, _v in cons.fetch(0)] == [0, 1, 2]
+        cons.close()
+    finally:
+        b.stop()
+
+
+def test_frame_format_segment_fails_loudly(tmp_path):
+    """A segment written in the old per-record file-queue frame format
+    is refused at open, naming the file; nothing is migrated or cut."""
+    from moonlink_spark.sources.kafka_wire import _PartitionLog
+    from moonlink_spark.sources.queue import _frame
+
+    for name, frames in (
+        ("short", [_frame(0, None, b"v")]),
+        ("magic", [_frame(i, b"k", b"value-%d" % i) for i in range(5)]),
+        # byte 16 is 2 and bytes 8-11 a plausible length by chance: the
+        # first batch's CRC refuses it
+        ("crc", [_frame(60, None, b"\x02" + b"v" * 80)]),
+    ):
+        d = tmp_path / name / "t-0"
+        d.mkdir(parents=True)
+        seg = d / "segment-broker.log"
+        seg.write_bytes(b"".join(frames))
+        before = seg.read_bytes()
+        with pytest.raises(ValueError, match="segment-broker.log.*RecordBatch"):
+            _PartitionLog(str(d))
+        assert seg.read_bytes() == before
+
+
+def test_broker_fetch_does_no_per_record_work(tmp_path, monkeypatch):
+    """Fetch serves stored bytes: the broker's ``_fetch`` never encodes,
+    decodes or checksums a batch."""
+    from moonlink_spark.sources import kafka_wire as kw
+
+    b = KafkaWireBroker(str(tmp_path / "logs")).start()
+    try:
+        prod = KafkaWireProducer(b.host, b.port, compression="zstd")
+        for i in range(0, 600, 100):
+            prod.send("cnt", [(None, b"v%d" % j * 40) for j in range(i, i + 100)])
+        prod.close()
+        calls: dict[str, int] = {}
+        for name in ("encode_record_batch", "decode_record_batches", "crc32c"):
+            real = getattr(kw, name)
+
+            def counted(*a, _real=real, _name=name, **k):
+                calls[_name] = calls.get(_name, 0) + 1
+                return _real(*a, **k)
+
+            monkeypatch.setattr(kw, name, counted)
+        served = [
+            _served(_raw_fetch(b, "cnt", off, mb))
+            for off in (0, 50, 100, 599, 600)
+            for mb in (1, 1 << 20)
+        ]
+        assert calls == {}
+        assert sum(map(len, served)) > 0
+        # the counters do count: the consumer's own decode goes through
+        assert [o for o, _k, _v in decode_record_batches(served[1])] == list(
+            range(600)
+        )
+        cons = KafkaWireConsumer(b.host, b.port, "cnt")
+        assert len(cons.fetch(0)) == 600
+        cons.close()
+        assert calls["decode_record_batches"] >= 1 and calls["crc32c"] >= 6
+    finally:
+        b.stop()
 
 
 # -- ingestion e2e ---------------------------------------------------------

@@ -64,6 +64,36 @@ def test_read_live_rows_with_dvs(backend_rpc, spark):
     agg = df.groupBy((df.id % 3).alias("g")).count().collect()
     assert sum(r["count"] for r in agg) == 150
 
+    # one file of several record batches: each batch masks the deleted
+    # positions that fall inside its own row range
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from moonlink_spark.table.table import resolve
+
+    n = 70_000
+    big = be.create_table("db", "big", SCHEMA, IdentityProp.single("id"))
+    big.append_arrow(
+        pa.table(
+            {
+                "id": pa.array(range(n), pa.int64()),
+                "v": pa.array([f"v{i}" for i in range(n)]),
+            },
+            schema=pa.schema(
+                [pa.field("id", pa.int64(), False), pa.field("v", pa.string())]
+            ),
+        )
+    )
+    big.commit(lsn=10)
+    (fe,) = big.manifest.data_files
+    batches = pq.ParquetFile(resolve(big.data_path, fe.path)).iter_batches()
+    assert len(list(batches)) > 1
+    gone = sorted({0, 1, 65_535, 65_536, 65_537, n - 1, *range(7, n, 997)})
+    big.delete_rows([{"id": i} for i in gone])
+    big.commit(lsn=20)
+    ids = [r.id for r in _read(spark, srv, "db", "big").select("id").collect()]
+    assert sorted(ids) == sorted(set(range(n)) - set(gone))
+
 
 def test_lsn_option_time_travel(backend_rpc, spark):
     be, srv = backend_rpc
