@@ -741,7 +741,6 @@ class MoonlinkStreamWriter(DataSourceStreamWriter):
         from moonlink_spark.table.manifest import ManifestStore
 
         props = ManifestStore(self.table_dir).latest().properties
-        last_qid = props.get("stream_writer_query")
         # Per-queryId batch markers (the Delta txnAppId shape): a MAP of
         # queryId -> last committed batch. With only the single shared
         # (batch, query) slot, two writers with different queryIds
@@ -752,16 +751,12 @@ class MoonlinkStreamWriter(DataSourceStreamWriter):
         qmap = dict(props.get("stream_writer_batches") or {})
         if self.query_id is not None:
             last = qmap.get(self.query_id)
-            if last is None and last_qid == self.query_id:
-                # migrate: marker written by a pre-map version of this sink
-                last = props.get("stream_writer_batch")
         else:
             # anonymous writer: legacy single-slot semantics
             last = props.get("stream_writer_batch")
-        # the marker always (re)writes stream_writer_query — a commit
-        # WITHOUT a queryId must clear a previous writer's id, or a later
-        # writer with that id would misattribute this batch number to
-        # itself and skip/abort wrongly
+        # stream_writer_query names the writer whose batch the single
+        # slot holds (None for an anonymous one); a named writer's floor
+        # is read only from the map
         marker = {
             "stream_writer_batch": batchId,
             "stream_writer_query": self.query_id,

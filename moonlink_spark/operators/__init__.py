@@ -246,6 +246,16 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 # so ingest_cached_data_scan and ingest_bulk_load_scan rotate IN;
 # doc_fingerprints and lang_id_heuristic, r9-cohort text operators that
 # run no DV code, rotate OUT. Keepers unchanged.
+# REST-OF-GATE ROTATION: hier_quantizer_assign, dedup_minhash_lsh,
+# lm_fluency_scores, embedding_quantize_rerank and
+# approx_percentiles_by_flag rotate IN. Rotating OUT: five r9-cohort
+# slots green in the last two driver runs whose code no current change
+# touches (pivot_event_type_values, union_all_with_dup_counts,
+# window_topk_parts_per_brand, point_lookup_order,
+# q21_multi_line_order_suppliers). Kept: the keepers, the vector-index
+# queries (the ann_* entries now read their corpus vectors on the
+# driver, and ingest_export_vecindex_ann), ingest_fullrow_delete_one and
+# ingest_cached_data_scan (their relations are now local_frame-built).
 PRIORITY_50 = [
     # ingest / table engine keepers (7) + flagship (1)
     "ingest_scan_at_lsn",
@@ -294,12 +304,13 @@ PRIORITY_50 = [
     # DV-URI anti-join rewrite (2)
     "ingest_cached_data_scan",
     "ingest_bulk_load_scan",
-    # last driver-green r9, preferring no standing bench evidence (10)
-    "pivot_event_type_values",
-    "union_all_with_dup_counts",
-    "window_topk_parts_per_brand",
-    "point_lookup_order",
-    "q21_multi_line_order_suppliers",
+    # rest-of-gate rotation: not gated since r11 or earlier (5)
+    "hier_quantizer_assign",
+    "dedup_minhash_lsh",
+    "lm_fluency_scores",
+    "embedding_quantize_rerank",
+    "approx_percentiles_by_flag",
+    # last driver-green r9, preferring no standing bench evidence (5)
     "pii_pattern_scan",
     "token_counts",
     "multimodal_feature_extract",

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from moonlink_spark.session import local_frame
 from moonlink_spark.table.objcache import ObjectStorageCache
 
 # one cache per (executor process, cache_dir) — the reference's per-node
@@ -240,9 +241,7 @@ class CachedDataPlane:
                             except OSError:
                                 pass
 
-        files_df = spark.createDataFrame(
-            files, "store_path string, rel string"
-        )
+        files_df = local_frame(spark, files, "store_path string, rel string")
         npart = max(1, min(len(files), spark.sparkContext.defaultParallelism))
         return files_df.repartition(npart, "rel").mapInArrow(gen, out_schema)
 
@@ -256,7 +255,7 @@ class CachedDataPlane:
         m = t._resolve_manifest(lsn, None)
         schema = field_schema_to_struct(m.schema_fields)
         if not m.data_files:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         need_pos = bool(m.delete_files)
         df = self._read_files(
             spark,

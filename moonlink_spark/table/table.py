@@ -966,10 +966,14 @@ class MoonlinkTable:
         # multimap find_record semantics.
         live, fp = self._live_view(base, new_files, new_dvs)
         data_cols = schema.fieldNames()
+        del_rows = [tuple(r.get(c) for c in data_cols) for r in rows]
+        # createDataFrame(list)'s type check: pyarrow alone would read
+        # 1.5 into a bigint column as 1
+        verify = T._make_type_verifier(schema)
+        for r in del_rows:
+            verify(r)
         del_df = (
-            self.spark.createDataFrame(
-                [{c: r.get(c) for c in data_cols} for r in rows], schema
-            )
+            local_frame(self.spark, del_rows, schema)
             .groupBy(*data_cols)
             .agg(F.count(F.lit(1)).alias("__n"))
         )

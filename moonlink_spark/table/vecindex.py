@@ -21,8 +21,9 @@ the bucket structure is the IVF inverted list:
   (``build_from_merge`` parity);
 - **query**: served on the driver from the probed clusters' rows of
   the persisted inverted lists (zero assignment recompute); only the
-  query vectors and the shortlist are fetched from the corpus.
-  Candidates are cluster-bounded exactly like the ``ann_ivf_topk``
+  query vectors and the shortlist are fetched from the corpus, with
+  pyarrow when it is a plain parquet read, so a query runs no Spark
+  job. Candidates are cluster-bounded exactly like the ``ann_ivf_topk``
   operator.
 
 Assignment arithmetic is EXACTLY the oracle-checked integer family
@@ -32,6 +33,7 @@ index-served results match the from-scratch computation bit for bit.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -55,6 +57,11 @@ SEG_SORT = ("cluster_id", "vec_id")
 # Most query ids one query_topk call serves: the per-query ADC tables and
 # running shortlists live on the driver.
 MAX_QUERY_BATCH = 1024
+# Most corpus rows (in the row groups left after footer pruning) that
+# _fetch reads on the driver with pyarrow; past it the Spark collect is
+# faster. Set from the crossover measured in SCALE.md §18: 440k-540k
+# rows of 64-d float32 vectors against a collect on local[2].
+DRIVER_FETCH_MAX_ROWS = 500_000
 
 
 def _write_meta(dest: str, meta: dict[str, Any]) -> None:
@@ -410,16 +417,19 @@ def query_topk(
     the rest). A PQ index scores them by ADC in numpy int64 and keeps a
     running top-``rerank`` (default 4*topk) per query by
     ``(adc, vec_id)``: driver memory is O(row group + queries x rerank).
-    A flat index keeps every candidate. The shortlist is fetched in one
-    collect filtered by ``In(vec_id, shortlist)``, scored with the
-    ``_dot``/``_norm`` cosine over a local relation (no job; the doubles
-    of a distributed scan), ranked ``(cos desc, vec_id)`` and rounded
-    to 6 places: two Spark jobs with the query-vector collect.
+    A flat index keeps every candidate. The shortlist's vectors are
+    fetched like the query vectors (:func:`_fetch`: read with pyarrow
+    from a plain parquet corpus, else one collect filtered by
+    ``In(vec_id, ids)``), scored with the ``_dot``/``_norm`` cosine over
+    a local relation (no job; the doubles of a distributed scan), ranked
+    ``(cos desc, vec_id)`` and rounded to 6 places. Over a plain parquet
+    corpus the query runs no Spark job; otherwise two, the query-vector
+    and shortlist collects.
 
     ``rerank=0`` on a PQ index selects PURE-ADC serving: the rank is the
-    integer ADC distance, the corpus is read only for the query vectors,
-    and the schema is (query_id, neighbor_id, adc, rn); SCALE.md §16 has
-    its recall.
+    integer ADC distance, the corpus is read only for the query vectors
+    (no job, or one collect), and the schema is (query_id, neighbor_id,
+    adc, rn); SCALE.md §16 has its recall.
 
     ``query_ids`` is a bounded request: more than ``MAX_QUERY_BATCH`` ids
     raise ``ValueError``; such batches belong to the distributed
@@ -460,7 +470,7 @@ def query_topk(
             ],
             "query_id bigint, neighbor_id bigint, adc bigint, rn bigint",
         )
-    cvec = _fetch(emb, sorted({v for _, vids in lists.values() for v in vids}))
+    cvec = _fetch(emb, list({v for _, vids in lists.values() for v in vids}))
     # vectors keep the CORPUS element type: array<float> would truncate
     # float64 vectors before the cosine
     emb_type = emb.schema["embedding"].dataType.simpleString()
@@ -493,14 +503,135 @@ def query_topk(
 
 
 def _fetch(emb: DataFrame, ids: list[int]) -> dict[int, Any]:
-    """{vec_id: embedding} for ``ids``: one collect filtered by
-    ``In(vec_id, ids)``."""
-    rows = (
-        emb.filter(F.col("vec_id").isin(ids)).select("vec_id", "embedding").collect()
-        if ids
-        else []
-    )
-    return {int(r.vec_id): r.embedding for r in rows}
+    """{vec_id: embedding} for ``ids``. A plain parquet read
+    (:func:`_parquet_files`) is read on the driver with pyarrow
+    (:func:`_read_vectors`), with no Spark job; any other ``emb``, or a
+    read that would decode more than ``DRIVER_FETCH_MAX_ROWS`` rows, is
+    one collect filtered by ``In(vec_id, ids)``. Both legs map alike:
+    ids the corpus lacks and null vec_ids are absent, and an id held by
+    two rows raises ``ValueError`` (Spark orders the splits of several
+    files by size, so "the last one" would differ between legs)."""
+    # an index row built from a null vec_id lists NaN: it names no row.
+    # Sorted after the filter: a NaN leaves sorted() out of order
+    ids = sorted(i for i in ids if not math.isnan(i))
+    if not ids:
+        return {}
+    files = _parquet_files(emb)
+    pairs = None if files is None else _read_vectors(files, ids, _value_type(emb))
+    if pairs is None:
+        pairs = (
+            emb.filter(F.col("vec_id").isin(ids))
+            .select("vec_id", "embedding")
+            .collect()
+        )
+    out: dict[int, Any] = {}
+    for vid, vec in pairs:
+        if int(vid) in out:
+            raise ValueError(f"vec_id {vid} is held by more than one corpus row")
+        out[int(vid)] = vec
+    return out
+
+
+def _node(obj) -> str:
+    return obj.getClass().getSimpleName()
+
+
+def _parquet_files(emb: DataFrame) -> list[str] | None:
+    """The local files of ``emb`` when it is a plain parquet read: its
+    analyzed plan is a parquet ``LogicalRelation`` under nothing but
+    ``Project``s of bare columns, ``vec_id`` and ``embedding`` are not
+    partition columns, and every input file is a ``file`` URI (decoded
+    as ``table.file_uris`` decodes it). None otherwise: a filter, a
+    computed or renamed column, a table scan's DV anti-join or a remote
+    file keeps the Spark collect."""
+    from urllib.parse import unquote, urlsplit
+
+    plan = emb._jdf.queryExecution().analyzed()
+    while _node(plan) == "Project":
+        cols = plan.projectList()
+        if any(
+            _node(cols.apply(i)) != "AttributeReference" for i in range(cols.size())
+        ):
+            return None
+        plan = plan.child()
+    if _node(plan) != "LogicalRelation":
+        return None
+    rel = plan.relation()
+    if (
+        _node(rel) != "HadoopFsRelation"
+        or _node(rel.fileFormat()) != "ParquetFileFormat"
+    ):
+        return None
+    partitions = {c.lower() for c in rel.partitionSchema().fieldNames()}
+    if partitions & {"vec_id", "embedding"}:
+        return None
+    files = []
+    for uri in emb.inputFiles():
+        u = urlsplit(uri)
+        if u.scheme != "file":
+            return None
+        files.append(unquote(u.path))
+    return files
+
+
+def _value_type(emb: DataFrame):
+    """The Arrow type of ``emb``'s embedding elements: float32 or
+    float64, else None (which no footer matches)."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    et = emb.schema["embedding"].dataType
+    elem = et.elementType if isinstance(et, T.ArrayType) else None
+    return {T.FloatType(): pa.float32(), T.DoubleType(): pa.float64()}.get(elem)
+
+
+def _read_vectors(
+    files: list[str], ids: list[int], value_type
+) -> list[tuple] | None:
+    """[(vec_id, embedding)] of the sorted ``ids`` in the parquet
+    ``files``, read with pyarrow: per file only the row groups whose
+    footer vec_id min/max can hold an id, one at a time and only the two
+    columns, so driver memory is O(row group + matches). None, for the
+    Spark collect, when a footer lacks an integer ``vec_id`` or a list
+    ``embedding`` of ``value_type`` by exact name (pyarrow matches names
+    case-sensitively, Spark does not), or when the surviving row groups
+    hold more than ``DRIVER_FETCH_MAX_ROWS`` rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    with contextlib.ExitStack() as stack:
+        reads = []
+        for path in files:
+            pf = stack.enter_context(pq.ParquetFile(path))
+            schema = pf.schema_arrow
+            if min(map(schema.get_field_index, ("vec_id", "embedding"))) < 0:
+                return None
+            vt, et = schema.field("vec_id").type, schema.field("embedding").type
+            if not (
+                pa.types.is_integer(vt)
+                and (pa.types.is_list(et) or pa.types.is_large_list(et))
+                and et.value_type == value_type
+            ):
+                return None
+            reads.append((pf, segstore.row_groups_holding(pf, "vec_id", ids)))
+        rows = sum(
+            pf.metadata.row_group(g).num_rows for pf, groups in reads for g in groups
+        )
+        if rows > DRIVER_FETCH_MAX_ROWS:
+            return None
+        wanted = pa.array(ids, pa.int64())
+        out: list[tuple] = []
+        for pf, groups in reads:
+            for g in groups:
+                tbl = pf.read_row_group(g, columns=["vec_id", "embedding"])
+                vid = tbl.column("vec_id").cast(pa.int64())
+                hit = tbl.filter(pc.is_in(vid, value_set=wanted))
+                out += zip(
+                    hit.column("vec_id").to_pylist(),
+                    hit.column("embedding").to_pylist(),
+                )
+        return out
 
 
 def _desc(cos: float | None) -> tuple[int, float]:

@@ -465,6 +465,26 @@ def test_fullrow_strict_delete_raises_on_missing(spark, tmp_path):
     assert t.scan().count() == 0
 
 
+def test_fullrow_delete_of_a_wrong_typed_value_raises(spark, tmp_path):
+    """The full-row delete batch is an Arrow-built local relation, type
+    checked as ``createDataFrame(list)`` checks it: a string, or a float
+    with a fraction, for an int column raises at commit and deletes
+    nothing, while a matching row still deletes one occurrence."""
+    t = make_users(spark, tmp_path, identity=IdentityProp.full_row())
+    row = {"id": 1, "name": "a", "email": None, "age": 10}
+    t.append_rows([row, row])
+    t.commit(lsn=1)
+    for lsn, bad in enumerate(({"age": "ten"}, {"age": 10.5}), 2):
+        t.delete_rows([{**row, **bad}])
+        with pytest.raises(TypeError, match="age"):
+            t.commit(lsn=lsn)
+        t._pending.clear()
+        assert t.scan().count() == 2
+    t.delete_rows([row])
+    t.commit(lsn=4)
+    assert t.scan().count() == 1
+
+
 def test_file_uri_table_path_resolves_locally(spark, tmp_path):
     """Review finding (r9): file:// paths classified as local but never
     stripped — abspath mangled them into a cwd-relative 'file:' dir."""

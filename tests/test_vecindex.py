@@ -4,6 +4,7 @@ the from-scratch computation."""
 
 import os
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -840,15 +841,16 @@ def test_pq_crash_between_segment_persist_and_meta_publish(
 
 
 def test_pure_adc_plan_never_scans_the_corpus(
-    spark, corpus, index_dir, job_plans
+    spark, corpus, index_dir, job_plans, monkeypatch
 ):
-    """Job-level lock for the rerank=0 claim: the index segments are read
-    on the driver, so the only Spark jobs are corpus fetches, each
-    pushing an In(vec_id, ...) filter. Pure-ADC serving runs ONE job,
-    the query-vector fetch In(vec_id, [queries]). The reranked query
-    runs one more, whose corpus scan pushes In(vec_id, shortlist): at
-    most queries x rerank ids, none a query id, holding every returned
-    neighbour."""
+    """Job-level lock for the rerank=0 claim. The index segments are read
+    on the driver, and so is the plain parquet corpus: a reranked and a
+    pure-ADC query run no Spark job. With the driver read's row bound
+    forced to 0 the corpus fetches are Spark collects, each pushing an
+    In(vec_id, ...) filter: pure-ADC serving runs ONE, the query-vector
+    fetch In(vec_id, [queries]), and the reranked query one more, whose
+    scan pushes In(vec_id, shortlist): at most queries x rerank ids,
+    none a query id, holding every returned neighbour."""
     import re
 
     vecindex.build_index(
@@ -874,10 +876,16 @@ def test_pure_adc_plan_never_scans_the_corpus(
             reads.append({int(x) for x in pushed.group(1).split(",")})
         return rows, reads
 
+    driver = {}
+    for rerank in (0, 12):
+        driver[rerank], reads = corpus_reads(rerank)
+        assert reads == []
+    monkeypatch.setattr(vecindex, "DRIVER_FETCH_MAX_ROWS", 0)
     rows, reads = corpus_reads(0)
-    assert {r.query_id for r in rows} == {0, 1}
+    assert rows == driver[0] and {r.query_id for r in rows} == {0, 1}
     assert reads == [{0, 1}]
     rows, reads = corpus_reads(12)
+    assert rows == driver[12]
     assert len(reads) == 2 and reads[0] == {0, 1}
     shortlist = reads[1]
     assert 3 <= len(shortlist) <= 2 * 12 and not shortlist & {0, 1}
@@ -1073,3 +1081,194 @@ def test_bounded_sorted_segments_and_meta_reresolve(
     got = vecindex.query_topk(spark, corpus, dest, list(range(6)), nprobe=2)
     assert len(reads) == 2
     assert got.collect() == want.collect()
+
+
+# --------------------------------------------------------------------- #
+# the corpus fetch: a plain parquet corpus is read on the driver with
+# pyarrow; the Spark collect (forced by a zero row bound) maps alike
+# --------------------------------------------------------------------- #
+
+# a directory name Spark percent-encodes in its file URIs
+ODD = "sp ace %41x #\u00e9"
+
+
+def _write_corpus(directory, parts, value_type=pa.float64()):
+    """Each part, a list of (vec_id, embedding), as one parquet file in
+    ``directory`` with an extra ``tag`` column, in row groups of 16
+    rows."""
+    os.makedirs(directory, exist_ok=True)
+    for i, rows in enumerate(parts):
+        tbl = pa.table(
+            {
+                "vec_id": pa.array([v for v, _ in rows], pa.int64()),
+                "tag": pa.array([f"t{v}" for v, _ in rows]),
+                "embedding": pa.array([e for _, e in rows], pa.list_(value_type)),
+            }
+        )
+        pq.write_table(tbl, os.path.join(directory, f"part-{i}.parquet"), row_group_size=16)
+
+
+def _legs(monkeypatch, job_counter, emb, ids):
+    """``_fetch(emb, ids)`` read on the driver (no Spark job) and through
+    the Spark collect (forced by a zero row bound)."""
+    with job_counter() as jobs:
+        driver = vecindex._fetch(emb, ids)
+        assert jobs() == 0
+    with monkeypatch.context() as m:
+        m.setattr(vecindex, "DRIVER_FETCH_MAX_ROWS", 0)
+        with job_counter() as jobs:
+            collect = vecindex._fetch(emb, ids)
+            assert jobs() >= 1
+    return driver, collect
+
+
+@pytest.mark.parametrize("project", [False, True], ids=["bare", "select"])
+def test_driver_fetch_equals_spark_collect(
+    spark, tmp_path, monkeypatch, job_counter, project
+):
+    """A two-file float64 corpus under a percent-encoded directory, read
+    bare or through a select of bare columns, is fetched on the driver
+    with the collect's mapping: absent ids stay absent, a null vec_id
+    never matches, a null embedding comes back null; query_topk returns
+    the same rows on both legs, with no Spark job on the driver leg,
+    from an index whose null-vec_id row names no corpus row."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    vec = {v: rng.normal(size=8).tolist() for v in range(120)}
+    vec[5] = None
+    first = [(v, vec[v]) for v in range(60) if v != 7] + [(None, vec[1])]
+    d = str(tmp_path / ODD / "corpus")
+    _write_corpus(d, [first, [(v, vec[v]) for v in range(60, 120)]])
+    emb = spark.read.parquet(d)
+    if project:
+        emb = emb.select("vec_id", "embedding")
+    assert sorted(vecindex._parquet_files(emb)) == [
+        os.path.join(d, f"part-{i}.parquet") for i in range(2)
+    ]
+    # unsorted, with the NaN an index row of a null vec_id lists
+    ids = [119.0, float("nan"), 1, 5, 7, 33, 59, 60, 500]
+    driver, collect = _legs(monkeypatch, job_counter, emb, ids)
+    assert driver == collect
+    assert driver == {v: vec[v] for v in (1, 5, 33, 59, 60, 119)}
+
+    dest = str(tmp_path / "idx")
+    vecindex.build_index(
+        spark, emb.filter(F.col("embedding").isNotNull()), dest, k=3, iters=1
+    )
+    queries = [0, 1, 60, 118]
+    with job_counter() as jobs:
+        got = vecindex.query_topk(spark, emb, dest, queries, topk=3, nprobe=2).collect()
+        assert jobs() == 0
+    monkeypatch.setattr(vecindex, "DRIVER_FETCH_MAX_ROWS", 0)
+    assert got == vecindex.query_topk(
+        spark, emb, dest, queries, topk=3, nprobe=2
+    ).collect()
+    assert {r.query_id for r in got} == set(queries)
+
+
+def test_vec_id_in_two_files_raises_on_both_legs(
+    spark, tmp_path, monkeypatch, job_counter
+):
+    """A vec_id held by rows of two files has no single embedding (Spark
+    orders the splits of several files by size), so both legs raise
+    when it is fetched; the other ids are fetched alike."""
+    d = str(tmp_path / "dup")
+    _write_corpus(
+        d,
+        [
+            [(v, [float(v), 1.0]) for v in range(10)],
+            [(v, [float(v), 2.0]) for v in range(9, 20)],
+        ],
+        pa.float32(),
+    )
+    emb = spark.read.parquet(d)
+    with pytest.raises(ValueError, match="vec_id 9 "):
+        vecindex._fetch(emb, [3, 9])
+    monkeypatch.setattr(vecindex, "DRIVER_FETCH_MAX_ROWS", 0)
+    with pytest.raises(ValueError, match="vec_id 9 "):
+        vecindex._fetch(emb, [3, 9])
+    monkeypatch.undo()
+    driver, collect = _legs(monkeypatch, job_counter, emb, [3, 12])
+    assert driver == collect == {3: [3.0, 1.0], 12: [12.0, 2.0]}
+
+
+def test_filtered_or_renamed_corpus_takes_the_collect(
+    spark, corpus, sf_dir, tmp_path, job_counter
+):
+    """A filtered corpus and one whose columns are renamed are not plain
+    reads: their fetches are Spark collects, with the same neighbours a
+    plain read gives (the filtered one among its own rows only). So is
+    a plain read of integer embeddings, which only the collect reads."""
+    dest = str(tmp_path / "flat")
+    vecindex.build_index(spark, corpus, dest, k=4, iters=1)
+    queries = [0, 1, 2, 4]
+    # every candidate of every cluster, ranked
+    full = vecindex.query_topk(spark, corpus, dest, queries, topk=1000, nprobe=4).collect()
+    src = str(tmp_path / "renamed.parquet")
+    pq.write_table(
+        pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
+        .rename_columns(["id", "vec"]),
+        src,
+    )
+    renamed = spark.read.parquet(src).select(
+        F.col("id").alias("vec_id"), F.col("vec").alias("embedding")
+    )
+    evens = corpus.filter(F.col("vec_id") % 2 == 0)
+    for emb in (renamed, evens):
+        assert vecindex._parquet_files(emb) is None
+    with job_counter() as jobs:
+        got = vecindex.query_topk(spark, renamed, dest, queries, topk=3, nprobe=4).collect()
+        assert jobs() >= 1
+    assert got == [r for r in full if r.rn <= 3]
+    want = []
+    for q in (0, 2, 4):
+        kept = [r for r in full if r.query_id == q and r.neighbor_id % 2 == 0][:3]
+        want += [(q, r.neighbor_id, r.cosine, rn) for rn, r in enumerate(kept, 1)]
+    got = vecindex.query_topk(spark, evens, dest, queries, topk=3, nprobe=4).collect()
+    assert [tuple(r) for r in got] == want
+    ints = str(tmp_path / "ints.parquet")
+    pq.write_table(
+        pa.table({"vec_id": [1, 2], "embedding": pa.array([[1, 2], [3, 4]])}), ints
+    )
+    with job_counter() as jobs:
+        assert vecindex._fetch(spark.read.parquet(ints), [2, 5]) == {2: [3, 4]}
+        assert jobs() >= 1
+
+
+def test_corpus_rewritten_after_build_reads_the_new_vectors(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The corpus file is rewritten after the index build: every vec_id
+    gets another row's vector, and the rows are shuffled into row groups
+    of 50. A flat index probed on every cluster then returns the exact
+    cosine top-k over the NEW vectors, on both legs: the driver reads
+    the same files Spark reads, so nothing it holds can go stale."""
+    import numpy as np
+
+    path = str(tmp_path / "corpus.parquet")
+    old = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"])
+    pq.write_table(old, path)
+    dest = str(tmp_path / "flat")
+    vecindex.build_index(spark, spark.read.parquet(path), dest, k=4, iters=1)
+    n = old.num_rows
+    shifted = old.column("embedding").take(np.roll(np.arange(n), -1))
+    new = pa.table({"vec_id": old.column("vec_id"), "embedding": shifted})
+    new = new.take(np.random.default_rng(5).permutation(n))
+    pq.write_table(new, path, row_group_size=50)
+    emb = spark.read.parquet(path)
+    assert vecindex._parquet_files(emb) == [path]
+    ids = np.asarray(new.column("vec_id").to_pylist())
+    X = np.asarray(new.column("embedding").to_pylist(), dtype=np.float64)
+    unit = X / np.linalg.norm(X, axis=1, keepdims=True)
+    queries = [int(i) for i in sorted(ids)[:6]]
+    got = vecindex.query_topk(spark, emb, dest, queries, topk=4, nprobe=4).collect()
+    for q in queries:
+        cos = unit @ unit[list(ids).index(q)]
+        cos[ids == q] = -np.inf
+        best = np.argsort(-cos, kind="stable")[:4]
+        mine = sorted((r for r in got if r.query_id == q), key=lambda r: r.rn)
+        assert [r.neighbor_id for r in mine] == list(ids[best])
+        assert np.allclose([r.cosine for r in mine], cos[best], atol=1e-6)
+    monkeypatch.setattr(vecindex, "DRIVER_FETCH_MAX_ROWS", 0)
+    assert got == vecindex.query_topk(spark, emb, dest, queries, topk=4, nprobe=4).collect()
