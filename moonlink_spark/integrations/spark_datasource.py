@@ -858,7 +858,7 @@ class MoonlinkKafkaDataSource(DataSource):
     ``startingOffsets`` = ``earliest`` (default), ``latest``, or an
     integer offset applied to every partition; ``valueAvroSchema`` = an
     Avro record schema JSON — when set, each offset range's values are
-    decoded by the schema-compiled columnar decoder
+    decoded one field at a time by the numpy decoder
     (sources/avro_arrow.py) and the schema's fields become top-level
     columns after (partition, offset, key); without it the raw Kafka
     shape (partition, offset, key binary, value binary) is returned and
@@ -1029,7 +1029,7 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _KafkaRangePartition):
         """One pyarrow RecordBatch for the whole fetched range: Avro
-        values decode through the schema-compiled columnar decoder
+        values decode one field at a time for the whole range
         (sources/avro_arrow.py) straight into Arrow arrays — no
         per-record dicts, no per-row pickling."""
         from moonlink_spark.sources.avro_arrow import (
@@ -1048,13 +1048,13 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
             # still advances past it in the checkpoint
             msgs = [m for m in msgs if m[2] is not None]
         named = {
-            "partition": (None, [partition.partition] * len(msgs)),
-            "offset": (None, [m[0] for m in msgs]),
-            "key": (None, [m[1] for m in msgs]),
-            "value": (None, [m[2] for m in msgs]),
+            "partition": [partition.partition] * len(msgs),
+            "offset": [m[0] for m in msgs],
+            "key": [m[1] for m in msgs],
+            "value": [m[2] for m in msgs],
         }
         if self.avro_schema is not None:
-            named.update(decode_columns(self.avro_schema, named["value"][1]))
+            named.update(decode_columns(self.avro_schema, named["value"]))
         return iter([arrow_batch_for_spark(self.spark_schema, named)])
 
     def commit(self, end: dict) -> None:

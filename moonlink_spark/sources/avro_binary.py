@@ -50,6 +50,9 @@ def _zigzag_encode(n: int) -> bytes:
 
 
 def _zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
+    """Zigzag varint -> (int64 value, new position). An Avro long is at
+    most 10 bytes, and the 10th carries one bit: a wider varint is no
+    64-bit value and raises."""
     shift = u = 0
     while True:
         if pos >= len(buf):
@@ -60,8 +63,10 @@ def _zigzag_decode(buf: bytes, pos: int) -> tuple[int, int]:
         if not b & 0x80:
             break
         shift += 7
-        if shift > 70:
+        if shift > 63:
             raise AvroSchemaError("varint too long")
+    if u >> 64:
+        raise AvroSchemaError("varint too long")
     return (u >> 1) ^ -(u & 1), pos
 
 
@@ -112,6 +117,8 @@ def decode_datum(schema: Any, buf: bytes, pos: int = 0) -> tuple[Any, int]:
         return raw[0] != 0, pos
     if t in ("int", "long"):
         v, pos = _zigzag_decode(buf, pos)
+        if (t == "int" or lt == "date") and not -(2**31) <= v < 2**31:
+            raise AvroSchemaError(f"int {v} out of range")
         if lt in ("timestamp-micros", "local-timestamp-micros"):
             return _EPOCH + dt.timedelta(microseconds=v), pos
         if lt in ("timestamp-millis", "local-timestamp-millis"):

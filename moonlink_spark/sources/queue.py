@@ -543,9 +543,10 @@ class FileQueueConsumer:
 class AvroQueueIngestor:
     """Drain Avro datums from a queue into a MoonlinkTable.
 
-    Each drain decodes through the schema-compiled columnar decoder
-    (``sources/avro_arrow.py``) into ONE Arrow table in the table's
-    schema, staged with ``append_arrow``, and becomes one commit whose
+    Each drain decodes its payloads one field at a time with numpy
+    (``sources/avro_arrow.decode_columns``) into ONE Arrow table in the
+    table's schema (a safe cast: a value the column type cannot hold
+    raises), staged with ``append_arrow``, and becomes one commit whose
     LSN is ``lsn_base + last_offset + 1`` — monotone in the queue
     offset, so a crash between commit and consumer-offset write replays
     the batch and the table's LSN floor makes the replay a no-op (the
@@ -602,7 +603,7 @@ class AvroQueueIngestor:
         ]
         last_offset = batch[-1][0]
         lsn = self.lsn_base + last_offset + 1
-        version = self.table.manifest.version
+        version = m.version
         if live:
             struct = field_schema_to_struct(m.schema_fields)
             named = decode_columns(self.schema, live)

@@ -20,6 +20,7 @@ holds — Iceberg's own metadata is equally driver-parsed.
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import time
@@ -107,14 +108,39 @@ class Manifest:
             timestamp_ms=o.get("timestamp_ms", 0),
         )
 
+    def copy(self) -> "Manifest":
+        """A Manifest with its own top-level lists and dicts. The file
+        entries are frozen and shared; nested values (file stats, schema
+        field dicts, property values) are shared and read-only by
+        contract: every writer copies before it changes one
+        (``keyindex``, ``maintenance``, ``MoonlinkTable._index_new_files``)."""
+        return dataclasses.replace(
+            self,
+            schema_fields=list(self.schema_fields),
+            identity=dict(self.identity),
+            data_files=list(self.data_files),
+            delete_files=list(self.delete_files),
+            properties=dict(self.properties),
+        )
+
 
 class ManifestStore:
-    """Reads/commits versioned manifests under one table directory."""
+    """Reads/commits versioned manifests under one table directory.
+
+    A version is published once by exclusive create and never rewritten,
+    so the store keeps the last version it parsed and serves copies of
+    it (:meth:`Manifest.copy`) without re-reading it. A hit needs the
+    version to still exist: :meth:`latest` and :meth:`version_for_lsn`
+    see it in the same call's listing and :meth:`read` stats the file,
+    so a version vacuum pruned still raises ``LsnError``, and a commit
+    by another writer is seen through the listing."""
 
     def __init__(self, table_dir: str):
         self.table_dir = table_dir
         self.fs = fs_for(table_dir)
         self.manifest_dir = os.path.join(table_dir, MANIFEST_DIR)
+        # the last version parsed; callers get copies
+        self._last: Manifest | None = None
 
     # -- reads ------------------------------------------------------------
 
@@ -137,9 +163,21 @@ class ManifestStore:
         return os.path.join(self.manifest_dir, f"v{version:012d}.json")
 
     def read(self, version: int) -> Manifest:
+        return self._read(version, listed=False)
+
+    def _read(self, version: int, listed: bool) -> Manifest:
+        """``listed``: the caller's own listing shows ``version``, so a
+        memo hit needs no stat."""
+        last = self._last
+        if (
+            last is not None
+            and last.version == version
+            and (listed or self.fs.exists(self._path(version)))
+        ):
+            return last.copy()
         try:
             with self.fs.open_read(self._path(version)) as fh:
-                return Manifest.from_json(json.load(fh))
+                last = Manifest.from_json(json.load(fh))
         except FileNotFoundError:
             # the version existed when listed but vacuum pruned it before
             # the read: surface the read-path contract error, not a raw
@@ -147,6 +185,8 @@ class ManifestStore:
             raise LsnError(
                 f"manifest version {version} not found (pruned by vacuum?)"
             ) from None
+        self._last = last
+        return last.copy()
 
     def latest(self) -> Manifest | None:
         # lock-free readers race in-process vacuum's manifest unlink:
@@ -157,7 +197,7 @@ class ManifestStore:
             if not vs:
                 return None
             try:
-                return self.read(vs[-1])
+                return self._read(vs[-1], listed=True)
             except LsnError:
                 continue
         raise LsnError("manifest listing unstable (concurrent vacuum)")
@@ -176,7 +216,7 @@ class ManifestStore:
             try:
                 while lo <= hi:
                     mid = (lo + hi) // 2
-                    if self.read(vs[mid]).lsn <= lsn:
+                    if self._read(vs[mid], listed=True).lsn <= lsn:
                         best = vs[mid]
                         lo = mid + 1
                     else:
@@ -241,7 +281,9 @@ class ManifestStore:
         manifest.timestamp_ms = int(time.time() * 1000)
         path = self._path(manifest.version)
         tmp = path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        self.fs.write_text_durable(tmp, json.dumps(manifest.to_json(), indent=1))
+        self.fs.write_text_durable(
+            tmp, json.dumps(manifest.to_json(), separators=(",", ":"))
+        )
         try:
             # exclusive publish: the loser of a race fails cleanly and never
             # leaves a half-written manifest (LocalFS: hard link; object

@@ -212,6 +212,15 @@ def path_lookup(mapping: dict[str, str], col: Column) -> Column:
     return F.element_at(F.element_at(maps, bucket), col)
 
 
+def _verify_types(schema: T.StructType, rows: Iterable) -> None:
+    """``createDataFrame(list)``'s type check over rows (tuples in
+    ``schema`` order, or dicts). The driver-side writers convert rows
+    with pyarrow, which alone reads 1.5 into a bigint column as 1."""
+    verify = T._make_type_verifier(schema)
+    for r in rows:
+        verify(r)
+
+
 def drop_positions(
     df: DataFrame,
     dv: DataFrame | None,
@@ -408,6 +417,8 @@ class MoonlinkTable:
     def drop(self) -> None:
         """Delete table data + metadata (parity TableEvent::DropTable)."""
         self.fs.rmtree(self.path)
+        # a table re-created at this path publishes a different version 0
+        self.store._last = None
         if self.data_path != self.path:
             self.data_fs.rmtree(self.data_path)
 
@@ -942,10 +953,12 @@ class MoonlinkTable:
             from moonlink_spark.table import keyindex
 
             key_cols = list(ident.columns)
-            keys = dict.fromkeys(tuple(r.get(c) for c in key_cols) for r in rows)
-            keys_df = local_frame(
-                self.spark, list(keys), keyindex.key_schema(base, key_cols)
+            keys = list(
+                dict.fromkeys(tuple(r.get(c) for c in key_cols) for r in rows)
             )
+            key_schema = keyindex.key_schema(base, key_cols)
+            _verify_types(key_schema, keys)
+            keys_df = local_frame(self.spark, keys, key_schema)
             # one live view: the index's file subset, else a stats prune
             subset = self._index_file_subset(base, new_files, keys_df, key_cols)
             prune = key_batch_predicate(key_cols, rows) if subset is None else None
@@ -967,11 +980,7 @@ class MoonlinkTable:
         live, fp = self._live_view(base, new_files, new_dvs)
         data_cols = schema.fieldNames()
         del_rows = [tuple(r.get(c) for c in data_cols) for r in rows]
-        # createDataFrame(list)'s type check: pyarrow alone would read
-        # 1.5 into a bigint column as 1
-        verify = T._make_type_verifier(schema)
-        for r in del_rows:
-            verify(r)
+        _verify_types(schema, del_rows)
         del_df = (
             local_frame(self.spark, del_rows, schema)
             .groupBy(*data_cols)
@@ -1314,6 +1323,7 @@ class MoonlinkTable:
         # one list to the C conversion path. A row pyarrow cannot convert
         # raises here; there is no second, Spark-side writer.
         schema = self.schema
+        _verify_types(schema, rows)
         tbl = pa.Table.from_pydict(
             {f: [r.get(f) for r in rows] for f in schema.fieldNames()},
             schema=to_arrow_schema(schema),

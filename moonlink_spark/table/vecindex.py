@@ -71,9 +71,28 @@ def _write_meta(dest: str, meta: dict[str, Any]) -> None:
     os.replace(tmp, os.path.join(dest, META_FILE))
 
 
+# (dest, (st_ino, st_mtime_ns, st_size), meta) of the last meta parsed
+_meta_memo: tuple[str, tuple[int, int, int], dict[str, Any]] | None = None
+
+
 def read_meta(dest: str) -> dict[str, Any]:
-    with open(os.path.join(dest, META_FILE)) as fh:
-        return json.load(fh)
+    """The index meta, parsed again only when the file changed:
+    ``_write_meta`` publishes by rename, so each rewrite brings a new
+    inode. Every call gets its own top-level dict and ``segments`` list,
+    the two things writers change; the nested centroids and codebooks
+    are shared between calls and read-only."""
+    global _meta_memo
+    path = os.path.join(dest, META_FILE)
+    st = os.stat(path)
+    key = (st.st_ino, st.st_mtime_ns, st.st_size)
+    memo = _meta_memo
+    if memo is None or memo[:2] != (dest, key):
+        with open(path) as fh:
+            memo = _meta_memo = (dest, key, json.load(fh))
+    meta = dict(memo[2])
+    if "segments" in meta:
+        meta["segments"] = list(meta["segments"])
+    return meta
 
 
 def _write_assignments(

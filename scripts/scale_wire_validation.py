@@ -9,10 +9,13 @@
 3. Consumer-group rebalance at 4 partitions / 4 members — join
    convergence, exclusive partition ownership, full drain, and
    reassignment coverage after a leave.
+4. Avro decode at 200k messages — ``decode_record`` + ``row_for_spark``
+   rows against the numpy bulk decoder (``decode_columns`` +
+   ``arrow_batch_for_spark``): msg/s and the tracemalloc peak of each.
 
 Prints markdown rows for SCALE.md §5/§6. Exits non-zero on any
 invariant violation (wrong rows, non-exclusive assignment, warm scan
-slower than cold).
+slower than cold, a bulk-decoded value differing from its row).
 
 Usage: python scripts/scale_wire_validation.py [--workdir DIR]
 """
@@ -259,6 +262,84 @@ def group_rebalance_rows(workdir: str) -> list[str]:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def avro_decode_rows(n: int = 200_000) -> list[str]:
+    """The interpretive row decode against the bulk decoder over ``n``
+    4-field records (long/string/timestamp-micros/double). Raises
+    AssertionError if any decoded value differs."""
+    import datetime as dt
+    import random
+    import tracemalloc
+
+    from moonlink_spark.sources.avro_arrow import (
+        arrow_batch_for_spark,
+        decode_columns,
+    )
+    from moonlink_spark.sources.avro_binary import (
+        decode_record,
+        encode_datum,
+        row_for_spark,
+    )
+    from moonlink_spark.sources.converters import avro_schema_to_struct
+
+    schema = {
+        "type": "record",
+        "name": "e",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "name", "type": "string"},
+            {
+                "name": "ts",
+                "type": {"type": "long", "logicalType": "timestamp-micros"},
+            },
+            {"name": "v", "type": "double"},
+        ],
+    }
+    rng = random.Random(5)
+    epoch = dt.datetime(2024, 1, 1)
+    values = [
+        encode_datum(
+            schema,
+            {
+                "id": i,
+                "name": f"user-{rng.randrange(10**6)}-é",
+                "ts": epoch + dt.timedelta(microseconds=rng.randrange(10**12)),
+                "v": rng.random(),
+            },
+        )
+        for i in range(n)
+    ]
+    struct = avro_schema_to_struct(schema)
+
+    def rows():
+        return [row_for_spark(schema, decode_record(schema, v)) for v in values]
+
+    def bulk():
+        return arrow_batch_for_spark(struct, decode_columns(schema, values))
+
+    bulk()  # warm: pyspark's Arrow type mapping imports on first use
+    out = []
+    for label, fn in (("decode_record + row_for_spark", rows), ("numpy bulk decode -> Arrow", bulk)):
+        t0 = time.process_time()
+        fn()
+        cpu_s = time.process_time() - t0
+        tracemalloc.start()
+        fn()
+        peak = tracemalloc.get_traced_memory()[1]
+        tracemalloc.stop()
+        out.append(
+            f"| Avro decode, {label} ({n:,} msgs) | {n / cpu_s:,.0f} msg/s "
+            f"(CPU) | tracemalloc peak {peak / 2**20:.1f} MiB |"
+        )
+    batch = bulk()
+    want = rows()
+    # the batch's timestamps are UTC-aware; the rows' are naive UTC
+    for name in ("id", "name", "v"):
+        assert batch.column(name).to_pylist() == [r[name] for r in want], name
+    ts = batch.column("ts").cast("int64").to_pylist()
+    assert ts == [(r["ts"] - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1) for r in want]
+    return out
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--workdir", default="/tmp/moonlink-wire-scale")
@@ -271,7 +352,7 @@ def main() -> int:
     # warm the Python-worker pool once so cold-scan timings measure IO,
     # not the first-UDF worker spin-up
     spark.range(64).mapInPandas(lambda it: it, "id long").count()
-    rows = []
+    rows = avro_decode_rows()
     rows += cached_plane_rows(spark, args.workdir)
     rows += copy_wire_rows(spark, args.workdir)
     rows += group_rebalance_rows(args.workdir)

@@ -1,9 +1,9 @@
-"""Schema-compiled columnar Avro decode (sources/avro_arrow.py): the
-Arrow fast path must be value-identical to the interpretive
-decode_record + row_for_spark path for EVERY schema the interpretive
-path supports — primitives compile to inline snippets, complex fields
-fall back to decode_datum per position, and both meet in one
-pyarrow.RecordBatch typed by avro_schema_to_struct.
+"""Column-at-a-time Avro decode (sources/avro_arrow.py): the numpy
+decoder must be value-identical to the interpretive decode_record +
+row_for_spark path for EVERY schema the interpretive path supports —
+primitives and [null, X] unions decode one field at a time for the
+whole batch, complex fields go through decode_datum per record, and
+both meet in one pyarrow.RecordBatch typed by avro_schema_to_struct.
 
 Parity: the reference decodes Avro inside the native Kafka connector
 (src/moonlink_connectors); here the same decode feeds Spark through
@@ -13,17 +13,17 @@ Arrow batches instead of pickled rows.
 from __future__ import annotations
 
 import datetime as dt
-import json
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.types import LongType, StructField, StructType
 
 from moonlink_spark.sources.avro_arrow import (
     arrow_batch_for_spark,
-    columnar_decoder_cached,
-    compile_columnar_decoder,
+    decode_columns,
 )
 from moonlink_spark.sources.avro_binary import (
     decode_record,
@@ -34,6 +34,7 @@ from moonlink_spark.sources.converters import (
     AvroSchemaError,
     avro_schema_to_struct,
 )
+from tests.test_avro_properties import _record_schema_and_value, _redraw
 
 RICH_SCHEMA = {
     "type": "record",
@@ -128,22 +129,13 @@ def test_columnar_matches_interpretive_on_rich_schema():
     payloads = [encode_datum(RICH_SCHEMA, _rich_value(i)) for i in range(50)]
     struct = avro_schema_to_struct(RICH_SCHEMA)
 
-    names, decode_all = compile_columnar_decoder(RICH_SCHEMA)
-    cols = decode_all(payloads)
-    named = {
-        n: (f["type"], c)
-        for n, f, c in zip(names, RICH_SCHEMA["fields"], cols)
-    }
-    fast = arrow_batch_for_spark(struct, named)
+    fast = arrow_batch_for_spark(struct, decode_columns(RICH_SCHEMA, payloads))
 
     # interpretive rows -> the same Arrow assembly (row_for_spark shapes,
-    # datetime objects go through pa.array with the Spark-mandated type)
-    ref_cols = _interpretive_columns(RICH_SCHEMA, payloads)
-    ref_named = {
-        f["name"]: (f["type"], ref_cols[f["name"]])
-        for f in RICH_SCHEMA["fields"]
-    }
-    slow = arrow_batch_for_spark(struct, ref_named)
+    # Python lists go through pa.array with the Spark-mandated type)
+    slow = arrow_batch_for_spark(
+        struct, _interpretive_columns(RICH_SCHEMA, payloads)
+    )
 
     assert fast.schema == slow.schema
     assert fast.to_pylist() == slow.to_pylist()
@@ -155,18 +147,9 @@ def test_trailing_bytes_raise():
         "name": "t",
         "fields": [{"name": "x", "type": "long"}],
     }
-    _, decode_all = compile_columnar_decoder(schema)
     good = encode_datum(schema, {"x": 7})
     with pytest.raises(AvroSchemaError, match="trailing"):
-        decode_all([good + b"\x00"])
-
-
-def test_decoder_memoized_per_schema():
-    a1 = columnar_decoder_cached(RICH_SCHEMA)
-    a2 = columnar_decoder_cached(
-        json.dumps(RICH_SCHEMA, sort_keys=True, separators=(",", ":"))
-    )
-    assert a1 is a2
+        decode_columns(schema, [good + b"\x00"])
 
 
 _names = st.from_regex(r"[a-z][a-z0-9_]{0,8}", fullmatch=True)
@@ -248,11 +231,139 @@ def _flat_case(draw):
 @given(_flat_case())
 def test_columnar_parity_property(case):
     """Any flat record: columnar decode == interpretive decode,
-    column for column (raw Python values, before Arrow)."""
+    column for column (Arrow values against the interpretive Python
+    values)."""
     schema, rows = case
     payloads = [encode_datum(schema, r) for r in rows]
-    names, decode_all = compile_columnar_decoder(schema)
-    got = decode_all(payloads)
+    got = decode_columns(schema, payloads)
     want = _interpretive_columns(schema, payloads)
-    for i, n in enumerate(names):
-        assert got[i] == want[n], n
+    for n, col in got.items():
+        assert col.to_pylist() == want[n], n
+
+
+def _as_bytes(ftype):
+    """A string field's schema as bytes: the wire shape is the same, so
+    a bytes value encodes as a string with arbitrary (invalid) bytes."""
+    return [("bytes" if b == "string" else b) for b in ftype] if isinstance(
+        ftype, list
+    ) else "bytes"
+
+
+_EXTREMES = {"long": [-(2**63), 2**63 - 1, -1], "int": [-(2**31), 2**31 - 1]}
+
+
+@st.composite
+def _batch(draw):
+    """1-50 records of one flat schema (tests/test_avro_properties.py's
+    field mix: longs, ints, strings, booleans, [null, X] unions, arrays
+    and maps), with int64/int32 extremes pinned on some records."""
+    schema, proto = _record_schema_and_value(draw)
+    n = draw(st.integers(min_value=1, max_value=50))
+    records = [proto] + [
+        {f["name"]: _redraw(draw, f["type"]) for f in schema["fields"]}
+        for _ in range(n - 1)
+    ]
+    for r in records:
+        for f in schema["fields"]:
+            if f["type"] in ("long", "int") and draw(st.integers(0, 3)) == 0:
+                r[f["name"]] = draw(st.sampled_from(_EXTREMES[f["type"]]))
+    return schema, records
+
+
+@settings(max_examples=60, deadline=None)
+@given(_batch(), st.data())
+def test_batch_decode_equals_decode_record(case, data):
+    """Whole batches: decode_columns equals decode_record + row_for_spark
+    column by column, or both reject the batch — here when one record
+    carries invalid UTF-8 in a string field."""
+    schema, records = case
+    payloads = [encode_datum(schema, r) for r in records]
+    strings = [
+        f["name"]
+        for f in schema["fields"]
+        if f["type"] in ("string", ["null", "string"])
+    ]
+    if strings and data.draw(st.booleans()):
+        i = data.draw(st.integers(0, len(records) - 1))
+        name = data.draw(st.sampled_from(strings))
+        fields = [
+            dict(f, type=_as_bytes(f["type"])) if f["name"] == name else f
+            for f in schema["fields"]
+        ]
+        payloads[i] = encode_datum(
+            {**schema, "fields": fields}, {**records[i], name: b"a\xc3\x28"}
+        )
+        with pytest.raises(AvroSchemaError, match="invalid UTF-8"):
+            decode_record(schema, payloads[i])
+        with pytest.raises(AvroSchemaError, match="invalid UTF-8"):
+            decode_columns(schema, payloads)
+        return
+    got = decode_columns(schema, payloads)
+    want = _interpretive_columns(schema, payloads)
+    assert list(got) == list(want)
+    for n, col in got.items():
+        assert col.to_pylist() == want[n], n
+
+
+@settings(max_examples=25, deadline=None)
+@given(_batch(), st.data())
+def test_batch_with_a_truncated_record_raises(case, data):
+    """Record i cut at every byte: decode_record and the batch decode
+    both raise AvroSchemaError, and no read runs on into record i + 1."""
+    schema, records = case
+    payloads = [encode_datum(schema, r) for r in records]
+    i = data.draw(st.integers(0, len(payloads) - 1))
+    for cut in range(len(payloads[i])):
+        batch = payloads[:i] + [payloads[i][:cut]] + payloads[i + 1:]
+        with pytest.raises(AvroSchemaError):
+            decode_record(schema, batch[i])
+        with pytest.raises(AvroSchemaError):
+            decode_columns(schema, batch)
+
+
+def test_varint_extremes_and_out_of_range_values():
+    """10-byte varints decode exactly at the int64 and int32 bounds;
+    a wider varint, or an int outside int32, raises on both paths."""
+    schema = {
+        "type": "record",
+        "name": "x",
+        "fields": [
+            {"name": "l", "type": "long"},
+            {"name": "i", "type": "int"},
+            {"name": "o", "type": ["null", "long"]},
+        ],
+    }
+    rows = [
+        {"l": -(2**63), "i": -(2**31), "o": None},
+        {"l": 2**63 - 1, "i": 2**31 - 1, "o": -(2**63)},
+        {"l": 0, "i": 0, "o": 2**63 - 1},
+    ]
+    payloads = [encode_datum(schema, r) for r in rows]
+    got = decode_columns(schema, payloads)
+    assert {n: c.to_pylist() for n, c in got.items()} == _interpretive_columns(
+        schema, payloads
+    )
+    assert got["i"].type == pa.int32()
+    for t, payload, match in (
+        ("long", b"\xff" * 10 + b"\x01", "varint too long"),  # 11 bytes
+        ("long", b"\xff" * 9 + b"\x02", "varint too long"),  # 65 bits
+        ("int", b"\xfe\xff\xff\xff\x7f", "out of range"),  # 2**34 - 1
+        ("int", encode_datum("long", 2**31), "out of range"),
+    ):
+        one = {"type": "record", "name": "y", "fields": [{"name": "v", "type": t}]}
+        with pytest.raises(AvroSchemaError, match=match):
+            decode_record(one, payload)
+        with pytest.raises(AvroSchemaError, match=match):
+            decode_columns(one, [encode_datum("long", 1), payload])
+
+
+def test_cast_to_the_table_type_is_safe():
+    """A double into a bigint column: a whole value casts, a fraction
+    raises (``pa.array(list, type)`` used to truncate it silently)."""
+    schema = {"type": "record", "name": "x", "fields": [{"name": "v", "type": "double"}]}
+    struct = StructType([StructField("v", LongType())])
+    whole = decode_columns(schema, [encode_datum(schema, {"v": 2.0})])
+    assert arrow_batch_for_spark(struct, whole).to_pylist() == [{"v": 2}]
+    frac = decode_columns(schema, [encode_datum(schema, {"v": 1.5})])
+    with pytest.raises(pa.ArrowInvalid, match="truncated"):
+        arrow_batch_for_spark(struct, frac)

@@ -146,7 +146,7 @@ def test_malformed_datums_fail_loud_as_schema_errors():
 
     import pytest
 
-    from moonlink_spark.sources.avro_arrow import columnar_decoder_cached
+    from moonlink_spark.sources.avro_arrow import decode_columns
     from moonlink_spark.sources.avro_binary import (
         decode_record,
         encode_datum,
@@ -170,7 +170,7 @@ def test_malformed_datums_fail_loud_as_schema_errors():
         "a": "héllo", "b": 42, "c": [1, 2, 3], "d": {"k": "v"},
         "e": "Y", "f": True, "g": 1.5,
     })
-    # the compiled nullable-union and bytes snippets get their own corpus
+    # the vectorized nullable-union and bytes kernels get their own corpus
     unions = {
         "type": "record", "name": "u", "fields": [
             {"name": "h", "type": ["null", "bytes"]},
@@ -185,11 +185,10 @@ def test_malformed_datums_fail_loud_as_schema_errors():
             want = row_for_spark(schema, decode_record(schema, payload))
         except AvroSchemaError:
             with pytest.raises(AvroSchemaError):
-                columnar_decoder_cached(schema)[1]([payload])
+                decode_columns(schema, [payload])
             return
-        names, decode_all = columnar_decoder_cached(schema)
-        got = decode_all([payload])
-        assert {n: col[0] for n, col in zip(names, got)} == want
+        got = decode_columns(schema, [payload])
+        assert {n: col.to_pylist()[0] for n, col in got.items()} == want
 
     short = {"type": "record", "name": "s", "fields": [
         {"name": "a", "type": "string"}, {"name": "b", "type": "long"}]}
@@ -200,7 +199,7 @@ def test_malformed_datums_fail_loud_as_schema_errors():
         with pytest.raises(AvroSchemaError, match=match):
             decode_record(short, payload)
         with pytest.raises(AvroSchemaError, match=match):
-            columnar_decoder_cached(short)[1]([payload])
+            decode_columns(short, [payload])
     for schema, good in ((schema, good), (unions, unions_good)):
         for i in range(1, len(good)):
             with pytest.raises(AvroSchemaError):

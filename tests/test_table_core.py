@@ -485,6 +485,74 @@ def test_fullrow_delete_of_a_wrong_typed_value_raises(spark, tmp_path):
     assert t.scan().count() == 1
 
 
+def test_fraction_into_an_int_column_raises_on_append_and_key_delete(
+    spark, tmp_path
+):
+    """The row buffer and the key-identity delete batch are converted
+    with pyarrow, which alone reads 7.9 into an int column as 7: both
+    run ``createDataFrame(list)``'s type check, so the commit raises and
+    writes or deletes nothing."""
+    t = make_users(spark, tmp_path)
+    t.append_rows([{"id": i, "name": "a", "email": None, "age": 1} for i in range(3)])
+    t.commit(lsn=1)
+    files = len(t.manifest.data_files)
+    t.append_rows([{"id": 7.9, "name": "b", "email": None, "age": 1}])
+    with pytest.raises(TypeError, match="id"):
+        t.commit(lsn=2)
+    t._pending.clear()
+    t.delete_rows([{"id": 1.5}])
+    with pytest.raises(TypeError, match="id"):
+        t.commit(lsn=2)
+    t._pending.clear()
+    assert len(t.manifest.data_files) == files
+    assert t.manifest.delete_files == []
+    assert sorted(r.id for r in t.scan().collect()) == [0, 1, 2]
+    t.delete_rows([{"id": 1}])
+    t.commit(lsn=2)
+    assert sorted(r.id for r in t.scan().collect()) == [0, 2]
+
+
+def test_manifest_memo_honours_vacuum_mutation_and_other_writers(
+    spark, tmp_path
+):
+    """``ManifestStore`` serves the last version it parsed again: a
+    version vacuumed after a reader parsed it still raises, a caller
+    mutating the manifest it got does not change the next one, and a
+    commit by a second table object on the same path is seen."""
+    t = make_users(spark, tmp_path)
+    for lsn in (1, 2, 3):
+        t.append_rows([{"id": lsn, "name": "a", "email": None, "age": 1}])
+        t.commit(lsn=lsn)
+    reader = MoonlinkTable.open(spark, t.path)
+    assert reader.store.read(1).lsn == 1  # the reader's last parse
+    vacuum(t, keep_versions=1)
+    with pytest.raises(LsnError, match="not found"):
+        reader.store.read(1)
+    with pytest.raises(LsnError):
+        reader.scan(lsn=1)
+
+    m = reader.manifest
+    m.data_files.clear()
+    m.delete_files.append(m.data_files)
+    m.properties["x"] = 1
+    m.schema_fields.clear()
+    m.identity.clear()
+    again = reader.manifest
+    assert len(again.data_files) == 3
+    assert again.delete_files == []
+    assert "x" not in again.properties
+    assert [f["name"] for f in again.schema_fields] == [
+        f["name"] for f in USERS_SCHEMA
+    ]
+    assert again.identity == t.manifest.identity != {}
+
+    t.append_rows([{"id": 4, "name": "b", "email": None, "age": 1}])
+    t.commit(lsn=4)
+    assert reader.manifest.version == t.manifest.version
+    assert reader.last_lsn == 4
+    assert sorted(r.id for r in reader.scan().collect()) == [1, 2, 3, 4]
+
+
 def test_file_uri_table_path_resolves_locally(spark, tmp_path):
     """Review finding (r9): file:// paths classified as local but never
     stripped — abspath mangled them into a cwd-relative 'file:' dir."""

@@ -126,6 +126,53 @@ def test_query_topk_served_from_disk(spark, corpus, index_dir):
         assert all(r.neighbor_id != q for r in rows)
 
 
+def test_query_meta_parsed_once_per_rebuild(
+    spark, corpus, index_dir, monkeypatch
+):
+    """read_meta parses vecindex.json again only when a rebuild has
+    replaced it: two queries parse it once, and the query after a
+    rebuild with another k sees the new centroids. A caller changing
+    its meta does not change the next caller's."""
+    import json
+
+    parses, centroids = [], []
+    load, shortlists = json.load, vecindex._shortlists
+
+    def counted_load(fh, *a, **kw):
+        if fh.name.endswith(vecindex.META_FILE):
+            parses.append(fh.name)
+        return load(fh, *a, **kw)
+
+    monkeypatch.setattr(json, "load", counted_load)
+    monkeypatch.setattr(
+        vecindex,
+        "_shortlists",
+        lambda meta, *a: centroids.append(len(meta["centroids"]))
+        or shortlists(meta, *a),
+    )
+
+    def query():
+        return vecindex.query_topk(
+            spark, corpus, index_dir, query_ids=[0, 1], topk=3, nprobe=2
+        ).collect()
+
+    vecindex.build_index(spark, corpus, index_dir, k=8, iters=2)
+    parses.clear()
+    first = query()
+    assert query() == first
+    assert (len(parses), centroids) == (1, [8, 8])
+    mine = vecindex.read_meta(index_dir)
+    mine["segments"].append("gone")
+    mine["generation"] = -1
+    fresh = vecindex.read_meta(index_dir)
+    assert "gone" not in fresh["segments"] and fresh["generation"] != -1
+    assert len(parses) == 1
+    vecindex.build_index(spark, corpus, index_dir, k=4, iters=2)
+    parses.clear()
+    query()
+    assert (len(parses), centroids[-1]) == (1, 4)
+
+
 def test_retrain_recommendation_flags_drift(spark, corpus, index_dir):
     vecindex.build_index(spark, corpus, index_dir, k=4, iters=2)
     meta = vecindex.read_meta(index_dir)
