@@ -978,19 +978,22 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
             ),
         )
 
-    def _fetch_range(self, partition: int, lo: int, hi: int) -> list:
-        """All messages of one partition with lo <= offset < hi."""
+    def _fetch_range(self, partition: int, lo: int, hi: int):
+        """All messages of one partition with lo <= offset < hi, as one
+        ``RecordColumns``."""
+        from moonlink_spark.sources.kafka_wire import RecordColumns
+
         c = self._consumer(partition)
         try:
-            msgs = []
+            parts = []
             pos = lo
             while pos < hi:
                 batch = c.fetch(pos, max_messages=1_000_000)
-                if not batch:
+                if not len(batch):
                     break
-                msgs.extend(m for m in batch if m[0] < hi)
-                pos = batch[-1][0] + 1
-            return msgs
+                parts.append(batch.take(batch.offsets < hi))
+                pos = int(batch.offsets[-1]) + 1
+            return RecordColumns.concat(parts)
         finally:
             c.close()
 
@@ -1030,8 +1033,12 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
     def read(self, partition: _KafkaRangePartition):
         """One pyarrow RecordBatch for the whole fetched range: Avro
         values decode one field at a time for the whole range
-        (sources/avro_arrow.py) straight into Arrow arrays — no
-        per-record dicts, no per-row pickling."""
+        (sources/avro_arrow.py) straight from the fetched record buffer
+        into Arrow arrays — no per-record bytes, dicts or tuples, no
+        per-row pickling."""
+        import numpy as np
+        import pyarrow as pa
+
         from moonlink_spark.sources.avro_arrow import (
             arrow_batch_for_spark,
             decode_columns,
@@ -1039,23 +1046,31 @@ class MoonlinkKafkaStreamReader(DataSourceStreamReader):
 
         # EXECUTOR-side: this task fetches its own offset range over its
         # own socket; the driver never touches message bytes
-        msgs = self._fetch_range(
+        recs = self._fetch_range(
             partition.partition, partition.lo, partition.hi
         )
         if self.avro_schema is not None:
             # tombstone: no Avro datum to decode — skip the record (same
             # policy as AvroQueueIngestor.drain_once); the offset range
             # still advances past it in the checkpoint
-            msgs = [m for m in msgs if m[2] is not None]
+            recs = recs.take(recs.value_len >= 0)
         named = {
-            "partition": [partition.partition] * len(msgs),
-            "offset": [m[0] for m in msgs],
-            "key": [m[1] for m in msgs],
-            "value": [m[2] for m in msgs],
+            "partition": pa.array(np.full(len(recs), partition.partition)),
+            "offset": pa.array(recs.offsets),
+            "key": recs.keys(),
         }
-        if self.avro_schema is not None:
-            named.update(decode_columns(self.avro_schema, named["value"]))
-        return iter([arrow_batch_for_spark(self.spark_schema, named)])
+        if self.avro_schema is None:
+            named["value"] = recs.values()
+        else:
+            named.update(
+                decode_columns(
+                    self.avro_schema,
+                    recs.buf,
+                    recs.value_start,
+                    recs.value_start + recs.value_len,
+                )
+            )
+        return iter([arrow_batch_for_spark(self.spark_schema, named, len(recs))])
 
     def commit(self, end: dict) -> None:
         pass  # Spark's checkpoint is the offset store; nothing broker-side

@@ -9,8 +9,9 @@ hands Spark one Arrow batch per offset range. The interpretive
 :func:`~moonlink_spark.sources.avro_binary.decode_record` stays the
 single-datum path and the test oracle.
 
-- :func:`decode_columns` joins a batch's payloads into one ``uint8``
-  buffer with one read position per record, then walks the record
+- :func:`decode_columns` reads the payloads in place from one ``uint8``
+  buffer (a Kafka fetch's record buffer, ``kafka_wire.RecordColumns``)
+  with one read position and one end per record, and walks the record
   schema one FIELD at a time, decoding that field for every record with
   numpy kernels: zigzag varints, fixed-width floats, length-prefixed
   strings/bytes gathered straight into Arrow buffers, and ``[null, X]``
@@ -25,7 +26,8 @@ single-datum path and the test oracle.
 Complex fields (array/map/nested record/enum/fixed/decimal/multi-branch
 union) decode with the interpretive ``decode_datum`` +
 ``fix_datum_for_spark``, one record at a time but for that field only,
-each reading its own record's payload; the fields after it continue
+each reading its own record's payload (sliced from the buffer); the
+fields after it continue
 vectorized from the updated positions. Malformed bytes raise
 ``AvroSchemaError`` in ``decode_record``'s message families, and no read
 crosses into the next record.
@@ -238,7 +240,7 @@ def _decode_field(plan, buf, pos, start, end):
     return _to_arrow(buf, vals, typ, len(pos), valid), pos
 
 
-def _decode_complex(fs, values, pos, start):
+def _decode_complex(fs, payloads, pos, start):
     """The interpretive decoder, one record at a time, for one field;
     each record reads its own payload, so a bad length cannot read on
     into the next record. -> (Arrow array, or a Python list when the
@@ -246,7 +248,7 @@ def _decode_complex(fs, values, pos, start):
     col = []
     pos = pos.copy()
     try:
-        for i, payload in enumerate(values):
+        for i, payload in enumerate(payloads):
             v, p = decode_datum(fs, payload, int(pos[i] - start[i]))
             col.append(fix_datum_for_spark(fs, v))
             pos[i] = start[i] + p
@@ -261,16 +263,17 @@ def _decode_complex(fs, values, pos, start):
     return pa.array(col, type=typ), pos
 
 
-def _decode_chunk(fields, plans, values):
-    lens = np.fromiter(map(len, values), np.int64, len(values))
-    end = np.cumsum(lens)
-    start = end - lens
-    buf = np.frombuffer(b"".join(values), np.uint8)
+def _decode_chunk(fields, plans, buf, start, end):
     pos = start
+    payloads = None  # each record's bytes, sliced for complex fields only
     cols = []
     for f, plan in zip(fields, plans):
         if plan is None:
-            col, pos = _decode_complex(f["type"], values, pos, start)
+            if payloads is None:
+                payloads = [
+                    buf[a:b].tobytes() for a, b in zip(start.tolist(), end.tolist())
+                ]
+            col, pos = _decode_complex(f["type"], payloads, pos, start)
         else:
             col, pos = _decode_field(plan, buf, pos, start, end)
         cols.append(col)
@@ -283,21 +286,26 @@ def _decode_chunk(fields, plans, values):
     return cols
 
 
-def decode_columns(schema: dict, values: list) -> dict[str, Any]:
+def decode_columns(schema: dict, buf, starts, ends) -> dict[str, Any]:
     """Avro record payloads -> ``{field name: column}``, the shape
-    :func:`arrow_batch_for_spark` takes. A column is a ``pyarrow.Array``
-    of the field's Avro-derived type (``large_string``/``large_binary``
-    for strings and bytes), or a Python list for a field Spark cannot
-    type (a multi-branch union). Tombstones (``None`` values) are
-    dropped by the CALLER."""
+    :func:`arrow_batch_for_spark` takes. Record ``i`` is
+    ``buf[starts[i]:ends[i]]`` (``buf`` a ``uint8`` array, the bounds
+    int64 arrays), so a fetch's record buffer decodes in place. A column
+    is a ``pyarrow.Array`` of the field's Avro-derived type
+    (``large_string``/``large_binary`` for strings and bytes), or a
+    Python list for a field Spark cannot type (a multi-branch union).
+    Tombstones have no payload: the CALLER leaves them out."""
     if schema.get("type") != "record":
         raise AvroSchemaError("columnar decoder requires a record schema")
     fields = schema["fields"]
     plans = [_plan(f["type"]) for f in fields]
     chunks = [
-        _decode_chunk(fields, plans, values[a:a + DECODE_CHUNK_RECORDS])
-        for a in range(0, len(values), DECODE_CHUNK_RECORDS)
-    ] or [_decode_chunk(fields, plans, [])]
+        _decode_chunk(
+            fields, plans, buf,
+            starts[a:a + DECODE_CHUNK_RECORDS], ends[a:a + DECODE_CHUNK_RECORDS],
+        )
+        for a in range(0, len(starts), DECODE_CHUNK_RECORDS)
+    ] or [_decode_chunk(fields, plans, buf, starts[:0], ends[:0])]
     out = {}
     for i, f in enumerate(fields):
         parts = [c[i] for c in chunks]
@@ -308,6 +316,17 @@ def decode_columns(schema: dict, values: list) -> dict[str, Any]:
         else:
             out[f["name"]] = [v for p in parts for v in p]
     return out
+
+
+def binary_array(buf, starts, lens) -> pa.Array:
+    """``large_binary`` array of ``buf[starts[i]:starts[i] + lens[i]]``,
+    null where ``lens[i]`` is -1."""
+    valid = lens >= 0
+    if valid.all():
+        return _to_arrow(buf, (starts, lens), pa.large_binary(), len(lens))
+    return _to_arrow(
+        buf, (starts[valid], lens[valid]), pa.large_binary(), len(lens), valid
+    )
 
 
 def arrow_batch_for_spark(

@@ -43,6 +43,26 @@ speak the protocol from the client side; the consumer exposes the exact
 ingestion path (``AvroQueueIngestor``) runs over a live socket with no
 changes — swap the consumer, keep the idempotent LSN-floor contract.
 
+Consumer decode (:func:`decode_record_batches`) is eager and one column
+at a time. A fetch comes back as one :class:`RecordColumns`: int64
+offsets, one ``uint8`` buffer of the decompressed records sections, and
+key/value start and length arrays (length -1 = null). The only
+per-record Python is the walk over each record's length varint; the
+other framing fields decode for all records at once with the Avro
+varint kernels (``avro_arrow._long``), each read bounded by its
+record's end. ``AvroQueueIngestor`` and the ``moonlink-kafka`` stream
+source decode Avro straight from that buffer, so no ``bytes`` object or
+tuple is built per record; other callers iterate ``(offset, key,
+value)`` tuples. A fetch stops after the batch that gives it
+``max_messages`` records at or above its offset: later batches are
+neither CRC-checked nor decompressed. A wrong magic, a CRC-32C mismatch,
+a codec failure, a record running past its batch, a key or value
+running past its own record and a length below -1 raise ValueError; a
+torn final batch ends the decode. The broker's Produce validation runs
+the same framing decode: a malformed record answers INVALID_RECORD
+(87) and appends nothing, and a batch-level error (magic, CRC, codec)
+drops the connection.
+
 Group coordination follows Kafka's actual division of labor: the broker
 (``_GroupCoordinator``) only barriers JoinGroup rounds, elects a leader,
 and relays opaque assignment bytes through SyncGroup; the LEADER CLIENT
@@ -85,7 +105,11 @@ import uuid
 from functools import partial
 from typing import Any, Iterator
 
+import numpy as np
 import pyarrow as pa
+
+from moonlink_spark.sources.avro_arrow import _long, binary_array
+from moonlink_spark.sources.converters import AvroSchemaError
 
 # ---------------------------------------------------------------------------
 # CRC-32C (Castagnoli) — RecordBatch v2 checksums use this, NOT zlib's CRC-32
@@ -275,6 +299,10 @@ CODEC_IDS = {v: k for k, v in CODEC_NAMES.items()}
 # bomb from a network peer fails before the output is allocated
 MAX_DECOMPRESSED = 1 << 31
 _READ_CHUNK = 1 << 20
+# baseOffset(8) batchLength(4) partitionLeaderEpoch(4) magic(1) crc(4)
+# attributes(2) lastOffsetDelta(4) firstTimestamp(8) maxTimestamp(8)
+# producerId(8) producerEpoch(2) baseSequence(4) recordCount(4)
+_BATCH_HEADER = 61
 
 
 def _gzip_compress(data: bytes) -> bytes:
@@ -482,16 +510,118 @@ def encode_record_batch(
     return struct.pack(">qi", base_offset, len(inner)) + inner
 
 
-def decode_record_batches(
-    data: bytes,
-) -> Iterator[tuple[int, bytes | None, bytes]]:
-    """(absolute_offset, key, value) across all batches in ``data``.
-    Verifies magic and CRC-32C; raises ValueError on corruption."""
+class RecordColumns:
+    """The records of one fetch, one array per field.
+
+    ``offsets`` is int64; ``buf`` is ``uint8``, the fetch's records
+    sections (decompressed); ``key_start``/``key_len`` and
+    ``value_start``/``value_len`` are int64 positions in ``buf``, where
+    a length of -1 is a null. Bulk consumers read the arrays. The value
+    also iterates and indexes as ``(offset, key, value)`` tuples, and
+    only then slices ``bytes`` out of ``buf``."""
+
+    __slots__ = (
+        "offsets", "buf", "key_start", "key_len", "value_start", "value_len"
+    )
+
+    def __init__(self, offsets, buf, key_start, key_len, value_start, value_len):
+        self.offsets = offsets
+        self.buf = buf
+        self.key_start = key_start
+        self.key_len = key_len
+        self.value_start = value_start
+        self.value_len = value_len
+
+    @classmethod
+    def from_tuples(cls, msgs) -> "RecordColumns":
+        """``[(offset, key, value)]`` -> columns, keys and values packed
+        into one buffer."""
+        offsets, ks, kl, vs, vl, parts, at = [], [], [], [], [], [], 0
+        for off, key, value in msgs:
+            offsets.append(off)
+            for b, starts, lens in ((key, ks, kl), (value, vs, vl)):
+                starts.append(at)
+                lens.append(-1 if b is None else len(b))
+                if b is not None:
+                    parts.append(b)
+                    at += len(b)
+        return cls(
+            np.array(offsets, np.int64),
+            np.frombuffer(b"".join(parts), np.uint8),
+            *(np.array(c, np.int64) for c in (ks, kl, vs, vl)),
+        )
+
+    @staticmethod
+    def concat(parts: list["RecordColumns"]) -> "RecordColumns":
+        """One value holding ``parts``' records in order."""
+        if not parts:
+            return RecordColumns.from_tuples([])
+        shift = np.cumsum([0] + [len(p.buf) for p in parts[:-1]])
+        return RecordColumns(
+            np.concatenate([p.offsets for p in parts]),
+            np.concatenate([p.buf for p in parts]),
+            np.concatenate([p.key_start + s for p, s in zip(parts, shift)]),
+            np.concatenate([p.key_len for p in parts]),
+            np.concatenate([p.value_start + s for p, s in zip(parts, shift)]),
+            np.concatenate([p.value_len for p in parts]),
+        )
+
+    def take(self, rows) -> "RecordColumns":
+        """The records at ``rows`` (indexes or a boolean mask); the
+        buffer is shared."""
+        return RecordColumns(
+            self.offsets[rows], self.buf, self.key_start[rows],
+            self.key_len[rows], self.value_start[rows], self.value_len[rows],
+        )
+
+    def keys(self) -> pa.Array:
+        """The keys as a ``large_binary`` array (null keys null)."""
+        return binary_array(self.buf, self.key_start, self.key_len)
+
+    def values(self) -> pa.Array:
+        """The values as a ``large_binary`` array (tombstones null)."""
+        return binary_array(self.buf, self.value_start, self.value_len)
+
+    def __len__(self) -> int:
+        return len(self.offsets)
+
+    def __getitem__(self, i: int) -> tuple[int, bytes | None, bytes | None]:
+        i = range(len(self))[i]
+        ks, kl = int(self.key_start[i]), int(self.key_len[i])
+        vs, vl = int(self.value_start[i]), int(self.value_len[i])
+        return (
+            int(self.offsets[i]),
+            None if kl < 0 else self.buf[ks : ks + kl].tobytes(),
+            None if vl < 0 else self.buf[vs : vs + vl].tobytes(),
+        )
+
+    def __iter__(self) -> Iterator[tuple[int, bytes | None, bytes | None]]:
+        data = self.buf.tobytes()
+        for off, ks, kl, vs, vl in zip(
+            self.offsets.tolist(), self.key_start.tolist(),
+            self.key_len.tolist(), self.value_start.tolist(),
+            self.value_len.tolist(),
+        ):
+            yield (
+                off,
+                None if kl < 0 else data[ks : ks + kl],
+                None if vl < 0 else data[vs : vs + vl],
+            )
+
+
+def _open_batches(data: bytes) -> Iterator[tuple[int, int, bytes]]:
+    """``(base offset, record count, records section)`` of each whole
+    batch in ``data``, its magic and CRC-32C checked and its section
+    decompressed (ValueError otherwise). A torn final batch (a fetch may
+    cut one) ends the walk. A batch is read only when the caller asks
+    for it."""
     pos = 0
     while pos + 12 <= len(data):
         base, blen = struct.unpack_from(">qi", data, pos)
         if pos + 12 + blen > len(data):
-            break  # torn tail (Fetch may truncate the final batch)
+            return  # torn tail
+        if blen < _BATCH_HEADER - 12:
+            raise ValueError(f"record batch length {blen} is below its header")
         _epoch, magic, crc = struct.unpack_from(">ibI", data, pos + 12)
         if magic != 2:
             raise ValueError(f"unsupported record batch magic {magic}")
@@ -502,83 +632,118 @@ def decode_record_batches(
             ">hiqqqhii", tail, 0
         )
         codec = attrs & 0x07
-        if codec:  # records section is compressed
-            _, decompress = _codec_or_raise(codec)
-            tail = tail[:40] + decompress(tail[40:])
-        # hot loop: zigzag varints inlined (a function call per field
-        # halves single-socket fetch throughput; this loop is the
-        # client-side decode path for EVERY fetched message)
-        p = 40  # past the fixed attribute block (2+4+8+8+8+2+4+4)
-        for _ in range(count):
-            r = 0
-            sh = 0
-            while True:
-                byt = tail[p]
-                p += 1
-                r |= (byt & 0x7F) << sh
-                if byt < 0x80:
-                    break
-                sh += 7
-            end = p + ((r >> 1) ^ -(r & 1))  # record length
-            p += 1  # record attributes
-            while tail[p] >= 0x80:  # skip timestampDelta
-                p += 1
-            p += 1
-            r = 0
-            sh = 0
-            while True:  # offsetDelta
-                byt = tail[p]
-                p += 1
-                r |= (byt & 0x7F) << sh
-                if byt < 0x80:
-                    break
-                sh += 7
-            od = (r >> 1) ^ -(r & 1)
-            r = 0
-            sh = 0
-            while True:  # key length
-                byt = tail[p]
-                p += 1
-                r |= (byt & 0x7F) << sh
-                if byt < 0x80:
-                    break
-                sh += 7
-            klen = (r >> 1) ^ -(r & 1)
-            if klen < 0:
-                key = None
-            else:
-                if p + klen > len(tail):
-                    raise ValueError(
-                        f"record key length {klen} overruns the batch"
-                    )
-                key = tail[p : p + klen]
-                p += klen
-            r = 0
-            sh = 0
-            while True:  # value length
-                byt = tail[p]
-                p += 1
-                r |= (byt & 0x7F) << sh
-                if byt < 0x80:
-                    break
-                sh += 7
-            vlen = (r >> 1) ^ -(r & 1)
-            if vlen < 0:
-                # tombstone: mirror the key handling — a null value is NOT
-                # an empty value (compacted-topic delete markers from any
-                # external Kafka-protocol client must survive decode)
-                value = None
-            else:
-                if p + vlen > len(tail):
-                    # a lying length must fail, not silently persist a
-                    # truncated record into the log (review r10)
-                    raise ValueError(
-                        f"record value length {vlen} overruns the batch"
-                    )
-                value = tail[p : p + vlen]
-            yield base + od, key, value
-            p = end
+        section = _codec_or_raise(codec)[1](tail[40:]) if codec else tail[40:]
+        yield base, max(count, 0), section
         pos += 12 + blen
+
+
+def _record_heads(section: bytes, count: int, heads: list) -> None:
+    """Append where each record (its length varint) begins in
+    ``section``: the walk over the records' length varints, the one
+    per-record Python loop of the decode."""
+    ap = heads.append
+    p = 0
+    try:
+        for _ in range(count):
+            ap(p)
+            r = section[p]
+            p += 1
+            if r >= 0x80:
+                r &= 0x7F
+                sh = 7
+                while True:
+                    b = section[p]
+                    p += 1
+                    r |= (b & 0x7F) << sh
+                    if b < 0x80:
+                        break
+                    sh += 7
+            p += (r >> 1) ^ -(r & 1)
+    except IndexError:
+        raise ValueError("record length overruns the batch") from None
+
+
+def _field(length, pos, end, what: str):
+    """Check a key or value length against its record -> the position
+    after the field. -1 is a null; anything below, or a field running
+    past its record's end, raises."""
+    bad = (length < -1) | (length > end - pos)
+    if bad.any():
+        n = length[np.flatnonzero(bad)[0]]
+        raise ValueError(
+            f"record {what} length {n} "
+            + ("is below -1" if n < -1 else "overruns its record")
+        )
+    return pos + np.maximum(length, 0)
+
+
+def _frame(
+    batches: list[tuple[int, int, bytes]],
+    floor: int | None = None,
+    limit: int | None = None,
+) -> RecordColumns:
+    """The records of opened batches, their framing decoded one field
+    at a time for every record with the Avro varint kernels, each read
+    bounded by its record's end. Keeps the first ``limit`` records at or
+    above ``floor``."""
+    heads: list[int] = []
+    for _base, count, section in batches:
+        _record_heads(section, count, heads)
+    if not heads:  # an empty fetch skips the kernels' fixed cost (~0.1 ms)
+        return RecordColumns.from_tuples([])
+    counts = [c for _b, c, _s in batches]
+    sizes = np.array([len(s) for _b, _c, s in batches], np.int64)
+    # each record's section: where it begins and ends in the buffer
+    sec_end = np.repeat(np.cumsum(sizes), counts)
+    head = np.array(heads, np.int64) + sec_end - np.repeat(sizes, counts)
+    buf = np.frombuffer(b"".join(s for _b, _c, s in batches), np.uint8)
+    try:
+        length, start = _long(buf, head, sec_end)
+        if ((length < 0) | (length > sec_end - start)).any():
+            raise ValueError("record length overruns the batch")
+        end = start + length
+        # attributes (one byte), timestampDelta, offsetDelta, key, value;
+        # the headers after the value are not read
+        _ts, pos = _long(buf, start + 1, end)
+        delta, pos = _long(buf, pos, end)
+        key_len, key_start = _long(buf, pos, end)
+        value_len, value_start = _long(buf, _field(key_len, key_start, end, "key"), end)
+    except AvroSchemaError as e:
+        raise ValueError(f"malformed record: {e}") from e
+    _field(value_len, value_start, end, "value")
+    offsets = np.repeat(np.array([b for b, _c, _s in batches], np.int64), counts)
+    offsets += delta
+    out = RecordColumns(offsets, buf, key_start, key_len, value_start, value_len)
+    if floor is not None:
+        out = out.take(offsets >= floor)
+    return out if limit is None else out.take(slice(limit))
+
+
+def decode_record_batches(
+    data: bytes, floor: int | None = None, limit: int | None = None
+) -> RecordColumns:
+    """The records of every whole RecordBatch in ``data`` as one
+    :class:`RecordColumns`, decoded eagerly.
+
+    With ``floor``, only records at or above that offset are kept; with
+    ``limit``, at most that many, the first in order, and the decode
+    stops after the batch that provides them: later batches are neither
+    CRC-checked nor decompressed.
+
+    Errors: a wrong magic, a CRC-32C mismatch, a codec failure, a record
+    running past its batch, a key or value running past its own record
+    and a length below -1 raise ValueError. A torn final batch (a fetch
+    may cut one) ends the decode."""
+    opened = []
+    kept = 0
+    for base, count, section in _open_batches(data):
+        opened.append((base, count, section))
+        # at least this many of the batch's records are at or above the
+        # floor: its offsets are distinct and none is below ``base``
+        kept += count if floor is None else max(0, count - max(0, floor - base))
+        if limit is not None and kept >= limit:
+            break
+    return _frame(opened, floor, limit)
 
 
 # ---------------------------------------------------------------------------
@@ -598,10 +763,6 @@ _ERR_REBALANCE_IN_PROGRESS = 27
 _ERR_UNSUPPORTED_SASL_MECHANISM = 33
 _ERR_SASL_AUTH_FAILED = 58
 _ERR_INVALID_RECORD = 87
-# baseOffset(8) batchLength(4) partitionLeaderEpoch(4) magic(1) crc(4)
-# attributes(2) lastOffsetDelta(4) firstTimestamp(8) maxTimestamp(8)
-# producerId(8) producerEpoch(2) baseSequence(4) recordCount(4)
-_BATCH_HEADER = 61
 
 
 class SaslAuthError(Exception):
@@ -857,10 +1018,11 @@ class _PartitionLog:
 
 def _split_batches(rset: bytes) -> list[bytes] | None:
     """A produced record set as its batches, each validated by a full
-    decode (magic, CRC-32C, record framing, codec: ValueError). None when
-    the set is not whole batches or a batch's offset deltas are not
-    ``0..n-1`` with ``lastOffsetDelta == n-1``: stored as-is, such a
-    batch would serve offsets the log never assigned."""
+    decode. A wrong magic, a CRC-32C mismatch or a codec failure raises
+    ValueError. None when the set is not whole batches, a record's
+    framing is malformed, or a batch's offset deltas are not ``0..n-1``
+    with ``lastOffsetDelta == n-1``: stored as-is, such a batch would
+    serve offsets the log never assigned."""
     out = []
     pos = 0
     while pos < len(rset):
@@ -874,8 +1036,14 @@ def _split_batches(rset: bytes) -> list[bytes] | None:
         (base,) = struct.unpack_from(">q", batch, 0)
         (last,) = struct.unpack_from(">i", batch, 23)
         (count,) = struct.unpack_from(">i", batch, 57)
-        deltas = [o - base for o, _k, _v in decode_record_batches(batch)]
-        if count < 1 or last != count - 1 or deltas != list(range(count)):
+        opened = list(_open_batches(batch))
+        try:
+            offsets = _frame(opened).offsets
+        except ValueError:
+            return None
+        if count < 1 or last != count - 1 or not np.array_equal(
+            offsets - base, np.arange(count)
+        ):
             return None
         out.append(batch)
         pos = end
@@ -1616,7 +1784,8 @@ class KafkaWireConsumer:
     """Protocol-side committed consumer over one explicit partition.
 
     Surface-compatible with ``queue.FileQueueConsumer`` —
-    ``poll() -> [(offset, key, value)]``, ``commit(next_offset)``,
+    ``poll() -> RecordColumns`` (iterates as ``(offset, key, value)``),
+    ``commit(next_offset)``,
     ``committed`` — so ``AvroQueueIngestor`` drains a live broker
     socket with zero changes and keeps its LSN-floor idempotence."""
 
@@ -1664,7 +1833,7 @@ class KafkaWireConsumer:
 
     def poll(
         self, max_messages: int = 10_000, max_bytes: int = 8 << 20
-    ) -> list[tuple[int, bytes | None, bytes]]:
+    ) -> RecordColumns:
         return self.fetch(self.committed, max_messages, max_bytes)
 
     def fetch(
@@ -1672,10 +1841,16 @@ class KafkaWireConsumer:
         from_offset: int,
         max_messages: int = 10_000,
         max_bytes: int = 8 << 20,
-    ) -> list[tuple[int, bytes | None, bytes]]:
+    ) -> RecordColumns:
         """Group-less fetch from an EXPLICIT offset — the surface an
         external offset manager (e.g. Spark's streaming checkpoint)
-        drives; never touches the committed group position."""
+        drives; never touches the committed group position.
+
+        Returns the first ``max_messages`` records at or above
+        ``from_offset`` as one :class:`RecordColumns`. The decode stops
+        after the batch that provides them (a batch after it is neither
+        CRC-checked nor decompressed), and raises ValueError as
+        :func:`decode_record_batches` does."""
         floor = from_offset
         # right-size the request: ask for ~max_messages worth of bytes
         # (adaptive estimate, x1.25 headroom), bounded by the caller's cap —
@@ -1703,15 +1878,10 @@ class KafkaWireConsumer:
         pos += 4 + max(0, naborted) * 16
         rset, pos = _read_bytes32(resp, pos)
         if err == _ERR_UNKNOWN_TOPIC:
-            return []
+            return RecordColumns.from_tuples([])
         if err != _ERR_NONE:
             raise OSError(f"fetch failed: error={err}")
-        out = []
-        for off, key, value in decode_record_batches(rset or b""):
-            if off >= floor:
-                out.append((off, key, value))
-                if len(out) >= max_messages:
-                    break  # stop decoding what we will not keep
+        out = decode_record_batches(rset or b"", floor, max_messages)
         # update the sizing estimate from the whole batches received:
         # their bytes on the wire (compressed, if the producer compressed)
         # over the records they hold, read from the batch headers
@@ -2040,8 +2210,8 @@ class KafkaGroupConsumer:
             msgs = self._fetcher.fetch(floor, max_messages - len(out))
             for off, k, v in msgs:
                 out.append((p, off, k, v))
-            if msgs:
-                self._last_polled[p] = msgs[-1][0] + 1
+            if len(msgs):
+                self._last_polled[p] = int(msgs.offsets[-1]) + 1
             if len(out) >= max_messages:
                 break
         return out

@@ -13,7 +13,8 @@ the ingestion path actually relies on:
 - **key+value byte payloads** (value = Avro datum; key optional).
 
 On a real cluster, swap ``FileQueueConsumer`` for a Kafka consumer and
-``AvroQueueIngestor`` is unchanged — it only sees (offset, key, value).
+``AvroQueueIngestor`` is unchanged — it only sees a poll's
+``RecordColumns`` (offsets, one key/value buffer and their bounds).
 
 Segments are length-prefixed frames: u32-BE total frame length, u64-BE
 offset, u32-BE key length (0xFFFFFFFF = null key), key bytes, value
@@ -31,6 +32,7 @@ from typing import Any, Iterator
 
 from moonlink_spark.schema import field_schema_to_struct
 from moonlink_spark.sources.avro_arrow import arrow_batch_for_spark, decode_columns
+from moonlink_spark.sources.kafka_wire import RecordColumns
 from moonlink_spark.table.table import MoonlinkTable
 
 _NULL_KEY = 0xFFFFFFFF  # null key, non-null value
@@ -473,7 +475,7 @@ class FileQueueConsumer:
                 return json.load(fh)["next_offset"]
         return 0
 
-    def poll(self, max_messages: int = 10_000) -> list[tuple[int, bytes | None, bytes]]:
+    def poll(self, max_messages: int = 10_000) -> RecordColumns:
         """Next ``max_messages`` at-or-above the committed floor, global
         offset order, retry duplicates absorbed — WITHOUT materializing
         the queue. Segments are internally offset-ascending (every
@@ -483,7 +485,9 @@ class FileQueueConsumer:
         poll, where the old iter_queue path parsed and sorted the WHOLE
         queue per poll (quadratic drains on a deep queue). A segment
         that violates the ascending invariant falls back to the sorted
-        full-scan path, so order semantics never degrade."""
+        full-scan path, so order semantics never degrade. The messages
+        come back as one :class:`RecordColumns`, the value a Kafka
+        fetch returns."""
         import heapq
 
         floor = self.committed
@@ -518,7 +522,7 @@ class FileQueueConsumer:
                     continue  # retried-task duplicate: identical bytes
                 seen.add(sig)
                 out.append((off, key, value))
-            return out
+            return RecordColumns.from_tuples(out)
         except _UnsortedSegment:
             out = []
             for off, key, value in iter_queue(self.queue_dir):
@@ -530,7 +534,7 @@ class FileQueueConsumer:
                 ):
                     break
                 out.append((off, key, value))
-            return out
+            return RecordColumns.from_tuples(out)
 
     def commit(self, next_offset: int) -> None:
         os.makedirs(self.queue_dir, exist_ok=True)
@@ -544,7 +548,8 @@ class AvroQueueIngestor:
     """Drain Avro datums from a queue into a MoonlinkTable.
 
     Each drain decodes its payloads one field at a time with numpy
-    (``sources/avro_arrow.decode_columns``) into ONE Arrow table in the
+    (``sources/avro_arrow.decode_columns``), straight from the poll's
+    record buffer (``RecordColumns``), into ONE Arrow table in the
     table's schema (a safe cast: a value the column type cannot hold
     raises), staged with ``append_arrow``, and becomes one commit whose
     LSN is ``lsn_base + last_offset + 1`` — monotone in the queue
@@ -579,7 +584,7 @@ class AvroQueueIngestor:
         import pyarrow as pa
 
         batch = self.consumer.poll(max_messages)
-        if not batch:
+        if not len(batch):
             return {"messages": 0, "version": self.table.manifest.version}
         # Per-MESSAGE replay floor, not just per-batch: after a crash
         # between table commit and consumer-offset commit, a re-poll
@@ -598,17 +603,19 @@ class AvroQueueIngestor:
         # field inside the datum (ingest/cdc.py), not through
         # compacted-topic delete markers — skip, but still advance the
         # offset floor past it.
-        live = [
-            v for off, _k, v in batch if off > applied_floor and v is not None
-        ]
-        last_offset = batch[-1][0]
+        live = (batch.offsets > applied_floor) & (batch.value_len >= 0)
+        n_live = int(live.sum())
+        last_offset = int(batch.offsets[-1])
         lsn = self.lsn_base + last_offset + 1
         version = m.version
-        if live:
+        if n_live:
             struct = field_schema_to_struct(m.schema_fields)
-            named = decode_columns(self.schema, live)
+            starts = batch.value_start[live]
+            named = decode_columns(
+                self.schema, batch.buf, starts, starts + batch.value_len[live]
+            )
             tbl = pa.Table.from_batches(
-                [arrow_batch_for_spark(struct, named, len(live))]
+                [arrow_batch_for_spark(struct, named, n_live)]
             )
             mark = self.table.pending_mark()
             try:

@@ -76,19 +76,18 @@ class LocalFS:
 
         d = os.path.dirname(path) or "."
         tmp = os.path.join(d, f".{os.path.basename(path)}.{_uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
+        self.write_text_new(tmp, data)
+        os.replace(tmp, path)
+        _fsync_dir(d)
+
+    def write_text_new(self, path: str, data: str) -> None:
+        """Write and fsync a new, uniquely named file in place: nothing
+        reads it before it is published (``publish_exclusive``), so it
+        needs no temp name of its own."""
+        with open(path, "w") as fh:
             fh.write(data)
             fh.flush()
             os.fsync(fh.fileno())
-        os.replace(tmp, path)
-        try:
-            dfd = os.open(d, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        except OSError:
-            pass  # directory fsync unsupported (some filesystems): best effort
 
     def append_text_durable(self, path: str, data: str) -> None:
         with open(path, "a") as fh:
@@ -116,6 +115,19 @@ class LocalFS:
             raise CommitRaceLost(final) from e
         finally:
             os.unlink(tmp)
+        # the link is what makes ``final`` visible: persist it
+        _fsync_dir(os.path.dirname(final) or ".")
+
+
+def _fsync_dir(d: str) -> None:
+    try:
+        dfd = os.open(d, os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
+    except OSError:
+        pass  # directory fsync unsupported (some filesystems): best effort
 
 
 # --------------------------------------------------------------------------- #
@@ -319,6 +331,8 @@ class ObjectStoreFS:
         self._call(
             "put", lambda: self.store.put(self._key(path), data.encode("utf-8"))
         )
+
+    write_text_new = write_text_durable  # a PUT: no temp name to skip
 
     def append_text_durable(self, path: str, data: str) -> None:
         key = self._key(path)

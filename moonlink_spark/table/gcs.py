@@ -663,6 +663,8 @@ class GCSHttpFS:
             "put", "POST", self._upload_url(path), body=data.encode("utf-8")
         )
 
+    write_text_new = write_text_durable  # a PUT: no temp name to skip
+
     # -- resumable upload (the large-object / flaky-link path) ---------------
 
     def write_bytes(

@@ -281,13 +281,14 @@ class ManifestStore:
         manifest.timestamp_ms = int(time.time() * 1000)
         path = self._path(manifest.version)
         tmp = path + f".tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
-        self.fs.write_text_durable(
+        self.fs.write_text_new(
             tmp, json.dumps(manifest.to_json(), separators=(",", ":"))
         )
         try:
             # exclusive publish: the loser of a race fails cleanly and never
-            # leaves a half-written manifest (LocalFS: hard link; object
-            # stores: conditional put — see table/fs.py)
+            # leaves a half-written manifest (LocalFS: hard link, then a
+            # directory fsync; object stores: conditional put — see
+            # table/fs.py)
             self.fs.publish_exclusive(tmp, path)
         except CommitRaceLost as e:
             raise CommitConflictError(f"version {manifest.version} exists") from e

@@ -600,6 +600,10 @@ class CachedFS:
         self.inner.write_text_durable(path, data)
         self._invalidate(path)
 
+    def write_text_new(self, path: str, data: str) -> None:
+        self.inner.write_text_new(path, data)
+        self._invalidate(path)
+
     def append_text_durable(self, path: str, data: str) -> None:
         self.inner.append_text_durable(path, data)
         self._invalidate(path)

@@ -657,6 +657,8 @@ class S3HttpFS:
             "put", "PUT", self._obj_url(path), body=data.encode("utf-8")
         )
 
+    write_text_new = write_text_durable  # a PUT: no temp name to skip
+
     # -- multipart upload (the >5 GiB single-PUT ceiling path) ---------------
 
     def write_bytes(

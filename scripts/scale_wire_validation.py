@@ -12,10 +12,15 @@
 4. Avro decode at 200k messages — ``decode_record`` + ``row_for_spark``
    rows against the numpy bulk decoder (``decode_columns`` +
    ``arrow_batch_for_spark``): msg/s and the tracemalloc peak of each.
+5. Kafka record framing at 200k messages — zstd RecordBatches of 1,000
+   through ``decode_record_batches`` in 5,000-record fetches: msg/s and
+   the tracemalloc peak, every decoded ``(offset, key, value)`` checked
+   against what was produced.
 
 Prints markdown rows for SCALE.md §5/§6. Exits non-zero on any
 invariant violation (wrong rows, non-exclusive assignment, warm scan
-slower than cold, a bulk-decoded value differing from its row).
+slower than cold, a bulk-decoded value differing from its row, a
+decoded record differing from the produced one).
 
 Usage: python scripts/scale_wire_validation.py [--workdir DIR]
 """
@@ -262,6 +267,61 @@ def group_rebalance_rows(workdir: str) -> list[str]:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def framing_rows(n: int = 200_000, per_batch: int = 1_000) -> list[str]:
+    """Decode ``n`` messages framed as zstd RecordBatches of
+    ``per_batch`` records, 5,000 records per call as a consumer poll
+    asks, and check every decoded record against the produced one.
+    Raises AssertionError on any difference."""
+    import random
+    import tracemalloc
+
+    from moonlink_spark.sources.kafka_wire import (
+        decode_record_batches,
+        encode_record_batch,
+    )
+
+    rng = random.Random(7)
+    sent = [
+        (
+            None if i % 3 == 0 else b"key-%d" % i,
+            None if i % 97 == 0 else rng.randbytes(rng.randrange(20, 200)),
+        )
+        for i in range(n)
+    ]
+    batches = [
+        encode_record_batch(a, sent[a : a + per_batch], compression="zstd")
+        for a in range(0, n, per_batch)
+    ]
+
+    def drain():
+        # each call gets what a broker serves a 5,000-record fetch: the
+        # batches from the one holding the floor on, 1.25x the need
+        out, floor = [], 0
+        while floor < n:
+            first = floor // per_batch
+            data = b"".join(batches[first : first + 5_000 * 5 // 4 // per_batch + 1])
+            recs = decode_record_batches(data, floor, 5_000)
+            out.append(recs)
+            floor = int(recs.offsets[-1]) + 1
+        return out
+
+    drain()
+    t0 = time.process_time()
+    drain()
+    cpu_s = time.process_time() - t0
+    tracemalloc.start()
+    polls = drain()
+    peak = tracemalloc.get_traced_memory()[1]
+    tracemalloc.stop()
+    got = [r for recs in polls for r in recs]
+    assert got == [(i, k, v) for i, (k, v) in enumerate(sent)], "framing differs"
+    return [
+        f"| Kafka framing, decode_record_batches ({n:,} msgs, zstd batches "
+        f"of {per_batch:,}, 5,000 per call) | {n / cpu_s:,.0f} msg/s (CPU) "
+        f"| tracemalloc peak {peak / 2**20:.1f} MiB |"
+    ]
+
+
 def avro_decode_rows(n: int = 200_000) -> list[str]:
     """The interpretive row decode against the bulk decoder over ``n``
     4-field records (long/string/timestamp-micros/double). Raises
@@ -269,6 +329,8 @@ def avro_decode_rows(n: int = 200_000) -> list[str]:
     import datetime as dt
     import random
     import tracemalloc
+
+    import numpy as np
 
     from moonlink_spark.sources.avro_arrow import (
         arrow_batch_for_spark,
@@ -313,8 +375,14 @@ def avro_decode_rows(n: int = 200_000) -> list[str]:
     def rows():
         return [row_for_spark(schema, decode_record(schema, v)) for v in values]
 
+    lens = np.array([len(v) for v in values], np.int64)
+    ends = np.cumsum(lens)
+    buf = np.frombuffer(b"".join(values), np.uint8)
+
     def bulk():
-        return arrow_batch_for_spark(struct, decode_columns(schema, values))
+        return arrow_batch_for_spark(
+            struct, decode_columns(schema, buf, ends - lens, ends)
+        )
 
     bulk()  # warm: pyspark's Arrow type mapping imports on first use
     out = []
@@ -352,7 +420,8 @@ def main() -> int:
     # warm the Python-worker pool once so cold-scan timings measure IO,
     # not the first-UDF worker spin-up
     spark.range(64).mapInPandas(lambda it: it, "id long").count()
-    rows = avro_decode_rows()
+    rows = framing_rows()
+    rows += avro_decode_rows()
     rows += cached_plane_rows(spark, args.workdir)
     rows += copy_wire_rows(spark, args.workdir)
     rows += group_rebalance_rows(args.workdir)

@@ -21,10 +21,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql.types import LongType, StructField, StructType
 
-from moonlink_spark.sources.avro_arrow import (
-    arrow_batch_for_spark,
-    decode_columns,
-)
+from moonlink_spark.sources.avro_arrow import arrow_batch_for_spark
 from moonlink_spark.sources.avro_binary import (
     decode_record,
     encode_datum,
@@ -34,7 +31,11 @@ from moonlink_spark.sources.converters import (
     AvroSchemaError,
     avro_schema_to_struct,
 )
-from tests.test_avro_properties import _record_schema_and_value, _redraw
+from tests.test_avro_properties import (
+    _record_schema_and_value,
+    _redraw,
+    decode_payloads,
+)
 
 RICH_SCHEMA = {
     "type": "record",
@@ -129,7 +130,7 @@ def test_columnar_matches_interpretive_on_rich_schema():
     payloads = [encode_datum(RICH_SCHEMA, _rich_value(i)) for i in range(50)]
     struct = avro_schema_to_struct(RICH_SCHEMA)
 
-    fast = arrow_batch_for_spark(struct, decode_columns(RICH_SCHEMA, payloads))
+    fast = arrow_batch_for_spark(struct, decode_payloads(RICH_SCHEMA, payloads))
 
     # interpretive rows -> the same Arrow assembly (row_for_spark shapes,
     # Python lists go through pa.array with the Spark-mandated type)
@@ -149,7 +150,7 @@ def test_trailing_bytes_raise():
     }
     good = encode_datum(schema, {"x": 7})
     with pytest.raises(AvroSchemaError, match="trailing"):
-        decode_columns(schema, [good + b"\x00"])
+        decode_payloads(schema, [good + b"\x00"])
 
 
 _names = st.from_regex(r"[a-z][a-z0-9_]{0,8}", fullmatch=True)
@@ -235,7 +236,7 @@ def test_columnar_parity_property(case):
     values)."""
     schema, rows = case
     payloads = [encode_datum(schema, r) for r in rows]
-    got = decode_columns(schema, payloads)
+    got = decode_payloads(schema, payloads)
     want = _interpretive_columns(schema, payloads)
     for n, col in got.items():
         assert col.to_pylist() == want[n], n
@@ -296,9 +297,9 @@ def test_batch_decode_equals_decode_record(case, data):
         with pytest.raises(AvroSchemaError, match="invalid UTF-8"):
             decode_record(schema, payloads[i])
         with pytest.raises(AvroSchemaError, match="invalid UTF-8"):
-            decode_columns(schema, payloads)
+            decode_payloads(schema, payloads)
         return
-    got = decode_columns(schema, payloads)
+    got = decode_payloads(schema, payloads)
     want = _interpretive_columns(schema, payloads)
     assert list(got) == list(want)
     for n, col in got.items():
@@ -318,7 +319,7 @@ def test_batch_with_a_truncated_record_raises(case, data):
         with pytest.raises(AvroSchemaError):
             decode_record(schema, batch[i])
         with pytest.raises(AvroSchemaError):
-            decode_columns(schema, batch)
+            decode_payloads(schema, batch)
 
 
 def test_varint_extremes_and_out_of_range_values():
@@ -339,7 +340,7 @@ def test_varint_extremes_and_out_of_range_values():
         {"l": 0, "i": 0, "o": 2**63 - 1},
     ]
     payloads = [encode_datum(schema, r) for r in rows]
-    got = decode_columns(schema, payloads)
+    got = decode_payloads(schema, payloads)
     assert {n: c.to_pylist() for n, c in got.items()} == _interpretive_columns(
         schema, payloads
     )
@@ -354,7 +355,7 @@ def test_varint_extremes_and_out_of_range_values():
         with pytest.raises(AvroSchemaError, match=match):
             decode_record(one, payload)
         with pytest.raises(AvroSchemaError, match=match):
-            decode_columns(one, [encode_datum("long", 1), payload])
+            decode_payloads(one, [encode_datum("long", 1), payload])
 
 
 def test_cast_to_the_table_type_is_safe():
@@ -362,8 +363,8 @@ def test_cast_to_the_table_type_is_safe():
     raises (``pa.array(list, type)`` used to truncate it silently)."""
     schema = {"type": "record", "name": "x", "fields": [{"name": "v", "type": "double"}]}
     struct = StructType([StructField("v", LongType())])
-    whole = decode_columns(schema, [encode_datum(schema, {"v": 2.0})])
+    whole = decode_payloads(schema, [encode_datum(schema, {"v": 2.0})])
     assert arrow_batch_for_spark(struct, whole).to_pylist() == [{"v": 2}]
-    frac = decode_columns(schema, [encode_datum(schema, {"v": 1.5})])
+    frac = decode_payloads(schema, [encode_datum(schema, {"v": 1.5})])
     with pytest.raises(pa.ArrowInvalid, match="truncated"):
         arrow_batch_for_spark(struct, frac)

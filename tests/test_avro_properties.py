@@ -24,6 +24,20 @@ _strings = st.text(max_size=40)
 _bools = st.booleans()
 
 
+def decode_payloads(schema: dict, payloads: list) -> dict:
+    """``decode_columns`` over ``payloads`` packed into one buffer the
+    way a fetch holds them, each preceded by a byte that would continue
+    a varint, so a read past a record's bounds shows."""
+    import numpy as np
+
+    from moonlink_spark.sources.avro_arrow import decode_columns
+
+    lens = np.array([len(p) for p in payloads], np.int64)
+    ends = np.cumsum(lens + 1)
+    buf = np.frombuffer(b"".join(b"\x80" + p for p in payloads), np.uint8)
+    return decode_columns(schema, buf, ends - lens, ends)
+
+
 def _record_schema_and_value(draw):
     """One flat record schema with a value matching it."""
     n_fields = draw(st.integers(min_value=1, max_value=6))
@@ -146,7 +160,6 @@ def test_malformed_datums_fail_loud_as_schema_errors():
 
     import pytest
 
-    from moonlink_spark.sources.avro_arrow import decode_columns
     from moonlink_spark.sources.avro_binary import (
         decode_record,
         encode_datum,
@@ -185,9 +198,9 @@ def test_malformed_datums_fail_loud_as_schema_errors():
             want = row_for_spark(schema, decode_record(schema, payload))
         except AvroSchemaError:
             with pytest.raises(AvroSchemaError):
-                decode_columns(schema, [payload])
+                decode_payloads(schema, [payload])
             return
-        got = decode_columns(schema, [payload])
+        got = decode_payloads(schema, [payload])
         assert {n: col.to_pylist()[0] for n, col in got.items()} == want
 
     short = {"type": "record", "name": "s", "fields": [
@@ -199,7 +212,7 @@ def test_malformed_datums_fail_loud_as_schema_errors():
         with pytest.raises(AvroSchemaError, match=match):
             decode_record(short, payload)
         with pytest.raises(AvroSchemaError, match=match):
-            decode_columns(short, [payload])
+            decode_payloads(short, [payload])
     for schema, good in ((schema, good), (unions, unions_good)):
         for i in range(1, len(good)):
             with pytest.raises(AvroSchemaError):

@@ -61,6 +61,62 @@ def test_torn_manifest_never_visible(tmp_path):
     assert store.latest().version == 0
 
 
+def test_manifest_publish_fsyncs_the_directory_after_the_link(
+    tmp_path, monkeypatch
+):
+    """A local commit writes one temporary file (write and fsync, no
+    inner temp and rename), hard-links it to ``v{N}.json``, unlinks it
+    and then fsyncs the directory, so the version survives a crash just
+    after ``commit`` returns."""
+    import builtins
+
+    from moonlink_spark.table import fs as fs_mod
+
+    store = ManifestStore(str(tmp_path / "t"))
+    store.commit(Manifest(0, 0, USERS, {"mode": "none", "columns": []}))
+    events: list[tuple] = []
+    dir_fds: dict[int, str] = {}
+    real = {
+        n: getattr(os, n)
+        for n in ("open", "fsync", "link", "unlink", "replace", "rename")
+    }
+    real_open = builtins.open
+
+    def rec_open(path, *a, **k):
+        fh = real_open(path, *a, **k)
+        if any(m in str(a[:1]) + str(k.get("mode", "")) for m in "wax"):
+            events.append(("create", os.path.basename(path)))
+        return fh
+
+    def rec_os_open(path, flags, *a, **k):
+        fd = real["open"](path, flags, *a, **k)
+        if os.path.isdir(path):
+            dir_fds[fd] = path
+        return fd
+
+    def rec_fsync(fd):
+        events.append(("fsync-dir",) if fd in dir_fds else ("fsync-file",))
+        return real["fsync"](fd)
+
+    monkeypatch.setattr(builtins, "open", rec_open)
+    monkeypatch.setattr(fs_mod.os, "open", rec_os_open)
+    monkeypatch.setattr(fs_mod.os, "fsync", rec_fsync)
+    for name in ("link", "unlink", "replace", "rename"):
+        monkeypatch.setattr(
+            fs_mod.os, name,
+            lambda *a, _n=name: events.append((_n,)) or real[_n](*a),
+        )
+    store.commit(Manifest(1, 5, USERS, {"mode": "none", "columns": []}))
+    kinds = [e[0] for e in events]
+    assert kinds == ["create", "fsync-file", "link", "unlink", "fsync-dir"], events
+    assert events[0][1].startswith("v000000000001.json.tmp.")
+    monkeypatch.undo()
+    assert sorted(os.listdir(store.manifest_dir)) == [
+        "v000000000000.json", "v000000000001.json"
+    ]
+    assert store.latest().lsn == 5
+
+
 def test_orphan_data_files_ignored_and_vacuumable(spark, tmp_path):
     """Files written but never committed (crash before manifest publish) are
     invisible to scans and removed by vacuum."""

@@ -3,6 +3,7 @@ and the Avro ingestion path over a live broker connection (parity: the
 reference's Kafka/Avro feed, rest_api.rs:418-419 + rest_source.rs:371,
 now with the broker leg spoken on the wire instead of a shared file)."""
 
+import json
 import os
 import struct
 import threading
@@ -289,7 +290,7 @@ def test_produce_fetch_commit_roundtrip(broker):
     cons.commit(2)
     assert [o for o, _k, _v in cons.poll()] == [2]
     cons.commit(3)
-    assert cons.poll() == []
+    assert len(cons.poll()) == 0
 
     # a fresh group starts from the beginning
     g2 = KafkaWireConsumer(broker.host, broker.port, "events", group="g2")
@@ -319,7 +320,7 @@ def test_api_versions_and_metadata(broker):
 
 def test_fetch_unknown_topic_and_out_of_range(broker):
     c = KafkaWireConsumer(broker.host, broker.port, "nope")
-    assert c.poll() == []
+    assert len(c.poll()) == 0
     prod = KafkaWireProducer(broker.host, broker.port)
     prod.send("small", [(None, b"x")])
     prod.close()
@@ -427,7 +428,7 @@ def test_fetch_starting_inside_a_batch(tmp_path):
             (j, b"v%d" % j) for j in range(7, 15)
         ]
         assert [o for o, _k, _v in cons.fetch(14)] == [14]
-        assert cons.fetch(15) == []
+        assert len(cons.fetch(15)) == 0
         cons.close()
         # the broker serves the batch holding offset 7 from its start
         data = _served(_raw_fetch(b, "in", 7, 1 << 20))
@@ -708,7 +709,7 @@ def test_consumer_absorbs_connection_drops(tmp_path):
             assert [o for o, _k, _v in msgs] == list(range(10))
         cons.commit(10)
         assert cons.committed == 10
-        assert cons.poll() == []
+        assert len(cons.poll()) == 0
         assert b.dropped > 0  # faults actually fired mid-run
         cons.close()
     finally:
@@ -1344,3 +1345,358 @@ def test_zstd_produce_builtin_e2e(broker):
     assert pa.Codec("zstd").decompress(
         frame, len(plain) - 61
     ).to_pybytes() == plain[61:]
+
+
+# -- columnar decode against a per-record reference --------------------------
+
+
+def _read_varint(buf: bytes, p: int, end: int) -> tuple[int, int]:
+    """One zigzag varint at ``p``, not read past ``end``."""
+    r = sh = 0
+    while True:
+        if p >= end:
+            raise ValueError("truncated varint")
+        b = buf[p]
+        p += 1
+        if sh == 63 and b > 1:
+            raise ValueError("varint too long")
+        r |= (b & 0x7F) << sh
+        if b < 0x80:
+            return (r >> 1) ^ -(r & 1), p
+        sh += 7
+
+
+def _reference_decode(data: bytes) -> list[tuple[int, bytes | None, bytes | None]]:
+    """The per-record generator loop the columnar decoder replaced, with
+    every read bounded by its record's end: the decode's specification."""
+    from moonlink_spark.sources.kafka_wire import _codec_or_raise
+
+    out = []
+    pos = 0
+    while pos + 12 <= len(data):
+        base, blen = struct.unpack_from(">qi", data, pos)
+        if pos + 12 + blen > len(data):
+            break  # torn tail
+        _epoch, magic, crc = struct.unpack_from(">ibI", data, pos + 12)
+        if magic != 2:
+            raise ValueError(f"magic {magic}")
+        tail = data[pos + 21 : pos + 12 + blen]
+        if crc32c(tail) != crc:
+            raise ValueError("CRC-32C")
+        attrs, *_hdr, count = struct.unpack_from(">hiqqqhii", tail, 0)
+        sec = tail[40:]
+        if attrs & 0x07:
+            sec = _codec_or_raise(attrs & 0x07)[1](sec)
+        p = 0
+        for _ in range(count):
+            n, p = _read_varint(sec, p, len(sec))
+            end = p + n
+            if n < 0 or end > len(sec):
+                raise ValueError("record length")
+            p += 1  # attributes
+            _ts, p = _read_varint(sec, p, end)
+            delta, p = _read_varint(sec, p, end)
+            fields = []
+            for _field in ("key", "value"):
+                flen, p = _read_varint(sec, p, end)
+                if flen < -1 or p + flen > end:
+                    raise ValueError(f"{_field} length {flen}")
+                fields.append(None if flen == -1 else sec[p : p + flen])
+                p += max(flen, 0)
+            out.append((base + delta, *fields))
+            p = end
+        pos += 12 + blen
+    return out
+
+
+def _rec(
+    delta: int,
+    key: bytes | None,
+    value: bytes | None,
+    headers=(),
+    ts: int = 0,
+    klen: int | None = None,
+    vlen: int | None = None,
+) -> bytes:
+    """One record; ``klen``/``vlen`` override the written lengths."""
+    from moonlink_spark.sources.kafka_wire import _varint as v
+
+    def field(b, n):
+        if n is None:
+            n = -1 if b is None else len(b)
+        return v(n) + (b or b"")
+
+    body = b"\x00" + v(ts) + v(delta) + field(key, klen) + field(value, vlen)
+    body += v(len(headers)) + b"".join(
+        field(hk, None) + field(hv, None) for hk, hv in headers
+    )
+    return v(len(body)) + body
+
+
+def _raw_batch(base: int, records: list[bytes], codec: str = "none") -> bytes:
+    """A batch of encoded ``records`` under ``codec``, with a valid CRC."""
+    from moonlink_spark.sources.kafka_wire import CODEC_IDS, _codec_or_raise
+
+    section = b"".join(records)
+    cid = CODEC_IDS[codec]
+    if cid:
+        section = _codec_or_raise(cid)[0](section)
+    n = len(records)
+    tail = struct.pack(">hiqqqhii", cid, n - 1, 0, 0, -1, -1, -1, n) + section
+    inner = struct.pack(">ibI", -1, 2, crc32c(tail)) + tail
+    return struct.pack(">qi", base, len(inner)) + inner
+
+
+def _decodes_alike(data: bytes, **kw) -> str:
+    """Both decoders raise ValueError, or both give the same records."""
+    try:
+        want = _reference_decode(data)
+    except ValueError:
+        with pytest.raises(ValueError):
+            decode_record_batches(data, **kw)
+        return "error"
+    if kw:
+        floor, limit = kw.get("floor"), kw.get("limit")
+        want = [r for r in want if floor is None or r[0] >= floor][:limit]
+    assert list(decode_record_batches(data, **kw)) == want
+    return "ok"
+
+
+def test_columnar_decode_matches_the_reference_property():
+    """Hypothesis differential: null and non-null keys, tombstones,
+    empty values, headers, multi-byte varints for lengths, timestamp
+    and offset deltas, offset gaps (a compacted topic), several batches
+    under all four codecs and none, and a torn tail; with and without a
+    floor and a limit."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from moonlink_spark.sources.kafka_wire import CODEC_NAMES
+
+    blobs = st.one_of(
+        st.binary(max_size=12), st.binary(min_size=64, max_size=400)
+    )
+    record = st.tuples(
+        st.integers(0, 300),  # offset gap before the record
+        st.integers(-(2**40), 2**40),  # timestampDelta
+        st.one_of(st.none(), blobs),  # key
+        st.one_of(st.none(), st.just(b""), blobs),  # value
+        st.lists(  # headers
+            st.tuples(
+                st.binary(max_size=6), st.one_of(st.none(), st.binary(max_size=6))
+            ),
+            max_size=3,
+        ),
+    )
+    batches = st.lists(
+        st.tuples(
+            st.lists(record, min_size=1, max_size=10),
+            st.sampled_from(sorted(CODEC_NAMES.values())),
+        ),
+        min_size=1,
+        max_size=4,
+    )
+
+    @settings(max_examples=60, deadline=None)
+    @given(batches, st.integers(0, 60), st.integers(0, 3000), st.integers(1, 30))
+    def check(spec, cut, floor, limit):
+        data, base = b"", 0
+        for records, codec in spec:
+            recs, delta = [], -1
+            for gap, ts, key, value, headers in records:
+                delta += 1 + gap
+                recs.append(_rec(delta, key, value, headers, ts))
+            data += _raw_batch(base, recs, codec)
+            base += delta + 1
+        if cut:  # a torn final batch
+            data = data[:-cut]
+        assert _decodes_alike(data) == "ok"
+        _decodes_alike(data, floor=floor, limit=limit)
+        _decodes_alike(data, floor=floor)
+        _decodes_alike(data, limit=limit)
+
+    check()
+
+
+def _corpus_records() -> list[bytes]:
+    return [
+        _rec(0, None, b"v" * 70, ts=-5),
+        _rec(1, b"k1", b"", headers=[(b"h", b"x"), (b"n", None)]),
+        _rec(2, b"", None),  # tombstone
+        _rec(3, b"k" * 200, b"w" * 150, ts=1 << 35),
+    ]
+
+
+def test_records_section_cut_at_every_byte_fails_loud():
+    """A records section cut at every byte under a valid CRC raises
+    ValueError in both decoders; the record set cut at every byte ends
+    at the torn batch exactly as the reference does."""
+    recs = _corpus_records()
+    section = b"".join(recs)
+    for i in range(len(section)):
+        batch = _raw_batch(0, recs)
+        tail = bytearray(batch[21:61]) + section[:i]
+        inner = struct.pack(">ibI", -1, 2, crc32c(bytes(tail))) + tail
+        cut = struct.pack(">qi", 0, len(inner)) + inner
+        assert _decodes_alike(cut) == "error", i
+    data = _raw_batch(0, recs) + _raw_batch(4, recs, "zstd")
+    for i in range(len(data) + 1):
+        assert _decodes_alike(data[:i]) == "ok", i
+
+
+def test_lying_key_and_value_lengths_fail_loud():
+    """A key or value length below -1, past its own record (though not
+    past the batch) or past the batch raises ValueError in both
+    decoders."""
+    for which in range(3):  # the record that lies; others stay honest
+        for field in ("klen", "vlen"):
+            key, value = b"kk", b"value"
+            own = len(key) if field == "klen" else len(value)
+            # the bytes after the field up to the record's end: the
+            # headers count for a value; value length, value and headers
+            # count for a key
+            rest = 1 if field == "vlen" else 1 + len(value) + 1
+            for n in (-2, -3, -(2**40), own + rest + 1, own + rest + 30, 10**9):
+                recs = [_rec(i, b"kk", b"value") for i in range(3)]
+                recs[which] = _rec(which, key, value, **{field: n})
+                data = _raw_batch(0, recs)
+                assert _decodes_alike(data) == "error", (which, field, n)
+
+
+def test_framing_gaps_raise_at_the_consumer_and_the_broker(tmp_path):
+    """A value running past its own record into the next one, and a key
+    length of -2, used to decode (the first with the next record's
+    bytes, the second as a null key). The consumer now raises
+    ValueError, and the broker answers INVALID_RECORD (87) and appends
+    nothing."""
+    overrun = _raw_batch(
+        0, [_rec(0, None, b"abc", vlen=8), _rec(1, None, b"defghijk")]
+    )
+    minus_two = _raw_batch(0, [_rec(0, b"k", b"v", klen=-2)])
+    for bad, match in ((overrun, "value length 8 overruns its record"),
+                       (minus_two, "key length -2 is below -1")):
+        with pytest.raises(ValueError, match=match):
+            decode_record_batches(bad)
+    b = KafkaWireBroker(str(tmp_path / "logs")).start()
+    try:
+        good = encode_record_batch(0, [(None, b"ok")])
+        assert _produce_raw(b, "gap", good) == (0, 0)
+        log = b.log("gap", 0)
+        size = os.path.getsize(log.path)
+        for bad in (overrun, minus_two, good + minus_two):
+            assert _produce_raw(b, "gap", bad) == (87, -1)
+        assert os.path.getsize(log.path) == size and log.next_offset == 1
+        cons = KafkaWireConsumer(b.host, b.port, "gap")
+        assert list(cons.fetch(0)) == [(0, None, b"ok")]
+        cons.close()
+    finally:
+        b.stop()
+
+
+def test_fetch_decodes_only_the_batches_it_keeps(monkeypatch):
+    """The decode stops after the batch that gives it ``limit`` records
+    at or above the floor: a corrupt batch after it is never read, and
+    CRC-32C runs once per batch kept. A batch straddling the floor
+    counts only its records at or above it."""
+    from moonlink_spark.sources import kafka_wire as kw
+
+    data = b"".join(
+        encode_record_batch(
+            i * 100, [(None, b"v%d" % (i * 100 + j)) for j in range(100)],
+            compression="zstd",
+        )
+        for i in range(5)
+    )
+    bad = bytearray(encode_record_batch(500, [(None, b"x")]))
+    bad[-1] ^= 1
+    data += bytes(bad)
+    calls = []
+    real = kw.crc32c
+    monkeypatch.setattr(kw, "crc32c", lambda b: calls.append(1) or real(b))
+    got = decode_record_batches(data, floor=0, limit=300)
+    assert [o for o, _k, _v in got] == list(range(300)) and len(calls) == 3
+    calls.clear()
+    got = decode_record_batches(data, floor=150, limit=300)
+    assert [o for o, _k, _v in got] == list(range(150, 450))
+    assert len(calls) == 5
+    with pytest.raises(ValueError, match="CRC"):
+        decode_record_batches(data, floor=150, limit=400)
+
+
+def test_drain_and_stream_read_never_build_record_tuples(
+    spark, tmp_path, monkeypatch
+):
+    """AvroQueueIngestor.drain_once and MoonlinkKafkaStreamReader.read
+    decode from the record buffer: with the tuple view patched to raise
+    they still produce the rows the interpretive decoder gives."""
+    from moonlink_spark.integrations.spark_datasource import (
+        MoonlinkKafkaDataSource,
+        MoonlinkKafkaStreamReader,
+        _KafkaRangePartition,
+    )
+    from moonlink_spark.sources import kafka_wire as kw
+    from moonlink_spark.sources.avro_binary import decode_record
+
+    schema = {
+        "type": "record",
+        "name": "e",
+        "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "v", "type": ["null", "string"]},
+            {"name": "tags", "type": {"type": "array", "items": "string"}},
+        ],
+    }
+    rows = [
+        {"id": i, "v": None if i % 4 else "s%d" % i, "tags": ["t"] * (i % 3)}
+        for i in range(30)
+    ]
+    msgs = [(b"%d" % r["id"], encode_datum(schema, r)) for r in rows]
+    msgs.insert(7, (b"dead", None))  # a tombstone: skipped by both
+    want = [decode_record(schema, v) for _k, v in msgs if v is not None]
+    b = KafkaWireBroker(str(tmp_path / "logs")).start()
+    try:
+        prod = KafkaWireProducer(b.host, b.port, compression="zstd")
+        prod.send("lock", msgs[:12])
+        prod.send("lock", msgs[12:])
+        prod.close()
+
+        def refuse(*_a, **_k):
+            raise AssertionError("a record tuple was built")
+
+        t = MoonlinkTable.create(
+            spark,
+            str(tmp_path / "t"),
+            [
+                {"name": "id", "data_type": "int64", "nullable": False},
+                {"name": "v", "data_type": "string"},
+                {"name": "tags", "data_type": "list", "item": {"data_type": "string"}},
+            ],
+            IdentityProp.single("id"),
+        )
+        options = {
+            "host": b.host, "port": str(b.port), "topic": "lock",
+            "valueavroschema": json.dumps(schema),
+        }
+        reader = MoonlinkKafkaStreamReader(
+            options, MoonlinkKafkaDataSource(options).schema()
+        )
+        cons = KafkaWireConsumer(b.host, b.port, "lock", group="lock")
+        monkeypatch.setattr(kw.RecordColumns, "__iter__", refuse)
+        monkeypatch.setattr(kw.RecordColumns, "__getitem__", refuse)
+        try:
+            assert AvroQueueIngestor(t, cons, schema).drain_once()["messages"] == 31
+            (batch,) = reader.read(_KafkaRangePartition(0, 0, 31))
+        finally:
+            cons.close()
+        rows = sorted(
+            (r.asDict() for r in t.scan().collect()), key=lambda r: r["id"]
+        )
+        assert rows == want
+        streamed = batch.to_pylist()
+        assert [r["offset"] for r in streamed] == [
+            o for o, (_k, v) in enumerate(msgs) if v is not None
+        ]
+        assert [r["key"] for r in streamed] == [k for k, v in msgs if v is not None]
+        assert [{n: r[n] for n in ("id", "v", "tags")} for r in streamed] == want
+    finally:
+        b.stop()
